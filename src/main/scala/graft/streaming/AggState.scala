@@ -42,34 +42,18 @@ final class MetricsAcc(ops: Seq[GroupOp]) {
   private val count = Array.fill[Long](ops.size)(0L)
   private val acc = Array.fill[Any](ops.size)(null)
 
-  private def num2(a: Any, b: Any, f: (Double, Double) => Double,
-                   g: (Long, Long) => Long): Any = (a, b) match {
-    case (null, x) => x
-    case (x, null) => x
-    case (x: Long, y: Long) => g(x, y)
-    case (x: Number, y: Number) => f(x.doubleValue, y.doubleValue)
-  }
-
   def update(i: Int, n: Long, value: Any): Unit = {
     import GroupOpType._
     count(i) += n
     ops(i).op match {
-      case COUNT | COUNT_FIELD => acc(i) = num2(acc(i), n, _ + _, _ + _)
-      case SUM | AVG           => if (value != null) acc(i) = num2(acc(i), value, _ + _, _ + _)
-      case MIN                 => if (value != null) acc(i) = num2(acc(i), value, math.min, math.min)
-      case MAX                 => if (value != null) acc(i) = num2(acc(i), value, math.max, math.max)
+      case op @ (COUNT | COUNT_FIELD) => acc(i) = MetricsAcc.combine(op)(acc(i), n)
+      case op                         => if (value != null) acc(i) = MetricsAcc.combine(op)(acc(i), value)
     }
   }
 
   def merge(other: MetricsAcc): Unit = (0 until ops.size).foreach { i =>
-    import GroupOpType._
     count(i) += other.count(i)
-    ops(i).op match {
-      case COUNT | COUNT_FIELD => acc(i) = num2(acc(i), other.acc(i), _ + _, _ + _)
-      case SUM | AVG           => acc(i) = num2(acc(i), other.acc(i), _ + _, _ + _)
-      case MIN                 => acc(i) = num2(acc(i), other.acc(i), math.min, math.min)
-      case MAX                 => acc(i) = num2(acc(i), other.acc(i), math.max, math.max)
-    }
+    acc(i) = MetricsAcc.combine(ops(i).op)(acc(i), other.acc(i))
   }
 
   def results: Seq[(String, Any)] = ops.zipWithIndex.map { case (op, i) =>
@@ -82,6 +66,24 @@ final class MetricsAcc(ops: Seq[GroupOp]) {
       case _ => acc(i)
     }
     op.name -> v
+  }
+}
+
+object MetricsAcc {
+  /** `op`'s null-safe combine of two partial values: Long operands stay
+    * Long, any other pair of numbers goes Double. */
+  private[streaming] def combine(op: GroupOpType.Value): (Any, Any) => Any = op match {
+    case GroupOpType.MIN => num2(_, _, math.min, math.min)
+    case GroupOpType.MAX => num2(_, _, math.max, math.max)
+    case _               => num2(_, _, _ + _, _ + _)
+  }
+
+  private def num2(a: Any, b: Any, f: (Double, Double) => Double,
+                   g: (Long, Long) => Long): Any = (a, b) match {
+    case (null, x) => x
+    case (x, null) => x
+    case (x: Long, y: Long) => g(x, y)
+    case (x: Number, y: Number) => f(x.doubleValue, y.doubleValue)
   }
 }
 

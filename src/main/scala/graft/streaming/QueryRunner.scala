@@ -43,6 +43,19 @@ final class ManualClock(start: Long = 0L) extends Clock {
  *    (JoinBolt.java:297-308). Driver state is O(queries × sketch), never
  *    O(data).
  *
+ * Failure contract. Each micro-batch builds ONE ordered job list — the
+ * shared pass, then equality-partitioned, range-partitioned and fused
+ * GROUP BY jobs — and runs it in two phases. COLLECT: every job, and every
+ * driver-side fold over its rows (equality routing, range prefix/suffix
+ * folds, the grouped cap check), finishes before any query state changes.
+ * A job that throws, or whose fused grouped rows hit the union cap, is
+ * re-collected one query at a time: a deterministic error FAILs that one
+ * query; a transient one (executor loss, fetch failure) is retried once,
+ * then rethrows so the stream replays the batch — up to
+ * [[QueryRunner.MaxTransientStrikes]] replays, after which the query
+ * FAILs. APPLY: the merges run in list order, and one that throws FAILs
+ * its query alone. So a replayed batch never merges twice.
+ *
  * At 100 TB/1000 executors: the batch scan distributes; only O(bytes-per-
  * sketch × queries) crosses to the driver per batch. Queries prune from the
  * plan the batch after they complete (early termination, FilterBolt.java:
@@ -105,11 +118,11 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     lazy val eqKeys: Option[Seq[(String, Any)]] = computeEqPartitionKeys(spec)
   }
 
-  /** How many queries the LAST batch served through the range
-    * partitioner's bucketed jobs — a test observable (the fold is
-    * result-identical to the generic path by design, so only a
-    * structural probe can prove it engaged). */
-  private[graft] var lastBatchRangeFused: Int = 0
+  /** How many jobs of each kind the LAST batch ran — a test observable
+    * (the equality, range and grouped jobs are result-identical to the
+    * generic path by design, so only a structural probe can prove they
+    * engaged). */
+  private[graft] var lastBatchJobs: Map[QueryRunner.JobKind.Value, Int] = Map.empty
 
   /** Set at [[processBatch]] entry; read by [[mergePartial]] for the
     * per-batch filter-latency gauge. Guarded by the runner lock. */
@@ -317,28 +330,11 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     // engine — reject loudly at register instead of failing at plan time
     // (a plan-time AnalysisException inside the shared pass would abort
     // the micro-batch for every co-registered query).
-    def hasExplode(e: Expr): Boolean = e match {
-      case Explode(_)      => true
-      case Unary(_, x)     => hasExplode(x)
-      case Binary(l, r, _) => hasExplode(l) || hasExplode(r)
-      case NAry(_, xs)     => xs.exists(hasExplode)
-      case Cast(x, _)      => hasExplode(x)
-      case ListExpr(xs)    => xs.exists(hasExplode)
-      case ElementAt(x, _) => hasExplode(x)
-      case _               => false
-    }
+    def hasExplode(e: Expr): Boolean = subExprs(e).exists(_.isInstanceOf[Explode])
     // a degenerate n-ary with no operands has no value; the compiler's
     // reduce would throw at batch time — reject at register instead
-    def hasEmptyNAry(e: Expr): Boolean = e match {
-      case NAry(_, xs)     => xs.isEmpty || xs.exists(hasEmptyNAry)
-      case Unary(_, x)     => hasEmptyNAry(x)
-      case Binary(l, r, _) => hasEmptyNAry(l) || hasEmptyNAry(r)
-      case Cast(x, _)      => hasEmptyNAry(x)
-      case ListExpr(xs)    => xs.exists(hasEmptyNAry)
-      case ElementAt(x, _) => hasEmptyNAry(x)
-      case Explode(x)      => hasEmptyNAry(x)
-      case _               => false
-    }
+    def hasEmptyNAry(e: Expr): Boolean =
+      subExprs(e).exists { case NAry(_, xs) => xs.isEmpty; case _ => false }
     if (spec.filter.exists(hasEmptyNAry) ||
         spec.projection.exists(_.exists(p => hasEmptyNAry(p._2))))
       errs += "n-ary expression with no operands"
@@ -349,16 +345,9 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     // post-aggregation expressions run in PostAggEval at emit time — an
     // unsupported op must FAIL at register, not throw inside lifecycle()
     // and kill the whole stream
-    def unsupportedPost(e: Expr): Boolean = e match {
-      case Explode(_)                     => true
-      case NAry(NAryOp.UNIX_TIMESTAMP, _) => true
-      case Unary(_, x)                    => unsupportedPost(x)
-      case Binary(l, r, _)                => unsupportedPost(l) || unsupportedPost(r)
-      case NAry(_, xs)                    => xs.exists(unsupportedPost)
-      case Cast(x, _)                     => unsupportedPost(x)
-      case ListExpr(xs)                   => xs.exists(unsupportedPost)
-      case ElementAt(x, _)                => unsupportedPost(x)
-      case _                              => false
+    def unsupportedPost(e: Expr): Boolean = subExprs(e).exists {
+      case Explode(_) | NAry(NAryOp.UNIX_TIMESTAMP, _) => true
+      case _                                           => false
     }
     val postExprs = spec.postAggregations.flatMap {
       case Having(e)       => Seq(e)
@@ -412,6 +401,18 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     errs.toSeq
   }
 
+  /** `e` and every expression nested in it, pre-order. */
+  private def subExprs(e: Expr): Iterator[Expr] = Iterator.single(e) ++ (e match {
+    case Unary(_, x)     => subExprs(x)
+    case Binary(l, r, _) => subExprs(l) ++ subExprs(r)
+    case NAry(_, xs)     => xs.iterator.flatMap(subExprs)
+    case Cast(x, _)      => subExprs(x)
+    case ListExpr(xs)    => xs.iterator.flatMap(subExprs)
+    case ElementAt(x, _) => subExprs(x)
+    case Explode(x)      => subExprs(x)
+    case _               => Iterator.empty
+  })
+
   private def opErrors(ops: Seq[GroupOp]): Seq[String] = {
     val needField = ops.filter(o => o.op != GroupOpType.COUNT && o.field.isEmpty)
     (if (ops.isEmpty) Seq("GROUP needs at least one operation") else Nil) ++
@@ -427,8 +428,6 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     * `field == literal` terms over distinct fields is a candidate for
     * value-partitioned evaluation. Fields are sorted so `a==1 AND b==2`
     * and `b==2 AND a==1` share a partitioning signature. */
-  private def eqPartitionKeys(rq: RQ): Option[Seq[(String, Any)]] = rq.eqKeys
-
   private def computeEqPartitionKeys(spec: QuerySpec): Option[Seq[(String, Any)]] = {
     def flat(e: Expr): Option[Seq[(String, Any)]] = e match {
       case Binary(Field(f, None), Lit(v), BinOp.EQUALS) if v != null => Some(Seq(f -> v))
@@ -450,6 +449,16 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
       else None
     }
   }
+
+  /** One Spark job of a micro-batch: its member queries and its kind's
+    * `collect`, which runs the job AND every driver-side fold over the
+    * collected rows, then returns one merge per member, in member order —
+    * or None when the rows cannot be trusted (a fused grouped job hit its
+    * union cap). `collect` serves any member subset: the per-query
+    * fallback is `collect(Seq(rq), df)`. A merge only mutates its query's
+    * state; it never touches the cluster. */
+  private final class Job(val kind: QueryRunner.JobKind.Value, val rqs: Seq[RQ],
+                          val collect: (Seq[RQ], DataFrame) => Option[Seq[() => Unit]])
 
   /** Process one micro-batch: shared partial pass + driver combine + window
     * and lifecycle evaluation. Returns the Clips emitted for this batch. */
@@ -475,7 +484,7 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     // group lookup compares natively, and a string literal against a
     // numeric column (which compiled predicates coerce) would silently
     // match nothing — such queries stay on the generic compiled path.
-    def eqTypeAligned(rq: RQ): Boolean = eqPartitionKeys(rq).exists(_.forall { case (f, v) =>
+    def eqTypeAligned(rq: RQ): Boolean = rq.eqKeys.exists(_.forall { case (f, v) =>
       // normValue collapses whole numbers to Long through a Double image,
       // which is lossy past 2^53 — two distinct Longs could collide on one
       // group row. Such literals take the generic compiled path instead.
@@ -496,7 +505,7 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     val eqByField = active
       .filter(rq => !rq.isGrouped && !rq.spec.aggregation.isInstanceOf[Raw] &&
         eqTypeAligned(rq))
-      .groupBy(rq => eqPartitionKeys(rq).get.map(_._1))
+      .groupBy(rq => rq.eqKeys.get.map(_._1))
       .filter(_._2.size >= 2)
     val eqSet = eqByField.values.flatten.toSet
     // RANGE partitioner (the equality partitioner generalized, r14): ≥2
@@ -512,7 +521,6 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
       .groupBy(rq => rangeKeyOf(rq, batch.schema).get._1)
       .filter(_._2.size >= 2)
     val rangeSet = rangeByField.values.flatten.toSet
-    lastBatchRangeFused = rangeSet.size
     // grouped queries stay in the shared pass for their UNGROUPED matched
     // counts (partialColumns emits only the count column for GroupBy)
     val simple = active.filterNot(rq => eqSet.contains(rq) || rangeSet.contains(rq))
@@ -527,44 +535,54 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     val groupedSigs = grouped.groupBy(rq =>
       (rq.spec.aggregation.asInstanceOf[GroupBy].fields, rq.spec.projection))
       .values.map(_.toSeq).toSeq
-    val jobCount = (if (simple.nonEmpty) 1 else 0) + eqByField.size +
-      rangeByField.size + groupedSigs.size
-    val needsCache = jobCount > 1
+    import QueryRunner.JobKind._
+    val jobs: Seq[Job] =
+      (if (simple.isEmpty) Nil else Seq(new Job(Shared, simple, collectShared))) ++
+        eqByField.toSeq.map { case (f, rqs) => new Job(Equality, rqs.toSeq, collectEqPartitioned(f)) } ++
+        rangeByField.toSeq.map { case (f, rqs) => new Job(Range, rqs.toSeq, collectRangePartitioned(f)) } ++
+        groupedSigs.map(new Job(Grouped, _, collectGrouped))
+    lastBatchJobs = jobs.groupBy(_.kind).map { case (k, js) => k -> js.size }
+    val needsCache = jobs.size > 1
     val df = if (needsCache) batch.persist() else batch
     try {
       // All per-batch Spark jobs launch CONCURRENTLY (the one batch scan is
       // cached; Spark's block manager computes each partition once and the
-      // scheduler interleaves the jobs across the cluster), then the tiny
-      // collected results fold into driver state sequentially. Serial job
-      // submission would leave the cluster idle between driver combines —
-      // at 1000 executors the jobs must overlap.
+      // scheduler interleaves the jobs across the cluster), then the merges
+      // apply sequentially. Serial job submission would leave the cluster
+      // idle between driver combines — at 1000 executors the jobs must
+      // overlap.
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.util.control.NonFatal
       implicit val ec: scala.concurrent.ExecutionContext = QueryRunner.jobEc
 
-      // ---- Phase 1: COLLECT. Every Spark job lands driver-side before
-      // ANY query state mutates, so a transient cluster fault (executor
-      // loss, fetch failure) can rethrow here and the replayed batch can
-      // never double-merge a query whose job had already succeeded.
+      // ---- Phase 1: COLLECT. Every Spark job and every driver-side fold
+      // lands before ANY query state mutates, so a transient cluster fault
+      // (executor loss, fetch failure) can rethrow here and the replayed
+      // batch can never double-merge a query whose job had already
+      // succeeded.
       //
       // Failure isolation: a multi-query job that throws (one bad spec
       // reaching plan/analysis time, e.g. a field the batch lacks in a
-      // context validate can't see) is re-collected per-query so the ONE
-      // broken query FAILs while every co-registered query keeps its
-      // partials — the reference FAILs the single Querier
-      // (JoinBolt.java:297-308); it never aborts the topology. Transient
-      // faults get one retry (the cluster may have recovered), then
-      // propagate so the stream's own machinery replays the batch —
-      // deregistering a long-lived query over a cluster hiccup would be
-      // wrong, and crash-looping on a deterministic error would be worse,
-      // so only recognizably-transient failures propagate.
-      def perQuery[A](rqs: Seq[RQ])(collectOne: RQ => A): Seq[(RQ, Either[Throwable, A])] =
-        rqs.map { rq =>
-          val out: Either[Throwable, A] =
-            try Right(collectOne(rq)) catch {
+      // context validate can't see, or a fold over values its op cannot
+      // combine) is re-collected per query so the ONE broken query FAILs
+      // while every co-registered query keeps its partials — the
+      // reference FAILs the single Querier (JoinBolt.java:297-308); it
+      // never aborts the topology. Transient faults get one retry (the
+      // cluster may have recovered), then propagate so the stream's own
+      // machinery replays the batch — deregistering a long-lived query
+      // over a cluster hiccup would be wrong, and crash-looping on a
+      // deterministic error would be worse, so only recognizably-transient
+      // failures propagate.
+      def perQuery(job: Job): Seq[(RQ, Either[Throwable, () => Unit])] =
+        job.rqs.map { rq =>
+          // a one-query job is always trusted: only a union of several
+          // queries' groups can crowd one query's groups out
+          def collectOne(): () => Unit = job.collect(Seq(rq), df).get.head
+          val out: Either[Throwable, () => Unit] =
+            try Right(collectOne()) catch {
               case NonFatal(e) if QueryRunner.isTransientFailure(e) =>
-                try Right(collectOne(rq)) catch {
+                try Right(collectOne()) catch {
                   case NonFatal(e2) if !QueryRunner.isTransientFailure(e2) => Left(e2)
                   case NonFatal(e2) =>
                     // still transient after the in-batch retry: allow the
@@ -584,67 +602,23 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
             }
           rq -> out
         }
-      val sharedF = if (simple.isEmpty) None else Some(Future(collectShared(simple, df)))
-      val eqF = eqByField.toSeq.map { case (f, rqs) =>
-        (rqs.toSeq, Future(collectEqPartitioned(f, rqs.toSeq, df)))
-      }
-      val rangeF = rangeByField.toSeq.map { case (f, rqs) =>
-        (rqs.toSeq, Future(collectRangePartitioned(f, rqs.toSeq, df)))
-      }
-      val groupedF = groupedSigs.map(g => (g, Future(collectGrouped(g, df))))
-      val sharedC = sharedF.map { f =>
-        try Right(Await.result(f, Duration.Inf))
-        catch { case NonFatal(_) =>
-          Left(perQuery(simple)(rq => collectShared(Seq(rq), df)))
-        }
-      }
-      val eqC = eqF.map { case (rqs, f) =>
-        try (rqs, Right(Await.result(f, Duration.Inf)))
-        catch { case NonFatal(_) =>
-          // eq-partitioned queries are ungrouped by construction: the
-          // generic single-query shared pass is the safe fallback
-          (rqs, Left(perQuery(rqs)(rq => collectShared(Seq(rq), df))))
-        }
-      }
-      val rangeC = rangeF.map { case (rqs, f) =>
-        try (rqs, Right(Await.result(f, Duration.Inf)))
-        catch { case NonFatal(_) =>
-          // same fallback shape as eq: range-fused queries are ungrouped
-          (rqs, Left(perQuery(rqs)(rq => collectShared(Seq(rq), df))))
-        }
-      }
-      val groupedC = groupedF.map { case (g, f) =>
-        // Decide inside the try; run the fallback AFTER it. If perQuery
-        // ran inside the try, its bounded-replay rethrow (strikes <
-        // MaxTransientStrikes) would be re-caught by this very catch and
-        // perQuery would run AGAIN in the same batch — double strikes
-        // (FAIL after ~2 replays, not the documented 3) and every query
-        // in the group collected twice.
-        val direct =
-          try {
-            val rows = Await.result(f, Duration.Inf)
-            // Union cap hit with multiple fused classes: the kept smallest-
-            // keys union can CROWD OUT one query's groups with another's
-            // (a query under its own entries cap could lose groups it would
-            // have kept from its own job). Rare — the over-cap regime — so
-            // re-collect per query, each against exactly its old exact
-            // semantics (own filter, own entries budget). Cap and class
-            // count come from groupedCap/groupedRepRqs — the SAME formula
-            // collectGrouped limits by.
-            val cap = groupedCap(g)
-            if (groupedRepRqs(g).size > 1 && rows.length >= cap) None
-            else Some(rows)
-          } catch { case NonFatal(_) => None }
+      val launched = jobs.map(job => job -> Future(job.collect(job.rqs, df)))
+      val outcomes = launched.flatMap { case (job, f) =>
+        // Await inside the try; fall back AFTER it. Inside, perQuery's
+        // bounded-replay rethrow would be re-caught here and perQuery would
+        // run AGAIN in the same batch — double strikes and every member
+        // collected twice.
+        val direct = try Await.result(f, Duration.Inf) catch { case NonFatal(_) => None }
         direct match {
-          case Some(rows) => (g, Right(rows))
-          case None => (g, Left(perQuery(g)(rq => collectGrouped(Seq(rq), df))))
+          case Some(merges) => job.rqs.zip(merges.map(Right(_)))
+          case None         => perQuery(job)
         }
       }
 
-      // ---- Phase 2: APPLY. Pure driver-side folds over collected rows —
-      // no cluster involvement, so any throw is deterministic for THIS
-      // query (e.g. a partial-column type mismatch): FAIL it alone; every
-      // other query's merge stands and nothing ever re-merges.
+      // ---- Phase 2: APPLY. Pure driver-side merges — no cluster
+      // involvement, so any throw is deterministic for THIS query (e.g. a
+      // partial-column type mismatch): FAIL it alone; every other query's
+      // merge stands and nothing ever re-merges.
       //
       // Reaching here means NO collect rethrew: the batch is going to
       // complete, so the transient incident (if any) is over — reset every
@@ -654,42 +628,10 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
       // query's healthy job mask its OTHER job's persistent failure and
       // crash-loop the stream past the strike bound.
       active.foreach(_.transientStrikes = 0)
-      def applyOne(rq: RQ)(body: => Unit): Unit =
-        try body catch { case NonFatal(e) => failQuery(rq, e) }
-      sharedC.foreach {
-        case Right(row) =>
-          // read each query's class-representative columns (spec-class CSE)
-          val reps = sharedReps(simple)
-          simple.foreach(rq => applyOne(rq)(mergePartial(rq, row, reps(rq.spec.id))))
-        case Left(outs) => outs.foreach {
-          case (rq, Right(row)) => applyOne(rq)(mergePartial(rq, row))
-          case (rq, Left(e))    => failQuery(rq, e)
-        }
-      }
-      eqC.foreach {
-        case (rqs, Right((sigs, byValue))) =>
-          applyEqPartitioned(rqs, sigs, byValue, applyOne)
-        case (_, Left(outs)) => outs.foreach {
-          case (rq, Right(row)) => applyOne(rq)(mergePartial(rq, row))
-          case (rq, Left(e))    => failQuery(rq, e)
-        }
-      }
-      rangeC.foreach {
-        case (rqs, Right(job)) => applyRangePartitioned(rqs, job, applyOne)
-        case (_, Left(outs)) => outs.foreach {
-          case (rq, Right(row)) => applyOne(rq)(mergePartial(rq, row))
-          case (rq, Left(e))    => failQuery(rq, e)
-        }
-      }
-      groupedC.foreach {
-        case (g, Right(rows)) =>
-          // duplicate-spec queries read their representative's columns
-          val reps = sharedReps(g)
-          g.foreach(rq => applyOne(rq)(applyGrouped(Seq(rq), rows, reps)))
-        case (_, Left(outs)) => outs.foreach {
-          case (rq, Right(rows)) => applyOne(rq)(applyGrouped(Seq(rq), rows))
-          case (rq, Left(e))     => failQuery(rq, e)
-        }
+      outcomes.foreach {
+        case (rq, _) if rq.done => // FAILed by an earlier job of this batch
+        case (rq, Right(merge)) => try merge() catch { case NonFatal(e) => failQuery(rq, e) }
+        case (rq, Left(e))      => failQuery(rq, e)
       }
     } finally {
       if (needsCache) df.unpersist()
@@ -710,9 +652,8 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
       case a      => Some((rq.spec.filter, rq.spec.projection, a))
     }
 
-  /** id → representative id (first member in list order). Pure function of
-    * the list — collectShared (column building) and the apply phase
-    * (row reading) call it on the same list and agree. */
+  /** id → representative id (first member in list order). A job computes
+    * it once and uses the same map for column building and row reading. */
   private def sharedReps(simple: Seq[RQ]): Map[String, String] = {
     val rep = mutable.HashMap.empty[(Option[Expr], Option[Seq[(String, Expr)]], Aggregation), String]
     simple.map { rq =>
@@ -734,7 +675,7 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     * computed UNGROUPED — summing over the kept top-`entries` groups
     * would undercount once the key space exceeds the cap, starving
     * RECORD windows and the records_seen metric. */
-  private def collectShared(simple: Seq[RQ], df: DataFrame): Row = {
+  private def collectShared(simple: Seq[RQ], df: DataFrame): Option[Seq[() => Unit]] = {
     val schema = df.schema
     val distinctFilters = simple.flatMap(_.spec.filter).distinct
     val predIdx = distinctFilters.zipWithIndex.toMap
@@ -751,7 +692,8 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     val reps = sharedReps(simple)
     val cols = simple.filter(rq => reps(rq.spec.id) == rq.spec.id)
       .flatMap(rq => partialColumns(rq, schema, gate(rq)))
-    withPreds.agg(cols.head, cols.tail: _*).collect()(0)
+    val row = withPreds.agg(cols.head, cols.tail: _*).collect()(0)
+    Some(simple.map(rq => () => mergePartial(rq, row, reps(rq.spec.id))))
   }
 
   /** Normalize a partition value for driver-side matching between the
@@ -764,16 +706,28 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     case other => other
   }
 
+  /** The distinct (aggregation, projection) signatures of a fused
+    * equality or range job: each signature's partial columns are computed
+    * once, under `<prefix><i>`. Returns every member's column prefix and
+    * the columns. */
+  private def sigColumns(rqs: Seq[RQ], schema: StructType, prefix: String)
+      : (Map[String, String], Seq[Column]) = {
+    val sigs = rqs.groupBy(rq => (rq.spec.aggregation, rq.spec.projection))
+      .values.toSeq.zipWithIndex.map { case (sigRqs, i) => (sigRqs, s"$prefix$i") }
+    (sigs.flatMap { case (sigRqs, id) => sigRqs.map(_.spec.id -> id) }.toMap,
+      sigs.flatMap { case (sigRqs, id) => partialColumns(sigRqs.head, schema, lit(true), id) })
+  }
+
   /**
    * One job for ALL equality-partitioned queries on `field`: filter to the
    * watched values (InSet — one hash probe per record), groupBy(field), and
    * compute each distinct (aggregation, projection) signature's partial
-   * columns ONCE. The driver routes each value-group row to the queries
-   * watching that value. 1000 COUNT queries on 1000 user ids cost one
-   * hash-shuffled count job, not 1000 predicate evaluations per record.
+   * columns ONCE. Each query then reads the value-group row of the value
+   * it watches. 1000 COUNT queries on 1000 user ids cost one hash-shuffled
+   * count job, not 1000 predicate evaluations per record.
    */
-  private def collectEqPartitioned(fields: Seq[String], rqs: Seq[RQ],
-      df: DataFrame): (Seq[Seq[RQ]], Map[Any, Row]) = {
+  private def collectEqPartitioned(fields: Seq[String])(rqs: Seq[RQ],
+      df: DataFrame): Option[Seq[() => Unit]] = {
     val schema = df.schema
     // Per-field isin over each field's distinct literals keeps the scan
     // filter a conjunction of in-lists the source can push down; for
@@ -781,7 +735,7 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     // top — without it the per-field lists admit the CROSS PRODUCT of the
     // queried values, and the collect below could return up to Q^F group
     // rows (data permitting) where only Q tuples are ever looked up.
-    val byQuery = rqs.map(rq => eqPartitionKeys(rq).get.toMap)
+    val byQuery = rqs.map(rq => rq.eqKeys.get.toMap)
     val perField = fields.map { f =>
       col(f).isin(byQuery.map(_(f)).distinct: _*)
     }.reduce(_ && _)
@@ -791,30 +745,19 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
         .reduce(_ || _)
       perField && tupleCond
     }
-    val sigs = rqs.groupBy(rq => (rq.spec.aggregation, rq.spec.projection)).values.toSeq
-    val sigCols = sigs.zipWithIndex.flatMap { case (sigRqs, i) =>
-      partialColumns(sigRqs.head, schema, lit(true), s"__sig$i")
-    }
+    val (sigOf, sigCols) = sigColumns(rqs, schema, "__sig")
     val rows = df.filter(filterCond)
       .groupBy(fields.map(col): _*)
       .agg(sigCols.head, sigCols.tail: _*)
       .collect()
-    (sigs, rows.map(r => fields.map(f => normValue(r.getAs[Any](f))).toList -> (r: Row)).toMap)
-  }
-
-  private def applyEqPartitioned(rqs: Seq[RQ], sigs: Seq[Seq[RQ]],
-      byValue: Map[Any, Row],
-      applyOne: RQ => (=> Unit) => Unit): Unit =
-    sigs.zipWithIndex.foreach { case (sigRqs, i) =>
-      sigRqs.foreach { rq =>
-        applyOne(rq) {
-          byValue.get(eqPartitionKeys(rq).get.map(kv => normValue(kv._2)).toList) match {
-            case Some(row) => mergePartial(rq, row, s"__sig$i")
-            case None      => rq.batchesSeen += 1 // no matching records this batch
-          }
-        }
+    val byValue = rows.map(r => fields.map(f => normValue(r.getAs[Any](f))) -> r).toMap
+    Some(rqs.map { rq =>
+      byValue.get(rq.eqKeys.get.map(kv => normValue(kv._2))) match {
+        case Some(row) => () => mergePartial(rq, row, sigOf(rq.spec.id))
+        case None      => () => rq.batchesSeen += 1 // no matching records this batch
       }
-    }
+    })
+  }
 
   /** RANGE admission detection — the equality partitioner (SURVEY §4,
     * reference SimpleEqualityPartitioner.java:40-75) generalized to
@@ -864,12 +807,6 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     case _ => None
   }
 
-  /** The per-group result of [[collectRangePartitioned]]: distinct
-    * signature classes, each query's (reads-suffix?, bucket-index
-    * bound), and the collected per-bucket partial rows. */
-  private final case class RangeJob(sigs: Seq[Seq[RQ]],
-    lookups: Map[String, (Boolean, Int)], rows: Array[Row])
-
   /** One bucketed job for a fused same-field threshold group: records
     * bucket by binary search over the group's distinct thresholds
     * ([[graft.functions.RangeBucketL]]/[[graft.functions.RangeBucketD]]
@@ -877,11 +814,12 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     * generic shared pass pays one predicate per query), one
     * groupBy(bucket) computes every distinct (aggregation, projection)
     * signature's partial columns once, and ≤ 2·thresholds+1 tiny rows
-    * come back for the driver's prefix/suffix folds. A single-DIRECTION
-    * group (all >/>= or all </<=) additionally pushes its covered
-    * half-line to the scan as a plain range filter. */
-  private def collectRangePartitioned(field: String, rqs: Seq[RQ],
-      df: DataFrame): RangeJob = {
+    * come back for the driver's prefix/suffix folds, from which each
+    * query reads one row. A single-DIRECTION group (all >/>= or all
+    * </<=) additionally pushes its covered half-line to the scan as a
+    * plain range filter. */
+  private def collectRangePartitioned(field: String)(rqs: Seq[RQ],
+      df: DataFrame): Option[Seq[() => Unit]] = {
     val schema = df.schema
     import org.apache.spark.sql.types._
     val keys = rqs.map(rq => rq.spec.id -> rangeKeyOf(rq, schema).get).toMap
@@ -938,62 +876,28 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
       else if (dirSet.subsetOf(Set(BinOp.LESS_THAN, BinOp.LESS_OR_EQUALS)))
         pre0 && col(field) <= lit(lits.maxBy(_.asInstanceOf[Number].doubleValue))
       else pre0
-    val sigs = rqs.groupBy(rq => (rq.spec.aggregation, rq.spec.projection)).values.toSeq
-    val sigCols = sigs.zipWithIndex.flatMap { case (sigRqs, i) =>
-      partialColumns(sigRqs.head, schema, lit(true), s"__rsig$i")
-    }
+    val (sigOf, sigCols) = sigColumns(rqs, schema, "__rsig")
     val rows = df.filter(pre)
       .groupBy(bucketCol.as("__rbucket"))
       .agg(sigCols.head, sigCols.tail: _*)
       .collect()
-    RangeJob(sigs, lookups, rows)
-  }
-
-  private def applyRangePartitioned(rqs: Seq[RQ], job: RangeJob,
-      applyOne: RQ => (=> Unit) => Unit): Unit = {
-    val RangeJob(sigs, lookups, rows) = job
-    if (rows.isEmpty) {
-      rqs.foreach(rq => applyOne(rq) { rq.batchesSeen += 1 })
-      return
-    }
+    if (rows.isEmpty) return Some(rqs.map(rq => () => rq.batchesSeen += 1))
     val sorted = rows.sortBy(_.getAs[Int]("__rbucket"))
     val idxs = sorted.map(_.getAs[Int]("__rbucket"))
     val rowSchema = sorted.head.schema
-    // null-safe, Long-preserving combines — the MetricsAcc.num2
-    // discipline, so folded partials merge into query state exactly as
-    // per-bucket mergePartial calls would, without m extra batch counts
-    def add(a: Any, b: Any): Any = (a, b) match {
-      case (null, x) => x
-      case (x, null) => x
-      case (x: Long, y: Long) => x + y
-      case (x: Number, y: Number) => x.doubleValue + y.doubleValue
-    }
-    def mnC(a: Any, b: Any): Any = (a, b) match {
-      case (null, x) => x
-      case (x, null) => x
-      case (x: Long, y: Long) => math.min(x, y)
-      case (x: Number, y: Number) => math.min(x.doubleValue, y.doubleValue)
-    }
-    def mxC(a: Any, b: Any): Any = (a, b) match {
-      case (null, x) => x
-      case (x, null) => x
-      case (x: Long, y: Long) => math.max(x, y)
-      case (x: Number, y: Number) => math.max(x.doubleValue, y.doubleValue)
-    }
-    val combine: Map[String, (Any, Any) => Any] = sigs.zipWithIndex.flatMap {
-      case (sigRqs, i) =>
-        val id = s"__rsig$i"
-        val ops = sigRqs.head.spec.aggregation.asInstanceOf[GroupAll].ops
-        Seq(n(id) -> (add _)) ++ ops.zipWithIndex.flatMap { case (op, j) =>
-          import GroupOpType._
-          op.op match {
-            case MIN => Seq(m(id, j) -> (mnC _))
-            case MAX => Seq(m(id, j) -> (mxC _))
-            case AVG => Seq(m(id, j) -> (add _), c(id, j) -> (add _))
-            case _   => Seq(m(id, j) -> (add _))
-          }
+    // MetricsAcc's null-safe, Long-preserving combines: folded partials
+    // merge into query state exactly as per-bucket mergePartial calls
+    // would, without m extra batch counts
+    val add = MetricsAcc.combine(GroupOpType.SUM)
+    val combine: Map[String, (Any, Any) => Any] =
+      rqs.distinctBy(rq => sigOf(rq.spec.id)).flatMap { rq =>
+        val id = sigOf(rq.spec.id)
+        val ops = rq.spec.aggregation.asInstanceOf[GroupAll].ops
+        (n(id) -> add) +: ops.zipWithIndex.flatMap { case (op, j) =>
+          (m(id, j) -> MetricsAcc.combine(op.op)) +:
+            (if (op.op == GroupOpType.AVG) Seq(c(id, j) -> add) else Nil)
         }
-    }.toMap
+      }.toMap
     val fieldCombine: Array[Option[(Any, Any) => Any]] =
       rowSchema.fieldNames.map(combine.get)
     def foldInto(r: Row, acc: Array[Any]): Unit = {
@@ -1024,27 +928,22 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
       prefix(k) = new GenericRowWithSchema(acc, rowSchema)
       k += 1
     }
-    sigs.zipWithIndex.foreach { case (sigRqs, i) =>
-      val id = s"__rsig$i"
-      sigRqs.foreach { rq =>
-        applyOne(rq) {
-          val (isSuffix, bound) = lookups(rq.spec.id)
-          // bucket keys are distinct and sorted: binarySearch gives the
-          // exact hit or the insertion point directly
-          val hit = java.util.Arrays.binarySearch(idxs, bound)
-          val pos =
-            if (isSuffix) { if (hit >= 0) hit else -(hit + 1) } // first >= bound
-            else { if (hit >= 0) hit else -(hit + 1) - 1 }      // last <= bound
-          val rowOpt =
-            if (isSuffix) { if (pos < nR) Some(suffix(pos)) else None }
-            else { if (pos >= 0) Some(prefix(pos)) else None }
-          rowOpt match {
-            case Some(r) => mergePartial(rq, r, id)
-            case None    => rq.batchesSeen += 1 // no qualifying buckets this batch
-          }
-        }
+    Some(rqs.map { rq =>
+      val (isSuffix, bound) = lookups(rq.spec.id)
+      // bucket keys are distinct and sorted: binarySearch gives the
+      // exact hit or the insertion point directly
+      val hit = java.util.Arrays.binarySearch(idxs, bound)
+      val pos =
+        if (isSuffix) { if (hit >= 0) hit else -(hit + 1) } // first >= bound
+        else { if (hit >= 0) hit else -(hit + 1) - 1 }      // last <= bound
+      val rowOpt =
+        if (isSuffix) { if (pos < nR) Some(suffix(pos)) else None }
+        else { if (pos >= 0) Some(prefix(pos)) else None }
+      rowOpt match {
+        case Some(r) => () => mergePartial(rq, r, sigOf(rq.spec.id))
+        case None    => () => rq.batchesSeen += 1 // no qualifying buckets this batch
       }
-    }
+    })
   }
 
   /** FAIL one query whose per-batch job threw even after per-query retry
@@ -1244,8 +1143,10 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     case _ => true
   }
 
-  private def mergePartial(rq: RQ, row: Row, key: String = null): Unit = {
-    val id = if (key != null) key else rq.spec.id
+  /** Merge one partial row into `rq`'s state, reading the columns named
+    * under `id` (the query's own id, its class representative's, or its
+    * fused signature's). */
+  private def mergePartial(rq: RQ, row: Row, id: String): Unit = {
     val matched = longAt(row, n(id))
     rq.recordsSinceEmit += matched
     rq.recordsSeen += matched
@@ -1259,16 +1160,7 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
           rq.state.asInstanceOf[RawState].add(
             row.getAs[scala.collection.Seq[String]](p(id)).toSeq)
       case GroupAll(ops) =>
-        val st = rq.state.asInstanceOf[GroupAllState]
-        ops.zipWithIndex.foreach { case (op, i) =>
-          import GroupOpType._
-          op.op match {
-            case COUNT       => st.acc.update(i, longAt(row, m(id, i)), null)
-            case COUNT_FIELD => st.acc.update(i, longAt(row, m(id, i)), null)
-            case AVG         => st.acc.update(i, longAt(row, c(id, i)), row.getAs[Any](m(id, i)))
-            case _           => st.acc.update(i, matched, row.getAs[Any](m(id, i)))
-          }
-        }
+        mergeOps(rq.state.asInstanceOf[GroupAllState].acc, ops, row, id, matched)
       case _: CountDistinct =>
         val buf = BufSerde.de[ThetaBuf](row.getAs[Array[Byte]](p(id)))
         rq.state.asInstanceOf[CountDistinctState].buf.merge(buf)
@@ -1282,30 +1174,28 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     }
   }
 
+  /** Fold one partial row's metric columns (named under `id`) into `acc`;
+    * `matched` is the row's matched-record count. */
+  private def mergeOps(acc: MetricsAcc, ops: Seq[GroupOp], row: Row, id: String,
+                       matched: Long): Unit =
+    ops.zipWithIndex.foreach { case (op, i) =>
+      import GroupOpType._
+      op.op match {
+        case COUNT | COUNT_FIELD => acc.update(i, longAt(row, m(id, i)), null)
+        case AVG                 => acc.update(i, longAt(row, c(id, i)), row.getAs[Any](m(id, i)))
+        case _                   => acc.update(i, matched, row.getAs[Any](m(id, i)))
+      }
+    }
+
   /** One grouped job per GROUP BY signature (same key fields and
     * projection — callers group by that); every fused query's metric
     * aggregators ride a single groupBy over the shared cached batch,
     * gated by the query's OWN filter, with a per-query matched count
-    * deciding which groups exist for which query. Batch-local groups cap
-    * at the sum of the fused queries' entries budgets in key order; the
-    * CALLER falls back to per-query jobs when that cap is hit (a
-    * truncated union could crowd one query's groups out with another's —
-    * see the groupedC fallback in processBatch). */
-  /** The class representatives of a fused grouped job ([[sharedReps]]
-    * classes): duplicate (filter, projection, aggregation) queries share
-    * one gate + one aggregate-column set. Used by BOTH collectGrouped
-    * (column building, cap) and the processBatch cap-hit check — the two
-    * must agree on the cap or the fallback would trigger inconsistently. */
-  private def groupedRepRqs(rqs: Seq[RQ]): Seq[RQ] = {
-    val reps = sharedReps(rqs)
-    rqs.filter(rq => reps(rq.spec.id) == rq.spec.id)
-  }
-
-  private def groupedCap(rqs: Seq[RQ]): Int =
-    QueryRunner.fusedEntriesCap(groupedRepRqs(rqs).map(
-      _.spec.aggregation.asInstanceOf[GroupBy].entries))
-
-  private def collectGrouped(rqs: Seq[RQ], df: DataFrame): Array[Row] = {
+    * deciding which groups exist for which query. Duplicate (filter,
+    * projection, aggregation) queries share one gate and one aggregate-
+    * column set ([[sharedReps]] classes). Batch-local groups cap at the
+    * sum of the classes' entries budgets in key order. */
+  private def collectGrouped(rqs: Seq[RQ], df: DataFrame): Option[Seq[() => Unit]] = {
     val head = rqs.head
     val spec0 = head.spec.aggregation.asInstanceOf[GroupBy]
     val schema = df.schema
@@ -1313,9 +1203,8 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     val keyCols = spec0.fields.map { case (f, alias) =>
       coalesce(fld(f).cast("string"), lit(SketchAggregators.NullString)).as(alias)
     }
-    // spec-class CSE: duplicate queries ride their representative's
-    // columns (the apply phase aliases reads the same way)
-    val repRqs = groupedRepRqs(rqs)
+    val reps = sharedReps(rqs)
+    val repRqs = rqs.filter(rq => reps(rq.spec.id) == rq.spec.id)
     val gates = repRqs.map(rq => rq.spec.id -> pred(rq, schema)).toMap
     // rows matching NO fused query never enter the shuffle; with one
     // query this is exactly the old pre-filter
@@ -1325,46 +1214,41 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
       opColumns(rq.spec.id, rq.spec.aggregation.asInstanceOf[GroupBy].ops, gate, fld) :+
         sum(when(gate, lit(1L))).as(n(rq.spec.id))
     }
-    val entriesCap = groupedCap(rqs)
-    filtered
+    val entriesCap = QueryRunner.fusedEntriesCap(
+      repRqs.map(_.spec.aggregation.asInstanceOf[GroupBy].entries))
+    val rows = filtered
       .groupBy(keyCols: _*)
       .agg(aggCols.head, aggCols.tail: _*)
       .orderBy(spec0.fields.map { case (_, alias) => col(alias) }: _*)
       .limit(entriesCap)
       .collect()
+    // Union cap hit with multiple classes: the kept smallest-keys union
+    // can CROWD OUT one query's groups with another's (a query under its
+    // own entries cap could lose groups it would have kept from its own
+    // job). Rare — the over-cap regime — so the rows are untrusted and
+    // each query re-collects alone, with its own filter and entries budget.
+    if (repRqs.size > 1 && rows.length >= entriesCap) None
+    else Some(rqs.map(rq => () => applyGrouped(rq, rows, reps(rq.spec.id))))
   }
 
-  private def applyGrouped(rqs: Seq[RQ], rows: Array[Row],
-                           repOf: String => String = identity): Unit = {
-    val spec0 = rqs.head.spec.aggregation.asInstanceOf[GroupBy]
+  /** Merge a grouped job's rows into `rq`'s groups, reading the columns
+    * named under `id` (its class representative's). */
+  private def applyGrouped(rq: RQ, rows: Array[Row], id: String): Unit = {
     // matched-record counters (recordsSinceEmit/recordsSeen/batchesSeen) are
     // NOT derived from these capped rows — they ride the ungrouped shared
-    // pass (processBatch → mergePartial), so they stay exact when distinct
-    // groups exceed the entries cap.
-    rqs.foreach { rq =>
-      val spec = rq.spec.aggregation.asInstanceOf[GroupBy]
-      val id = repOf(rq.spec.id)
-      val st = rq.state.asInstanceOf[GroupByState]
-      // same per-batch include gate as mergePartial — evaluated once at
-      // batch start, so counter updates in the shared pass can't close
-      // the gate mid-batch for the grouped job
-      if (rq.includeOpen) rows.foreach { row =>
-        // a group whose rows all failed THIS query's gate does not exist
-        // for it — creating it would emit a spurious zero-count group
-        val matched = longAt(row, n(id))
-        if (matched > 0L) {
-          val key = spec0.fields.indices.map(row.getString)
-          val acc = st.accFor(key)
-          spec.ops.zipWithIndex.foreach { case (op, i) =>
-            import GroupOpType._
-            op.op match {
-              case COUNT | COUNT_FIELD => acc.update(i, longAt(row, m(id, i)), null)
-              case AVG                 => acc.update(i, longAt(row, c(id, i)), row.getAs[Any](m(id, i)))
-              case _                   => acc.update(i, matched, row.getAs[Any](m(id, i)))
-            }
-          }
-        }
-      }
+    // pass (mergePartial), so they stay exact when distinct groups exceed
+    // the entries cap.
+    val spec = rq.spec.aggregation.asInstanceOf[GroupBy]
+    val st = rq.state.asInstanceOf[GroupByState]
+    // same per-batch include gate as mergePartial — evaluated once at
+    // batch start, so counter updates in the shared pass can't close
+    // the gate mid-batch for the grouped job
+    if (rq.includeOpen) rows.foreach { row =>
+      // a group whose rows all failed THIS query's gate does not exist
+      // for it — creating it would emit a spurious zero-count group
+      val matched = longAt(row, n(id))
+      if (matched > 0L)
+        mergeOps(st.accFor(spec.fields.indices.map(row.getString)), spec.ops, row, id, matched)
     }
   }
 
@@ -1505,6 +1389,11 @@ object QueryRunner {
     * "transient" diagnosis is overruled and it FAILs alone (see
     * RQ.transientStrikes). */
   private[streaming] val MaxTransientStrikes = 3
+
+  /** The kinds of per-batch Spark job, in the order their merges apply. */
+  object JobKind extends Enumeration {
+    val Shared, Equality, Range, Grouped = Value
+  }
 
   /** Shared daemon pool for concurrent per-batch job submission (Spark's
     * scheduler interleaves the jobs; this pool only drives collect()s). */

@@ -14,6 +14,9 @@ import scala.jdk.CollectionConverters._
  * partitioner, GROUP BY fusion, and the generic compiled path all engage
  * under random mixtures — then every query's emitted records are compared
  * against `QueryCompiler.run` on the same frame as canonical multisets.
+ * A few fixed specs ride along with every random mix so that each of the
+ * runner's four job kinds (shared, equality, range, grouped) is sure to
+ * run, and each test asserts that all four did.
  *
  * The fixture's numeric column is integral-valued so double sums are
  * order-insensitive (exact in any addition order below 2^53): any
@@ -108,9 +111,33 @@ class DifferentialSpec extends SparkTestBase {
     QuerySpec(id, filter = filter, aggregation = aggregation)
   }
 
+  /** One or two specs per job kind, whatever the random mix holds. */
+  private val fixedSpecs: Seq[QuerySpec] = {
+    def gAll(ops: GroupOp*) = GroupAll(ops)
+    val cnt = GroupOp(GroupOpType.COUNT, None, "cnt")
+    def cmp(f: String, v: Any, op: BinOp.Value) = Some(Binary(Field(f), Lit(v), op))
+    Seq(
+      QuerySpec("fx_shared", aggregation = CountDistinct(Seq("user"))),
+      QuerySpec("fx_eq_click", filter = cmp("etype", "click", BinOp.EQUALS),
+        aggregation = gAll(cnt, GroupOp(GroupOpType.SUM, Some("value"), "sv"))),
+      QuerySpec("fx_eq_view", filter = cmp("etype", "view", BinOp.EQUALS),
+        aggregation = gAll(cnt)),
+      QuerySpec("fx_rng_lo", filter = cmp("value", 40.0, BinOp.LESS_THAN),
+        aggregation = gAll(cnt, GroupOp(GroupOpType.MIN, Some("value"), "mn"))),
+      QuerySpec("fx_rng_hi", filter = cmp("value", 60.0, BinOp.GREATER_THAN),
+        aggregation = gAll(cnt, GroupOp(GroupOpType.MAX, Some("event_id"), "mx"),
+          GroupOp(GroupOpType.AVG, Some("value"), "av"))),
+      QuerySpec("fx_grouped", aggregation = GroupBy(Seq("etype" -> "e"),
+        Seq(cnt, GroupOp(GroupOpType.SUM, Some("value"), "sv")), entries = 32)))
+  }
+
+  private def assertAllKindsRan(runner: QueryRunner): Unit =
+    assert(runner.lastBatchJobs.keySet === QueryRunner.JobKind.values.toSet,
+      s"jobs ${runner.lastBatchJobs}")
+
   test("50 random specs across THREE micro-batches: merged partials equal one batch pass") {
     val rnd = new scala.util.Random(20260813L)
-    val specs = (0 until 50).map(i => randomSpec(s"xb$i", rnd))
+    val specs = (0 until 50).map(i => randomSpec(s"xb$i", rnd)) ++ fixedSpecs
     val clock = new ManualClock(0)
     val runner = new QueryRunner(spark, clock)
     specs.foreach(s => assert(runner.register(s).isEmpty, s"${s.id} failed validation"))
@@ -118,6 +145,7 @@ class DifferentialSpec extends SparkTestBase {
     runner.processBatch(events.filter(col("event_id") <= 40))
     runner.processBatch(events.filter(col("event_id") > 40 && col("event_id") <= 45))
     runner.processBatch(events.filter(col("event_id") > 45))
+    assertAllKindsRan(runner)
     clock.advance(20000)
     val byId = runner.onTick().map(c => c.queryId -> c).toMap
     specs.foreach { spec =>
@@ -134,11 +162,12 @@ class DifferentialSpec extends SparkTestBase {
 
   test("80 random specs: one shared runner pass equals the batch compiler, query by query") {
     val rnd = new scala.util.Random(20260812L)
-    val specs = (0 until 80).map(i => randomSpec(s"rq$i", rnd))
+    val specs = (0 until 80).map(i => randomSpec(s"rq$i", rnd)) ++ fixedSpecs
     val clock = new ManualClock(0)
     val runner = new QueryRunner(spark, clock)
     specs.foreach(s => assert(runner.register(s).isEmpty, s"${s.id} failed validation"))
     runner.processBatch(events)
+    assertAllKindsRan(runner)
     clock.advance(20000)
     val byId = runner.onTick().map(c => c.queryId -> c).toMap
     assert(byId.size === specs.size)
@@ -154,12 +183,13 @@ class DifferentialSpec extends SparkTestBase {
 
   test("same 80 specs split across two micro-batches still equal the batch compiler") {
     val rnd = new scala.util.Random(8670L)
-    val specs = (0 until 80).map(i => randomSpec(s"xq$i", rnd))
+    val specs = (0 until 80).map(i => randomSpec(s"xq$i", rnd)) ++ fixedSpecs
     val clock = new ManualClock(0)
     val runner = new QueryRunner(spark, clock)
     specs.foreach(s => assert(runner.register(s).isEmpty, s"${s.id} failed validation"))
     runner.processBatch(events.filter(col("event_id") <= 50))
     runner.processBatch(events.filter(col("event_id") > 50))
+    assertAllKindsRan(runner)
     clock.advance(20000)
     val byId = runner.onTick().map(c => c.queryId -> c).toMap
     specs.foreach { spec =>

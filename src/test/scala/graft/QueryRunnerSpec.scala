@@ -4,7 +4,7 @@ import graft.model._
 import graft.compile.QueryCompiler
 import graft.streaming._
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
@@ -1151,22 +1151,64 @@ class QueryRunnerSpec extends SparkTestBase {
     assert(parse(byId("survivor").records.head)("cnt") === 33)
   }
 
+  /** `events` rebuilt on a range (not a LocalRelation, which
+    * ConvertToLocalRelation would evaluate eagerly for EVERY plan) with
+    * `poison` wrapped around the etype column, so only a job that reads
+    * etype, or materializes the cached batch, evaluates it. */
+  private def poisonedEvents(poison: Column => Column): DataFrame =
+    spark.range(1, 101)
+      .select(col("id").as("event_id"),
+        poison(when(col("id") % 3 === 0, "click").otherwise("view")).as("etype"),
+        col("id").cast("double").as("value"),
+        concat(lit("u"), col("id") % 7).as("user"))
+
   test("a transient fault that clears by the per-query retry merges without a FAIL") {
-    val clock = new ManualClock(0)
-    val runner = new QueryRunner(spark, clock)
-    runner.register(clickCountSpec("retryok", durationMs = 20000L))
-    // fail only the FIRST evaluation: the shared-pass job dies, the
-    // per-query isolate retry then succeeds — no FAIL clip, partials kept
-    TransientPoison.armed.set(true)
-    TransientPoison.failures.set(1)
-    val flaky = events.withColumn("etype", TransientPoison.boomOnce(col("etype")))
-    runner.processBatch(flaky)
-    assert(runner.activeQueryIds === Seq("retryok"))
-    assert(!runner.results.exists(_.signal.contains("FAIL")))
-    TransientPoison.armed.set(false)
-    clock.advance(30000)
-    val byId = runner.onTick().map(c => c.queryId -> c).toMap
-    assert(parse(byId("retryok").records.head)("cnt") === 33)
+    // one case per job kind, each kind's job reading etype: fail only the
+    // FIRST evaluation — the job dies, the per-query isolate retry then
+    // succeeds — no FAIL clip, and every query merges exactly once
+    import QueryRunner.JobKind._
+    val cnt = GroupOp(GroupOpType.COUNT, None, "cnt")
+    def eqQ(id: String, v: String) = QuerySpec(id,
+      filter = Some(Binary(Field("etype"), Lit(v), BinOp.EQUALS)),
+      aggregation = GroupAll(Seq(cnt)), durationMs = 20000L)
+    def rangeQ(id: String, op: BinOp.Value) = QuerySpec(id,
+      filter = Some(Binary(Field("value"), Lit(50.0), op)),
+      aggregation = GroupAll(Seq(cnt, GroupOp(GroupOpType.COUNT_FIELD, Some("etype"), "ne"))),
+      durationMs = 20000L)
+    def groupQ(id: String, f: Option[Expr]) = QuerySpec(id, filter = f,
+      aggregation = GroupBy(Seq("etype" -> "e"), Seq(cnt)), durationMs = 20000L)
+    // (kind, queries, each query's matched records)
+    val cases = Seq(
+      (Shared, Seq(clickCountSpec("retryok", durationMs = 20000L)), Seq(33L)),
+      (Equality, Seq(eqQ("eq_c", "click"), eqQ("eq_v", "view")), Seq(33L, 67L)),
+      (Range, Seq(rangeQ("rg_gt", BinOp.GREATER_THAN), rangeQ("rg_le", BinOp.LESS_OR_EQUALS)),
+        Seq(50L, 50L)),
+      (Grouped, Seq(groupQ("gb_all", None),
+        groupQ("gb_hi", Some(Binary(Field("value"), Lit(50.0), BinOp.GREATER_THAN)))),
+        Seq(100L, 50L)))
+    cases.foreach { case (kind, specs, matched) =>
+      val clock = new ManualClock(0)
+      val runner = new QueryRunner(spark, clock)
+      specs.foreach(s0 => assert(runner.register(s0).isEmpty))
+      TransientPoison.armed.set(true)
+      TransientPoison.failures.set(1)
+      try runner.processBatch(poisonedEvents(TransientPoison.boomOnce(_)))
+      finally TransientPoison.armed.set(false)
+      assert(TransientPoison.failures.get() <= 0, s"$kind: the fault never fired")
+      assert(runner.lastBatchJobs.contains(kind), s"$kind: jobs ${runner.lastBatchJobs}")
+      assert(runner.activeQueryIds === specs.map(_.id), kind)
+      assert(!runner.results.exists(_.signal.contains("FAIL")), kind)
+      specs.zip(matched).foreach { case (s0, n) =>
+        val st = runner.queryStats(s0.id).get
+        assert(st("batches_seen") === 1 && st("records_seen") === n, s"$kind ${s0.id}: $st")
+      }
+      clock.advance(30000)
+      val byId = runner.onTick().map(c => c.queryId -> c).toMap
+      specs.zip(matched).foreach { case (s0, n) =>
+        val total = byId(s0.id).records.map(parse(_)("cnt").asInstanceOf[Number].longValue).sum
+        assert(total === n, s"$kind ${s0.id}: merged more than once")
+      }
+    }
   }
 
   test("a fault that stays 'transient' forever FAILs the query after bounded replays") {
@@ -1180,18 +1222,11 @@ class QueryRunnerSpec extends SparkTestBase {
     // transient but is deterministic. The first MaxTransientStrikes-1
     // batches rethrow (stream would replay); the strike limit then
     // overrules the diagnosis and FAILs the one query, keeping the
-    // stream — and every other query — alive. The batch is range-based
-    // (not a LocalRelation, which ConvertToLocalRelation would evaluate
-    // eagerly for EVERY plan): only cursed's filter reads the poisoned
-    // column, healthy's pruned plan never evaluates it.
+    // stream — and every other query — alive. Only cursed's filter reads
+    // the poisoned column; healthy's pruned plan never evaluates it.
     TransientPoison.armed.set(true)
     try {
-      val poisoned = spark.range(1, 101)
-        .select(col("id").as("event_id"),
-          TransientPoison.boom(
-            when(col("id") % 3 === 0, "click").otherwise("view")).as("etype"),
-          col("id").cast("double").as("value"),
-          concat(lit("u"), col("id") % 7).as("user"))
+      val poisoned = poisonedEvents(TransientPoison.boom(_))
       intercept[Exception] { runner.processBatch(poisoned) } // strike 1
       intercept[Exception] { runner.processBatch(poisoned) } // strike 2
       runner.processBatch(poisoned)                          // strike 3 → FAIL
@@ -1201,6 +1236,68 @@ class QueryRunnerSpec extends SparkTestBase {
     assert(failClip.exists(_.signal.contains("FAIL")))
     // the un-poisoned query survived all three batches
     assert(runner.activeQueryIds === Seq("healthy"))
+
+    // A fused GROUP BY pair rides two jobs (the shared pass for its
+    // counts, one grouped job), so the batch is cached and an executor
+    // poison would reach both members. The fault here is per query
+    // instead: g_cursed extracts a subfield of the string column
+    // `FetchFailed`, and the analysis error names that column, which
+    // isTransientFailure reads as a shuffle fetch failure — a
+    // deterministic error dressed as a transient one.
+    val runner2 = new QueryRunner(spark, clock)
+    def gb(id: String, f: Expr) = QuerySpec(id, filter = Some(f),
+      aggregation = GroupBy(Seq("user" -> "u"), Seq(GroupOp(GroupOpType.COUNT, None, "cnt"))),
+      durationMs = 60000L)
+    runner2.register(gb("g_cursed", Binary(Field("FetchFailed", Some("k")), Lit("x"), BinOp.EQUALS)))
+    runner2.register(gb("g_partner", Binary(Field("value"), Lit(50.0), BinOp.GREATER_THAN)))
+    val withBadColumn = events.withColumn("FetchFailed", lit("x"))
+    intercept[Exception] { runner2.processBatch(withBadColumn) } // strike 1
+    intercept[Exception] { runner2.processBatch(withBadColumn) } // strike 2
+    runner2.processBatch(withBadColumn)                          // strike 3 → FAIL
+    assert(runner2.lastBatchJobs ===
+      Map(QueryRunner.JobKind.Shared -> 1, QueryRunner.JobKind.Grouped -> 1))
+    val cursedClips = runner2.results.filter(_.queryId == "g_cursed")
+    assert(cursedClips.size === 1 && cursedClips.head.signal.contains("FAIL"), cursedClips)
+    assert(runner2.activeQueryIds === Seq("g_partner"))
+    // the partner merged the completed batch once, and merges the next once
+    assert(runner2.queryStats("g_partner").get("batches_seen") === 1)
+    runner2.processBatch(withBadColumn)
+    assert(runner2.queryStats("g_partner").get("batches_seen") === 2)
+    val groups = runner2.finishAll().head.records.map(parse)
+    assert(groups.map(_("cnt").asInstanceOf[Number].longValue).sum === 100L,
+      "ids 51..100, two batches")
+  }
+
+  test("a range-fold error FAILs its query alone and never escapes the batch half-merged") {
+    val clock = new ManualClock(0)
+    val runner = new QueryRunner(spark, clock)
+    val cnt = GroupOp(GroupOpType.COUNT, None, "cnt")
+    def ranged(id: String, t: Double, ops: GroupOp*) = QuerySpec(id,
+      filter = Some(Binary(Field("value"), Lit(t), BinOp.GREATER_THAN)),
+      aggregation = GroupAll(ops), durationMs = 600000L)
+    runner.register(ranged("r10", 10.0, cnt))
+    runner.register(ranged("r50", 50.0, cnt))
+    // Spark takes a string MIN per bucket, but the driver's numeric
+    // prefix/suffix fold cannot combine two strings (50.0 is a data
+    // value, so even alone this query folds two buckets)
+    runner.register(ranged("rbad", 50.0, cnt, GroupOp(GroupOpType.MIN, Some("etype"), "me")))
+    runner.register(QuerySpec("all", aggregation = GroupAll(Seq(cnt)), durationMs = 600000L))
+    runner.processBatch(events)
+    assert(runner.lastBatchJobs ===
+      Map(QueryRunner.JobKind.Shared -> 1, QueryRunner.JobKind.Range -> 1))
+    val failed = runner.results.filter(_.queryId == "rbad")
+    assert(failed.size === 1 && failed.head.signal.contains("FAIL"))
+    assert(failed.head.meta("errors").asInstanceOf[Seq[String]]
+      .exists(_.contains("batch evaluation")))
+    assert(runner.activeQueryIds === Seq("r10", "r50", "all"))
+    val want = Map("r10" -> 90L, "r50" -> 50L, "all" -> 100L)
+    want.foreach { case (id, n) =>
+      val st = runner.queryStats(id).get
+      assert(st("batches_seen") === 1 && st("records_seen") === n, s"$id: $st")
+    }
+    clock.advance(700000)
+    val byId = runner.onTick().map(c => c.queryId -> c).toMap
+    want.foreach { case (id, n) => assert(parse(byId(id).records.head)("cnt") === n, id) }
   }
 
   test("cross-filter GROUP BY fusion: each query sees only ITS groups, values exact") {
@@ -1367,10 +1464,11 @@ class QueryRunnerSpec extends SparkTestBase {
     runner.processBatch(events)
     // the fold is result-identical to the generic path by design, so
     // the structural probe is what proves it ENGAGED (and stays
-    // engaged — a silently-narrowed admission rule fails here)
-    assert(runner.lastBatchRangeFused === 20,
+    // engaged — a silently-narrowed admission rule fails here): one
+    // range job and no shared pass means all 20 rode the fold
+    assert(runner.lastBatchJobs === Map(QueryRunner.JobKind.Range -> 1),
       s"all 20 threshold queries must ride the bucketed fold, " +
-        s"fused ${runner.lastBatchRangeFused}")
+        s"jobs ${runner.lastBatchJobs}")
     // and the answers are right: query i counts values > 4i among 1..100
     clock.advance(700000)
     val byId = runner.onTick().map(c => c.queryId -> c).toMap
