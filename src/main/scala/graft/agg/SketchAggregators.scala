@@ -13,10 +13,13 @@ import java.io.{ObjectInputStream, ObjectOutputStream}
 
 /**
  * Bounded-memory, mergeable sketch aggregations (SURVEY.md §2.4), built on
- * Apache DataSketches (already on the Spark classpath) as typed
- * [[Aggregator]]s. Catalyst automatically splits these into
- * partial(update)/final(merge) around the shuffle — the exact contract the
- * reference proves with its two-partial combine tests
+ * Apache DataSketches (already on the Spark classpath). The finishing
+ * aggregations here are typed [[Aggregator]]s; the partial form that
+ * emits a serialized buffer for a downstream combiner (the streaming
+ * runner's driver state, persisted sketch tables) is the native Catalyst
+ * aggregate [[SketchPartial]] over the same buffers. Catalyst splits both
+ * into partial(update)/final(merge) around the shuffle — the exact
+ * contract the reference proves with its two-partial combine tests
  * (JoinBoltTest.java:696-893).
  *
  * Buffers hold live sketch objects in memory; (de)serialization to the
@@ -58,21 +61,7 @@ object BufSerde {
   }
 }
 
-/** Partial-form aggregators: identical update/merge to their finishing
-  * counterparts, but `finish` emits the serialized buffer so a downstream
-  * combiner (the streaming runner's driver state) can keep merging across
-  * micro-batches. */
-final class ThetaPartialAgg(lgK: Int = 17)
-    extends Aggregator[String, ThetaBuf, Array[Byte]] {
-  def zero: ThetaBuf = new ThetaBuf(lgK)
-  def reduce(b: ThetaBuf, in: String): ThetaBuf = { if (in != null) b.update(in); b }
-  def merge(b1: ThetaBuf, b2: ThetaBuf): ThetaBuf = b1.merge(b2)
-  def finish(b: ThetaBuf): Array[Byte] = BufSerde.ser(b)
-  def bufferEncoder: Encoder[ThetaBuf] = Encoders.javaSerialization[ThetaBuf]
-  def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-}
-
-/** Re-merge PERSISTED theta partials (the bytes [[ThetaPartialAgg]]
+/** Re-merge PERSISTED theta partials (the bytes [[SketchPartial.Theta]]
   * emits) and finish to the rounded distinct estimate — the second half
   * of the save/restore contract: sketches written to a parquet binary
   * column in one run merge with fresh partials in the next, so history
@@ -100,19 +89,7 @@ final class ThetaMergeEstimateAgg(lgK: Int = 17, requireExact: Boolean = false)
   def outputEncoder: Encoder[java.lang.Long] = Encoders.LONG
 }
 
-final class KllPartialAgg(k: Int = 2048)
-    extends Aggregator[java.lang.Double, KllBuf, Array[Byte]] {
-  def zero: KllBuf = new KllBuf(k)
-  def reduce(b: KllBuf, in: java.lang.Double): KllBuf = {
-    if (in != null) b.update(in.doubleValue); b
-  }
-  def merge(b1: KllBuf, b2: KllBuf): KllBuf = b1.merge(b2)
-  def finish(b: KllBuf): Array[Byte] = BufSerde.ser(b)
-  def bufferEncoder: Encoder[KllBuf] = Encoders.javaSerialization[KllBuf]
-  def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-}
-
-/** Re-merge PERSISTED KLL partials (the bytes [[KllPartialAgg]] emits)
+/** Re-merge PERSISTED KLL partials (the bytes [[SketchPartial.Kll]] emits)
   * and finish to the quantile values at `points` — the distribution
   * family's half of the save/restore contract, mirroring
   * [[ThetaMergeEstimateAgg]]: snapshots written to a parquet binary
@@ -145,20 +122,8 @@ final class KllMergeQuantilesAgg(points: Array[Double], k: Int = 2048)
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Double, Double)]]()
 }
 
-final class FreqItemsPartialAgg(maxMapSize: Int = 1024)
-    extends Aggregator[String, FreqItemsBuf, Array[Byte]] {
-  def zero: FreqItemsBuf = new FreqItemsBuf(maxMapSize)
-  def reduce(b: FreqItemsBuf, in: String): FreqItemsBuf = {
-    if (in != null) b.update(in); b
-  }
-  def merge(b1: FreqItemsBuf, b2: FreqItemsBuf): FreqItemsBuf = b1.merge(b2)
-  def finish(b: FreqItemsBuf): Array[Byte] = BufSerde.ser(b)
-  def bufferEncoder: Encoder[FreqItemsBuf] = Encoders.javaSerialization[FreqItemsBuf]
-  def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-}
-
 /** Re-merge PERSISTED FrequentItems partials (the bytes
-  * [[FreqItemsPartialAgg]] emits) and finish to the top-k rows — the
+  * [[SketchPartial.FreqItems]] emits) and finish to the top-k rows — the
   * TOP_K family's half of the save/restore contract, completing the
   * trio with [[ThetaMergeEstimateAgg]] (count-distinct) and
   * [[KllMergeQuantilesAgg]] (distribution). Same finish semantics as
@@ -410,27 +375,4 @@ final class FreqItemsTopKAgg(k: Int, threshold: Long = 0L, maxMapSize: Int = 102
   def bufferEncoder: Encoder[FreqItemsBuf] = Encoders.javaSerialization[FreqItemsBuf]
   def outputEncoder: Encoder[Seq[TopKRow]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[TopKRow]]()
-}
-
-// ---------------------------------------------------------------------------
-// RAW — size-capped record collector (records pre-serialized to JSON strings)
-// Reference: Raw strategy, JoinBoltTest.java:339-351 (truncates at size).
-// ---------------------------------------------------------------------------
-
-final class CappedCollectAgg(cap: Int)
-    extends Aggregator[String, (Int, List[String]), Seq[String]] {
-  // buffer carries an explicit size: a full buffer costs O(1) per further
-  // matched row, not an O(cap) list walk
-  def zero: (Int, List[String]) = (0, Nil)
-  def reduce(b: (Int, List[String]), in: String): (Int, List[String]) =
-    if (b._1 >= cap || in == null) b else (b._1 + 1, in :: b._2)
-  def merge(b1: (Int, List[String]), b2: (Int, List[String])): (Int, List[String]) = {
-    val keep2 = math.max(0, cap - b1._1)
-    (b1._1 + math.min(b2._1, keep2), b1._2 ++ b2._2.take(keep2))
-  }
-  def finish(b: (Int, List[String])): Seq[String] = b._2.reverse
-  def bufferEncoder: Encoder[(Int, List[String])] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Int, List[String])]()
-  def outputEncoder: Encoder[Seq[String]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[String]]()
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
-import graft.agg.{BufSerde, ThetaBuf, ThetaPartialAgg}
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import graft.agg.{BufSerde, SketchPartial, ThetaBuf}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
@@ -38,10 +38,10 @@ object JoinAdvisor {
     * est_join_rows). */
   def report(a: DataFrame, keyA: String, b: DataFrame, keyB: String,
              lgK: Int = 18): DataFrame = {
-    val agg = udaf(new ThetaPartialAgg(lgK), Encoders.STRING)
     def side(df: DataFrame, key: String): (Long, org.apache.datasketches.theta.CompactSketch) = {
       val r = df.agg(count(lit(1)).as("n"),
-        agg(col(key).cast("string")).as("sk")).head() // bounded: ONE row
+        SketchPartial.col(col(key).cast("string"), SketchPartial.Theta(lgK)).as("sk"))
+        .head() // bounded: ONE row
       (r.getLong(0), BufSerde.de[ThetaBuf](r.getAs[Array[Byte]](1)).result)
     }
     // the two side scans are independent actions — submit them

@@ -76,12 +76,10 @@ object KeyDiscovery {
     require(cols.map(_._1).distinct.size == cols.size,
       "candidate labels must be unique")
     val spark = cols.head._2.sparkSession
-    val agg = org.apache.spark.sql.functions.udaf(
-      new graft.agg.ThetaPartialAgg(lgK),
-      org.apache.spark.sql.Encoders.STRING)
     val sketches = cols.map { case (label, df, c) =>
       val bytes = df.filter(col(c).isNotNull)
-        .select(agg(col(c).cast("string")).as("sk"))
+        .select(graft.agg.SketchPartial.col(col(c).cast("string"),
+          graft.agg.SketchPartial.Theta(lgK)).as("sk"))
         .head.getAs[Array[Byte]](0) // bounded: ONE row per column
       label -> graft.agg.BufSerde.de[graft.agg.ThetaBuf](bytes).result
     }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, DoubleType, FloatType}
 
 /**
  * Probabilistic record linkage (Fellegi & Sunter 1969; the model behind
@@ -133,9 +134,12 @@ object Linkage {
    * their STRING cast (the array must be homogeneous), so derived keys
    * must come from types whose string form is equality-injective —
    * strings, integral types, booleans, dates, timestamps, decimals of
-   * one scale. Float/double keys are NOT supported (Spark's comparison
-   * normalizes -0.0 == 0.0 but their strings differ); bucket them to
-   * integers first (e.g. `floor(bal/1000)`, which is LONG). Id columns
+   * one scale. Enforced by [[contractKeys]]: a float/double key is
+   * rejected (Spark's comparison normalizes -0.0 == 0.0 but their
+   * strings differ; bucket it to an integer first, e.g.
+   * `floor(bal/1000)`, which is LONG), a field whose left and right key
+   * types differ is rejected, and decimal keys on both sides are cast
+   * to one common precision and scale. Id columns
    * (`lId`/`rId`) must be NON-NULL and distinctly named: `n_u` is
    * derived as `n_all − n_m`, so a null-id pair would count as a
    * non-match here whereas [[score]] drops null-labeled rows from both
@@ -147,6 +151,7 @@ object Linkage {
                               lId: String, rId: String): DataFrame = {
     require(blockCols.nonEmpty, "blocking columns required — never cross-join")
     require(fields.nonEmpty, "at least one comparison field")
+    val keys = contractKeys(left, right, fields)
     val bc = blockCols.map(col)
     val fieldNames = fields.map(_._1)
     // ONE narrow projection per side — (block, id, derived keys) —
@@ -170,10 +175,10 @@ object Linkage {
     // linkage; pick blocks accordingly.
     val shufN = math.max(left.sparkSession.sparkContext.defaultParallelism, 1)
     val lp = graft.plans.CacheScope.persistTracked(left.select(
-      (bc :+ col(lId)) ++ fields.map { case (f, kl, _) => kl.as(s"lk_$f") }: _*)
+      (bc :+ col(lId)) ++ keys.map { case (f, kl, _) => kl.as(s"lk_$f") }: _*)
       .repartition(shufN, bc: _*))
     val rp = graft.plans.CacheScope.persistTracked(right.select(
-      (bc :+ col(rId)) ++ fields.map { case (f, _, kr) => kr.as(s"rk_$f") }: _*)
+      (bc :+ col(rId)) ++ keys.map { case (f, _, kr) => kr.as(s"rk_$f") }: _*)
       .repartition(shufN, bc: _*))
     // ONE frequency pass per side (r15): posexplode the string-cast
     // derived keys — ordinal i = field i, ordinal nF = the constant
@@ -241,5 +246,31 @@ object Linkage {
     scoredDf.withColumn("score",
       round(fieldNames.map(f => col(s"w_$f")).reduce(_ + _), 4))
       .drop(fieldNames.map(f => s"w_$f"): _*)
+  }
+
+  /** The key-type contract of [[scoreBlockedByFrequency]], enforced on
+    * the derived keys' resolved types: each field's (name, left key,
+    * right key), decimal pairs cast to one type that holds both. */
+  private def contractKeys(left: DataFrame, right: DataFrame,
+                           fields: Seq[(String, Column, Column)]): Seq[(String, Column, Column)] = {
+    val lt = left.select(fields.map(_._2): _*).schema.map(_.dataType)
+    val rt = right.select(fields.map(_._3): _*).schema.map(_.dataType)
+    fields.zip(lt.zip(rt)).map { case ((f, kl, kr), (a, b)) =>
+      require(!Seq(a, b).exists(t => t == FloatType || t == DoubleType),
+        s"linkage key '$f' is ${a.simpleString}/${b.simpleString}: float and " +
+          "double keys compare unequal as strings (-0.0 vs 0.0) — bucket " +
+          "them to an integer first, e.g. floor(x / 1000)")
+      (a, b) match {
+        case (da: DecimalType, db: DecimalType) =>
+          val scale = math.max(da.scale, db.scale)
+          val t = DecimalType(math.min(DecimalType.MAX_PRECISION,
+            math.max(da.precision - da.scale, db.precision - db.scale) + scale), scale)
+          (f, kl.cast(t), kr.cast(t))
+        case _ =>
+          require(a == b, s"linkage key '$f' has left type ${a.simpleString} " +
+            s"but right type ${b.simpleString}: cast both sides to one type")
+          (f, kl, kr)
+      }
+    }
   }
 }

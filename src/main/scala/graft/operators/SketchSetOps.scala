@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.agg.{BufSerde, ThetaBuf, ThetaMergeEstimateAgg, ThetaPartialAgg}
+import graft.agg.{BufSerde, SketchPartial, ThetaBuf, ThetaMergeEstimateAgg}
 import graft.compile.QueryCompiler
 import org.apache.datasketches.theta.{CompactSketch, SetOperation}
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
  * (SURVEY §2.4; DataSketches theta supports union/intersection/A-not-B on
  * the same sketch family — the reason bullet chose theta over HLL). The
  * plan is ONE shuffle: per-segment theta partials combine map-side
- * (`ThetaPartialAgg` — O(2^lgK) state per task, never O(distinct)), one
+ * ([[SketchPartial]] — O(2^lgK) state per task, never O(distinct)), one
  * final sketch per segment lands at the driver (two bounded rows), and
  * the set algebra runs on the two compact sketches there. Exact while
  * both segments stay inside the sketch exact regime (≤ 2^lgK retained
@@ -51,11 +51,11 @@ object SketchSetOps {
   def distinctOverlap(df: DataFrame, segCol: String, fields: Seq[String],
                       segA: String, segB: String, lgK: Int = 18): DataFrame = {
     require(segA != segB, "overlap of a segment with itself is just its cardinality")
-    val agg = udaf(new ThetaPartialAgg(lgK), Encoders.STRING)
     // one scan, one shuffle to exactly two reducer keys
     val partials = df.filter(col(segCol).isin(segA, segB))
       .groupBy(col(segCol).as("seg"))
-      .agg(agg(QueryCompiler.compositeKey(df, fields)).as("sk"))
+      .agg(SketchPartial.col(QueryCompiler.compositeKey(df, fields),
+        SketchPartial.Theta(lgK)).as("sk"))
       .collect() // bounded: ≤ 2 rows of ≤ 2^lgK·8 bytes
       .map(r => r.getString(0) -> BufSerde.de[ThetaBuf](r.getAs[Array[Byte]](1)).result)
       .toMap
@@ -78,9 +78,9 @@ object SketchSetOps {
     * One scan + one shuffle; each row is O(2^lgK) bytes max. */
   def thetaPartials(df: DataFrame, segCol: String, fields: Seq[String],
                     lgK: Int = 18): DataFrame = {
-    val agg = udaf(new ThetaPartialAgg(lgK), Encoders.STRING)
     df.groupBy(col(segCol).as("seg"))
-      .agg(agg(QueryCompiler.compositeKey(df, fields)).as("sk"))
+      .agg(SketchPartial.col(QueryCompiler.compositeKey(df, fields),
+        SketchPartial.Theta(lgK)).as("sk"))
   }
 
   /** Merge any union of [[thetaPartials]] tables (several snapshots of
@@ -100,9 +100,8 @@ object SketchSetOps {
     * one shuffle. */
   def kllPartials(df: DataFrame, segCol: String, valCol: String,
                   k: Int = 2048): DataFrame = {
-    val agg = udaf(new graft.agg.KllPartialAgg(k), Encoders.DOUBLE)
     df.groupBy(col(segCol).as("seg"))
-      .agg(agg(col(valCol).cast("double")).as("sk"))
+      .agg(SketchPartial.col(col(valCol).cast("double"), SketchPartial.Kll(k)).as("sk"))
   }
 
   /** Merge any union of [[kllPartials]] tables (several snapshots of the
@@ -179,10 +178,9 @@ object SketchSetOps {
     * group. */
   def freqPartials(df: DataFrame, segCol: String, itemCol: String,
                    maxMapSize: Int = 1024): DataFrame = {
-    val agg = udaf(new graft.agg.FreqItemsPartialAgg(maxMapSize), Encoders.STRING)
     df.groupBy(col(segCol).as("seg"))
-      .agg(agg(coalesce(col(itemCol).cast("string"),
-        lit(graft.agg.SketchAggregators.NullString))).as("sk"))
+      .agg(SketchPartial.col(coalesce(col(itemCol).cast("string"),
+        lit(graft.agg.SketchAggregators.NullString)), SketchPartial.FreqItems(maxMapSize)).as("sk"))
   }
 
   /** Merge any union of [[freqPartials]] tables into per-segment top-k
@@ -202,10 +200,9 @@ object SketchSetOps {
   }
 
   /** Per-segment HLL partials as a (seg, sk) frame — the fourth
-    * persistable sketch family, this one riding Spark's NATIVE
-    * `hll_sketch_agg` (DataSketches HLL_4 under the hood, fully
-    * codegen'd — no udaf round-trip like the theta/KLL/FreqItems
-    * siblings need). HLL unions losslessly but supports no
+    * persistable sketch family, this one riding Spark's own
+    * `hll_sketch_agg` (DataSketches HLL_4 under the hood). HLL unions
+    * losslessly but supports no
     * intersection/A-not-B — when set algebra is needed, use
     * [[thetaPartials]]; when only incremental distinct counts are, HLL
     * is ~4× smaller per segment at the same accuracy. One scan + one

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.agg.{BufSerde, ThetaBuf, ThetaMergeEstimateAgg, ThetaPartialAgg}
+import graft.agg.{BufSerde, SketchPartial, ThetaBuf, ThetaMergeEstimateAgg}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -46,7 +46,6 @@ object TrailingUniques {
                       requireExact: Boolean = true): DataFrame = {
     require(bucketSize > 0, "bucketSize must be positive")
     require(window >= 1, "window must be >= 1 bucket")
-    val partial = udaf(new ThetaPartialAgg(lgK), Encoders.STRING)
     val merge = udaf(new ThetaMergeEstimateAgg(lgK, requireExact), Encoders.BINARY)
 
     // Stage 1 — the one corpus pass: per-bucket sketches.
@@ -54,7 +53,7 @@ object TrailingUniques {
       .select(expr(s"CAST($tsCol AS BIGINT) div ${bucketSize}L").as("bucket"),
         col(keyCol).cast("string").as("__k"))
       .groupBy("bucket")
-      .agg(partial(col("__k")).as("sk"))
+      .agg(SketchPartial.col(col("__k"), SketchPartial.Theta(lgK)).as("sk"))
 
     // Stage 2 — bucket-domain only. Each source bucket contributes to the
     // `window` targets [bucket, bucket + window - 1]; targets that exist

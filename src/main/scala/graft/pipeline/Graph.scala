@@ -230,9 +230,10 @@ object Graph {
     // sort-merge, an edge-sized exchange per side per round). ~16 bytes
     // per (long) node row against the session's broadcast threshold —
     // scale-adaptive: a 100 TB graph's node set blows the bound and
-    // degrades to the shuffled semi-join, never the other way round.
-    val bcastRows = math.max(1L,
-      e0.sparkSession.sessionState.conf.autoBroadcastJoinThreshold / 16)
+    // degrades to the shuffled semi-join, never the other way round. A
+    // threshold <= 0 disables broadcasts, so this hint never fires then.
+    val threshold = e0.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val bcastRows = if (threshold <= 0) 0L else math.max(1L, threshold / 16)
     var e = e0
     var prev = -1L
     var rounds = 0
@@ -255,7 +256,7 @@ object Graph {
           "means a pathologically deep core hierarchy, not slow progress)")
       prev = n
       val keep0 = deg.filter(col("degree") >= k).select("node")
-      val keep = if (n <= bcastRows) broadcast(keep0) else keep0
+      val keep = if (bcastRows > 0 && n <= bcastRows) broadcast(keep0) else keep0
       e = e.join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
         .localCheckpoint(false)

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.agg._
 import graft.compile.{ExprCompiler, QueryCompiler}
 import graft.model._
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -30,9 +30,10 @@ final class ManualClock(start: Long = 0L) extends Clock {
  *    compile into conditional aggregate expressions over one `df.agg(...)` —
  *    each query's filter becomes `when(pred, input)` gating its aggregator
  *    input, so a 100-query workload costs ONE scan of the batch, not 100
- *    jobs. Sketch aggregators emit their partial as serialized bytes
- *    (`*PartialAgg`), exactly the reference's `byte[]` DATA_STREAM tuples
- *    (FilterBolt.java:187-199). Spark's partial/final agg split runs inside
+ *    jobs. Sketch aggregations emit their partial as serialized bytes
+ *    (the native [[graft.agg.SketchPartial]] aggregate, which also
+ *    collects RAW records), exactly the reference's `byte[]` DATA_STREAM
+ *    tuples (FilterBolt.java:187-199). Spark's partial/final agg split runs inside
  *    the batch; GROUP BY key-sets each add one grouped job over the same
  *    (cached) batch.
  *  - **Driver combine** (= JoinBolt): [[AggState]] merges per-batch partials
@@ -1082,22 +1083,20 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
               ExprCompiler.compile(e, Some(schema)).as(nm) }: _*)
             case None => struct(schema.fieldNames.map(col).toIndexedSeq: _*)
           }
-          val agg = udaf(new CappedCollectAgg(cap), Encoders.STRING)
-          Seq(agg(when(g, to_json(recordStruct))).as(p(id)))
+          Seq(SketchPartial.col(when(g, to_json(recordStruct)),
+            SketchPartial.Capped(cap)).as(p(id)))
         }
       case GroupAll(ops) =>
         opColumns(id, ops, g, fld)
       case CountDistinct(fields, _, lgK) =>
         val key = QueryCompiler.compositeKeyOf(fields.map(fld))
-        val agg = udaf(new ThetaPartialAgg(lgK), Encoders.STRING)
-        Seq(agg(when(g, key)).as(p(id)))
+        Seq(SketchPartial.col(when(g, key), SketchPartial.Theta(lgK)).as(p(id)))
       case d: Distribution =>
-        val agg = udaf(new KllPartialAgg(d.k), Encoders.DOUBLE)
-        Seq(agg(when(g, fld(d.field).cast("double"))).as(p(id)))
+        Seq(SketchPartial.col(when(g, fld(d.field).cast("double")),
+          SketchPartial.Kll(d.k)).as(p(id)))
       case TopK(fields, _, _, _, maxMapSize) =>
         val key = QueryCompiler.compositeKeyOf(fields.map(f => fld(f._1)))
-        val agg = udaf(new FreqItemsPartialAgg(maxMapSize), Encoders.STRING)
-        Seq(agg(when(g, key)).as(p(id)))
+        Seq(SketchPartial.col(when(g, key), SketchPartial.FreqItems(maxMapSize)).as(p(id)))
       case _: GroupBy => Seq.empty // handled by collectGrouped/applyGrouped
     }
     matched +: aggCols

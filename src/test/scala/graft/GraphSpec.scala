@@ -323,6 +323,52 @@ class GraphSpec extends SparkTestBase {
     assert(graft.pipeline.Graph.kCore(edges, "a", "b", k = 1).count() === 7)
   }
 
+  test("kCore with broadcasts disabled (threshold -1): same core, no BroadcastExchange") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val s2 = spark
+    import s2.implicits._
+    // K4 + chain 4-5-6-7; at k = 4 the first round keeps no node, the
+    // survivor count a row-bounded broadcast hint would fire on
+    val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
+      (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L)).toDF("a", "b")
+    def cores() = Seq(2, 4).map(k => graft.pipeline.Graph.kCore(edges, "a", "b", k)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    val expected = cores()
+    val plans = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[String]())
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    spark.listenerManager.register(listener)
+    val got = try {
+      val r = cores()
+      // listener events dispatch asynchronously; wait until the capture
+      // count stabilizes (two consecutive equal reads 200 ms apart)
+      var prev = -1
+      var waited = 0
+      while (plans.size() != prev && waited < 10000) {
+        prev = plans.size(); Thread.sleep(200); waited += 200
+      }
+      r
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set(key, saved)
+    }
+    assert(got === expected)
+    assert(expected.head === Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
+    assert(expected(1).isEmpty)
+    val all = plans.toArray.map(_.toString)
+    assert(all.nonEmpty, "listener captured no plans")
+    assert(!all.exists(_.contains("BroadcastExchange")),
+      all.find(_.contains("BroadcastExchange")).getOrElse("").take(1500))
+  }
+
   test("core family canonicalizes orientation: a pre-symmetrized input does not double degrees") {
     val s2 = spark
     import s2.implicits._

@@ -106,4 +106,35 @@ class LinkageSpec extends SparkTestBase {
     assert(a.toSeq === b.toSeq)
     assert(a.nonEmpty)
   }
+
+  test("scoreBlockedByFrequency enforces its key-type contract") {
+    val left = Seq((1L, 1, 1.5, 2L), (2L, 1, 2.5, 3L)).toDF("l_id", "blk", "l_x", "l_n")
+    val right = Seq((1L, 1, 1.5, 2), (3L, 1, 2.5, 4)).toDF("r_id", "blk", "r_x", "r_n")
+    def run(f: (String, org.apache.spark.sql.Column, org.apache.spark.sql.Column)) =
+      Linkage.scoreBlockedByFrequency(left, right, Seq("blk"), Seq(f), "l_id", "r_id")
+    // float and double keys: string forms are not equality-injective
+    val dbl = intercept[IllegalArgumentException](run(("x", col("l_x"), col("r_x"))))
+    assert(dbl.getMessage.contains("linkage key 'x' is double/double"), dbl.getMessage)
+    val flt = intercept[IllegalArgumentException](
+      run(("x", col("l_x").cast("float"), col("r_x").cast("float"))))
+    assert(flt.getMessage.contains("float"), flt.getMessage)
+    // left bigint against right int
+    val mixed = intercept[IllegalArgumentException](run(("n", col("l_n"), col("r_n"))))
+    assert(mixed.getMessage.contains("left type bigint but right type int"), mixed.getMessage)
+    // decimals of two scales: 1.50 and 1.5 are one key, as in score()
+    val lk = col("l_x").cast("decimal(10,2)")
+    val rk = col("r_x").cast("decimal(10,1)")
+    val viaFreq = run(("x", lk, rk))
+      .select("l_id", "r_id", "agree_x", "is_match", "score")
+      .as[(Long, Long, Int, Boolean, Double)].collect().sorted
+    val viaPairs = Linkage.score(
+      Linkage.blockedPairs(left, right, Seq("blk"), Seq("x" -> (lk === rk)))
+        .withColumn("is_match", col("l_id") === col("r_id"))
+        .select("l_id", "r_id", "agree_x", "is_match"),
+      Seq("x"), "is_match")
+      .select("l_id", "r_id", "agree_x", "is_match", "score")
+      .as[(Long, Long, Int, Boolean, Double)].collect().sorted
+    assert(viaFreq.toSeq === viaPairs.toSeq)
+    assert(viaFreq.count(_._3 == 1) === 2)
+  }
 }

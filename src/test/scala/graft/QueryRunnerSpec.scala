@@ -85,6 +85,52 @@ class QueryRunnerSpec extends SparkTestBase {
     assert(recordsOf("raw").forall(_("event_id").asInstanceOf[Number].longValue > 95))
   }
 
+  test("no plan processBatch runs holds a ScalaAggregator: partials are native aggregates") {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.aggregate.ScalaAggregator
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[LogicalPlan]())
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.analyzed)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        plans.add(qe.analyzed)
+    }
+    val runner = new QueryRunner(spark, new ManualClock(0))
+    Seq(
+      QuerySpec("cd", aggregation = CountDistinct(Seq("user"))),
+      QuerySpec("q", aggregation = Distribution("value", DistributionType.QUANTILE,
+        Seq(0.5), k = 1024)),
+      QuerySpec("tk", aggregation = TopK(Seq("user" -> "u"), k = 2, countName = "cnt")),
+      QuerySpec("raw", aggregation = Raw(5)),
+      clickCountSpec("g_all"),
+      QuerySpec("g_by", aggregation = GroupBy(Seq("etype" -> "e"),
+        Seq(GroupOp(GroupOpType.COUNT, None, "cnt"))))
+    ).foreach(s => assert(runner.register(s).isEmpty))
+    spark.listenerManager.register(listener)
+    try {
+      runner.processBatch(events)
+      // listener events dispatch asynchronously; wait until the capture
+      // count stabilizes (two consecutive equal reads 200 ms apart)
+      var prev = -1
+      var waited = 0
+      while (plans.size() != prev && waited < 10000) {
+        prev = plans.size(); Thread.sleep(200); waited += 200
+      }
+    } finally spark.listenerManager.unregister(listener)
+    assert(runner.lastBatchJobs.keySet === Set(QueryRunner.JobKind.Shared,
+      QueryRunner.JobKind.Grouped))
+    val exprs = scala.collection.mutable.ArrayBuffer.empty[
+      org.apache.spark.sql.catalyst.expressions.Expression]
+    plans.asScala.foreach(_.foreach(_.expressions.foreach(_.foreach(exprs += _))))
+    assert(exprs.exists(_.isInstanceOf[graft.agg.SketchPartial[_]]),
+      "the listener captured no shared-pass plan")
+    val udafs = exprs.collect { case a: ScalaAggregator[_, _, _] => a.nodeName }
+    assert(udafs.isEmpty, s"processBatch ran udaf(Aggregator) columns: $udafs")
+  }
+
   test("cross-batch partial merge equals single-batch result") {
     val clock = new ManualClock(0)
     val runner = new QueryRunner(spark, clock)

@@ -1,7 +1,8 @@
 package graft
 
 import graft.agg._
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.functions._
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, ObjectInputStream, ObjectOutputStream}
 
@@ -10,9 +11,11 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, ObjectInputStream, 
  * buffers, round-trip both through Java serialization (the shuffle boundary
  * our Aggregator buffer encoders use), merge, and assert exact results —
  * the contract the reference proves with its two-partial combine tests
- * (JoinBoltTest.java:696-893).
+ * (JoinBoltTest.java:696-893). The native [[SketchPartial]] cases run the
+ * same contract through a real `df.agg` / `groupBy.agg` over four input
+ * partitions, so Spark's partial → serialize → final path executes.
  */
-class SketchMergeSpec extends AnyFunSuite {
+class SketchMergeSpec extends SparkTestBase {
 
   private def roundTrip[T <: AnyRef](x: T): T = {
     val bos = new ByteArrayOutputStream()
@@ -145,11 +148,102 @@ class SketchMergeSpec extends AnyFunSuite {
     assert(rows.map(_.count) === Seq(0L, 5L))
   }
 
-  test("CappedCollectAgg: truncates at cap across merges") {
-    val agg = new CappedCollectAgg(3)
-    val b1 = Seq("a", "b").foldLeft(agg.zero)(agg.reduce)
-    val b2 = Seq("c", "d", "e").foldLeft(agg.zero)(agg.reduce)
-    val out = agg.finish(agg.merge(b1, b2))
-    assert(out.size === 3)
+  // --- SketchPartial: the native partial aggregate through Spark ---
+  import SketchPartial.{Capped, FreqItems, Kll, Theta, col => partial}
+
+  /** `n` rows over four partitions: (g = i % 3, s = "k" + (i % 500),
+    * d = i, every 10th s and d null). */
+  private def rows(n: Int): DataFrame =
+    spark.range(n).repartition(4).select(
+      (col("id") % 3).as("g"),
+      when(col("id") % 10 =!= 7, concat(lit("k"), (col("id") % 500).cast("string")))
+        .as("s"),
+      when(col("id") % 10 =!= 7, col("id").cast("double")).as("d"))
+
+  test("SketchPartial Theta: exact distinct counts through df.agg and groupBy.agg") {
+    val df = rows(3000)
+    val bytes = df.agg(partial(col("s"), Theta(12))).head().getAs[Array[Byte]](0)
+    val sk = BufSerde.de[ThetaBuf](bytes).result
+    assert(!sk.isEstimationMode)
+    assert(Math.round(sk.getEstimate) === 450L) // k(j) for j < 500, j % 10 != 7
+    // the bytes are BufSerde of the buffer, whatever the merge order
+    val local = new ThetaBuf(12)
+    (0 until 3000).filter(_ % 10 != 7).foreach(i => local.update(s"k${i % 500}"))
+    assert(bytes.toSeq === BufSerde.ser(local).toSeq)
+    val byG = df.groupBy("g").agg(partial(col("s"), Theta(12)).as("sk"))
+      .collect().map(r => r.getLong(0) ->
+        Math.round(BufSerde.de[ThetaBuf](r.getAs[Array[Byte]](1)).result.getEstimate)).toMap
+    val expect = (0 until 3000).filter(_ % 10 != 7).groupBy(i => (i % 3).toLong)
+      .map { case (g, is) => g -> is.map(_ % 500).distinct.size.toLong }
+    assert(byG === expect)
+  }
+
+  test("SketchPartial KLL: quantiles exact in the exact regime, nulls skipped") {
+    import org.apache.datasketches.quantilescommon.QuantileSearchCriteria.INCLUSIVE
+    val df = rows(1000)
+    val values = (0 until 1000).filter(_ % 10 != 7).map(_.toDouble).sorted
+    def disc(vs: Seq[Double], p: Double) = vs(math.max(0, Math.ceil(p * vs.size).toInt - 1))
+    val s = BufSerde.de[KllBuf](
+      df.agg(partial(col("d"), Kll(2048))).head().getAs[Array[Byte]](0)).result
+    assert(s.getN === values.size.toLong)
+    for (p <- Seq(0.0, 0.1, 0.5, 0.9, 1.0))
+      assert(s.getQuantile(p, INCLUSIVE) === disc(values, p))
+    df.groupBy("g").agg(partial(col("d"), Kll(2048)).as("sk")).collect()
+      .foreach { r =>
+        val vs = values.filter(_.toLong % 3 == r.getLong(0))
+        val gs = BufSerde.de[KllBuf](r.getAs[Array[Byte]](1)).result
+        assert(gs.getN === vs.size.toLong)
+        assert(gs.getQuantile(0.5, INCLUSIVE) === disc(vs, 0.5))
+      }
+  }
+
+  test("SketchPartial FrequentItems: exact counts through df.agg and groupBy.agg") {
+    val df = rows(3000).select(col("g"), substring(col("s"), 1, 2).as("s"))
+    val expect = (0 until 3000).filter(_ % 10 != 7)
+      .groupBy(i => s"k${i % 500}".take(2)).map { case (k, is) => k -> is.size.toLong }
+    val sk = BufSerde.de[FreqItemsBuf](
+      df.agg(partial(col("s"), FreqItems(64))).head().getAs[Array[Byte]](0)).result
+    assert(sk.getNumActiveItems === expect.size)
+    expect.foreach { case (k, n) => assert(sk.getEstimate(k) === n, k) }
+    df.groupBy("g").agg(partial(col("s"), FreqItems(64)).as("sk")).collect()
+      .foreach { r =>
+        val g = BufSerde.de[FreqItemsBuf](r.getAs[Array[Byte]](1)).result
+        val ge = (0 until 3000).filter(i => i % 10 != 7 && i % 3 == r.getLong(0))
+          .groupBy(i => s"k${i % 500}".take(2)).map { case (k, is) => k -> is.size.toLong }
+        ge.foreach { case (k, n) => assert(g.getEstimate(k) === n, k) }
+      }
+  }
+
+  test("SketchPartial RAW: truncates at cap across merges") {
+    val kind = Capped(3)
+    def buf(xs: String*) = { val b = kind.zero(); xs.foreach(kind.update(b, _)); b }
+    val merged = kind.merge(kind.deserialize(kind.serialize(buf("a", "b"))),
+      kind.deserialize(kind.serialize(buf("c", "d", "e"))))
+    assert(merged.n === 3)
+    assert(kind.result(merged).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+      .numElements() === 3)
+    // through Spark: 4 partial buffers, each capped, merged under the cap
+    val df = rows(100)
+    val all = df.agg(partial(col("s"), Capped(5))).head().getSeq[String](0)
+    assert(all.size === 5)
+    assert(all.forall(_ != null))
+    assert(all.toSet.subsetOf((0 until 100).filter(_ % 10 != 7).map(i => s"k$i").toSet))
+    val byG = df.groupBy("g").agg(partial(col("s"), Capped(40)).as("r"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+    // 33 or 34 rows per group, a few of them null: under the cap, all kept
+    byG.foreach { case (g, rs) =>
+      assert(rs.sorted === (0 until 100).filter(i => i % 10 != 7 && i % 3 == g)
+        .map(i => s"k$i").sorted)
+    }
+  }
+
+  test("SketchPartial: the type check rejects an uncast input") {
+    val e = intercept[AnalysisException] {
+      spark.range(10).agg(partial(col("id"), Theta(12))).collect()
+    }
+    assert(e.getMessage.contains("needs a string input, got bigint"), e.getMessage)
+    intercept[AnalysisException] {
+      spark.range(10).agg(partial(col("id").cast("string"), Kll(64))).collect()
+    }
   }
 }
