@@ -148,6 +148,32 @@ object Bench {
     case c => c.toString
   }.mkString("\"", "", "\"")
 
+  /** The compact summary line: `fields` (key → JSON value, in order), then
+    * the slowest `queries` that fit, then `sf`, at most 1800 chars — a
+    * harness that keeps the last ~2000 chars of stdout, less ~120 of sbt
+    * trailer, still reads it whole. Queries only take the budget the
+    * fields leave. While the fields alone are over the cap, the inline
+    * regression rows leave first (`n_regressions` stays), then the other
+    * blocks one by one. */
+  private[graft] def compactLine(fields: Seq[(String, String)],
+                                 queries: Seq[(String, Double)], sf: String): String = {
+    val lineCap = 1800
+    val dropOrder = Seq("regressions", "jvm", "baseline", "b8", "b11", "b7", "error_names")
+    def head(fs: Seq[(String, String)]) =
+      fs.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", ",\"queries\":{")
+    val tail = s"},\"sf\":${jstr(sf)}}"
+    val candidates = dropOrder.inits.toSeq.reverse.map(d => fields.filterNot(f => d.contains(f._1)))
+    val kept = candidates.find(fs => head(fs).length + tail.length <= lineCap)
+      .getOrElse(candidates.last)
+    val budget = math.max(0, lineCap - head(kept).length - tail.length)
+    val sb = new StringBuilder
+    queries.foreach { case (k, v) =>
+      val frag = s"${jstr(k)}:${math.rint(v * 1000) / 1000}"
+      if (sb.length + frag.length < budget) { if (sb.nonEmpty) sb.append(','); sb.append(frag) }
+    }
+    head(kept) + sb.toString + tail
+  }
+
   /** BASELINE.md §2's measured floors — the SINGLE committed source the
     * emitted `baseline` block compares against. BaselineTableSpec pins
     * these literals to the doc table so the two can't silently drift
@@ -458,14 +484,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-
-      // AQE may re-coalesce cached-plan output (persistTracked frames)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     val errors = mutable.LinkedHashMap.empty[String, String]
@@ -973,14 +992,7 @@ object Bench {
         .filter { case (n, t) => t > 0 && !errors.contains(n) }
         .sortBy(-_._2).take(5).map(_._1)
       spark.stop()
-      val s8 = SparkSession.builder()
-        .master(s"local[$b12Cpus]")
-        .config("spark.sql.shuffle.partitions", b12Cpus)
-
-        // AQE may re-coalesce cached-plan output (persistTracked frames)
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val s8 = Session.local(b12Cpus.toString)
       s8.sparkContext.setLogLevel("WARN")
       lastSession = s8
       slowest5.map { name =>
@@ -1427,30 +1439,19 @@ object Bench {
     // the slowest entries that fit a hard overall cap; everything else
     // (b12/b13/b14, full queries map, per-entry errors) lives in the
     // full line above and in bench_full.json, which "full" points at.
-    def r3(v: Double) = math.rint(v * 1000) / 1000
-    val slowest = results.sortBy(-_._2)
     val errNames = errors.keys.toSeq.sorted.take(5).map(jstr).mkString("[", ",", "]")
     // at most 3 adjudication rows inline — the rest by count + file
     val regCompact = regressions.take(3).map(adjRowJson).mkString("[", ",", "]")
-    val head = s"""{"metric":"total","value":${r3(total)},"unit":"sec","verdict":"$verdict",""" +
-      s""""n_queries":${results.size},""" +
-      s""""n_errors":${errors.size},"error_names":$errNames,"b7":$b7Json,"b11":$b11Json,"b8":$b8Json,""" +
-      s""""baseline":$baselineJson,""" +
-      s""""n_regressions":${regressions.size},"regressions":$regCompact,""" +
-      s""""n_suite_noise":${suiteNoise.size},"n_unadjudicated":${unadjudicated.size},"jvm":$jvmJson,""" +
-      s""""full":${jstr(fullPath)},"queries":{"""
-    val tailPart = s"""},"sf":"$sfDir"}"""
-    // hard cap for the whole line: 2000-char window − ~120 chars of sbt
-    // trailer − slack. Queries take whatever budget remains.
-    val lineCap = 1800
-    val budget = math.max(0, lineCap - head.length - tailPart.length)
-    val sb = new StringBuilder
-    var taken = 0
-    slowest.foreach { case (k, v) =>
-      val frag = s"${jstr(k)}:${r3(v)}"
-      if (sb.length + frag.length < budget) { if (taken > 0) sb.append(','); sb.append(frag); taken += 1 }
-    }
-    println(head + sb.toString + tailPart)
+    println(compactLine(Seq(
+      "metric" -> jstr("total"), "value" -> s"${math.rint(total * 1000) / 1000}",
+      "unit" -> jstr("sec"), "verdict" -> jstr(verdict),
+      "n_queries" -> s"${results.size}", "n_errors" -> s"${errors.size}",
+      "error_names" -> errNames, "b7" -> b7Json, "b11" -> b11Json, "b8" -> b8Json,
+      "baseline" -> baselineJson,
+      "n_regressions" -> s"${regressions.size}", "regressions" -> regCompact,
+      "n_suite_noise" -> s"${suiteNoise.size}", "n_unadjudicated" -> s"${unadjudicated.size}",
+      "jvm" -> jvmJson, "full" -> jstr(fullPath)),
+      queries = results.sortBy(-_._2), sf = sfDir))
     lastSession.stop()
   }
 }

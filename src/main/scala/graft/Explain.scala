@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: `runMain graft.Explain <entry> [sfDir]` prints the
   * formatted physical plan of a driver-contract entry — the loop used to
   * check pushdown/broadcast/codegen shape before each round's bench. */
@@ -10,14 +8,7 @@ object Explain {
     require(args.nonEmpty, "usage: Explain <queryName> [sfDir]")
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-
-      // AQE may re-coalesce cached-plan output (persistTracked frames)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
     spark.sparkContext.setLogLevel("ERROR")
     val fn = SparkEntry.queries.getOrElse(name,
       throw new IllegalArgumentException(

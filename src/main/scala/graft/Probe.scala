@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Sketch exact-regime scale probe: asserts every precondition in
   * [[SparkEntry.exactRegimeProbes]] against the ACTUAL fixture
@@ -11,14 +10,7 @@ object Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-
-      // AQE may re-coalesce cached-plan output (persistTracked frames)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val violations = SparkEntry.exactRegimeProbes.toSeq.sortBy(_._1).flatMap {
       case (name, probe) =>

@@ -65,14 +65,7 @@ object ScanAudit {
     val sfDir = args(0)
     val out = args(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-
-      // AQE may re-coalesce cached-plan output (persistTracked frames)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val rows = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       try {

@@ -90,15 +90,7 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-
-      // AQE may re-coalesce cached-plan output (persistTracked frames)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val selected = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -6,20 +6,20 @@ import org.apache.datasketches.kll.KllDoublesSketch
 import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.quantilescommon.QuantileSearchCriteria
 import org.apache.datasketches.theta.{CompactSketch, SetOperation, Union}
-import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
 
 import java.io.{ObjectInputStream, ObjectOutputStream}
 
 /**
  * Bounded-memory, mergeable sketch aggregations (SURVEY.md §2.4), built on
- * Apache DataSketches (already on the Spark classpath). The finishing
- * aggregations here are typed [[Aggregator]]s; the partial form that
- * emits a serialized buffer for a downstream combiner (the streaming
- * runner's driver state, persisted sketch tables) is the native Catalyst
- * aggregate [[SketchPartial]] over the same buffers. Catalyst splits both
- * into partial(update)/final(merge) around the shuffle — the exact
- * contract the reference proves with its two-partial combine tests
+ * Apache DataSketches (already on the Spark classpath): the buffers, their
+ * byte form, and the finish functions. The aggregate over them is the one
+ * native Catalyst aggregate [[SketchPartial]]: its partial kinds emit a
+ * serialized buffer for a downstream combiner (the streaming runner's
+ * driver state, persisted sketch tables), its finishing kinds call the
+ * finish functions below, as does the runner's driver state
+ * ([[graft.streaming.AggState]]). Catalyst splits every kind into
+ * partial(update)/final(merge) around the shuffle — the exact contract the
+ * reference proves with its two-partial combine tests
  * (JoinBoltTest.java:696-893).
  *
  * Buffers hold live sketch objects in memory; (de)serialization to the
@@ -33,10 +33,95 @@ object SketchAggregators {
     * (FilterBoltTest.java:827-828). */
   val NullString = "null"
 
-  /** Shared TOP_K finish: NO_FALSE_NEGATIVES rows, deterministic
-    * (-count, key) order, truncated to k — one definition so the live
-    * aggregator and the persisted-merge aggregator can never drift. */
-  private[agg] def topKRows(b: FreqItemsBuf, k: Int, threshold: Long): Seq[TopKRow] =
+  /** COUNT_DISTINCT finish: the rounded Theta estimate (0 when empty).
+    *
+    * `requireExact = true` turns the silent exact→estimate crossover into a
+    * loud failure: a union that left the sketch's exact regime (retained <
+    * nominal entries) throws instead of emitting an estimate — the contract
+    * callers like [[graft.operators.TrailingUniques]] use when the consumer
+    * (or the test oracle) needs exact distinct counts. `lgK` is the
+    * caller's: a deserialized buffer does not restore its own. */
+  def thetaEstimate(b: ThetaBuf, lgK: Int, requireExact: Boolean = false): Long = {
+    val r = b.result
+    if (requireExact) require(!r.isEstimationMode,
+      s"theta union left the exact regime (lgK=$lgK): the merged distinct " +
+        "count is now an estimate. Raise lgK or drop requireExact.")
+    Math.round(r.getEstimate)
+  }
+
+  /**
+   * DISTRIBUTION finish (`dtype` QUANTILE, PMF or CDF); no rows when empty.
+   * `points`: for QUANTILE, the rank points in [0,1]; for PMF/CDF, the
+   * split points — or, when empty and `numPoints > 0`, generated LINEAR.
+   * Search criterion is EXCLUSIVE so PMF bins are left-closed right-open
+   * `[a, b)` — the reference's range convention (FilterBoltTest.java:770-781);
+   * QUANTILE uses INCLUSIVE (smallest value whose inclusive rank ≥ p — SQL
+   * percentile_disc semantics).
+   */
+  def distRows(b: KllBuf, dtype: String, points: Seq[Double],
+               numPoints: Int = 0): Seq[DistRow] = {
+    val s = b.result
+    if (s.isEmpty) return Seq.empty
+    val n = s.getN
+    val ps = linearPoints(s, dtype, points.toArray, numPoints)
+    dtype match {
+      case "QUANTILE" =>
+        ps.toSeq.map { p =>
+          DistRow(null, 0L, 0.0, p, s.getQuantile(p, QuantileSearchCriteria.INCLUSIVE))
+        }
+      // Probability is the sketch's own mass `p`. In estimation mode it is
+      // emitted directly — deriving it from the rounded count (round(p·n)/n)
+      // skews the mass by up to 0.5/n. In the exact regime p·n is an
+      // integral count, so count/n IS the mass; dividing the integer count
+      // matches an exact-SQL oracle to the last ULP (the sketch's internal
+      // c_hi/n − c_lo/n ordering does not).
+      case "PMF" =>
+        val probs = s.getPMF(ps, QuantileSearchCriteria.EXCLUSIVE)
+        pmfRanges(ps).zip(probs.toSeq).map { case (r, p) =>
+          val cnt = Math.round(p * n)
+          DistRow(r, cnt, if (s.isEstimationMode) p else cnt.toDouble / n, 0.0, 0.0)
+        }
+      case "CDF" =>
+        val probs = s.getCDF(ps, QuantileSearchCriteria.EXCLUSIVE)
+        cdfRanges(ps).zip(probs.toSeq).map { case (r, p) =>
+          val cnt = Math.round(p * n)
+          DistRow(r, cnt, if (s.isEstimationMode) p else cnt.toDouble / n, 0.0, 0.0)
+        }
+    }
+  }
+
+  /** LINEAR point generation (bullet-core LinearDistribution,
+    * FilterBoltTest.java:747): QUANTILE ranks spread over [0, 1]; PMF/CDF
+    * split points spread between the sketch's own min and max — data
+    * dependent, only known at finish. */
+  private def linearPoints(s: KllDoublesSketch, dtype: String,
+                           explicitPoints: Array[Double], numPoints: Int): Array[Double] =
+    if (explicitPoints.nonEmpty || numPoints <= 0) explicitPoints
+    else if (dtype == "QUANTILE") {
+      if (numPoints == 1) Array(0.0)
+      else Array.tabulate(numPoints)(i => i.toDouble / (numPoints - 1))
+    } else {
+      // degenerate domain (min == max, e.g. one distinct value) collapses
+      // to a single split — getPMF/getCDF REQUIRE strictly increasing
+      // points and throw on duplicates
+      val (lo, hi) = (s.getMinItem, s.getMaxItem)
+      if (numPoints == 1 || hi == lo) Array(lo)
+      else Array.tabulate(numPoints)(i => lo + i * (hi - lo) / (numPoints - 1)).distinct
+    }
+
+  /** `(-∞, s0)  [s0, s1) ... [sm, +∞)` — m+1 bins for m split points. */
+  private def pmfRanges(sp: Array[Double]): Seq[String] = {
+    val starts = "(-∞" +: sp.map(p => s"[$p").toSeq
+    val ends = sp.map(p => s"$p)").toSeq :+ "+∞)"
+    starts.zip(ends).map { case (a, b) => s"$a, $b" }
+  }
+  /** CDF bins all start at -∞: `(-∞, s0) (-∞, s1) ... (-∞, +∞)`. */
+  private def cdfRanges(sp: Array[Double]): Seq[String] =
+    sp.map(p => s"(-∞, $p)").toSeq :+ "(-∞, +∞)"
+
+  /** TOP_K finish: NO_FALSE_NEGATIVES rows at or above `threshold`,
+    * deterministic (-count, key) order, truncated to k. */
+  def topKRows(b: FreqItemsBuf, k: Int, threshold: Long): Seq[TopKRow] =
     b.result.getFrequentItems(threshold, ErrorType.NO_FALSE_NEGATIVES)
       .toSeq
       .map(r => TopKRow(r.getItem, r.getEstimate))
@@ -59,90 +144,6 @@ object BufSerde {
     val ois = new ObjectInputStream(new java.io.ByteArrayInputStream(bytes))
     ois.readObject().asInstanceOf[T]
   }
-}
-
-/** Re-merge PERSISTED theta partials (the bytes [[SketchPartial.Theta]]
-  * emits) and finish to the rounded distinct estimate — the second half
-  * of the save/restore contract: sketches written to a parquet binary
-  * column in one run merge with fresh partials in the next, so history
-  * is never re-scanned.
-  *
-  * `requireExact = true` turns the silent exact→estimate crossover into a
-  * loud failure: a MERGED group whose union left the sketch's exact regime
-  * (retained < nominal entries) throws instead of emitting an estimate —
-  * the contract callers like [[graft.operators.TrailingUniques]] use when
-  * the consumer (or the test oracle) needs exact distinct counts. */
-final class ThetaMergeEstimateAgg(lgK: Int = 17, requireExact: Boolean = false)
-    extends Aggregator[Array[Byte], ThetaBuf, java.lang.Long] {
-  def zero: ThetaBuf = new ThetaBuf(lgK)
-  def reduce(b: ThetaBuf, in: Array[Byte]): ThetaBuf =
-    if (in == null) b else b.merge(BufSerde.de[ThetaBuf](in))
-  def merge(b1: ThetaBuf, b2: ThetaBuf): ThetaBuf = b1.merge(b2)
-  def finish(b: ThetaBuf): java.lang.Long = {
-    val r = b.result
-    if (requireExact) require(!r.isEstimationMode,
-      s"theta union left the exact regime (lgK=$lgK): the merged distinct " +
-        "count is now an estimate. Raise lgK or drop requireExact.")
-    Math.round(r.getEstimate)
-  }
-  def bufferEncoder: Encoder[ThetaBuf] = Encoders.javaSerialization[ThetaBuf]
-  def outputEncoder: Encoder[java.lang.Long] = Encoders.LONG
-}
-
-/** Re-merge PERSISTED KLL partials (the bytes [[SketchPartial.Kll]] emits)
-  * and finish to the quantile values at `points` — the distribution
-  * family's half of the save/restore contract, mirroring
-  * [[ThetaMergeEstimateAgg]]: snapshots written to a parquet binary
-  * column in one run merge with fresh partials in the next, quantiles
-  * read from KBs of sketch bytes, history never re-scanned. INCLUSIVE
-  * search (smallest value whose rank ≥ p) — percentile_disc parity,
-  * same criterion as [[KllDistributionAgg]]'s QUANTILE. An empty merge
-  * result finishes to an EMPTY pair list — the mergedQuantiles wrapper
-  * turns it into one (seg, NULL, NULL) marker row via explode_outer
-  * so a dead segment stays visible. */
-final class KllMergeQuantilesAgg(points: Array[Double], k: Int = 2048)
-    extends Aggregator[Array[Byte], KllBuf, Seq[(Double, Double)]] {
-  def zero: KllBuf = new KllBuf(k)
-  def reduce(b: KllBuf, in: Array[Byte]): KllBuf =
-    if (in == null) b else b.merge(BufSerde.de[KllBuf](in))
-  def merge(b1: KllBuf, b2: KllBuf): KllBuf = b1.merge(b2)
-  // (quantile, value) PAIRS, not bare values: the wrapper explodes this
-  // array, and recovering the rank from the row position via element_at
-  // is unsafe — posexplode_outer's pos attribute is (wrongly, for the
-  // outer variant) non-nullable, and Catalyst folds the lookup under
-  // that assumption, resurrecting a rank for the empty-marker row
-  def finish(b: KllBuf): Seq[(Double, Double)] = {
-    val s = b.result
-    if (s.isEmpty) Seq.empty
-    else points.toSeq.map(p =>
-      (p, s.getQuantile(p, QuantileSearchCriteria.INCLUSIVE)))
-  }
-  def bufferEncoder: Encoder[KllBuf] = Encoders.javaSerialization[KllBuf]
-  def outputEncoder: Encoder[Seq[(Double, Double)]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Double, Double)]]()
-}
-
-/** Re-merge PERSISTED FrequentItems partials (the bytes
-  * [[SketchPartial.FreqItems]] emits) and finish to the top-k rows — the
-  * TOP_K family's half of the save/restore contract, completing the
-  * trio with [[ThetaMergeEstimateAgg]] (count-distinct) and
-  * [[KllMergeQuantilesAgg]] (distribution). Same finish semantics as
-  * [[FreqItemsTopKAgg]]: NO_FALSE_NEGATIVES, optional threshold,
-  * deterministic (-count, key) ordering. Zero-error while distinct keys
-  * stay under the sketch purge load (~0.75 · maxMapSize) across ALL
-  * merged snapshots. */
-final class FreqItemsMergeTopKAgg(k: Int, threshold: Long = 0L,
-                                  maxMapSize: Int = 1024)
-    extends Aggregator[Array[Byte], FreqItemsBuf, Seq[TopKRow]] {
-  def zero: FreqItemsBuf = new FreqItemsBuf(maxMapSize)
-  def reduce(b: FreqItemsBuf, in: Array[Byte]): FreqItemsBuf =
-    if (in == null) b else b.merge(BufSerde.de[FreqItemsBuf](in))
-  def merge(b1: FreqItemsBuf, b2: FreqItemsBuf): FreqItemsBuf = b1.merge(b2)
-  def finish(b: FreqItemsBuf): Seq[TopKRow] =
-    SketchAggregators.topKRows(b, k, threshold)
-  def bufferEncoder: Encoder[FreqItemsBuf] = Encoders.javaSerialization[FreqItemsBuf]
-  def outputEncoder: Encoder[Seq[TopKRow]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[TopKRow]]()
 }
 
 // ---------------------------------------------------------------------------
@@ -182,16 +183,6 @@ final class ThetaBuf(val lgK: Int) extends Serializable {
     union = SetOperation.builder().setNominalEntries(1 << lg).buildUnion()
     union.union(CompactSketch.wrap(Memory.wrap(bytes)))
   }
-}
-
-final class ThetaCountDistinctAgg(lgK: Int = 17)
-    extends Aggregator[String, ThetaBuf, Long] {
-  def zero: ThetaBuf = new ThetaBuf(lgK)
-  def reduce(b: ThetaBuf, in: String): ThetaBuf = { if (in != null) b.update(in); b }
-  def merge(b1: ThetaBuf, b2: ThetaBuf): ThetaBuf = b1.merge(b2)
-  def finish(b: ThetaBuf): Long = Math.round(b.result.getEstimate)
-  def bufferEncoder: Encoder[ThetaBuf] = Encoders.javaSerialization[ThetaBuf]
-  def outputEncoder: Encoder[Long] = Encoders.scalaLong
 }
 
 // (Estimation detail — estimate/bounds/isEstimation — surfaces through the
@@ -236,93 +227,6 @@ final class KllBuf(val k: Int) extends Serializable {
 final case class DistRow(range: String, count: Long, probability: Double,
                          quantile: Double, value: Double)
 
-/**
- * DISTRIBUTION aggregator. `points`: for QUANTILE, the rank points in [0,1];
- * for PMF/CDF, the split points. Search criterion is EXCLUSIVE so PMF bins
- * are left-closed right-open `[a, b)` — the reference's range convention
- * (FilterBoltTest.java:770-781); QUANTILE uses INCLUSIVE (smallest value
- * whose inclusive rank ≥ p — SQL percentile_disc semantics).
- */
-final class KllDistributionAgg(dtype: String, explicitPoints: Array[Double],
-                               k: Int = 2048, numPoints: Int = 0)
-    extends Aggregator[java.lang.Double, KllBuf, Seq[DistRow]] {
-  import SketchAggregators._
-  def zero: KllBuf = new KllBuf(k)
-  def reduce(b: KllBuf, in: java.lang.Double): KllBuf = {
-    if (in != null) b.update(in.doubleValue); b
-  }
-  def merge(b1: KllBuf, b2: KllBuf): KllBuf = b1.merge(b2)
-
-  /** LINEAR point generation (bullet-core LinearDistribution,
-    * FilterBoltTest.java:747): QUANTILE ranks spread over [0, 1]; PMF/CDF
-    * split points spread between the sketch's own min and max — data
-    * dependent, only known at finish. */
-  private def generatedPoints(s: KllDoublesSketch): Array[Double] =
-    if (explicitPoints.nonEmpty || numPoints <= 0) explicitPoints
-    else if (dtype == "QUANTILE") {
-      if (numPoints == 1) Array(0.0)
-      else Array.tabulate(numPoints)(i => i.toDouble / (numPoints - 1))
-    } else {
-      // degenerate domain (min == max, e.g. one distinct value) collapses
-      // to a single split — getPMF/getCDF REQUIRE strictly increasing
-      // points and throw on duplicates
-      val (lo, hi) = (s.getMinItem, s.getMaxItem)
-      if (numPoints == 1 || hi == lo) Array(lo)
-      else Array.tabulate(numPoints)(i => lo + i * (hi - lo) / (numPoints - 1)).distinct
-    }
-
-  def finish(b: KllBuf): Seq[DistRow] = {
-    val s = b.result
-    if (s.isEmpty) return Seq.empty
-    val n = s.getN
-    val points = generatedPoints(s)
-    dtype match {
-      case "QUANTILE" =>
-        points.toSeq.map { p =>
-          DistRow(null, 0L, 0.0, p, s.getQuantile(p, QuantileSearchCriteria.INCLUSIVE))
-        }
-      // Probability is the sketch's own mass `p`. In estimation mode it is
-      // emitted directly — deriving it from the rounded count (round(p·n)/n)
-      // skews the mass by up to 0.5/n. In the exact regime p·n is an
-      // integral count, so count/n IS the mass; dividing the integer count
-      // matches an exact-SQL oracle to the last ULP (the sketch's internal
-      // c_hi/n − c_lo/n ordering does not).
-      case "PMF" =>
-        val probs = s.getPMF(points, QuantileSearchCriteria.EXCLUSIVE)
-        val ranges = pmfRanges(points)
-        ranges.zip(probs.toSeq).map { case (r, p) =>
-          val cnt = Math.round(p * n)
-          DistRow(r, cnt, if (s.isEstimationMode) p else cnt.toDouble / n, 0.0, 0.0)
-        }
-      case "CDF" =>
-        val probs = s.getCDF(points, QuantileSearchCriteria.EXCLUSIVE)
-        val ranges = cdfRanges(points)
-        ranges.zip(probs.toSeq).map { case (r, p) =>
-          val cnt = Math.round(p * n)
-          DistRow(r, cnt, if (s.isEstimationMode) p else cnt.toDouble / n, 0.0, 0.0)
-        }
-    }
-  }
-
-  /** `(-∞, s0)  [s0, s1) ... [sm, +∞)` — m+1 bins for m split points. */
-  private def pmfRanges(sp: Array[Double]): Seq[String] = {
-    val negInf = "(-∞"
-    val posInf = "+∞)"
-    val starts = negInf +: sp.map(p => s"[${fmt(p)}").toSeq
-    val ends = sp.map(p => s"${fmt(p)})").toSeq :+ posInf
-    starts.zip(ends).map { case (a, b) => s"$a, $b" }
-  }
-  /** CDF bins all start at -∞: `(-∞, s0) (-∞, s1) ... (-∞, +∞)`. */
-  private def cdfRanges(sp: Array[Double]): Seq[String] =
-    (sp.map(p => s"(-∞, ${fmt(p)})").toSeq :+ "(-∞, +∞)")
-
-  private def fmt(d: Double): String = d.toString
-
-  def bufferEncoder: Encoder[KllBuf] = Encoders.javaSerialization[KllBuf]
-  def outputEncoder: Encoder[Seq[DistRow]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[DistRow]]()
-}
-
 // ---------------------------------------------------------------------------
 // TOP_K — FrequentItems sketch (NO_FALSE_NEGATIVES; exact when map holds all)
 // Reference: FrequentItemsSketchingStrategy, FilterBoltTest.java:789-832.
@@ -357,22 +261,3 @@ final class FreqItemsBuf(val maxMapSize: Int) extends Serializable {
 }
 
 final case class TopKRow(key: String, count: Long)
-
-/**
- * TOP_K aggregator over a (concatenated) field tuple. Emits up to k items by
- * estimated frequency (NO_FALSE_NEGATIVES regime), optional minimum-count
- * threshold, deterministic tie-break by key string.
- */
-final class FreqItemsTopKAgg(k: Int, threshold: Long = 0L, maxMapSize: Int = 1024)
-    extends Aggregator[String, FreqItemsBuf, Seq[TopKRow]] {
-  def zero: FreqItemsBuf = new FreqItemsBuf(maxMapSize)
-  def reduce(b: FreqItemsBuf, in: String): FreqItemsBuf = {
-    if (in != null) b.update(in); b
-  }
-  def merge(b1: FreqItemsBuf, b2: FreqItemsBuf): FreqItemsBuf = b1.merge(b2)
-  def finish(b: FreqItemsBuf): Seq[TopKRow] =
-    SketchAggregators.topKRows(b, k, threshold)
-  def bufferEncoder: Encoder[FreqItemsBuf] = Encoders.javaSerialization[FreqItemsBuf]
-  def outputEncoder: Encoder[Seq[TopKRow]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[TopKRow]]()
-}

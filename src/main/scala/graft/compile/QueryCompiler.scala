@@ -2,7 +2,7 @@ package graft.compile
 
 import graft.agg._
 import graft.model._
-import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType}
 
@@ -91,13 +91,11 @@ object QueryCompiler {
       out.orderBy(fields.map { case (_, alias) => col(alias) }: _*).limit(entries)
 
     case CountDistinct(fields, name, lgK) =>
-      val agg = udaf(new ThetaCountDistinctAgg(lgK), Encoders.STRING)
-      df.agg(agg(compositeKey(df, fields)).as(name))
+      df.agg(SketchPartial.col(compositeKey(df, fields), SketchPartial.ThetaEstimate(lgK)).as(name))
 
     case Distribution(field, dtype, points, k, numPoints) =>
-      val agg = udaf(new KllDistributionAgg(dtype.toString, points.toArray, k,
-        numPoints.getOrElse(0)), Encoders.DOUBLE)
-      val rows = df.agg(agg(fieldOrNull(df, field).cast("double")).as("rows"))
+      val kind = SketchPartial.KllDistribution(dtype.toString, points, k, numPoints.getOrElse(0))
+      val rows = df.agg(SketchPartial.col(fieldOrNull(df, field).cast("double"), kind).as("rows"))
         .select(explode(col("rows")).as("r"))
       dtype match {
         case DistributionType.QUANTILE =>
@@ -108,9 +106,8 @@ object QueryCompiler {
       }
 
     case TopK(fields, k, countName, threshold, maxMapSize) =>
-      val agg = udaf(new FreqItemsTopKAgg(k, threshold.getOrElse(0L), maxMapSize),
-        Encoders.STRING)
-      val rows = df.agg(agg(compositeKey(df, fields.map(_._1))).as("rows"))
+      val kind = SketchPartial.FreqItemsTopK(k, threshold.getOrElse(0L), maxMapSize)
+      val rows = df.agg(SketchPartial.col(compositeKey(df, fields.map(_._1)), kind).as("rows"))
         .select(explode(col("rows")).as("r"))
       val keyCols = fields.zipWithIndex.map { case ((_, alias), i) =>
         keyElement(col("r.key"), i + 1).as(alias)

@@ -1,8 +1,8 @@
 package graft.operators
 
-import graft.agg.ThetaCountDistinctAgg
+import graft.agg.SketchPartial
 import graft.compile.QueryCompiler
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -27,8 +27,7 @@ object GroupedCountDistinct {
                     name: String = "count", lgK: Int = 17): DataFrame = {
     require(keys.nonEmpty, "grouped count-distinct needs at least one key")
     require(fields.nonEmpty, "grouped count-distinct needs at least one field")
-    val agg = udaf(new ThetaCountDistinctAgg(lgK), Encoders.STRING)
-    df.groupBy(keys.map(col): _*)
-      .agg(agg(QueryCompiler.compositeKey(df, fields)).as(name))
+    df.groupBy(keys.map(col): _*).agg(SketchPartial.col(
+      QueryCompiler.compositeKey(df, fields), SketchPartial.ThetaEstimate(lgK)).as(name))
   }
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
-import graft.agg.KllDistributionAgg
-import org.apache.spark.sql.{DataFrame, Encoders}
+import graft.agg.SketchPartial
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -31,14 +31,13 @@ object GroupedDistribution {
                 probs: Seq[Double], k: Int = 2048,
                 requireExact: Boolean = false): DataFrame = {
     require(keys.nonEmpty, "grouped distribution needs at least one key")
-    val agg = udaf(new KllDistributionAgg("QUANTILE", probs.toArray, k, 0),
-      Encoders.DOUBLE)
+    val agg = SketchPartial.col(col(field).cast("double"),
+      SketchPartial.KllDistribution("QUANTILE", probs, k)).as("rows")
     // the exactness-gate count column is only aggregated when a caller
     // asked for the gate — the default path shuffles nothing extra
     val aggCols =
-      if (requireExact) Seq(agg(col(field).cast("double")).as("rows"),
-        count(col(field)).as("__n"))
-      else Seq(agg(col(field).cast("double")).as("rows"))
+      if (requireExact) Seq(agg, count(col(field)).as("__n"))
+      else Seq(agg)
     val agged = df.groupBy(keys.map(col): _*).agg(aggCols.head, aggCols.tail: _*)
     val checked =
       if (!requireExact) agged

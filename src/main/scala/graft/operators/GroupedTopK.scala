@@ -1,8 +1,8 @@
 package graft.operators
 
-import graft.agg.FreqItemsTopKAgg
+import graft.agg.SketchPartial
 import graft.compile.QueryCompiler
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -28,9 +28,9 @@ object GroupedTopK {
            maxMapSize: Int = 1024): DataFrame = {
     require(keys.nonEmpty, "grouped top-k needs at least one key")
     require(fields.nonEmpty, "grouped top-k needs at least one field")
-    val agg = udaf(new FreqItemsTopKAgg(k, threshold, maxMapSize), Encoders.STRING)
     val rows = df.groupBy(keys.map(col): _*)
-      .agg(agg(QueryCompiler.compositeKey(df, fields.map(_._1))).as("__rows"))
+      .agg(SketchPartial.col(QueryCompiler.compositeKey(df, fields.map(_._1)),
+        SketchPartial.FreqItemsTopK(k, threshold, maxMapSize)).as("__rows"))
       .select(keys.map(col) :+ explode(col("__rows")).as("__r"): _*)
     val keyCols = fields.zipWithIndex.map { case ((_, alias), i) =>
       QueryCompiler.keyElement(col("__r.key"), i + 1).as(alias)

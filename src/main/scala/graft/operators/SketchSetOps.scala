@@ -1,9 +1,9 @@
 package graft.operators
 
-import graft.agg.{BufSerde, SketchPartial, ThetaBuf, ThetaMergeEstimateAgg}
+import graft.agg.{BufSerde, SketchPartial, ThetaBuf}
 import graft.compile.QueryCompiler
 import org.apache.datasketches.theta.{CompactSketch, SetOperation}
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -89,8 +89,8 @@ object SketchSetOps {
     * sketch bytes, never re-scanned. Distributed: one shuffle on `seg`,
     * map-side partial merges. Exact inside the sketch's exact regime. */
   def mergedDistinct(parts: DataFrame, lgK: Int = 18): DataFrame = {
-    val agg = udaf(new ThetaMergeEstimateAgg(lgK), Encoders.BINARY)
-    parts.groupBy("seg").agg(agg(col("sk")).as("n_distinct"))
+    parts.groupBy("seg")
+      .agg(SketchPartial.col(col("sk"), SketchPartial.ThetaEstimate(lgK)).as("n_distinct"))
   }
 
   /** Per-segment KLL quantile-sketch partials as a (seg, sk) frame —
@@ -119,15 +119,17 @@ object SketchSetOps {
                       k: Int = 2048): DataFrame = {
     require(points.nonEmpty && points.forall(p => p >= 0.0 && p <= 1.0),
       "quantile points must be in [0, 1]")
-    val agg = udaf(new graft.agg.KllMergeQuantilesAgg(points.toArray, k),
-      Encoders.BINARY)
-    // the agg emits (quantile, value) PAIRS so the explode carries its
-    // own rank — see the aggregator's note on posexplode_outer's
-    // non-nullable pos attribute
-    parts.groupBy("seg").agg(agg(col("sk")).as("vals"))
+    // each row carries its own rank (quantile, value): recovering the rank
+    // from the row position via element_at is unsafe — posexplode_outer's
+    // pos attribute is (wrongly, for the outer variant) non-nullable, and
+    // Catalyst folds the lookup under that assumption, resurrecting a rank
+    // for the empty-marker row
+    parts.groupBy("seg")
+      .agg(SketchPartial.col(col("sk"),
+        SketchPartial.KllDistribution("QUANTILE", points, k)).as("vals"))
       .select(col("seg"), explode_outer(col("vals")).as("qv"))
-      .select(col("seg"), col("qv._1").as("quantile"),
-        col("qv._2").as("value"))
+      .select(col("seg"), col("qv.quantile").as("quantile"),
+        col("qv.value").as("value"))
   }
 
   /** Per-segment set algebra between TWO persisted [[thetaPartials]]
@@ -192,9 +194,9 @@ object SketchSetOps {
     * exact-regime contract as every sketch entry. */
   def mergedTopK(parts: DataFrame, k: Int, threshold: Long = 0L,
                  maxMapSize: Int = 1024): DataFrame = {
-    val agg = udaf(new graft.agg.FreqItemsMergeTopKAgg(k, threshold, maxMapSize),
-      Encoders.BINARY)
-    parts.groupBy("seg").agg(agg(col("sk")).as("rows"))
+    parts.groupBy("seg")
+      .agg(SketchPartial.col(col("sk"),
+        SketchPartial.FreqItemsTopK(k, threshold, maxMapSize)).as("rows"))
       .select(col("seg"), explode(col("rows")).as("r"))
       .select(col("seg"), col("r.key").as("key"), col("r.count").as("count"))
   }

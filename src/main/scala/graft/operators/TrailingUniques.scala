@@ -1,7 +1,7 @@
 package graft.operators
 
-import graft.agg.{BufSerde, SketchPartial, ThetaBuf, ThetaMergeEstimateAgg}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import graft.agg.{BufSerde, SketchPartial, ThetaBuf}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -46,7 +46,7 @@ object TrailingUniques {
                       requireExact: Boolean = true): DataFrame = {
     require(bucketSize > 0, "bucketSize must be positive")
     require(window >= 1, "window must be >= 1 bucket")
-    val merge = udaf(new ThetaMergeEstimateAgg(lgK, requireExact), Encoders.BINARY)
+    val merge = SketchPartial.col(col("sk"), SketchPartial.ThetaEstimate(lgK, requireExact))
 
     // Stage 1 — the one corpus pass: per-bucket sketches.
     val daily = df.filter(col(tsCol).isNotNull && col(keyCol).isNotNull)
@@ -63,9 +63,9 @@ object TrailingUniques {
       .withColumn("tb", explode(sequence(col("bucket"),
         col("bucket") + lit(window - 1L))))
       .groupBy(col("tb").as("bucket"))
-      .agg(merge(col("sk")).as("n_trailing"))
+      .agg(merge.as("n_trailing"))
     daily.select(col("bucket"), col("sk"))
-      .groupBy("bucket").agg(merge(col("sk")).as("n_bucket"))
+      .groupBy("bucket").agg(merge.as("n_bucket"))
       .join(contrib, "bucket")
       .select(col("bucket"), col("n_bucket").cast("long").as("n_bucket"),
         col("n_trailing").cast("long").as("n_trailing"))

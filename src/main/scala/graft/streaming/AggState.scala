@@ -117,10 +117,8 @@ final class GroupByState(fields: Seq[(String, String)], ops: Seq[GroupOp],
 /** COUNT_DISTINCT: Theta sketch buffer + estimation metadata. */
 final class CountDistinctState(spec: CountDistinct) extends AggState {
   var buf = new ThetaBuf(spec.lgK)
-  def finishRecords(): Seq[String] = {
-    val est = Math.round(buf.result.getEstimate)
-    Seq(Json.obj(spec.name -> est))
-  }
+  def finishRecords(): Seq[String] =
+    Seq(Json.obj(spec.name -> SketchAggregators.thetaEstimate(buf, spec.lgK)))
   override def metaEntries: Map[String, Any] = {
     val s = buf.result
     Map("estimation" -> Map(
@@ -132,34 +130,33 @@ final class CountDistinctState(spec: CountDistinct) extends AggState {
   def reset(): Unit = buf = new ThetaBuf(spec.lgK)
 }
 
-/** DISTRIBUTION: KLL buffer; finishes through the same code path as the
-  * batch aggregator (KllDistributionAgg.finish). */
+/** DISTRIBUTION: KLL buffer; finishes through the same function as the
+  * batch aggregate ([[SketchAggregators.distRows]]). */
 final class DistributionState(spec: Distribution) extends AggState {
   var buf = new KllBuf(spec.k)
-  private val finisher =
-    new KllDistributionAgg(spec.dtype.toString, spec.points.toArray, spec.k,
-      spec.numPoints.getOrElse(0))
-  def finishRecords(): Seq[String] = finisher.finish(buf).map { r =>
-    spec.dtype match {
-      case DistributionType.QUANTILE =>
-        Json.obj("Quantile" -> r.quantile, "Value" -> r.value)
-      case _ =>
-        Json.obj("Range" -> r.range, "Count" -> r.count, "Probability" -> r.probability)
+  def finishRecords(): Seq[String] =
+    SketchAggregators.distRows(buf, spec.dtype.toString, spec.points,
+      spec.numPoints.getOrElse(0)).map { r =>
+      spec.dtype match {
+        case DistributionType.QUANTILE =>
+          Json.obj("Quantile" -> r.quantile, "Value" -> r.value)
+        case _ =>
+          Json.obj("Range" -> r.range, "Count" -> r.count, "Probability" -> r.probability)
+      }
     }
-  }
   def reset(): Unit = buf = new KllBuf(spec.k)
 }
 
-/** TOP_K: FrequentItems buffer; finishes via FreqItemsTopKAgg. */
+/** TOP_K: FrequentItems buffer; finishes through the same function as the
+  * batch aggregate ([[SketchAggregators.topKRows]]). */
 final class TopKState(spec: TopK) extends AggState {
   var buf = new FreqItemsBuf(spec.maxMapSize)
-  private val finisher =
-    new FreqItemsTopKAgg(spec.k, spec.threshold.getOrElse(0L), spec.maxMapSize)
-  def finishRecords(): Seq[String] = finisher.finish(buf).map { row =>
-    val keys = graft.compile.CompositeKeys.parse(row.key)
-    val keyFields = spec.fields.map(_._2).zip(keys)
-    Json.obj(keyFields :+ (spec.countName -> row.count): _*)
-  }
+  def finishRecords(): Seq[String] =
+    SketchAggregators.topKRows(buf, spec.k, spec.threshold.getOrElse(0L)).map { row =>
+      val keys = graft.compile.CompositeKeys.parse(row.key)
+      val keyFields = spec.fields.map(_._2).zip(keys)
+      Json.obj(keyFields :+ (spec.countName -> row.count): _*)
+    }
   def reset(): Unit = buf = new FreqItemsBuf(spec.maxMapSize)
 }
 

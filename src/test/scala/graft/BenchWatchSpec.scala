@@ -112,4 +112,44 @@ class BenchWatchSpec extends AnyFunSuite {
     val (reg, _, unadj) = categorize(Seq(r), adjFactor = 1.3)
     assert(reg.isEmpty && unadj.nonEmpty)
   }
+
+  test("compactLine: oversized inputs stay under the hard cap as valid JSON") {
+    import Bench.{compactLine, jstr}
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def block(n: Int) = Seq.tabulate(n)(i => s""""k$i":$i.5""").mkString("{", ",", "}")
+    val regRow = s"""{"name":${jstr("q_" + "x" * 200)},"sec":9.9,"best":1.0,""" +
+      s""""fresh_min":null,"fresh_median":null}"""
+    def fields(b7: String) = Seq(
+      "metric" -> jstr("total"), "value" -> "123.456", "unit" -> jstr("sec"),
+      "verdict" -> jstr("degraded\nbox"), "n_queries" -> "300", "n_errors" -> "0",
+      "error_names" -> "[]", "b7" -> b7, "b11" -> block(10), "b8" -> block(4),
+      "baseline" -> block(10), "n_regressions" -> "40",
+      "regressions" -> Seq.fill(3)(regRow).mkString("[", ",", "]"),
+      "jvm" -> block(5), "full" -> jstr("bench_full.json"))
+    // compactLine's drop order
+    val drop = Seq("regressions", "jvm", "baseline", "b8", "b11", "b7", "error_names")
+    val queries = (1 to 300).map(i => s"q_entry_with_a_long_name_$i" -> (1000.0 / i))
+    // the regression rows leave before any other field, n_regressions stays
+    val fitWithoutRows = compactLine(fields(block(60)), queries, "/data/sf0.1")
+    // a b7 block too large for any line: it and every field listed
+    // before it leave, error_names (listed after it) stays
+    val huge = compactLine(fields(block(400)), queries, "/data/sf0.1")
+    for (line <- Seq(fitWithoutRows, huge)) {
+      assert(line.length <= 1800, line.length)
+      assert(line.startsWith("{\"metric\":\"total\""), line.take(40))
+      val json = mapper.readTree(line)
+      assert(json.get("n_regressions").asInt == 40)
+      assert(json.get("sf").asText == "/data/sf0.1")
+    }
+    val fit = mapper.readTree(fitWithoutRows)
+    assert(!fit.has("regressions") && fit.has("jvm") && fit.has("b7"))
+    assert(fit.get("queries").size > 0)
+    assert(fit.get("queries").fieldNames.next() == "q_entry_with_a_long_name_1")
+    val bare = mapper.readTree(huge)
+    assert(drop.init.forall(k => !bare.has(k)) && bare.has("error_names"))
+    assert(bare.get("queries").size > 0)
+    // small inputs keep every field and are cut only in queries
+    val small = mapper.readTree(compactLine(fields(block(2)), queries, "/data/sf0.1"))
+    assert(small.has("regressions") && small.get("regressions").size == 3)
+  }
 }

@@ -8,12 +8,14 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, ObjectInputStream, 
 
 /**
  * Partial/final merge conformance: build two independently-updated partial
- * buffers, round-trip both through Java serialization (the shuffle boundary
- * our Aggregator buffer encoders use), merge, and assert exact results —
- * the contract the reference proves with its two-partial combine tests
- * (JoinBoltTest.java:696-893). The native [[SketchPartial]] cases run the
- * same contract through a real `df.agg` / `groupBy.agg` over four input
- * partitions, so Spark's partial → serialize → final path executes.
+ * buffers, round-trip both through Java serialization (the form the
+ * buffers take across the shuffle and in stored partials), merge, and
+ * assert exact results — the contract the reference proves with its
+ * two-partial combine tests (JoinBoltTest.java:696-893). The
+ * [[SketchPartial]] cases run the same contract through a real `df.agg` /
+ * `groupBy.agg` over four input partitions, so Spark's partial → serialize
+ * → final path executes, for the partial kinds and for the finishing kinds
+ * over raw input and over partial bytes.
  */
 class SketchMergeSpec extends SparkTestBase {
 
@@ -97,22 +99,20 @@ class SketchMergeSpec extends SparkTestBase {
     assert(sk.getEstimate("B") === 3L)
   }
 
-  test("FreqItemsTopKAgg finish: threshold filters, ties break by key") {
-    val agg = new FreqItemsTopKAgg(k = 2, threshold = 2L, maxMapSize = 64)
+  test("topKRows finish: threshold filters, ties break by key") {
     val b = new FreqItemsBuf(64)
     Seq("x", "x", "y", "y", "z").foreach(b.update)
-    val rows = agg.finish(b)
+    val rows = SketchAggregators.topKRows(b, k = 2, threshold = 2L)
     assert(rows.map(r => (r.key, r.count)) === Seq(("x", 2L), ("y", 2L)))
   }
 
   test("KLL PMF/CDF emit the sketch's own mass in estimation mode (n >> k)") {
     val points = Array(100.0, 500.0)
-    val agg = new KllDistributionAgg("PMF", points, k = 8) // tiny k → estimation
-    val buf = agg.zero
+    val buf = new KllBuf(8) // tiny k → estimation
     (1 to 100000).foreach(i => buf.update(((i * 7919) % 1000).toDouble))
     val s = buf.result
     assert(s.isEstimationMode)
-    val rows = agg.finish(buf)
+    val rows = SketchAggregators.distRows(buf, "PMF", points.toSeq)
     // probability IS getPMF's mass, not the rounded count re-divided
     val expect = s.getPMF(points,
       org.apache.datasketches.quantilescommon.QuantileSearchCriteria.EXCLUSIVE)
@@ -124,26 +124,25 @@ class SketchMergeSpec extends SparkTestBase {
 
   test("LINEAR distribution: QUANTILE ranks over [0,1], PMF splits from sketch min/max") {
     // QUANTILE numPoints 5 == explicit {0, .25, .5, .75, 1}
-    val q = new KllDistributionAgg("QUANTILE", Array.empty, k = 1024, numPoints = 5)
-    val qb = q.zero
+    val qb = new KllBuf(1024)
     (1 to 100).foreach(i => qb.update(i.toDouble))
-    assert(q.finish(qb).map(_.quantile) === Seq(0.0, 0.25, 0.5, 0.75, 1.0))
+    assert(SketchAggregators.distRows(qb, "QUANTILE", Nil, numPoints = 5).map(_.quantile) ===
+      Seq(0.0, 0.25, 0.5, 0.75, 1.0))
     // PMF numPoints 3 over values 0..100 → splits {0, 50, 100}: counts are
     // (-∞,0)=0, [0,50)=50, [50,100)=50, [100,∞)=1 — the reference's
     // generated-domain shape (FilterBoltTest.java:741-786)
-    val p = new KllDistributionAgg("PMF", Array.empty, k = 1024, numPoints = 3)
-    val pb = p.zero
+    val pb = new KllBuf(1024)
     (0 to 100).foreach(i => pb.update(i.toDouble))
-    val rows = p.finish(pb)
+    val rows = SketchAggregators.distRows(pb, "PMF", Nil, numPoints = 3)
     assert(rows.map(_.range) === Seq("(-∞, 0.0)", "[0.0, 50.0)", "[50.0, 100.0)", "[100.0, +∞)"))
     assert(rows.map(_.count) === Seq(0L, 50L, 50L, 1L))
   }
 
   test("LINEAR PMF on a degenerate domain (min == max) collapses to one split") {
-    val p = new KllDistributionAgg("PMF", Array.empty, k = 1024, numPoints = 3)
-    val b = p.zero
+    val b = new KllBuf(1024)
     (1 to 5).foreach(_ => b.update(7.0)) // one distinct value
-    val rows = p.finish(b) // duplicate splits would throw in getPMF
+    // duplicate splits would throw in getPMF
+    val rows = SketchAggregators.distRows(b, "PMF", Nil, numPoints = 3)
     assert(rows.map(_.range) === Seq("(-∞, 7.0)", "[7.0, +∞)"))
     assert(rows.map(_.count) === Seq(0L, 5L))
   }
@@ -152,13 +151,14 @@ class SketchMergeSpec extends SparkTestBase {
   import SketchPartial.{Capped, FreqItems, Kll, Theta, col => partial}
 
   /** `n` rows over four partitions: (g = i % 3, s = "k" + (i % 500),
-    * d = i, every 10th s and d null). */
+    * d = i, every 10th s and d null, id = i). */
   private def rows(n: Int): DataFrame =
     spark.range(n).repartition(4).select(
       (col("id") % 3).as("g"),
       when(col("id") % 10 =!= 7, concat(lit("k"), (col("id") % 500).cast("string")))
         .as("s"),
-      when(col("id") % 10 =!= 7, col("id").cast("double")).as("d"))
+      when(col("id") % 10 =!= 7, col("id").cast("double")).as("d"),
+      col("id"))
 
   test("SketchPartial Theta: exact distinct counts through df.agg and groupBy.agg") {
     val df = rows(3000)
@@ -244,6 +244,159 @@ class SketchMergeSpec extends SparkTestBase {
     assert(e.getMessage.contains("needs a string input, got bigint"), e.getMessage)
     intercept[AnalysisException] {
       spark.range(10).agg(partial(col("id").cast("string"), Kll(64))).collect()
+    }
+  }
+
+  // --- SketchPartial finishing kinds: raw input or partial bytes ---
+  import SketchPartial.{FreqItemsTopK, KllDistribution, ThetaEstimate}
+
+  /** The (group, value) rows of `df` as a map. */
+  private def byGroup(df: DataFrame): Map[Long, Any] =
+    df.collect().map(r => r.getLong(0) -> r.get(1)).toMap
+
+  test("ThetaEstimate: exact distinct count from raw input and from partial bytes") {
+    val df = rows(3000)
+    assert(df.agg(partial(col("s"), ThetaEstimate(12))).head().getLong(0) === 450L)
+    val parts = df.groupBy("g").agg(partial(col("s"), Theta(12)).as("sk"))
+    assert(parts.agg(partial(col("sk"), ThetaEstimate(12))).head().getLong(0) === 450L)
+    val expect = (0 until 3000).filter(_ % 10 != 7).groupBy(i => (i % 3).toLong)
+      .map { case (g, is) => g -> is.map(_ % 500).distinct.size.toLong }
+    assert(byGroup(df.groupBy("g").agg(partial(col("s"), ThetaEstimate(12)))) === expect)
+    assert(byGroup(parts.groupBy("g").agg(partial(col("sk"), ThetaEstimate(12)))) === expect)
+    // no input rows: the estimate finishes to 0
+    assert(df.filter(lit(false)).agg(partial(col("s"), ThetaEstimate(12))).head().getLong(0) === 0L)
+  }
+
+  test("KllDistribution: QUANTILE/PMF/CDF rows equal the driver-side finish, raw and bytes") {
+    val df = rows(1000)
+    val local = new KllBuf(2048)
+    (0 until 1000).filter(_ % 10 != 7).foreach(i => local.update(i.toDouble))
+    val parts = df.groupBy("g").agg(partial(col("d"), Kll(2048)).as("sk"))
+    def distRowsOf(df: DataFrame): Seq[DistRow] =
+      df.head().getSeq[org.apache.spark.sql.Row](0).map(r =>
+        DistRow(r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))
+    val kinds = Seq(
+      KllDistribution("QUANTILE", Seq(0.0, 0.1, 0.5, 0.9, 1.0), 2048),
+      KllDistribution("QUANTILE", Nil, 2048, numPoints = 5),
+      KllDistribution("PMF", Seq(100.0, 500.0), 2048),
+      KllDistribution("PMF", Nil, 2048, numPoints = 4),
+      KllDistribution("CDF", Seq(100.0, 500.0), 2048))
+    kinds.foreach { kind =>
+      val expect = SketchAggregators.distRows(local, kind.dtype, kind.points, kind.numPoints)
+      assert(expect.nonEmpty)
+      assert(distRowsOf(df.agg(partial(col("d"), kind))) === expect, kind)
+      assert(distRowsOf(parts.agg(partial(col("sk"), kind))) === expect, kind)
+    }
+    // QUANTILE at explicit points is percentile_disc
+    val values = (0 until 1000).filter(_ % 10 != 7).map(_.toDouble)
+    assert(distRowsOf(df.agg(partial(col("d"), kinds.head))).map(_.value) ===
+      Seq(0.0, 0.1, 0.5, 0.9, 1.0).map(p => values(math.max(0, Math.ceil(p * values.size).toInt - 1))))
+    // no input rows: an empty distribution
+    assert(distRowsOf(df.filter(lit(false)).agg(partial(col("d"), kinds.head))).isEmpty)
+  }
+
+  test("FreqItemsTopK: threshold and (-count, key) tie order, raw and bytes") {
+    val items = Seq.fill(5)("a") ++ Seq.fill(3)("c") ++ Seq.fill(3)("b") ++
+      Seq.fill(3)("e") ++ Seq("d") ++ Seq[String](null, null)
+    val df = spark.createDataFrame(items.zipWithIndex.map { case (s, i) => (i % 3L, s) })
+      .toDF("g", "s").repartition(4)
+    val parts = df.groupBy("g").agg(partial(col("s"), FreqItems(64)).as("sk"))
+    def topOf(df: DataFrame): Seq[(String, Long)] =
+      df.head().getSeq[org.apache.spark.sql.Row](0).map(r => (r.getString(0), r.getLong(1)))
+    val expect = Seq(("a", 5L), ("b", 3L), ("c", 3L))
+    for ((in, c) <- Seq(df -> col("s"), parts -> col("sk"))) {
+      assert(topOf(in.agg(partial(c, FreqItemsTopK(3, 2L, 64)))) === expect)
+      assert(topOf(in.agg(partial(c, FreqItemsTopK(10, 4L, 64)))) === Seq(("a", 5L)))
+    }
+    val local = new FreqItemsBuf(64)
+    items.filter(_ != null).foreach(local.update)
+    assert(SketchAggregators.topKRows(local, 3, 2L).map(r => (r.key, r.count)) === expect)
+    assert(topOf(df.filter(lit(false)).agg(partial(col("s"), FreqItemsTopK(3)))).isEmpty)
+  }
+
+  test("finishing kinds: bytes over two unioned partial frames equal raw input over the same rows") {
+    val df = rows(3000)
+    val (h0, h1) = (df.filter(col("id") % 2 === 0), df.filter(col("id") % 2 === 1))
+    val s = col("s")
+    val d = col("d")
+    def parts(kind: SketchPartial.Kind[_ <: AnyRef], in: org.apache.spark.sql.Column) =
+      h0.groupBy("g").agg(partial(in, kind).as("sk"))
+        .unionByName(h1.groupBy("g").agg(partial(in, kind).as("sk")))
+    val cases = Seq[(SketchPartial.Kind[_ <: AnyRef], SketchPartial.Kind[_ <: AnyRef],
+        org.apache.spark.sql.Column)](
+      (Theta(12), ThetaEstimate(12), s),
+      (Kll(2048), KllDistribution("QUANTILE", Seq(0.25, 0.5, 0.75), 2048), d),
+      (Kll(2048), KllDistribution("CDF", Seq(500.0, 2000.0), 2048), d),
+      (FreqItems(1024), FreqItemsTopK(5), s))
+    cases.foreach { case (p, f, in) =>
+      val raw = byGroup(df.groupBy("g").agg(partial(in, f)))
+      val merged = byGroup(parts(p, in).groupBy("g").agg(partial(col("sk"), f)))
+      assert(raw.size === 3)
+      assert(merged === raw, f)
+    }
+  }
+
+  test("ThetaEstimate requireExact: a union that left the exact regime throws") {
+    // two partials of 12 distinct keys each, both exact at lgK = 4
+    // (16 nominal entries); their union holds 24
+    val keys = (0 until 12).map(i => (0L, s"a$i")) ++ (0 until 12).map(i => (1L, s"b$i"))
+    val parts = spark.createDataFrame(keys).toDF("g", "s").repartition(4)
+      .groupBy("g").agg(partial(col("s"), Theta(4)).as("sk"))
+    assert(byGroup(parts.groupBy("g").agg(partial(col("sk"), ThetaEstimate(4, requireExact = true)))) ===
+      Map(0L -> 12L, 1L -> 12L))
+    val e = intercept[Exception] {
+      parts.agg(partial(col("sk"), ThetaEstimate(4, requireExact = true))).collect()
+    }
+    val msg = "requirement failed: theta union left the exact regime (lgK=4): the merged " +
+      "distinct count is now an estimate. Raise lgK or drop requireExact."
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains(msg))), e.getMessage)
+    // without the gate the same union finishes to an estimate
+    assert(parts.agg(partial(col("sk"), ThetaEstimate(4))).head().getLong(0) > 0L)
+  }
+
+  test("finishing kinds: the type check rejects a wrong input type") {
+    def rejected(in: org.apache.spark.sql.Column, kind: SketchPartial.Kind[_ <: AnyRef]): String =
+      intercept[AnalysisException] {
+        spark.range(10).agg(partial(in, kind)).collect()
+      }.getMessage
+    assert(rejected(col("id"), ThetaEstimate(12)).contains("needs a string or binary input, got bigint"))
+    assert(rejected(col("id").cast("string"), KllDistribution("QUANTILE", Seq(0.5), 64))
+      .contains("needs a double or binary input, got string"))
+    assert(rejected(col("id").cast("double"), FreqItemsTopK(3))
+      .contains("needs a string or binary input, got double"))
+    // only the finishing kinds merge bytes: a partial kind takes raw input
+    assert(rejected(col("id").cast("string").cast("binary"), Theta(12))
+      .contains("needs a string input, got binary"))
+  }
+
+  test("every sketch finisher plans a native SketchPartial, never a ScalaAggregator") {
+    import graft.compile.QueryCompiler
+    import graft.model._
+    import graft.operators._
+    val df = rows(100)
+    val frames = Seq(
+      "COUNT DISTINCT" -> QueryCompiler.run(df, QuerySpec("cd", aggregation = CountDistinct(Seq("s")))),
+      "DISTRIBUTION" -> QueryCompiler.run(df, QuerySpec("q", aggregation =
+        Distribution("d", DistributionType.QUANTILE, Seq(0.5)))),
+      "TOP K" -> QueryCompiler.run(df, QuerySpec("tk", aggregation = TopK(Seq("s" -> "s"), k = 2))),
+      "GroupedCountDistinct" -> GroupedCountDistinct.countDistinct(df, Seq("g"), Seq("s")),
+      "GroupedTopK" -> GroupedTopK.topK(df, Seq("g"), Seq("s" -> "s"), k = 2),
+      "GroupedDistribution" -> GroupedDistribution.quantiles(df, Seq("g"), "d", Seq(0.5)),
+      "mergedDistinct" -> SketchSetOps.mergedDistinct(SketchSetOps.thetaPartials(df, "g", Seq("s"))),
+      "mergedQuantiles" -> SketchSetOps.mergedQuantiles(
+        SketchSetOps.kllPartials(df, "g", "d"), Seq(0.5)),
+      "mergedTopK" -> SketchSetOps.mergedTopK(SketchSetOps.freqPartials(df, "g", "s"), k = 2),
+      "TrailingUniques" -> TrailingUniques.trailingUniques(df, "s", "id", 10L, 3))
+    frames.foreach { case (site, f) =>
+      val exprs = scala.collection.mutable.ArrayBuffer.empty[
+        org.apache.spark.sql.catalyst.expressions.Expression]
+      f.queryExecution.analyzed.foreach(_.expressions.foreach(_.foreach(exprs += _)))
+      val udafs = exprs.collect {
+        case a: org.apache.spark.sql.execution.aggregate.ScalaAggregator[_, _, _] => a.nodeName
+      }
+      assert(udafs.isEmpty, s"$site plans udaf(Aggregator) columns: $udafs")
+      assert(exprs.exists(_.isInstanceOf[SketchPartial[_]]), s"$site plans no SketchPartial")
     }
   }
 }
