@@ -1,5 +1,7 @@
 package graft
 
+import graft.plans.Profile
+
 /**
  * Structural guard for the double-execution class: every driver entry's
  * EXECUTION must not perform more physical parquet scans than the
@@ -13,7 +15,7 @@ package graft
  * instead of a bench surprise.
  *
  * r15 (VERDICT r14 item 7): counts are LISTENER-measured scan-stage
- * executions ([[ScanAudit.executedScanCount]]), not printed-plan greps —
+ * executions (`scans` of [[Profile.measure]]), not printed-plan greps —
  * the grep counted every cached subtree once per InMemoryTableScan
  * reprint, so the r14 persists made the gate measure the wrong thing on
  * exactly the operators they optimized (graph entries now read their
@@ -22,8 +24,9 @@ package graft
  * Unrolled-iteration operators (PageRank supersteps, hierarchy closure)
  * legitimately scan many times — the gate is DRIFT vs the baseline, not
  * an absolute bound. If an entry's execution legitimately grows (a new
- * verification stage, a deeper unroll), regenerate the baseline:
- * `SPARK_GRAFT_CPUS=4 sbt "runMain graft.ScanAudit /root/testdata/sf0.001 scan_baseline.json"`
+ * verification stage, a deeper unroll), regenerate the baseline over
+ * the same sf0.001 directory `sfDir` below:
+ * `SPARK_GRAFT_CPUS=4 sbt "runMain graft.plans.Profile all <sfDir> scan_baseline.json"`
  * and justify the diff in the commit.
  */
 class ScanCountAuditSpec extends SparkTestBase {
@@ -41,9 +44,9 @@ class ScanCountAuditSpec extends SparkTestBase {
       baseline.get(name).flatMap { base =>
         try {
           spark.catalog.clearCache()
-          val now = ScanAudit.executedScanCount(spark) {
+          val now = Profile.measure(spark) {
             graft.plans.CacheScope(spark) { fn(spark, sfDir).count(); () }
-          }
+          }.scans
           if (now > base) Some(s"$name: $now scan executions > baseline $base")
           else None
         } catch {
@@ -59,5 +62,32 @@ class ScanCountAuditSpec extends SparkTestBase {
     val missing = SparkEntry.queries.keySet -- baseline.keySet
     assert(missing.size <= 10,
       s"regenerate scan_baseline.json — ${missing.size} entries uncovered: $missing")
+  }
+
+  test("a scan run on a pooled thread with a stale job group counts like the caller's") {
+    val root = java.nio.file.Files.createTempDirectory("scan-attribution").toFile
+    val dir = s"$root/t"
+    spark.range(100).write.parquet(dir)
+    def read(): Unit = { spark.read.parquet(dir).count(); () }
+    val sc = spark.sparkContext
+    // a pool thread inherits the job group set when it is created and
+    // keeps it — as the threads SparkEntry.par2/par3 and
+    // QueryRunner.jobEc reuse do
+    sc.setJobGroup("stale", "set before the pool thread started", interruptOnCancel = false)
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    try {
+      pool.submit(new Runnable { def run(): Unit = () }).get()
+      sc.clearJobGroup()
+      val pooled = Profile.measure(spark) {
+        pool.submit(new Runnable { def run(): Unit = read() }).get(); ()
+      }
+      val caller = Profile.measure(spark)(read())
+      assert(caller.scans > 0, caller)
+      assert(pooled == caller)
+    } finally {
+      sc.clearJobGroup()
+      pool.shutdown()
+      org.apache.commons.io.FileUtils.deleteDirectory(root)
+    }
   }
 }
