@@ -39,12 +39,11 @@ object SketchAggregators {
     * loud failure: a union that left the sketch's exact regime (retained <
     * nominal entries) throws instead of emitting an estimate — the contract
     * callers like [[graft.operators.TrailingUniques]] use when the consumer
-    * (or the test oracle) needs exact distinct counts. `lgK` is the
-    * caller's: a deserialized buffer does not restore its own. */
-  def thetaEstimate(b: ThetaBuf, lgK: Int, requireExact: Boolean = false): Long = {
+    * (or the test oracle) needs exact distinct counts. */
+  def thetaEstimate(b: ThetaBuf, requireExact: Boolean = false): Long = {
     val r = b.result
     if (requireExact) require(!r.isEstimationMode,
-      s"theta union left the exact regime (lgK=$lgK): the merged distinct " +
+      s"theta union left the exact regime (lgK=${b.lgK}): the merged distinct " +
         "count is now an estimate. Raise lgK or drop requireExact.")
     Math.round(r.getEstimate)
   }
@@ -152,8 +151,15 @@ object BufSerde {
 // ---------------------------------------------------------------------------
 
 /** Serializable wrapper around a Theta Union; compact-form bytes cross the
-  * shuffle, live gadget everywhere else. */
-final class ThetaBuf(val lgK: Int) extends Serializable {
+  * shuffle, live gadget everywhere else. The three buffers pin the
+  * serialVersionUID their classes had when `lgK`/`k`/`maxMapSize` were
+  * constructor vals, so bytes stored before then still read. */
+@SerialVersionUID(5272320278768421944L)
+final class ThetaBuf(lgK0: Int) extends Serializable {
+  // a var so readObject can restore it: custom readObject never restores
+  // constructor vals, and a buffer that forgot its lgK re-serializes as 0
+  private var lg: Int = lgK0
+  def lgK: Int = lg
   @transient private var union: Union = _
   private def ensure(): Union = {
     if (union == null)
@@ -173,10 +179,8 @@ final class ThetaBuf(val lgK: Int) extends Serializable {
     out.writeInt(bytes.length)
     out.write(bytes)
   }
-  // NB: constructor vals are NOT restored by custom readObject (no
-  // defaultReadObject call) — use the locally-read value, never the field.
   private def readObject(in: ObjectInputStream): Unit = {
-    val lg = in.readInt()
+    lg = in.readInt()
     val n = in.readInt()
     val bytes = new Array[Byte](n)
     in.readFully(bytes)
@@ -193,7 +197,10 @@ final class ThetaBuf(val lgK: Int) extends Serializable {
 // Reference: QuantileSketchingStrategy, FilterBoltTest.java:741-786.
 // ---------------------------------------------------------------------------
 
-final class KllBuf(val k: Int) extends Serializable {
+@SerialVersionUID(1163857998137962416L)
+final class KllBuf(k0: Int) extends Serializable {
+  private var kk: Int = k0 // restored by readObject, as ThetaBuf's lgK
+  def k: Int = kk
   @transient private var sketch: KllDoublesSketch = _
   private def ensure(): KllDoublesSketch = {
     if (sketch == null) sketch = KllDoublesSketch.newHeapInstance(k)
@@ -213,7 +220,7 @@ final class KllBuf(val k: Int) extends Serializable {
     out.write(bytes)
   }
   private def readObject(in: ObjectInputStream): Unit = {
-    in.readInt()
+    kk = in.readInt()
     val n = in.readInt()
     val bytes = new Array[Byte](n)
     in.readFully(bytes)
@@ -232,7 +239,10 @@ final case class DistRow(range: String, count: Long, probability: Double,
 // Reference: FrequentItemsSketchingStrategy, FilterBoltTest.java:789-832.
 // ---------------------------------------------------------------------------
 
-final class FreqItemsBuf(val maxMapSize: Int) extends Serializable {
+@SerialVersionUID(8340704674692726582L)
+final class FreqItemsBuf(maxMapSize0: Int) extends Serializable {
+  private var mapSize: Int = maxMapSize0 // restored by readObject, as ThetaBuf's lgK
+  def maxMapSize: Int = mapSize
   @transient private var sketch: ItemsSketch[String] = _
   private def ensure(): ItemsSketch[String] = {
     if (sketch == null) sketch = new ItemsSketch[String](maxMapSize)
@@ -252,7 +262,7 @@ final class FreqItemsBuf(val maxMapSize: Int) extends Serializable {
     out.write(bytes)
   }
   private def readObject(in: ObjectInputStream): Unit = {
-    in.readInt()
+    mapSize = in.readInt()
     val n = in.readInt()
     val bytes = new Array[Byte](n)
     in.readFully(bytes)

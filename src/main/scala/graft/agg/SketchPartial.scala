@@ -140,7 +140,7 @@ object SketchPartial {
       extends ThetaSketch with Finishing[ThetaBuf] {
     override def outputType: DataType = LongType
     override def result(b: ThetaBuf): Any =
-      SketchAggregators.thetaEstimate(b, lgK, requireExact)
+      SketchAggregators.thetaEstimate(b, requireExact)
   }
 
   /** DISTRIBUTION: `array<struct<range,count,probability,quantile,value>>`,
@@ -210,7 +210,7 @@ object SketchPartial {
       b
     }
     def result(b: CappedBuf): Any =
-      new GenericArrayData(b.items.reverseIterator.map(UTF8String.fromString).toArray[Any])
+      new GenericArrayData(b.records.map(UTF8String.fromString).toArray[Any])
   }
 
   /** Capped-collect buffer: `items` newest first, with its size carried
@@ -218,6 +218,8 @@ object SketchPartial {
   final class CappedBuf {
     var n: Int = 0
     var items: List[String] = Nil
+    /** The records in arrival order. */
+    def records: List[String] = items.reverse
   }
 
   /** The `kind` aggregate of `input` (typed as `kind` requires) as a Column. */

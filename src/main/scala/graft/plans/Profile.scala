@@ -34,6 +34,11 @@ import graft.{Session, SparkEntry}
   * [baselineOut]` (sfDir defaults to `SPARK_GRAFT_SF_DIR`) — one JSON
   * line per entry:
   * {"entry", "jobs", "stages", "tasks", "scans", "stream_jobs", "wall_ms"}.
+  * Entries run in the order given (`all`: name order), and the FIRST
+  * entry's `wall_ms` includes the session's warm-up (class loading, the
+  * first plans and generated code): at sf0.001 on 4 cores `q_ab_test`
+  * took 6.4 s run first and 0.6 s run again after `q_ab_segmented`, on
+  * the same 6 jobs. Compare walls of entries that did not run first.
   * With `baselineOut` it also writes the per-entry scan counts in the
   * `scan_baseline.json` format; if any entry throws it names the failed
   * entries, writes nothing and exits non-zero. `SPARK_GRAFT_JOBLOG=1`

@@ -72,7 +72,7 @@ final class MetricsAcc(ops: Seq[GroupOp]) {
 object MetricsAcc {
   /** `op`'s null-safe combine of two partial values: Long operands stay
     * Long, any other pair of numbers goes Double. */
-  private[streaming] def combine(op: GroupOpType.Value): (Any, Any) => Any = op match {
+  private def combine(op: GroupOpType.Value): (Any, Any) => Any = op match {
     case GroupOpType.MIN => num2(_, _, math.min, math.min)
     case GroupOpType.MAX => num2(_, _, math.max, math.max)
     case _               => num2(_, _, _ + _, _ + _)
@@ -118,7 +118,7 @@ final class GroupByState(fields: Seq[(String, String)], ops: Seq[GroupOp],
 final class CountDistinctState(spec: CountDistinct) extends AggState {
   var buf = new ThetaBuf(spec.lgK)
   def finishRecords(): Seq[String] =
-    Seq(Json.obj(spec.name -> SketchAggregators.thetaEstimate(buf, spec.lgK)))
+    Seq(Json.obj(spec.name -> SketchAggregators.thetaEstimate(buf)))
   override def metaEntries: Map[String, Any] = {
     val s = buf.result
     Map("estimation" -> Map(

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.agg._
 import graft.compile.{ExprCompiler, QueryCompiler}
 import graft.model._
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -27,15 +27,15 @@ final class ManualClock(start: Long = 0L) extends Clock {
  * FilterBolt/JoinBolt split:
  *
  *  - **Shared pass** (= FilterBolt partials): all active non-grouped queries
- *    compile into conditional aggregate expressions over one `df.agg(...)` —
- *    each query's filter becomes `when(pred, input)` gating its aggregator
- *    input, so a 100-query workload costs ONE scan of the batch, not 100
- *    jobs. Sketch aggregations emit their partial as serialized bytes
- *    (the native [[graft.agg.SketchPartial]] aggregate, which also
- *    collects RAW records), exactly the reference's `byte[]` DATA_STREAM
- *    tuples (FilterBolt.java:187-199). Spark's partial/final agg split runs inside
- *    the batch; GROUP BY key-sets each add one grouped job over the same
- *    (cached) batch.
+ *    become entries of ONE native aggregate over one `df.agg(...)`
+ *    ([[graft.agg.MultiQueryPartial]]) — each query's filter is its
+ *    entry's gate, so a 100-query workload costs ONE scan of the batch,
+ *    not 100 jobs, and one aggregate column, not one per query and op.
+ *    Its value is one serialized partial (sketch buffers, capped RAW
+ *    records and metric accumulators), exactly the reference's `byte[]`
+ *    DATA_STREAM tuples (FilterBolt.java:187-199). Spark's partial/final
+ *    agg split runs inside the batch; the equality, range and GROUP BY
+ *    jobs over the same (cached) batch each aggregate with one too.
  *  - **Driver combine** (= JoinBolt): [[AggState]] merges per-batch partials
  *    across batches (`Querier.combine`, JoinBolt.java:154-155), owns window
  *    emission + reset (JoinBolt.java:252-259), duration expiry
@@ -523,11 +523,11 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
       .filter(_._2.size >= 2)
     val rangeSet = rangeByField.values.flatten.toSet
     // grouped queries stay in the shared pass for their UNGROUPED matched
-    // counts (partialColumns emits only the count column for GroupBy)
+    // counts (the shared pass gives a GroupBy class only its matched count)
     val simple = active.filterNot(rq => eqSet.contains(rq) || rangeSet.contains(rq))
     // GROUP BY fusion: queries with the same (key fields, projection)
     // share one grouped job regardless of filter — each query's metric
-    // columns are gated by its OWN predicate inside the shared aggregate
+    // ops are gated by its OWN predicate inside the shared aggregate
     // (same conditional-aggregation trick as the ungrouped shared pass),
     // and a per-query matched count tells the driver which groups exist
     // for which query. N same-key queries = ONE scan + ONE shuffle, where
@@ -653,48 +653,36 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
       case a      => Some((rq.spec.filter, rq.spec.projection, a))
     }
 
-  /** id → representative id (first member in list order). A job computes
-    * it once and uses the same map for column building and row reading. */
-  private def sharedReps(simple: Seq[RQ]): Map[String, String] = {
-    val rep = mutable.HashMap.empty[(Option[Expr], Option[Seq[(String, Expr)]], Aggregation), String]
-    simple.map { rq =>
-      rq.spec.id -> (sharedClassKey(rq) match {
-        case Some(k) => rep.getOrElseUpdate(k, rq.spec.id)
-        case None    => rq.spec.id
-      })
-    }.toMap
+  /** The job's classes — one representative per distinct `key`, first
+    * member in list order — and each member's class index. */
+  private def classesBy(rqs: Seq[RQ])(key: RQ => Any): (Seq[RQ], Map[String, Int]) = {
+    val idx = mutable.LinkedHashMap.empty[Any, (RQ, Int)]
+    val of = rqs.map(rq => rq.spec.id -> idx.getOrElseUpdate(key(rq), (rq, idx.size))._2).toMap
+    (idx.values.map(_._1).toSeq, of)
   }
+
+  /** Spec classes ([[sharedClassKey]]); a RAW query is its own class. */
+  private def sharedClasses(rqs: Seq[RQ]): (Seq[RQ], Map[String, Int]) =
+    classesBy(rqs)(rq => sharedClassKey(rq).getOrElse(rq))
 
   /** One shared ungrouped pass (predicate CSE + spec-class CSE): queries
     * sharing a filter evaluate it ONCE per record, and queries with an
-    * IDENTICAL spec class compute ONE set of partial aggregate columns
-    * ([[sharedReps]] fan-out at merge time). A 1000-query workload with 7
-    * distinct filters and ~40 distinct spec classes evaluates 7
-    * predicates and ~40 aggregate-column sets per record, not 1000.
+    * IDENTICAL spec class share ONE entry of the job's one
+    * [[MultiQueryPartial]] ([[sharedClasses]] fan-out at merge time). A
+    * 1000-query workload with 7 distinct filters and ~40 distinct spec
+    * classes evaluates 7 predicates and ~40 entries per record, not 1000,
+    * and plans one aggregate column whatever the class count.
     * GROUP BY queries contribute only their matched-record count here
     * (their grouped state rides the grouped jobs): the count must be
     * computed UNGROUPED — summing over the kept top-`entries` groups
     * would undercount once the key space exceeds the cap, starving
     * RECORD windows and the records_seen metric. */
   private def collectShared(simple: Seq[RQ], df: DataFrame): Option[Seq[() => Unit]] = {
-    val schema = df.schema
-    val distinctFilters = simple.flatMap(_.spec.filter).distinct
-    val predIdx = distinctFilters.zipWithIndex.toMap
-    val predCols = distinctFilters.zipWithIndex.map { case (f, i) =>
-      ExprCompiler.compile(f, Some(schema)).as(s"__pred$i")
-    }
-    val withPreds =
-      if (predCols.isEmpty) df
-      else df.select(col("*") +: predCols: _*)
-    def gate(rq: RQ): Column = rq.spec.filter match {
-      case Some(f) => col(s"__pred${predIdx(f)}")
-      case None    => lit(true)
-    }
-    val reps = sharedReps(simple)
-    val cols = simple.filter(rq => reps(rq.spec.id) == rq.spec.id)
-      .flatMap(rq => partialColumns(rq, schema, gate(rq)))
-    val row = withPreds.agg(cols.head, cols.tail: _*).collect()(0)
-    Some(simple.map(rq => () => mergePartial(rq, row, reps(rq.spec.id))))
+    val (classes, classOf) = sharedClasses(simple)
+    val job = new JobAggregate(df, classes, gated = true, groupOps = false)
+    val out = job.frame(df, Nil).agg(job.column)
+    val parts = MultiQueryPartial.in(out).decode(out.collect()(0).getAs[Array[Byte]](0))
+    Some(simple.map(rq => () => mergePartial(rq, parts(classOf(rq.spec.id)))))
   }
 
   /** Normalize a partition value for driver-side matching between the
@@ -708,28 +696,21 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
   }
 
   /** The distinct (aggregation, projection) signatures of a fused
-    * equality or range job: each signature's partial columns are computed
-    * once, under `<prefix><i>`. Returns every member's column prefix and
-    * the columns. */
-  private def sigColumns(rqs: Seq[RQ], schema: StructType, prefix: String)
-      : (Map[String, String], Seq[Column]) = {
-    val sigs = rqs.groupBy(rq => (rq.spec.aggregation, rq.spec.projection))
-      .values.toSeq.zipWithIndex.map { case (sigRqs, i) => (sigRqs, s"$prefix$i") }
-    (sigs.flatMap { case (sigRqs, id) => sigRqs.map(_.spec.id -> id) }.toMap,
-      sigs.flatMap { case (sigRqs, id) => partialColumns(sigRqs.head, schema, lit(true), id) })
-  }
+    * equality or range job: one ungated [[MultiQueryPartial]] entry each. */
+  private def signatures(rqs: Seq[RQ]): (Seq[RQ], Map[String, Int]) =
+    classesBy(rqs)(rq => (rq.spec.aggregation, rq.spec.projection))
 
   /**
    * One job for ALL equality-partitioned queries on `field`: filter to the
    * watched values (InSet — one hash probe per record), groupBy(field), and
    * compute each distinct (aggregation, projection) signature's partial
-   * columns ONCE. Each query then reads the value-group row of the value
-   * it watches. 1000 COUNT queries on 1000 user ids cost one hash-shuffled
-   * count job, not 1000 predicate evaluations per record.
+   * ONCE, as one entry of the job's [[MultiQueryPartial]]. Each query then
+   * reads the value-group row of the value it watches. 1000 COUNT queries
+   * on 1000 user ids cost one hash-shuffled count job, not 1000 predicate
+   * evaluations per record.
    */
   private def collectEqPartitioned(fields: Seq[String])(rqs: Seq[RQ],
       df: DataFrame): Option[Seq[() => Unit]] = {
-    val schema = df.schema
     // Per-field isin over each field's distinct literals keeps the scan
     // filter a conjunction of in-lists the source can push down; for
     // multi-field groups an exact tuple membership test is conjoined on
@@ -746,16 +727,18 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
         .reduce(_ || _)
       perField && tupleCond
     }
-    val (sigOf, sigCols) = sigColumns(rqs, schema, "__sig")
-    val rows = df.filter(filterCond)
+    val (sigs, sigOf) = signatures(rqs)
+    val job = new JobAggregate(df, sigs, gated = false, groupOps = false)
+    val out = job.frame(df.filter(filterCond), fields.map(col))
       .groupBy(fields.map(col): _*)
-      .agg(sigCols.head, sigCols.tail: _*)
-      .collect()
-    val byValue = rows.map(r => fields.map(f => normValue(r.getAs[Any](f))) -> r).toMap
+      .agg(job.column)
+    val fn = MultiQueryPartial.in(out)
+    val byValue = out.collect().map(r => (fields.indices.map(i => normValue(r.get(i))): Seq[Any]) ->
+      fn.decode(r.getAs[Array[Byte]](fields.size))).toMap
     Some(rqs.map { rq =>
       byValue.get(rq.eqKeys.get.map(kv => normValue(kv._2))) match {
-        case Some(row) => () => mergePartial(rq, row, sigOf(rq.spec.id))
-        case None      => () => rq.batchesSeen += 1 // no matching records this batch
+        case Some(parts) => () => mergePartial(rq, parts(sigOf(rq.spec.id)))
+        case None        => () => rq.batchesSeen += 1 // no matching records this batch
       }
     })
   }
@@ -877,73 +860,53 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
       else if (dirSet.subsetOf(Set(BinOp.LESS_THAN, BinOp.LESS_OR_EQUALS)))
         pre0 && col(field) <= lit(lits.maxBy(_.asInstanceOf[Number].doubleValue))
       else pre0
-    val (sigOf, sigCols) = sigColumns(rqs, schema, "__rsig")
-    val rows = df.filter(pre)
-      .groupBy(bucketCol.as("__rbucket"))
-      .agg(sigCols.head, sigCols.tail: _*)
-      .collect()
-    if (rows.isEmpty) return Some(rqs.map(rq => () => rq.batchesSeen += 1))
-    val sorted = rows.sortBy(_.getAs[Int]("__rbucket"))
-    val idxs = sorted.map(_.getAs[Int]("__rbucket"))
-    val rowSchema = sorted.head.schema
-    // MetricsAcc's null-safe, Long-preserving combines: folded partials
-    // merge into query state exactly as per-bucket mergePartial calls
-    // would, without m extra batch counts
-    val add = MetricsAcc.combine(GroupOpType.SUM)
-    val combine: Map[String, (Any, Any) => Any] =
-      rqs.distinctBy(rq => sigOf(rq.spec.id)).flatMap { rq =>
-        val id = sigOf(rq.spec.id)
-        val ops = rq.spec.aggregation.asInstanceOf[GroupAll].ops
-        (n(id) -> add) +: ops.zipWithIndex.flatMap { case (op, j) =>
-          (m(id, j) -> MetricsAcc.combine(op.op)) +:
-            (if (op.op == GroupOpType.AVG) Seq(c(id, j) -> add) else Nil)
-        }
-      }.toMap
-    val fieldCombine: Array[Option[(Any, Any) => Any]] =
-      rowSchema.fieldNames.map(combine.get)
-    def foldInto(r: Row, acc: Array[Any]): Unit = {
-      var k = 0
-      while (k < acc.length) {
-        fieldCombine(k) match {
-          case Some(f) => acc(k) = f(r.get(k), acc(k))
-          case None    => ()
-        }
-        k += 1
-      }
-    }
-    import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+    val (sigs, sigOf) = signatures(rqs)
+    val job = new JobAggregate(df, sigs, gated = false, groupOps = false)
+    val out = job.frame(df.filter(pre), Seq(bucketCol.as("__rbucket")))
+      .groupBy(col("__rbucket"))
+      .agg(job.column)
+    val fn = MultiQueryPartial.in(out)
+    val sorted = out.collect().sortBy(_.getInt(0))
+    if (sorted.isEmpty) return Some(rqs.map(rq => () => rq.batchesSeen += 1))
+    val idxs = sorted.map(_.getInt(0))
     val nR = sorted.length
-    val suffix = new Array[Row](nR)
-    var acc = new Array[Any](rowSchema.length)
-    var k = nR - 1
-    while (k >= 0) {
-      acc = acc.clone(); foldInto(sorted(k), acc)
-      suffix(k) = new GenericRowWithSchema(acc, rowSchema)
-      k -= 1
-    }
-    val prefix = new Array[Row](nR)
-    acc = new Array[Any](rowSchema.length)
-    k = 0
-    while (k < nR) {
-      acc = acc.clone(); foldInto(sorted(k), acc)
-      prefix(k) = new GenericRowWithSchema(acc, rowSchema)
-      k += 1
-    }
-    Some(rqs.map { rq =>
+    // each query reads one fold: the suffix from the first bucket >= its
+    // bound, or the prefix up to the last bucket <= it (bucket keys are
+    // distinct and sorted: binarySearch gives the exact hit or the
+    // insertion point directly); None when no bucket qualifies
+    val reads = rqs.map { rq =>
       val (isSuffix, bound) = lookups(rq.spec.id)
-      // bucket keys are distinct and sorted: binarySearch gives the
-      // exact hit or the insertion point directly
       val hit = java.util.Arrays.binarySearch(idxs, bound)
-      val pos =
-        if (isSuffix) { if (hit >= 0) hit else -(hit + 1) } // first >= bound
-        else { if (hit >= 0) hit else -(hit + 1) - 1 }      // last <= bound
-      val rowOpt =
-        if (isSuffix) { if (pos < nR) Some(suffix(pos)) else None }
-        else { if (pos >= 0) Some(prefix(pos)) else None }
-      rowOpt match {
-        case Some(r) => () => mergePartial(rq, r, sigOf(rq.spec.id))
-        case None    => () => rq.batchesSeen += 1 // no qualifying buckets this batch
+      if (isSuffix) {
+        val first = if (hit >= 0) hit else -(hit + 1) // first >= bound
+        Option.when(first < nR)((true, first))
+      } else {
+        val last = if (hit >= 0) hit else -(hit + 1) - 1 // last <= bound
+        Option.when(last >= 0)((false, last))
       }
+    }
+    // Each bucket's buffer folds into its neighbour's with the aggregate's
+    // own merge, so a fold merges into query state exactly as per-bucket
+    // merges would, without m extra batch counts. Folds run only as far as
+    // some query reads: a fold that throws (a long SUM overflowing under
+    // ANSI) then lies in a reader's own range, and the per-query re-collect
+    // FAILs that query alone.
+    def bucket(k: Int) = fn.deserialize(sorted(k).getAs[Array[Byte]](1))
+    val wanted = reads.flatten.toSet
+    val folds = mutable.HashMap.empty[(Boolean, Int), IndexedSeq[MultiQueryPartial.Partial]]
+    def fold(suffix: Boolean, to: Int): Unit = {
+      val steps = if (suffix) nR - 1 to to by -1 else 0 to to
+      var acc = bucket(steps.head)
+      steps.foreach { k =>
+        if (k != steps.head) acc = fn.merge(bucket(k), acc)
+        if (wanted((suffix, k))) folds((suffix, k)) = fn.partials(acc)
+      }
+    }
+    wanted.filter(_._1).map(_._2).minOption.foreach(fold(suffix = true, _))
+    wanted.filterNot(_._1).map(_._2).maxOption.foreach(fold(suffix = false, _))
+    Some(rqs.zip(reads).map {
+      case (rq, Some(read)) => () => mergePartial(rq, folds(read)(sigOf(rq.spec.id)))
+      case (rq, None)       => () => rq.batchesSeen += 1 // no qualifying buckets this batch
     })
   }
 
@@ -1023,9 +986,6 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
   // Shared-pass plan construction (FilterBolt partials)
   // -------------------------------------------------------------------------
 
-  private def pred(rq: RQ, schema: StructType): Column =
-    rq.spec.filter.map(f => ExprCompiler.compile(f, Some(schema))).getOrElse(lit(true))
-
   /** Field reference as the aggregation sees it: through the projection when
     * one exists (filter→project→aggregate order), else the raw column. */
   private def fieldCol(rq: RQ, name: String, schema: StructType): Column =
@@ -1038,78 +998,107 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
       case None => ExprCompiler.compile(Field(name), Some(schema))
     }
 
-  private def n(id: String) = s"${id}__n"
-  private def p(id: String) = s"${id}__p"
-  private def m(id: String, i: Int) = s"${id}__m$i"
-  private def c(id: String, i: Int) = s"${id}__c$i"
-
-  /** Per-op aggregate columns (shared by GROUP all and GROUP BY jobs). */
-  private def opColumns(id: String, ops: Seq[GroupOp], gate: Column,
-                        field: String => Column): Seq[Column] =
-    ops.zipWithIndex.flatMap { case (op, i) =>
-      import GroupOpType._
-      op.op match {
-        case COUNT =>
-          Seq(sum(when(gate, lit(1L))).as(m(id, i)))
-        case COUNT_FIELD =>
-          Seq(count(when(gate, field(op.field.get))).as(m(id, i)))
-        case SUM | MIN | MAX =>
-          val f = when(gate, field(op.field.get))
-          val agg = op.op match {
-            case SUM => sum(f); case MIN => min(f); case MAX => max(f)
-            case _ => throw new IllegalStateException
-          }
-          Seq(agg.as(m(id, i)))
-        case AVG =>
-          val f = when(gate, field(op.field.get))
-          Seq(sum(f).as(m(id, i)), count(f).as(c(id, i)))
-      }
+  /** One job's [[MultiQueryPartial]]: one entry per class, in order, over
+    * the classes' distinct gates (their filters when `gated`; the equality
+    * and range jobs select rows by grouping instead) and distinct inputs.
+    * With `groupOps` a GROUP BY class carries its ops (the grouped job);
+    * without, only its matched count (the shared pass). */
+  private final class JobAggregate(df: DataFrame, classes: Seq[RQ], gated: Boolean,
+                                   groupOps: Boolean) {
+    import MultiQueryPartial._
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.graft.ColumnBridge.expression
+    private val schema = df.schema
+    private val gates = if (gated) classes.flatMap(_.spec.filter).distinct else Nil
+    private val gateIdx = gates.zipWithIndex.toMap
+    // distinct input columns, each with the gates of the classes reading
+    // it (−1: read on every row — also for a bare column, which costs
+    // nothing to read and cannot fail); the aggregate's input slots are
+    // one per (column, SUM/AVG coercion)
+    private val inputIdx = mutable.HashMap.empty[Expression, Int]
+    private val inputCols = mutable.ArrayBuffer.empty[Column]
+    private val inputGates = mutable.ArrayBuffer.empty[mutable.Set[Int]]
+    private val slots = mutable.LinkedHashMap.empty[(Int, Boolean), Int]
+    private def slot(c: Column, numeric: Boolean, gate: Int): Int = {
+      val e = expression(c)
+      val p = inputIdx.getOrElseUpdate(e, {
+        inputCols += c; inputGates += mutable.Set.empty[Int]; inputCols.size - 1
+      })
+      inputGates(p) += (if (e.isInstanceOf[UnresolvedAttribute]) -1 else gate)
+      slots.getOrElseUpdate((p, numeric), slots.size)
     }
 
-  /** Partial-aggregate columns for one query (or one shared signature when
-    * `key` overrides the per-query column prefix). */
-  private def partialColumns(rq: RQ, schema: StructType, g: Column,
-                             key: String = null): Seq[Column] = {
-    val id = if (key != null) key else rq.spec.id
-    val matched = sum(when(g, lit(1L))).as(n(id))
-    val fld: String => Column = f => fieldCol(rq, f, schema)
-    val aggCols: Seq[Column] = rq.spec.aggregation match {
-      case Raw(_) =>
-        val cap = rq.state.asInstanceOf[RawState].remaining
-        if (cap <= 0) Seq.empty // full buffer: stop to_json-ing matches
-        else {
-          val recordStruct = rq.spec.projection match {
+    private def entry(rq: RQ): Entry = {
+      val g = rq.spec.filter.flatMap(gateIdx.get).getOrElse(-1)
+      val fld: String => Column = f => fieldCol(rq, f, schema)
+      def metric(op: GroupOp): Metric = {
+        import GroupOpType._
+        def in(numeric: Boolean) = slot(fld(op.field.get), numeric, g)
+        op.op match {
+          case COUNT       => Metric(Op.Count, -1)
+          case COUNT_FIELD => Metric(Op.CountField, in(numeric = false))
+          case SUM         => Metric(Op.Sum, in(numeric = true))
+          case MIN         => Metric(Op.Min, in(numeric = false))
+          case MAX         => Metric(Op.Max, in(numeric = false))
+          case AVG         => Metric(Op.Avg, in(numeric = true))
+        }
+      }
+      def sketch(kind: SketchPartial.Kind[_ <: AnyRef], input: Column) =
+        Sketch(kind, slot(input, numeric = false, g))
+      Entry(g, rq.spec.aggregation match {
+        case GroupAll(ops)      => Metrics(ops.map(metric))
+        case GroupBy(_, ops, _) => Metrics(if (groupOps) ops.map(metric) else Nil)
+        case Raw(_) =>
+          val cap = rq.state.asInstanceOf[RawState].remaining
+          if (cap <= 0) Metrics(Nil) // full buffer: stop to_json-ing matches
+          else sketch(SketchPartial.Capped(cap), to_json(rq.spec.projection match {
             case Some(fields) => struct(fields.map { case (nm, e) =>
               ExprCompiler.compile(e, Some(schema)).as(nm) }: _*)
             case None => struct(schema.fieldNames.map(col).toIndexedSeq: _*)
-          }
-          Seq(SketchPartial.col(when(g, to_json(recordStruct)),
-            SketchPartial.Capped(cap)).as(p(id)))
-        }
-      case GroupAll(ops) =>
-        opColumns(id, ops, g, fld)
-      case CountDistinct(fields, _, lgK) =>
-        val key = QueryCompiler.compositeKeyOf(fields.map(fld))
-        Seq(SketchPartial.col(when(g, key), SketchPartial.Theta(lgK)).as(p(id)))
-      case d: Distribution =>
-        Seq(SketchPartial.col(when(g, fld(d.field).cast("double")),
-          SketchPartial.Kll(d.k)).as(p(id)))
-      case TopK(fields, _, _, _, maxMapSize) =>
-        val key = QueryCompiler.compositeKeyOf(fields.map(f => fld(f._1)))
-        Seq(SketchPartial.col(when(g, key), SketchPartial.FreqItems(maxMapSize)).as(p(id)))
-      case _: GroupBy => Seq.empty // handled by collectGrouped/applyGrouped
+          }))
+        case CountDistinct(fields, _, lgK) =>
+          sketch(SketchPartial.Theta(lgK), QueryCompiler.compositeKeyOf(fields.map(fld)))
+        case d: Distribution =>
+          sketch(SketchPartial.Kll(d.k), fld(d.field).cast("double"))
+        case TopK(fields, _, _, _, maxMapSize) =>
+          sketch(SketchPartial.FreqItems(maxMapSize),
+            QueryCompiler.compositeKeyOf(fields.map(f => fld(f._1))))
+      })
     }
-    matched +: aggCols
+    private val entries = classes.map(entry)
+
+    /** The job's one aggregate column. */
+    val column: Column = MultiQueryPartial.column(MultiQueryPartial(
+      gates.indices.map(i => expression(col(s"__pred$i"))) ++
+        slots.keys.map { case (p, _) => expression(col(s"__in$p")) },
+      gates.size, entries, df.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean))
+
+    /** `src` (rows of the batch) projected to `keys`, then the gates and
+      * the inputs. An input that only gated classes read is computed only
+      * on rows one of them admits, as `when(gate, f)` would; `anyGate`
+      * also drops the rows no class admits. */
+    def frame(src: DataFrame, keys: Seq[Column], anyGate: Boolean = false): DataFrame = {
+      val in = inputCols.indices.map(p => (p, inputCols(p)))
+      if (gates.isEmpty) src.select(keys ++ in.map { case (p, c) => c.as(s"__in$p") }: _*)
+      else {
+        val pred = gates.indices.map(i => col(s"__pred$i"))
+        val withPreds = src.select(col("*") +: gates.zipWithIndex.map { case (f, i) =>
+          ExprCompiler.compile(f, Some(schema)).as(s"__pred$i") }: _*)
+        val kept =
+          if (anyGate && classes.forall(_.spec.filter.isDefined)) withPreds.filter(pred.reduce(_ || _))
+          else withPreds
+        kept.select(keys ++ pred ++ in.map { case (p, c) =>
+          val gs = inputGates(p)
+          (if (gs.contains(-1)) c else when(gs.toSeq.sorted.map(pred).reduce(_ || _), c)).as(s"__in$p")
+        }: _*)
+      }
+    }
   }
 
   // -------------------------------------------------------------------------
   // Driver combine (JoinBolt)
   // -------------------------------------------------------------------------
-
-  private def longAt(row: Row, name: String): Long = {
-    val v = row.getAs[Any](name)
-    if (v == null) 0L else v.asInstanceOf[Number].longValue
-  }
 
   /** Per-query engine metrics (reference built-in metrics,
     * bullet_storm_defaults.yaml:31-37): matched records and batches seen,
@@ -1142,112 +1131,88 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     case _ => true
   }
 
-  /** Merge one partial row into `rq`'s state, reading the columns named
-    * under `id` (the query's own id, its class representative's, or its
-    * fused signature's). */
-  private def mergePartial(rq: RQ, row: Row, id: String): Unit = {
-    val matched = longAt(row, n(id))
-    rq.recordsSinceEmit += matched
-    rq.recordsSeen += matched
+  /** Merge one class partial (its own class's, its fused signature's, or a
+    * range fold's) into `rq`'s state. */
+  private def mergePartial(rq: RQ, p: MultiQueryPartial.Partial): Unit = {
+    rq.recordsSinceEmit += p.matched
+    rq.recordsSeen += p.matched
     rq.batchesSeen += 1
     rq.filterLatencyMsLast = (System.nanoTime() - batchStartNanos) / 1000000L
     rq.filterLatencyMsTotal += rq.filterLatencyMsLast
     if (!rq.includeOpen) return // include-first window already has its M
-    rq.spec.aggregation match {
-      case Raw(_) =>
-        if (row.schema.fieldNames.contains(p(id)))
-          rq.state.asInstanceOf[RawState].add(
-            row.getAs[scala.collection.Seq[String]](p(id)).toSeq)
-      case GroupAll(ops) =>
-        mergeOps(rq.state.asInstanceOf[GroupAllState].acc, ops, row, id, matched)
-      case _: CountDistinct =>
-        val buf = BufSerde.de[ThetaBuf](row.getAs[Array[Byte]](p(id)))
-        rq.state.asInstanceOf[CountDistinctState].buf.merge(buf)
-      case _: Distribution =>
-        val buf = BufSerde.de[KllBuf](row.getAs[Array[Byte]](p(id)))
-        rq.state.asInstanceOf[DistributionState].buf.merge(buf)
-      case _: TopK =>
-        val buf = BufSerde.de[FreqItemsBuf](row.getAs[Array[Byte]](p(id)))
-        rq.state.asInstanceOf[TopKState].buf.merge(buf)
-      case _: GroupBy => // not in the shared pass
+    rq.state match {
+      case s: RawState => p.sketch match {
+        case b: SketchPartial.CappedBuf => s.add(b.records)
+        case _ => // full buffer: no records were collected
+      }
+      case s: GroupAllState      => mergeOps(s.acc, p)
+      case s: CountDistinctState => s.buf.merge(p.sketch.asInstanceOf[ThetaBuf])
+      case s: DistributionState  => s.buf.merge(p.sketch.asInstanceOf[KllBuf])
+      case s: TopKState          => s.buf.merge(p.sketch.asInstanceOf[FreqItemsBuf])
+      case _: GroupByState       => // grouped state rides the grouped job
     }
   }
 
-  /** Fold one partial row's metric columns (named under `id`) into `acc`;
-    * `matched` is the row's matched-record count. */
-  private def mergeOps(acc: MetricsAcc, ops: Seq[GroupOp], row: Row, id: String,
-                       matched: Long): Unit =
-    ops.zipWithIndex.foreach { case (op, i) =>
-      import GroupOpType._
-      op.op match {
-        case COUNT | COUNT_FIELD => acc.update(i, longAt(row, m(id, i)), null)
-        case AVG                 => acc.update(i, longAt(row, c(id, i)), row.getAs[Any](m(id, i)))
-        case _                   => acc.update(i, matched, row.getAs[Any](m(id, i)))
-      }
-    }
+  /** Fold one partial's metric values into `acc`, op by op. */
+  private def mergeOps(acc: MetricsAcc, p: MultiQueryPartial.Partial): Unit =
+    p.values.indices.foreach(i => acc.update(i, p.counts(i), p.values(i)))
 
   /** One grouped job per GROUP BY signature (same key fields and
-    * projection — callers group by that); every fused query's metric
-    * aggregators ride a single groupBy over the shared cached batch,
-    * gated by the query's OWN filter, with a per-query matched count
-    * deciding which groups exist for which query. Duplicate (filter,
-    * projection, aggregation) queries share one gate and one aggregate-
-    * column set ([[sharedReps]] classes). Batch-local groups cap at the
-    * sum of the classes' entries budgets in key order. */
+    * projection — callers group by that); every fused class is one entry
+    * of one [[MultiQueryPartial]] under a single groupBy over the shared
+    * cached batch, gated by the class's OWN filter, whose matched count
+    * decides which groups exist for which query. Duplicate (filter,
+    * projection, aggregation) queries share one class ([[sharedClasses]]).
+    * Batch-local groups cap at the sum of the classes' entries budgets in
+    * key order. */
   private def collectGrouped(rqs: Seq[RQ], df: DataFrame): Option[Seq[() => Unit]] = {
     val head = rqs.head
     val spec0 = head.spec.aggregation.asInstanceOf[GroupBy]
-    val schema = df.schema
-    val fld: String => Column = f => fieldCol(head, f, schema)
+    val aliases = spec0.fields.map(_._2)
     val keyCols = spec0.fields.map { case (f, alias) =>
-      coalesce(fld(f).cast("string"), lit(SketchAggregators.NullString)).as(alias)
+      coalesce(fieldCol(head, f, df.schema).cast("string"),
+        lit(SketchAggregators.NullString)).as(alias)
     }
-    val reps = sharedReps(rqs)
-    val repRqs = rqs.filter(rq => reps(rq.spec.id) == rq.spec.id)
-    val gates = repRqs.map(rq => rq.spec.id -> pred(rq, schema)).toMap
-    // rows matching NO fused query never enter the shuffle; with one
-    // query this is exactly the old pre-filter
-    val filtered = df.filter(repRqs.map(rq => gates(rq.spec.id)).reduce(_ || _))
-    val aggCols = repRqs.flatMap { rq =>
-      val gate = gates(rq.spec.id)
-      opColumns(rq.spec.id, rq.spec.aggregation.asInstanceOf[GroupBy].ops, gate, fld) :+
-        sum(when(gate, lit(1L))).as(n(rq.spec.id))
-    }
+    val (classes, classOf) = sharedClasses(rqs)
+    val job = new JobAggregate(df, classes, gated = true, groupOps = true)
     val entriesCap = QueryRunner.fusedEntriesCap(
-      repRqs.map(_.spec.aggregation.asInstanceOf[GroupBy].entries))
-    val rows = filtered
-      .groupBy(keyCols: _*)
-      .agg(aggCols.head, aggCols.tail: _*)
-      .orderBy(spec0.fields.map { case (_, alias) => col(alias) }: _*)
-      .limit(entriesCap)
-      .collect()
+      classes.map(_.spec.aggregation.asInstanceOf[GroupBy].entries))
+    // rows matching NO fused class never enter the shuffle; with one
+    // query this is exactly the old pre-filter
+    val out = job.frame(df, keyCols, anyGate = true)
+      .groupBy(aliases.map(col): _*)
+      .agg(job.column)
+    val fn = MultiQueryPartial.in(out)
+    val rows = out.orderBy(aliases.map(col): _*).limit(entriesCap).collect()
     // Union cap hit with multiple classes: the kept smallest-keys union
     // can CROWD OUT one query's groups with another's (a query under its
     // own entries cap could lose groups it would have kept from its own
     // job). Rare — the over-cap regime — so the rows are untrusted and
     // each query re-collects alone, with its own filter and entries budget.
-    if (repRqs.size > 1 && rows.length >= entriesCap) None
-    else Some(rqs.map(rq => () => applyGrouped(rq, rows, reps(rq.spec.id))))
+    if (classes.size > 1 && rows.length >= entriesCap) None
+    else {
+      val groups = rows.map(r => (aliases.indices.map(r.getString), fn.decode(r.getAs[Array[Byte]](aliases.size))))
+      Some(rqs.map(rq => () => applyGrouped(rq, groups, classOf(rq.spec.id))))
+    }
   }
 
-  /** Merge a grouped job's rows into `rq`'s groups, reading the columns
-    * named under `id` (its class representative's). */
-  private def applyGrouped(rq: RQ, rows: Array[Row], id: String): Unit = {
+  /** Merge a grouped job's decoded groups into `rq`'s groups, reading
+    * entry `cls` (its class's). */
+  private def applyGrouped(rq: RQ, groups: Seq[(Seq[String], IndexedSeq[MultiQueryPartial.Partial])],
+                           cls: Int): Unit = {
     // matched-record counters (recordsSinceEmit/recordsSeen/batchesSeen) are
     // NOT derived from these capped rows — they ride the ungrouped shared
     // pass (mergePartial), so they stay exact when distinct groups exceed
     // the entries cap.
-    val spec = rq.spec.aggregation.asInstanceOf[GroupBy]
     val st = rq.state.asInstanceOf[GroupByState]
     // same per-batch include gate as mergePartial — evaluated once at
     // batch start, so counter updates in the shared pass can't close
     // the gate mid-batch for the grouped job
-    if (rq.includeOpen) rows.foreach { row =>
+    if (rq.includeOpen) groups.foreach { case (key, parts) =>
       // a group whose rows all failed THIS query's gate does not exist
       // for it — creating it would emit a spurious zero-count group
-      val matched = longAt(row, n(id))
-      if (matched > 0L)
-        mergeOps(st.accFor(spec.fields.indices.map(row.getString)), spec.ops, row, id, matched)
+      val p = parts(cls)
+      if (p.matched > 0L) mergeOps(st.accFor(key), p)
     }
   }
 

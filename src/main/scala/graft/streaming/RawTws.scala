@@ -26,7 +26,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, StreamingQ
  *
  * PARITY by construction with the driver path: record rendering is the
  * SAME compiled projection + `to_json(struct(...))` the runner's shared
- * pass builds ([[QueryRunner]] `partialColumns`), and the per-query cap
+ * pass builds (the RAW input of [[QueryRunner]]'s `JobAggregate`), and the per-query cap
  * is the SAME [[AggState.rawCap]]. What differs is only WHICH arbitrary
  * subset of >cap matches survives — the reference contract never
  * specified that either. `QueryRunnerSpec` pins the two backends equal

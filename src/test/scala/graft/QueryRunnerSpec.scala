@@ -125,10 +125,58 @@ class QueryRunnerSpec extends SparkTestBase {
     val exprs = scala.collection.mutable.ArrayBuffer.empty[
       org.apache.spark.sql.catalyst.expressions.Expression]
     plans.asScala.foreach(_.foreach(_.expressions.foreach(_.foreach(exprs += _))))
-    assert(exprs.exists(_.isInstanceOf[graft.agg.SketchPartial[_]]),
+    assert(exprs.exists(_.isInstanceOf[graft.agg.MultiQueryPartial]),
       "the listener captured no shared-pass plan")
     val udafs = exprs.collect { case a: ScalaAggregator[_, _, _] => a.nodeName }
     assert(udafs.isEmpty, s"processBatch ran udaf(Aggregator) columns: $udafs")
+  }
+
+  test("with all four job kinds, every Aggregate processBatch runs holds one MultiQueryPartial") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[LogicalPlan]())
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.analyzed)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        plans.add(qe.analyzed)
+    }
+    def cmp(f: String, v: Any, op: BinOp.Value) = Some(Binary(Field(f), Lit(v), op))
+    val ops = Seq(GroupOp(GroupOpType.COUNT, None, "cnt"), GroupOp(GroupOpType.SUM, Some("value"), "sv"),
+      GroupOp(GroupOpType.MIN, Some("value"), "mn"), GroupOp(GroupOpType.AVG, Some("value"), "av"))
+    val runner = new QueryRunner(spark, new ManualClock(0))
+    Seq(
+      clickCountSpec("shared"),
+      QuerySpec("cd", aggregation = CountDistinct(Seq("user"))),
+      QuerySpec("eq1", filter = cmp("user", "u1", BinOp.EQUALS), aggregation = GroupAll(ops)),
+      QuerySpec("eq2", filter = cmp("user", "u2", BinOp.EQUALS), aggregation = GroupAll(ops)),
+      QuerySpec("r1", filter = cmp("value", 40.0, BinOp.LESS_THAN), aggregation = GroupAll(ops)),
+      QuerySpec("r2", filter = cmp("value", 70.0, BinOp.GREATER_THAN), aggregation = GroupAll(ops)),
+      QuerySpec("g1", filter = cmp("etype", "click", BinOp.EQUALS),
+        aggregation = GroupBy(Seq("user" -> "u"), ops)),
+      QuerySpec("g2", aggregation = GroupBy(Seq("user" -> "u"), ops))
+    ).foreach(s => assert(runner.register(s).isEmpty))
+    spark.listenerManager.register(listener)
+    try {
+      runner.processBatch(events)
+      var prev = -1
+      var waited = 0
+      while (plans.size() != prev && waited < 10000) {
+        prev = plans.size(); Thread.sleep(200); waited += 200
+      }
+    } finally spark.listenerManager.unregister(listener)
+    assert(runner.lastBatchJobs.keySet === QueryRunner.JobKind.values.toSet,
+      s"jobs ${runner.lastBatchJobs}")
+    val aggregates = plans.asScala.toSeq.flatMap(_.collect { case a: Aggregate => a })
+    assert(aggregates.size >= 4, s"captured ${aggregates.size} aggregates")
+    aggregates.foreach { a =>
+      val fns = a.aggregateExpressions.flatMap(_.collect { case ae: AggregateExpression => ae.aggregateFunction })
+      assert(fns.size === 1 && fns.head.isInstanceOf[graft.agg.MultiQueryPartial],
+        s"an Aggregate ran ${fns.map(_.nodeName)}")
+    }
   }
 
   test("cross-batch partial merge equals single-batch result") {
@@ -1323,19 +1371,22 @@ class QueryRunnerSpec extends SparkTestBase {
       aggregation = GroupAll(ops), durationMs = 600000L)
     runner.register(ranged("r10", 10.0, cnt))
     runner.register(ranged("r50", 50.0, cnt))
-    // Spark takes a string MIN per bucket, but the driver's numeric
-    // prefix/suffix fold cannot combine two strings (50.0 is a data
-    // value, so even alone this query folds two buckets)
-    runner.register(ranged("rbad", 50.0, cnt, GroupOp(GroupOpType.MIN, Some("etype"), "me")))
+    // each bucket's long SUM fits, but the suffix fold rbad reads (all
+    // values > 10) overflows under ANSI, as the generic path's sum would
+    runner.register(ranged("rbad", 10.0, cnt, GroupOp(GroupOpType.SUM, Some("big"), "sb")))
+    // a string MIN folds across buckets like any other MIN
+    runner.register(ranged("rmin", 10.0, GroupOp(GroupOpType.MIN, Some("etype"), "me")))
     runner.register(QuerySpec("all", aggregation = GroupAll(Seq(cnt)), durationMs = 600000L))
-    runner.processBatch(events)
+    runner.processBatch(events.withColumn("big",
+      when(col("value") === 20.0 || col("value") === 70.0, lit(Long.MaxValue / 2 + 1))
+        .otherwise(lit(1L))))
     assert(runner.lastBatchJobs ===
       Map(QueryRunner.JobKind.Shared -> 1, QueryRunner.JobKind.Range -> 1))
     val failed = runner.results.filter(_.queryId == "rbad")
     assert(failed.size === 1 && failed.head.signal.contains("FAIL"))
     assert(failed.head.meta("errors").asInstanceOf[Seq[String]]
       .exists(_.contains("batch evaluation")))
-    assert(runner.activeQueryIds === Seq("r10", "r50", "all"))
+    assert(runner.activeQueryIds === Seq("r10", "r50", "rmin", "all"))
     val want = Map("r10" -> 90L, "r50" -> 50L, "all" -> 100L)
     want.foreach { case (id, n) =>
       val st = runner.queryStats(id).get
@@ -1344,6 +1395,7 @@ class QueryRunnerSpec extends SparkTestBase {
     clock.advance(700000)
     val byId = runner.onTick().map(c => c.queryId -> c).toMap
     want.foreach { case (id, n) => assert(parse(byId(id).records.head)("cnt") === n, id) }
+    assert(parse(byId("rmin").records.head)("me") === "click")
   }
 
   test("cross-filter GROUP BY fusion: each query sees only ITS groups, values exact") {

@@ -52,6 +52,24 @@ class SketchMergeSpec extends SparkTestBase {
     assert(Math.round(merged.result.getEstimate) === 10L)
   }
 
+  test("all three buffers keep their parameter through ser -> de -> ser -> de") {
+    val theta = new ThetaBuf(12)
+    (0 until 50).foreach(i => theta.update(s"k$i"))
+    val theta2 = roundTrip(roundTrip(theta))
+    assert(theta2.lgK === 12)
+    assert(Math.round(theta2.result.getEstimate) === 50L)
+    val kll = new KllBuf(256)
+    (1 to 100).foreach(i => kll.update(i.toDouble))
+    val kll2 = roundTrip(roundTrip(kll))
+    assert(kll2.k === 256)
+    assert(kll2.result.getN === 100L)
+    val fi = new FreqItemsBuf(64)
+    Seq("a", "a", "b").foreach(fi.update)
+    val fi2 = roundTrip(roundTrip(fi))
+    assert(fi2.maxMapSize === 64)
+    assert(fi2.result.getEstimate("a") === 2L)
+  }
+
   // --- KLL (DISTRIBUTION) — mirrors JoinBoltTest.java:789-844.
   test("KllBuf: two partials merge; quantiles exact while n <= k") {
     val b1 = new KllBuf(1024)

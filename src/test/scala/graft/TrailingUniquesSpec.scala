@@ -88,6 +88,23 @@ class TrailingUniquesSpec extends SparkTestBase {
     }
   }
 
+  test("streaming twin survives a third micro-batch touching the same bucket") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val mem = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[TrailingUniques.Obs]
+    val sq = TrailingUniques.trailingUniquesStream(mem.toDS(), window = 1)
+      .writeStream.format("memory").queryName("tu_stream_three")
+      .outputMode("update").start()
+    try {
+      (1L to 3L).foreach { k =>
+        mem.addData(Seq(TrailingUniques.Obs(k, 0L))); sq.processAllAvailable()
+      }
+    } finally sq.stop()
+    assert(sq.exception.isEmpty, sq.exception)
+    val counts = spark.table("tu_stream_three").select("nTrailing").as[Long].collect()
+    assert(counts.sorted.toSeq === Seq(1L, 2L, 3L))
+  }
+
   test("requireExact trips when a merged window leaves the exact regime") {
     // lgK = 4 -> nominal 16 entries; 200 uniques in one window blows it
     val df = (1L to 200L).map(k => (k, 1L)).toDF("user_id", "ts")
