@@ -2,9 +2,10 @@ package graft.agg
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.{TypeCheckResult, TypeCoercion}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{TypeCheckFailure, TypeCheckSuccess}
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GenericInternalRow, ImplicitCastInputTypes, InterpretedUnsafeProjection, Literal, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, GenericInternalRow, ImplicitCastInputTypes, InterpretedUnsafeProjection, Literal, UnaryExpression, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Sum, TypedImperativeAggregate}
 import org.apache.spark.sql.catalyst.util.{MathUtils, TypeUtils}
 import org.apache.spark.sql.graft.SumBridge
@@ -22,10 +23,15 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
  * value is the serialized buffer (BINARY); the driver reads it back with
  * [[decode]] into one [[MultiQueryPartial.Partial]] per entry.
  *
- * Children are the job's distinct gates, then its distinct inputs. An
- * update reads each gate once per row and an input only when a class that
- * needs it passed its gate. So planning, code generation and the result
- * row grow with distinct gates plus inputs, not with classes × ops.
+ * Children are the job's distinct gates, then its distinct inputs, as the
+ * queries' own expressions, unprojected. An update reads each gate once
+ * per row and an input only when a class that needs it passed its gate,
+ * so an input that can fail (an ANSI division by zero) is computed only
+ * on rows a reading class admits. The aggregate is never code-generated
+ * (`ObjectHashAggregateExec` interprets it), so no query's literal
+ * reaches generated code and a changed query set compiles nothing; its
+ * children must be deterministic, as none is initialized per partition.
+ * Planning and the result row grow with distinct gates plus inputs.
  *
  * The metric values are exactly those of Spark's `sum(when(g, f))`,
  * `min`, `max`, `count` and `sum(when(g, 1L))`, in value and Java class:
@@ -33,8 +39,8 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
  * with `addExact` under ANSI, Double, or decimal at `Sum`'s result
  * precision with its overflow rule); MIN/MAX compare with Spark's
  * physical ordering (NaN largest, −0.0 = 0.0) and keep the first of equal
- * values; [[decode]] uses Catalyst's own to-Scala converter. An input type
- * outside these fails the type check.
+ * values; [[Acc.value]] uses Catalyst's own to-Scala converter. An input
+ * type outside these fails the type check.
  */
 case class MultiQueryPartial(
     children: Seq[Expression],
@@ -45,6 +51,7 @@ case class MultiQueryPartial(
     inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[Array[MultiQueryPartial.State]] with ImplicitCastInputTypes {
   import MultiQueryPartial._
+  require(children.forall(_.deterministic), s"$prettyName needs deterministic children")
 
   private def inputType(j: Int): DataType = children(numGates + j).dataType
 
@@ -103,18 +110,10 @@ case class MultiQueryPartial(
   private def accMaker(m: Metric): () => Acc = m.op match {
     case Op.Count      => null
     case Op.CountField => () => new CountAcc
-    case Op.Sum | Op.Avg => sumType(inputType(m.input)) match {
-      case LongType       => () => new LongSum(ansi)
-      case DoubleType     => () => new DoubleSum
-      case d: DecimalType => () => new DecimalSum(d, ansi)
-      case t => throw new IllegalStateException(s"no SUM over $t")
-    }
-    case Op.Min | Op.Max =>
-      val dt = inputType(m.input)
-      val io = new ValueIO(dt)
-      val ord = TypeUtils.getInterpretedOrdering(dt)
-      val min = m.op == Op.Min
-      () => new Extreme(dt, ord, min, io)
+    case Op.Sum | Op.Avg =>
+      val dt = sumType(inputType(m.input))
+      () => sumAcc(dt, ansi)
+    case Op.Min | Op.Max => extreme(inputType(m.input), m.op == Op.Min)
   }
 
   // ---- per-row scratch: gate results, and inputs loaded for this row
@@ -193,10 +192,7 @@ case class MultiQueryPartial(
   /** The serialized buffer. A decimal SUM that overflowed raises here
     * under ANSI, as `Sum`'s final evaluation does. */
   override def eval(buf: Array[State]): Any = {
-    buf.foreach(st => if (st.accs != null) st.accs.foreach {
-      case d: DecimalSum => d.result
-      case _             =>
-    })
+    buf.foreach(st => if (st.accs != null) st.accs.foreach(a => if (a != null) a.check()))
     serialize(buf)
   }
 
@@ -240,26 +236,9 @@ case class MultiQueryPartial(
   /** This aggregate's value as one [[Partial]] per entry. */
   def decode(bytes: Array[Byte]): IndexedSeq[Partial] = partials(deserialize(bytes))
 
-  /** A buffer as one [[Partial]] per entry, metric values converted to
-    * Scala as Spark's own columns would be. */
-  def partials(buf: Array[State]): IndexedSeq[Partial] = buf.indices.map { e =>
-    val st = buf(e)
-    entries(e).part match {
-      case _: Sketch => Partial(st.matched, IndexedSeq.empty, IndexedSeq.empty, st.sketch)
-      case Metrics(ms) =>
-        val matched: Any = if (st.matched == 0L) null else st.matched
-        Partial(st.matched,
-          ms.indices.map(i => st.accs(i) match {
-            case null => matched
-            case a    => CatalystTypeConverters.convertToScala(a.result, a.dataType)
-          }),
-          ms.indices.map(i => ms(i).op match {
-            case Op.CountField | Op.Avg => st.accs(i).n
-            case _                      => st.matched
-          }),
-          null)
-    }
-  }
+  /** A buffer as one [[Partial]] per entry. */
+  def partials(buf: Array[State]): IndexedSeq[Partial] = buf.toIndexedSeq.map(st =>
+    Partial(st.matched, Option(st.accs).fold(IndexedSeq.empty[Acc])(_.toIndexedSeq), st.sketch))
 
   override def withNewMutableAggBufferOffset(n: Int): MultiQueryPartial =
     copy(mutableAggBufferOffset = n)
@@ -287,14 +266,12 @@ object MultiQueryPartial {
   /** One query class: gate child `gate` (−1: every row) and its part. */
   final case class Entry(gate: Int, part: Part)
 
-  /** One entry's per-batch partial. For metric ops, `values(i)` is op i's
-    * value as Spark's column gives it (COUNT: `sum(when(g, 1L))`; AVG: the
-    * sum), and `counts(i)` the records behind it: the matched count, or
-    * the non-null inputs for COUNT_FIELD and AVG. A sketch entry has the
-    * buffer instead ([[ThetaBuf]], [[KllBuf]], [[FreqItemsBuf]] or
-    * [[SketchPartial.CappedBuf]]). */
-  final case class Partial(matched: Long, values: IndexedSeq[Any], counts: IndexedSeq[Long],
-                           sketch: AnyRef)
+  /** One entry's per-batch partial: its matched count (COUNT's value is
+    * `sum(when(g, 1L))`: null when 0), and per metric op its accumulator
+    * (null for COUNT), or instead the sketch buffer ([[ThetaBuf]],
+    * [[KllBuf]], [[FreqItemsBuf]] or [[SketchPartial.CappedBuf]]). Read
+    * only: [[combine]] folds accumulators into fresh ones. */
+  final case class Partial(matched: Long, accs: IndexedSeq[Acc], sketch: AnyRef)
 
   /** One entry's running state: metric accumulators, or a sketch buffer. */
   final class State(val accs: Array[Acc], var sketch: AnyRef) {
@@ -312,8 +289,59 @@ object MultiQueryPartial {
       case m: MultiQueryPartial => m
     })).head
 
+  /** `child`, evaluated by interpretation: generated code around it holds
+    * a reference to this node, not the text of `child` (its literals). */
+  final case class Interpreted(child: Expression) extends UnaryExpression with CodegenFallback {
+    override def dataType: DataType = child.dataType
+    override def eval(input: InternalRow): Any = child.eval(input)
+    override protected def withNewChildInternal(c: Expression): Interpreted = copy(child = c)
+  }
+
   /** `Sum`'s own result type. */
   private def sumType(dt: DataType): DataType = Sum(Literal.create(null, dt)).dataType
+
+  /** A SUM accumulator at `Sum`'s result type `dt`. */
+  private def sumAcc(dt: DataType, ansi: Boolean): Acc = dt match {
+    case LongType       => new LongSum(ansi)
+    case DoubleType     => new DoubleSum
+    case d: DecimalType => new DecimalSum(d, ansi)
+    case t => throw new IllegalStateException(s"no SUM over $t")
+  }
+
+  /** MIN (or MAX) accumulators over `dt`, sharing one ordering and codec. */
+  private def extreme(dt: DataType, min: Boolean): () => Acc = {
+    val ord = TypeUtils.getInterpretedOrdering(dt)
+    val io = new ValueIO(dt)
+    () => new Extreme(dt, ord, min, io)
+  }
+
+  /** The state `a` (none yet: empty) and `b` folded into a fresh
+    * accumulator (neither changes), as one aggregate over both partials'
+    * rows: the runner's cross-batch combine. Partials of differing input
+    * types (a batch schema that changed) fold in their wider numeric type,
+    * cast as Spark casts; any other pair raises. A decimal SUM that
+    * overflowed raises here under ANSI. */
+  def combine(a: Option[Acc], b: Acc): Acc = {
+    val dt = a.fold(b.dataType)(x => (x.dataType, b.dataType) match {
+      case (x, y) if x == y => x
+      case (x: NumericType, y: NumericType) => TypeCoercion.findWiderTypeForTwo(x, y).get
+      case (x, y) => throw new IllegalArgumentException(
+        s"cannot combine a ${x.simpleString} partial with a ${y.simpleString} one")
+    })
+    val c = b.at(dt)
+    (a.toSeq :+ b).foreach(p => c.merge(if (p.dataType == dt) p else {
+      val q = p.at(dt)
+      if (p.n > 0) {
+        val v = Cast(Literal(p.result, p.dataType), q.dataType).eval()
+        require(v != null, s"cannot widen an overflowed ${p.dataType.simpleString} partial")
+        q.add(v)
+        q.n = p.n
+      }
+      q
+    }))
+    c.check()
+    c
+  }
 
   /** One op's running state over its `n` non-null inputs. */
   sealed abstract class Acc {
@@ -326,6 +354,12 @@ object MultiQueryPartial {
     def read(in: DataInputStream): Unit
     /** The Catalyst value, null when Spark's column would be null. */
     def result: Any
+    /** [[result]] as Spark's column gives it to Scala. */
+    def value: Any = CatalystTypeConverters.convertToScala(result, dataType)
+    /** A fresh accumulator of this kind over `dt` (a SUM's result type). */
+    def at(dt: DataType): Acc
+    /** Raises where [[result]] would: a decimal SUM that overflowed, under ANSI. */
+    def check(): Unit = ()
   }
 
   /** COUNT_FIELD: `count(f)`. */
@@ -336,6 +370,7 @@ object MultiQueryPartial {
     def write(out: DataOutputStream): Unit = out.writeLong(n)
     def read(in: DataInputStream): Unit = n = in.readLong()
     def result: Any = n
+    def at(dt: DataType): Acc = new CountAcc
   }
 
   /** SUM and AVG (whose count is `n`) over an integral input: `Sum`'s Long. */
@@ -352,6 +387,7 @@ object MultiQueryPartial {
     def write(out: DataOutputStream): Unit = { out.writeLong(n); out.writeLong(s) }
     def read(in: DataInputStream): Unit = { n = in.readLong(); s = in.readLong() }
     def result: Any = if (n == 0) null else s
+    def at(dt: DataType): Acc = sumAcc(dt, ansi)
   }
 
   /** Starts at 0.0 like `Sum` (`coalesce(sum, 0) + x`), so −0.0 alone sums to 0.0. */
@@ -367,11 +403,12 @@ object MultiQueryPartial {
     def write(out: DataOutputStream): Unit = { out.writeLong(n); out.writeDouble(s) }
     def read(in: DataInputStream): Unit = { n = in.readLong(); s = in.readDouble() }
     def result: Any = if (n == 0) null else s
+    def at(dt: DataType): Acc = new DoubleSum // the wider of a double and any number
   }
 
-  /** Decimal SUM at `Sum`'s result type `dt`: a partial that leaves `dt`
-    * overflows (as writing it to `Sum`'s buffer row does), and an
-    * overflow raises under ANSI or gives null. */
+  /** Decimal SUM at `Sum`'s result type `dt`: a partial or merge that
+    * leaves `dt` overflows (as writing it to `Sum`'s buffer row does), and
+    * an overflow raises under ANSI or gives null. */
   final class DecimalSum(dt: DecimalType, ansi: Boolean) extends Acc {
     var s: Decimal = null
     var overflow = false
@@ -385,6 +422,7 @@ object MultiQueryPartial {
       val b = o.asInstanceOf[DecimalSum]
       overflow ||= b.overflow
       if (b.s != null) s = if (s == null) b.s else s + b.s
+      if (s != null && SumBridge.fit(s, dt) == null) overflow = true
       n += b.n
     }
     def write(out: DataOutputStream): Unit = {
@@ -412,6 +450,8 @@ object MultiQueryPartial {
       if (overflow) s = null
     }
     def result: Any = if (n == 0) null else SumBridge.finish(if (overflow) null else s, dt, ansi)
+    override def check(): Unit = if (ansi && n > 0) SumBridge.finish(if (overflow) null else s, dt, ansi)
+    def at(d: DataType): Acc = sumAcc(d, ansi)
   }
 
   /** MIN or MAX: the first value no later value beats, as `Least`/`Greatest`. */
@@ -441,6 +481,7 @@ object MultiQueryPartial {
       v = if (in.readBoolean()) io.read(in) else null
     }
     def result: Any = v
+    def at(dt: DataType): Acc = extreme(dt, min)()
   }
 
   /** One Catalyst value of type `dt` as bytes, through a one-field UnsafeRow. */

@@ -36,54 +36,35 @@ final class RawState(cap: Int) extends AggState {
   def reset(): Unit = buf.clear()
 }
 
-/** GROUP metric accumulator: one slot per GroupOp. AVG carries (sum, count)
-  * and divides at finish. Integral sums stay Long; fractional go Double. */
+/** GROUP metric accumulator: per GroupOp, the batches' partial
+  * accumulators folded by [[MultiQueryPartial.combine]], so a value keeps
+  * the type, ordering and overflow rule of one Spark aggregate over every
+  * batch. COUNT is the matched count; AVG divides its sum at finish. */
 final class MetricsAcc(ops: Seq[GroupOp]) {
-  private val count = Array.fill[Long](ops.size)(0L)
-  private val acc = Array.fill[Any](ops.size)(null)
+  private var matched = 0L
+  private val acc = new Array[MultiQueryPartial.Acc](ops.size)
 
-  def update(i: Int, n: Long, value: Any): Unit = {
-    import GroupOpType._
-    count(i) += n
-    ops(i).op match {
-      case op @ (COUNT | COUNT_FIELD) => acc(i) = MetricsAcc.combine(op)(acc(i), n)
-      case op                         => if (value != null) acc(i) = MetricsAcc.combine(op)(acc(i), value)
+  /** Folds one batch's partial in; raises when a value cannot combine
+    * with the state's, which FAILs the query alone. */
+  def update(p: MultiQueryPartial.Partial): Unit = {
+    matched += p.matched
+    p.accs.indices.foreach { i =>
+      val a = p.accs(i)
+      if (a != null && a.n > 0)
+        acc(i) = MultiQueryPartial.combine(Option(acc(i)), a)
     }
   }
 
-  def merge(other: MetricsAcc): Unit = (0 until ops.size).foreach { i =>
-    count(i) += other.count(i)
-    acc(i) = MetricsAcc.combine(ops(i).op)(acc(i), other.acc(i))
-  }
-
-  def results: Seq[(String, Any)] = ops.zipWithIndex.map { case (op, i) =>
+  def results: Seq[(String, Any)] = ops.indices.map { i =>
     import GroupOpType._
-    val v = op.op match {
-      case COUNT | COUNT_FIELD => if (acc(i) == null) 0L else acc(i)
-      case AVG =>
-        if (acc(i) == null || count(i) == 0) null
-        else acc(i).asInstanceOf[Number].doubleValue / count(i)
-      case _ => acc(i)
-    }
-    op.name -> v
-  }
-}
-
-object MetricsAcc {
-  /** `op`'s null-safe combine of two partial values: Long operands stay
-    * Long, any other pair of numbers goes Double. */
-  private def combine(op: GroupOpType.Value): (Any, Any) => Any = op match {
-    case GroupOpType.MIN => num2(_, _, math.min, math.min)
-    case GroupOpType.MAX => num2(_, _, math.max, math.max)
-    case _               => num2(_, _, _ + _, _ + _)
-  }
-
-  private def num2(a: Any, b: Any, f: (Double, Double) => Double,
-                   g: (Long, Long) => Long): Any = (a, b) match {
-    case (null, x) => x
-    case (x, null) => x
-    case (x: Long, y: Long) => g(x, y)
-    case (x: Number, y: Number) => f(x.doubleValue, y.doubleValue)
+    val a = acc(i)
+    ops(i).name -> (ops(i).op match {
+      case COUNT          => matched
+      case COUNT_FIELD    => if (a == null) 0L else a.n
+      case _ if a == null => null
+      case AVG => a.value match { case s: Number => s.doubleValue / a.n; case _ => null }
+      case _   => a.value
+    })
   }
 }
 

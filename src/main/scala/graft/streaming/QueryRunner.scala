@@ -35,9 +35,13 @@ final class ManualClock(start: Long = 0L) extends Clock {
  *    records and metric accumulators), exactly the reference's `byte[]`
  *    DATA_STREAM tuples (FilterBolt.java:187-199). Spark's partial/final
  *    agg split runs inside the batch; the equality, range and GROUP BY
- *    jobs over the same (cached) batch each aggregate with one too.
+ *    jobs over the same (cached) batch each aggregate with one too. The
+ *    gates and inputs are the aggregate's own children, evaluated inside
+ *    it, not projected columns: no filter literal reaches generated code,
+ *    so a batch after a REGISTER or KILL compiles nothing new.
  *  - **Driver combine** (= JoinBolt): [[AggState]] merges per-batch partials
- *    across batches (`Querier.combine`, JoinBolt.java:154-155), owns window
+ *    across batches (`Querier.combine`, JoinBolt.java:154-155) with the
+ *    aggregate's own merge, so values keep Spark's types; owns window
  *    emission + reset (JoinBolt.java:252-259), duration expiry
  *    (JoinBolt.java:214-233), rate-limit kills (JoinBolt.java:199-208),
  *    duplicate suppression (FilterBolt.java:117-124), and error Clips
@@ -671,7 +675,8 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     * [[MultiQueryPartial]] ([[sharedClasses]] fan-out at merge time). A
     * 1000-query workload with 7 distinct filters and ~40 distinct spec
     * classes evaluates 7 predicates and ~40 entries per record, not 1000,
-    * and plans one aggregate column whatever the class count.
+    * and plans one aggregate column whatever the class count; the
+    * aggregate evaluates the filters itself, so none reaches generated code.
     * GROUP BY queries contribute only their matched-record count here
     * (their grouped state rides the grouped jobs): the count must be
     * computed UNGROUPED — summing over the kept top-`entries` groups
@@ -679,8 +684,7 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     * RECORD windows and the records_seen metric. */
   private def collectShared(simple: Seq[RQ], df: DataFrame): Option[Seq[() => Unit]] = {
     val (classes, classOf) = sharedClasses(simple)
-    val job = new JobAggregate(df, classes, gated = true, groupOps = false)
-    val out = job.frame(df, Nil).agg(job.column)
+    val out = new JobAggregate(df, classes, gated = true, groupOps = false).frame(df)
     val parts = MultiQueryPartial.in(out).decode(out.collect()(0).getAs[Array[Byte]](0))
     Some(simple.map(rq => () => mergePartial(rq, parts(classOf(rq.spec.id)))))
   }
@@ -728,10 +732,8 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
       perField && tupleCond
     }
     val (sigs, sigOf) = signatures(rqs)
-    val job = new JobAggregate(df, sigs, gated = false, groupOps = false)
-    val out = job.frame(df.filter(filterCond), fields.map(col))
-      .groupBy(fields.map(col): _*)
-      .agg(job.column)
+    val out = new JobAggregate(df, sigs, gated = false, groupOps = false)
+      .frame(df.filter(filterCond), fields.map(col): _*)
     val fn = MultiQueryPartial.in(out)
     val byValue = out.collect().map(r => (fields.indices.map(i => normValue(r.get(i))): Seq[Any]) ->
       fn.decode(r.getAs[Array[Byte]](fields.size))).toMap
@@ -861,10 +863,8 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
         pre0 && col(field) <= lit(lits.maxBy(_.asInstanceOf[Number].doubleValue))
       else pre0
     val (sigs, sigOf) = signatures(rqs)
-    val job = new JobAggregate(df, sigs, gated = false, groupOps = false)
-    val out = job.frame(df.filter(pre), Seq(bucketCol.as("__rbucket")))
-      .groupBy(col("__rbucket"))
-      .agg(job.column)
+    val out = new JobAggregate(df, sigs, gated = false, groupOps = false)
+      .frame(df.filter(pre), bucketCol.as("__rbucket"))
     val fn = MultiQueryPartial.in(out)
     val sorted = out.collect().sortBy(_.getInt(0))
     if (sorted.isEmpty) return Some(rqs.map(rq => () => rq.batchesSeen += 1))
@@ -1000,41 +1000,36 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
 
   /** One job's [[MultiQueryPartial]]: one entry per class, in order, over
     * the classes' distinct gates (their filters when `gated`; the equality
-    * and range jobs select rows by grouping instead) and distinct inputs.
-    * With `groupOps` a GROUP BY class carries its ops (the grouped job);
-    * without, only its matched count (the shared pass). */
+    * and range jobs select rows by grouping instead) and distinct inputs,
+    * its children as they compile, unprojected: the job's generated code
+    * does not depend on the query set. With `groupOps` a GROUP BY class
+    * carries its ops (the grouped job); without, only its matched count
+    * (the shared pass). */
   private final class JobAggregate(df: DataFrame, classes: Seq[RQ], gated: Boolean,
                                    groupOps: Boolean) {
     import MultiQueryPartial._
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions.Expression
-    import org.apache.spark.sql.graft.ColumnBridge.expression
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Or}
+    import org.apache.spark.sql.graft.ColumnBridge.{column => asColumn, expression}
     private val schema = df.schema
     private val gates = if (gated) classes.flatMap(_.spec.filter).distinct else Nil
     private val gateIdx = gates.zipWithIndex.toMap
-    // distinct input columns, each with the gates of the classes reading
-    // it (−1: read on every row — also for a bare column, which costs
-    // nothing to read and cannot fail); the aggregate's input slots are
-    // one per (column, SUM/AVG coercion)
-    private val inputIdx = mutable.HashMap.empty[Expression, Int]
-    private val inputCols = mutable.ArrayBuffer.empty[Column]
-    private val inputGates = mutable.ArrayBuffer.empty[mutable.Set[Int]]
-    private val slots = mutable.LinkedHashMap.empty[(Int, Boolean), Int]
-    private def slot(c: Column, numeric: Boolean, gate: Int): Int = {
-      val e = expression(c)
-      val p = inputIdx.getOrElseUpdate(e, {
-        inputCols += c; inputGates += mutable.Set.empty[Int]; inputCols.size - 1
-      })
-      inputGates(p) += (if (e.isInstanceOf[UnresolvedAttribute]) -1 else gate)
-      slots.getOrElseUpdate((p, numeric), slots.size)
-    }
+    private val gateExprs = gates.map(f => expression(ExprCompiler.compile(f, Some(schema))))
+    // input slots, one per (input, SUM/AVG coercion), keyed by the model
+    // expressions they compile from: compiled Columns never compare equal
+    private val slotOf = mutable.HashMap.empty[(Any, Boolean), Int]
+    private val inputs = mutable.ArrayBuffer.empty[Expression]
+    private def slot(key: Any, numeric: Boolean)(c: => Column): Int =
+      slotOf.getOrElseUpdate((key, numeric), { inputs += expression(c); inputs.size - 1 })
 
     private def entry(rq: RQ): Entry = {
       val g = rq.spec.filter.flatMap(gateIdx.get).getOrElse(-1)
       val fld: String => Column = f => fieldCol(rq, f, schema)
+      // what fld(f) compiles: the field, or its projected expression (None: absent)
+      def src(f: String): Option[Expr] =
+        rq.spec.projection.fold(Option[Expr](Field(f)))(_.find(_._1 == f).map(_._2))
       def metric(op: GroupOp): Metric = {
         import GroupOpType._
-        def in(numeric: Boolean) = slot(fld(op.field.get), numeric, g)
+        def in(numeric: Boolean) = slot(src(op.field.get), numeric)(fld(op.field.get))
         op.op match {
           case COUNT       => Metric(Op.Count, -1)
           case COUNT_FIELD => Metric(Op.CountField, in(numeric = false))
@@ -1044,56 +1039,41 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
           case AVG         => Metric(Op.Avg, in(numeric = true))
         }
       }
-      def sketch(kind: SketchPartial.Kind[_ <: AnyRef], input: Column) =
-        Sketch(kind, slot(input, numeric = false, g))
+      def compositeKey(fs: Seq[String]): Int =
+        slot(("key", fs.map(src)), numeric = false)(QueryCompiler.compositeKeyOf(fs.map(fld)))
       Entry(g, rq.spec.aggregation match {
         case GroupAll(ops)      => Metrics(ops.map(metric))
         case GroupBy(_, ops, _) => Metrics(if (groupOps) ops.map(metric) else Nil)
         case Raw(_) =>
           val cap = rq.state.asInstanceOf[RawState].remaining
           if (cap <= 0) Metrics(Nil) // full buffer: stop to_json-ing matches
-          else sketch(SketchPartial.Capped(cap), to_json(rq.spec.projection match {
-            case Some(fields) => struct(fields.map { case (nm, e) =>
-              ExprCompiler.compile(e, Some(schema)).as(nm) }: _*)
-            case None => struct(schema.fieldNames.map(col).toIndexedSeq: _*)
-          }))
-        case CountDistinct(fields, _, lgK) =>
-          sketch(SketchPartial.Theta(lgK), QueryCompiler.compositeKeyOf(fields.map(fld)))
-        case d: Distribution =>
-          sketch(SketchPartial.Kll(d.k), fld(d.field).cast("double"))
+          else Sketch(SketchPartial.Capped(cap), slot(("raw", rq.spec.projection), numeric = false)(
+            to_json(rq.spec.projection match {
+              case Some(fields) => struct(fields.map { case (nm, e) =>
+                ExprCompiler.compile(e, Some(schema)).as(nm) }: _*)
+              case None => struct(schema.fieldNames.map(col).toIndexedSeq: _*)
+            })))
+        case CountDistinct(fields, _, lgK) => Sketch(SketchPartial.Theta(lgK), compositeKey(fields))
+        case d: Distribution => Sketch(SketchPartial.Kll(d.k),
+          slot(("double", src(d.field)), numeric = false)(fld(d.field).cast("double")))
         case TopK(fields, _, _, _, maxMapSize) =>
-          sketch(SketchPartial.FreqItems(maxMapSize),
-            QueryCompiler.compositeKeyOf(fields.map(f => fld(f._1))))
+          Sketch(SketchPartial.FreqItems(maxMapSize), compositeKey(fields.map(_._1)))
       })
     }
     private val entries = classes.map(entry)
 
-    /** The job's one aggregate column. */
-    val column: Column = MultiQueryPartial.column(MultiQueryPartial(
-      gates.indices.map(i => expression(col(s"__pred$i"))) ++
-        slots.keys.map { case (p, _) => expression(col(s"__in$p")) },
-      gates.size, entries, df.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean))
+    private val column: Column = MultiQueryPartial.column(MultiQueryPartial(
+      gateExprs ++ inputs, gates.size, entries,
+      df.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean))
 
-    /** `src` (rows of the batch) projected to `keys`, then the gates and
-      * the inputs. An input that only gated classes read is computed only
-      * on rows one of them admits, as `when(gate, f)` would; `anyGate`
-      * also drops the rows no class admits. */
-    def frame(src: DataFrame, keys: Seq[Column], anyGate: Boolean = false): DataFrame = {
-      val in = inputCols.indices.map(p => (p, inputCols(p)))
-      if (gates.isEmpty) src.select(keys ++ in.map { case (p, c) => c.as(s"__in$p") }: _*)
-      else {
-        val pred = gates.indices.map(i => col(s"__pred$i"))
-        val withPreds = src.select(col("*") +: gates.zipWithIndex.map { case (f, i) =>
-          ExprCompiler.compile(f, Some(schema)).as(s"__pred$i") }: _*)
-        val kept =
-          if (anyGate && classes.forall(_.spec.filter.isDefined)) withPreds.filter(pred.reduce(_ || _))
-          else withPreds
-        kept.select(keys ++ pred ++ in.map { case (p, c) =>
-          val gs = inputGates(p)
-          (if (gs.contains(-1)) c else when(gs.toSeq.sorted.map(pred).reduce(_ || _), c)).as(s"__in$p")
-        }: _*)
-      }
-    }
+    /** The job over `src` (rows of the batch), grouped by `keys`. */
+    def frame(src: DataFrame, keys: Column*): DataFrame = src.groupBy(keys: _*).agg(column)
+
+    /** `src`'s rows that some class admits (all of them when a class has
+      * no filter), through an interpreted filter. */
+    def admitted(src: DataFrame): DataFrame =
+      if (classes.exists(_.spec.filter.isEmpty)) src
+      else src.filter(asColumn(Interpreted(gateExprs.reduce(Or(_, _)))))
   }
 
   // -------------------------------------------------------------------------
@@ -1145,17 +1125,13 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
         case b: SketchPartial.CappedBuf => s.add(b.records)
         case _ => // full buffer: no records were collected
       }
-      case s: GroupAllState      => mergeOps(s.acc, p)
+      case s: GroupAllState      => s.acc.update(p)
       case s: CountDistinctState => s.buf.merge(p.sketch.asInstanceOf[ThetaBuf])
       case s: DistributionState  => s.buf.merge(p.sketch.asInstanceOf[KllBuf])
       case s: TopKState          => s.buf.merge(p.sketch.asInstanceOf[FreqItemsBuf])
       case _: GroupByState       => // grouped state rides the grouped job
     }
   }
-
-  /** Fold one partial's metric values into `acc`, op by op. */
-  private def mergeOps(acc: MetricsAcc, p: MultiQueryPartial.Partial): Unit =
-    p.values.indices.foreach(i => acc.update(i, p.counts(i), p.values(i)))
 
   /** One grouped job per GROUP BY signature (same key fields and
     * projection — callers group by that); every fused class is one entry
@@ -1177,11 +1153,9 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     val job = new JobAggregate(df, classes, gated = true, groupOps = true)
     val entriesCap = QueryRunner.fusedEntriesCap(
       classes.map(_.spec.aggregation.asInstanceOf[GroupBy].entries))
-    // rows matching NO fused class never enter the shuffle; with one
-    // query this is exactly the old pre-filter
-    val out = job.frame(df, keyCols, anyGate = true)
-      .groupBy(aliases.map(col): _*)
-      .agg(job.column)
+    // rows matching NO fused class never enter the groups, the cap or the
+    // shuffle (one query: the old pre-filter); the aggregate re-reads gates
+    val out = job.frame(job.admitted(df), keyCols: _*)
     val fn = MultiQueryPartial.in(out)
     val rows = out.orderBy(aliases.map(col): _*).limit(entriesCap).collect()
     // Union cap hit with multiple classes: the kept smallest-keys union
@@ -1212,7 +1186,7 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
       // a group whose rows all failed THIS query's gate does not exist
       // for it — creating it would emit a spurious zero-count group
       val p = parts(cls)
-      if (p.matched > 0L) mergeOps(st.accFor(key), p)
+      if (p.matched > 0L) st.accFor(key).update(p)
     }
   }
 

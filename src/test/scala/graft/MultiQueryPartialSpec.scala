@@ -91,9 +91,12 @@ class MultiQueryPartialSpec extends SparkTestBase {
 
   /** Each case's decoded values in [[columns]]' order. */
   private def flat(parts: IndexedSeq[Partial]): Seq[Any] = cases.zip(parts).flatMap { case (cs, p) =>
-    (if (p.matched == 0L) null else p.matched) +: cs.ops.indices.flatMap { i =>
-      if (cs.ops(i) == Op.Avg) Seq(p.values(i), p.counts(i)) else Seq(p.values(i))
-    }
+    val matched = if (p.matched == 0L) null else p.matched
+    matched +: cs.ops.indices.flatMap(i => cs.ops(i) match {
+      case Op.Count => Seq(matched)
+      case Op.Avg   => Seq(p.accs(i).value, p.accs(i).n)
+      case _        => Seq(p.accs(i).value)
+    })
   }
 
   /** Equal value and class; NaN equals NaN and −0.0 equals 0.0, as in
@@ -125,7 +128,7 @@ class MultiQueryPartialSpec extends SparkTestBase {
     val d = flat(decodeOne(out))
     assert(d.exists { case x: java.lang.Double => x.isNaN; case _ => false })
     assert(cases.zip(decodeOne(out)).exists { case (cs, p) =>
-      cs.gate.contains("nulls") && p.matched > 0 && p.values(2) == null })
+      cs.gate.contains("nulls") && p.matched > 0 && p.accs(2).value == null })
   }
 
   test("grouped: every op equals Spark's own column per group") {
@@ -170,5 +173,24 @@ class MultiQueryPartialSpec extends SparkTestBase {
       Seq(Entry(-1, Sketch(graft.agg.SketchPartial.Theta(12), 0))), ansi = true)
     val e = intercept[AnalysisException](df.agg(MultiQueryPartial.column(thetaLong)).collect())
     assert(e.getMessage.contains("needs a string input, got bigint"), e.getMessage)
+  }
+
+  test("combine folds partials of differing numeric types in their wider type and rejects the rest") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.unsafe.types.UTF8String
+    def one(dt: DataType, op: Op.Value, v: Any): Acc = {
+      val fn = MultiQueryPartial(Seq(BoundReference(0, dt, nullable = true)), 0,
+        Seq(Entry(-1, Metrics(Seq(Metric(op, 0))))), ansi = true)
+      fn.partials(fn.update(fn.createAggregationBuffer(), InternalRow(v))).head.accs.head
+    }
+    val (i, d) = (one(IntegerType, Op.Sum, 3), one(DoubleType, Op.Sum, 0.5))
+    assert(combine(Some(i), d).value === 3.5 && combine(Some(i), d).n === 2)
+    assert(i.value === 3L && d.value === 0.5, "combine changed its inputs")
+    val least = combine(Some(one(IntegerType, Op.Min, 3)), one(LongType, Op.Min, 2L)).value
+    assert(least === 2L && least.isInstanceOf[java.lang.Long])
+    val e = intercept[IllegalArgumentException](
+      combine(Some(one(StringType, Op.Min, UTF8String.fromString("a"))), one(IntegerType, Op.Min, 1)))
+    assert(e.getMessage.contains("cannot combine a string partial with a int one"), e.getMessage)
   }
 }

@@ -176,8 +176,150 @@ class QueryRunnerSpec extends SparkTestBase {
       val fns = a.aggregateExpressions.flatMap(_.collect { case ae: AggregateExpression => ae.aggregateFunction })
       assert(fns.size === 1 && fns.head.isInstanceOf[graft.agg.MultiQueryPartial],
         s"an Aggregate ran ${fns.map(_.nodeName)}")
+      // each distinct input is one child, however many classes read it:
+      // `value` as a SUM/AVG input and as a MIN input, and `user`'s key
+      val fn = fns.head.asInstanceOf[graft.agg.MultiQueryPartial]
+      assert(fn.children.size - fn.numGates <= 3, s"inputs ${fn.children.drop(fn.numGates)}")
     }
+    // the gates and inputs reach the aggregate unprojected: no projection
+    // carries a query's filter literal into generated code
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    val filterLiterals = Set[Any](org.apache.spark.unsafe.types.UTF8String.fromString("click"),
+      org.apache.spark.unsafe.types.UTF8String.fromString("u1"),
+      org.apache.spark.unsafe.types.UTF8String.fromString("u2"), 40.0, 70.0)
+    val projected = plans.asScala.toSeq.flatMap(_.collect { case p: Project => p })
+      .flatMap(_.projectList.flatMap(_.collect { case l: Literal => l.value }))
+    assert(projected.filter(filterLiterals).isEmpty, s"projected filter literals: $projected")
   }
+
+  test("a changed query set compiles no new code: KILL and re-REGISTER with new literals") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def cmp(f: String, v: Any, op: BinOp.Value): Expr = Binary(Field(f), Lit(v), op)
+    def and(a: Expr, b: Expr): Expr = Binary(a, b, BinOp.AND)
+    val ops = Seq(GroupOp(GroupOpType.COUNT, None, "cnt"), GroupOp(GroupOpType.SUM, Some("value"), "sv"),
+      GroupOp(GroupOpType.MAX, Some("value"), "mx"), GroupOp(GroupOpType.AVG, Some("value"), "av"))
+    // shared, grouped and RAW shapes, none of them equality- or
+    // range-partitioned (whose scan filters hold their literals by design)
+    def specs(k: Int): Seq[QuerySpec] = {
+      val (et, t) = if (k == 0) ("click", 10.0) else ("view", 35.0)
+      Seq(
+        QuerySpec(s"s1_$k", filter = Some(and(cmp("value", t, BinOp.GREATER_THAN), cmp("etype", et, BinOp.EQUALS))),
+          aggregation = GroupAll(ops)),
+        QuerySpec(s"s2_$k", filter = Some(Binary(cmp("value", t + 30, BinOp.LESS_THAN),
+          cmp("user", s"u$k", BinOp.EQUALS), BinOp.OR)), aggregation = GroupAll(ops.take(2))),
+        QuerySpec(s"s3_$k", filter = Some(cmp("etype", et, BinOp.NOT_EQUALS)),
+          aggregation = CountDistinct(Seq("user"))),
+        QuerySpec(s"s4_$k", filter = Some(cmp("value", t, BinOp.GREATER_OR_EQUALS)),
+          aggregation = TopK(Seq("user" -> "u"), k = 2, countName = "cnt")),
+        QuerySpec(s"g1_$k", filter = Some(cmp("etype", et, BinOp.EQUALS)),
+          aggregation = GroupBy(Seq("user" -> "u"), ops)),
+        QuerySpec(s"g2_$k", filter = Some(cmp("value", t + 40, BinOp.GREATER_THAN)),
+          aggregation = GroupBy(Seq("user" -> "u"), ops)),
+        QuerySpec(s"r1_$k", filter = Some(cmp("event_id", 90L + k, BinOp.GREATER_THAN)), aggregation = Raw(1000)),
+        QuerySpec(s"r2_$k", filter = Some(and(cmp("user", s"u${k + 2}", BinOp.EQUALS),
+          cmp("value", t + 20, BinOp.LESS_THAN))), aggregation = Raw(1000)))
+        .map(_.copy(durationMs = 600000L))
+    }
+    val runner = new QueryRunner(spark, new ManualClock(0))
+    specs(0).foreach(s => assert(runner.register(s).isEmpty))
+    runner.processBatch(events)
+    runner.processBatch(events)
+    assert(runner.lastBatchJobs ===
+      Map(QueryRunner.JobKind.Shared -> 1, QueryRunner.JobKind.Grouped -> 1))
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    specs(0).foreach(s => assert(runner.kill(s.id).isDefined))
+    specs(1).foreach(s => assert(runner.register(s).isEmpty))
+    runner.processBatch(events)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled === 0, s"the re-registered query set compiled $compiled classes")
+    assert(runner.activeQueryIds.toSet === specs(1).map(_.id).toSet)
+    assert(runner.queryStats("s1_1").get("records_seen") ===
+      (1L to 100L).count(i => i % 3 != 0 && i > 35))
+  }
+
+  test("a projected input that fails on rows its filter rejects is never computed there") {
+    val batch = spark.range(0, 40, 1, 4).select((col("id") % 5).as("user_id"), col("id").as("v"))
+    val q = Some(Seq("q" -> (Binary(Lit(100L), Field("user_id"), BinOp.DIV): Expr)))
+    val sumQ = GroupAll(Seq(GroupOp(GroupOpType.SUM, Some("q"), "s"), GroupOp(GroupOpType.COUNT, None, "n")))
+    val gt0 = Binary(Field("user_id"), Lit(0L), BinOp.GREATER_THAN)
+    val ne0 = Binary(Binary(Field("user_id"), Lit(0L), BinOp.NOT_EQUALS),
+      Binary(Field("v"), Lit(30L), BinOp.LESS_THAN), BinOp.AND)
+    val runner = new QueryRunner(spark, new ManualClock(0))
+    runner.register(QuerySpec("gt0", filter = Some(gt0), projection = q, aggregation = sumQ))
+    runner.register(QuerySpec("ne0", filter = Some(ne0), projection = q, aggregation = sumQ))
+    runner.register(QuerySpec("all", aggregation = GroupAll(Seq(GroupOp(GroupOpType.COUNT, None, "n")))))
+    runner.processBatch(batch)
+    assert(runner.lastBatchJobs === Map(QueryRunner.JobKind.Shared -> 1))
+    assert(runner.results.isEmpty, runner.results.map(_.asJson))
+    val clips = runner.finishAll().map(c => c.queryId -> parse(c.records.head)).toMap
+    // double sums: equal up to the order partitions merge in
+    def check(id: String, cond: Column): Unit = {
+      val want = batch.filter(cond).agg(sum(lit(100L) / col("user_id"))).head().getDouble(0)
+      val got = clips(id)("s").asInstanceOf[Double]
+      assert(math.abs(got - want) <= 1e-9 * want, s"$id: $got, want $want")
+    }
+    check("gt0", col("user_id") > 0)
+    check("ne0", col("user_id") =!= 0 && col("v") < 30)
+    assert(clips("all") === Map("n" -> 40))
+  }
+
+  test("GROUP metrics fold across batches in Spark's own type, ordering and overflow rule") {
+    import graft.agg.MultiQueryPartial
+    import graft.agg.MultiQueryPartial.{Entry, Metric, Metrics, Op}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.graft.ColumnBridge.expression
+    import org.apache.spark.sql.types._
+    import GroupOpType._
+    val schema = StructType(Seq(StructField("i", IntegerType), StructField("f", FloatType),
+      StructField("d", DoubleType), StructField("dec", DecimalType(10, 2)),
+      StructField("s", StringType), StructField("k", LongType)))
+    def batch(rows: Row*) = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    def dec(x: String) = new java.math.BigDecimal(x)
+    // the first batch's doubles are all NaN; a value that changed class
+    // renders differently (3.0, 3.299999952316284, 14.0)
+    val b1 = batch(Row(5, 1.5f, Double.NaN, dec("1.25"), "b", Long.MaxValue - 1),
+      Row(7, 2.5f, Double.NaN, dec("2.50"), "c", 0L))
+    val b2 = batch(Row(3, 0.5f, 4.0, dec("10.01"), "a", 5L), Row(9, 3.3f, -1.0, dec("0.24"), "d", 0L))
+    val ops = Seq(GroupOp(MIN, Some("s"), "min_s"), GroupOp(MIN, Some("i"), "min_i"),
+      GroupOp(MAX, Some("f"), "max_f"), GroupOp(MAX, Some("d"), "max_d"),
+      GroupOp(MIN, Some("d"), "min_d"), GroupOp(SUM, Some("dec"), "sum_dec"))
+    val runner = new QueryRunner(spark, new ManualClock(0))
+    runner.register(QuerySpec("m", aggregation = GroupAll(ops)))
+    runner.register(QuerySpec("k", aggregation = GroupAll(Seq(GroupOp(SUM, Some("k"), "sum_k")))))
+    runner.processBatch(b1)
+    runner.processBatch(b2)
+    val union = b1.union(b2)
+    val want = union.agg(min("s"), min("i"), max("f"), max("d"), min("d"), sum("dec")).head().toSeq
+    // Java classes: the query's state folding the two batches' partials
+    val fn = MultiQueryPartial(Seq("s", "i", "f", "d", "dec").map(c => expression(col(c))), 0,
+      Seq(Entry(-1, Metrics(Seq(Metric(Op.Min, 0), Metric(Op.Min, 1), Metric(Op.Max, 2),
+        Metric(Op.Max, 3), Metric(Op.Min, 3), Metric(Op.Sum, 4))))),
+      spark.conf.get("spark.sql.ansi.enabled").toBoolean)
+    val state = new GroupAllState(ops)
+    Seq(b1, b2).map(_.agg(MultiQueryPartial.column(fn))).foreach(out => state.acc.update(
+      MultiQueryPartial.in(out).decode(out.head().getAs[Array[Byte]](0)).head))
+    val got = state.acc.results.map(_._2)
+    def same(a: Any, b: Any): Boolean = (a, b) match {
+      case (x: java.lang.Double, y: java.lang.Double) => x.isNaN && y.isNaN || x == y
+      case (x: AnyRef, y: AnyRef) => x.getClass == y.getClass && x == y
+      case _ => false
+    }
+    got.zip(want).zip(ops).foreach { case ((g, w), op) =>
+      assert(same(g, w), s"${op.name}: got $g (${Option(g).map(_.getClass)}), want $w (${w.getClass})")
+    }
+    // a long SUM past Long.MaxValue across batches: Spark's own sum over
+    // both raises under ANSI, and the runner FAILs that query alone
+    if (spark.conf.get("spark.sql.ansi.enabled").toBoolean) {
+      intercept[Exception](union.agg(sum("k")).collect())
+      assert(runner.results.map(c => c.queryId -> c.signal) === Seq("k" -> Some("FAIL")))
+    }
+    val clips = runner.finishAll().map(c => c.queryId -> c.records).toMap
+    assert(clips("m") === Seq(Json.obj(ops.map(_.name).zip(want): _*)))
+    if (!spark.conf.get("spark.sql.ansi.enabled").toBoolean)
+      assert(clips("k") === Seq(Json.obj("sum_k" -> union.agg(sum("k")).head().get(0))))
+  }
+
 
   test("cross-batch partial merge equals single-batch result") {
     val clock = new ManualClock(0)
