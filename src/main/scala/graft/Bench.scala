@@ -338,9 +338,9 @@ object Bench {
     runner.results.count(_.signal.contains("COMPLETE"))
   }
 
-  /** `n` queries `user_id == i` sharing one aggregation signature: the
-    * equality partitioner folds them into ONE groupBy(user_id) job — one
-    * hash probe per record regardless of query count (SURVEY §4). */
+  /** `n` queries `user_id == i` sharing one aggregation signature: they
+    * ride ONE indexed job — one binary search per record over the index
+    * of their literals, regardless of query count (SURVEY §4). */
   private def eqRunnerPass(spark: SparkSession, sfDir: String, n: Int): Long = {
     val runner = new QueryRunner(spark, new ManualClock(0))
     (0 until n).foreach { i =>
@@ -358,9 +358,8 @@ object Bench {
   }
 
   /** `n` queries over DISTINCT (event_type, user_id) tuples sharing one
-    * aggregation signature: the multi-field equality partitioner folds
-    * them into ONE groupBy(event_type, user_id) job — one hash probe per
-    * record regardless of query count. */
+    * aggregation signature: they ride ONE indexed job over the tuple key
+    * — one binary search per record regardless of query count. */
   private def eqTupleRunnerPass(spark: SparkSession, sfDir: String, n: Int): Long = {
     val runner = new QueryRunner(spark, new ManualClock(0))
     val types = Seq("click", "view", "purchase")
@@ -381,14 +380,13 @@ object Bench {
   }
 
   /** MIXED-population admission probe (b14_mixed): 80% equality queries
-    * (`user_id == i`, folded to one groupBy by the equality partitioner)
-    * + 20% threshold queries (`value > t_i`) — which since r14 ALSO fold,
-    * through the RANGE partitioner (one bucketed groupBy + driver
-    * suffix folds), so this bench now measures BOTH partitioners
-    * engaging on one batch: the r14 pre-partitioner floor (1.527 s at
-    * 1k, the 20% paying per-query conditional-aggregate columns) is the
-    * committed before/after line. The genuinely-unfoldable population
-    * moved to [[unfoldAdmissionPass]]. */
+    * (`user_id == i`, one indexed job on `user_id`) + 20% threshold
+    * queries (`value > t_i`) — which ALSO fold, into a second indexed job
+    * on `value` (driver suffix folds), so this bench measures both
+    * families engaging on one batch: the r14 pre-partitioner floor
+    * (1.527 s at 1k, the 20% paying per-query conditional-aggregate
+    * columns) is the committed before/after line. The
+    * genuinely-unfoldable population moved to [[unfoldAdmissionPass]]. */
   private def mixedAdmissionPass(spark: SparkSession, sfDir: String, n: Int): Long = {
     val runner = new QueryRunner(spark, new ManualClock(0))
     val nEq = n * 4 / 5
@@ -417,9 +415,9 @@ object Bench {
 
   /** UNFOLDABLE-minority admission probe (b14_unfold): 80% equality
     * queries + 20% genuinely arbitrary predicates (`value * 2 > t_i` —
-    * arithmetic on the left defeats BOTH the equality and the range
-    * partitioner by design, so each query keeps its own
-    * conditional-aggregate columns in the generic shared pass). The
+    * arithmetic on the left keeps it out of every indexed job by
+    * design, so each query keeps its own entry in the generic shared
+    * pass). The
     * graded claim this bench carries: the unfoldable minority's
     * per-query cost stays flat as the foldable majority amortizes —
     * admission pruning must not depend on every query being
@@ -740,7 +738,7 @@ object Bench {
       eqRunnerPass(spark, sfDir, 10000)
     } {
       // the admission claim under test: 10k same-signature COUNT queries
-      // fold into ONE groupBy job, so ms/query stays flat vs the 1k run
+      // fold into ONE indexed job, so ms/query stays flat vs the 1k run
       val finished = eqRunnerPass(spark, sfDir, 10000)
       require(finished == 10000, s"eq runner finished $finished of 10000")
     } :+ warmed("b14_mixed_1k") {
@@ -749,7 +747,7 @@ object Bench {
       val finished = mixedAdmissionPass(spark, sfDir, 1000)
       require(finished == 1000, s"mixed runner finished $finished of 1000")
     } :+ warmed("b14_mixed_10k") {
-      // both partitioners engage: 80% eq-folded + 20% range-folded
+      // both families are indexed: 80% equality + 20% threshold queries
       mixedAdmissionPass(spark, sfDir, 10000)
     } {
       val finished = mixedAdmissionPass(spark, sfDir, 10000)
@@ -1333,8 +1331,8 @@ object Bench {
       val ratio = if (m1k > 0) math.rint(m10k / m1k * 100) / 100 else -1.0
       // per-population marginal ms/query: the minority's cost is the
       // mixed pass's wall over the all-eq pass, per minority query (the
-      // eq 4/5 folds into the same one groupBy job either way). b14_mixed's
-      // 20% is `value > t` — RANGE-FOLDED since r14 (pre-partitioner
+      // eq 4/5 folds into the same one indexed job either way). b14_mixed's
+      // 20% is `value > t` — indexed on `value` (pre-partitioner
       // committed floor 6.4 ms/query at 1k); b14_unfold's 20% is
       // `value*2 > t` — genuinely unfoldable, carrying the flatness
       // claim (unfold_ratio ≈ 1 or below from 1k to 10k).

@@ -2,10 +2,12 @@ package graft.streaming
 
 import graft.agg._
 import graft.compile.{ExprCompiler, QueryCompiler}
+import graft.functions.{IndexSlot, KeyIndex}
 import graft.model._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import scala.collection.mutable
 
@@ -34,11 +36,16 @@ final class ManualClock(start: Long = 0L) extends Clock {
  *    Its value is one serialized partial (sketch buffers, capped RAW
  *    records and metric accumulators), exactly the reference's `byte[]`
  *    DATA_STREAM tuples (FilterBolt.java:187-199). Spark's partial/final
- *    agg split runs inside the batch; the equality, range and GROUP BY
- *    jobs over the same (cached) batch each aggregate with one too. The
+ *    agg split runs inside the batch; the indexed and GROUP BY jobs over
+ *    the same (cached) batch each aggregate with one too. The
  *    gates and inputs are the aggregate's own children, evaluated inside
  *    it, not projected columns: no filter literal reaches generated code,
  *    so a batch after a REGISTER or KILL compiles nothing new.
+ *  - **Indexed jobs** (= the query partitioner, SimpleEqualityPartitioner):
+ *    queries comparing the same key fields with literals — `field = lit`
+ *    conjunctions and `field >/>=/</<= lit` GROUP(all) queries — share one
+ *    job that maps each record to its slot in the index of their literals,
+ *    in the type Spark compares them in ([[IndexSlot]]).
  *  - **Driver combine** (= JoinBolt): [[AggState]] merges per-batch partials
  *    across batches (`Querier.combine`, JoinBolt.java:154-155) with the
  *    aggregate's own merge, so values keep Spark's types; owns window
@@ -49,10 +56,10 @@ final class ManualClock(start: Long = 0L) extends Clock {
  *    O(data).
  *
  * Failure contract. Each micro-batch builds ONE ordered job list — the
- * shared pass, then equality-partitioned, range-partitioned and fused
- * GROUP BY jobs — and runs it in two phases. COLLECT: every job, and every
- * driver-side fold over its rows (equality routing, range prefix/suffix
- * folds, the grouped cap check), finishes before any query state changes.
+ * shared pass, then the indexed jobs and the fused GROUP BY jobs — and
+ * runs it in two phases. COLLECT: every job, and every driver-side fold
+ * over its rows (an indexed job's point reads and prefix/suffix folds,
+ * the grouped cap check), finishes before any query state changes.
  * A job that throws, or whose fused grouped rows hit the union cap, is
  * re-collected one query at a time: a deterministic error FAILs that one
  * query; a transient one (executor loss, fetch failure) is retried once,
@@ -116,15 +123,13 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     var filterLatencyMsLast: Long = 0L
     var filterLatencyMsTotal: Long = 0L
     def isGrouped: Boolean = spec.aggregation.isInstanceOf[GroupBy]
-    /** Cached eq-partition tuple — pure function of the immutable spec,
-      * but consulted several times per batch per query (partitioner
-      * routing, type alignment, group lookup); computing it once matters
-      * at thousands of registered queries. */
-    lazy val eqKeys: Option[Seq[(String, Any)]] = computeEqPartitionKeys(spec)
+    /** Cached [[QueryRunner.indexTerms]] — a pure function of the
+      * immutable spec, consulted every batch for every active query. */
+    lazy val indexTerms: Option[Seq[(String, BinOp.Value, Any)]] = QueryRunner.indexTerms(spec)
   }
 
   /** How many jobs of each kind the LAST batch ran — a test observable
-    * (the equality, range and grouped jobs are result-identical to the
+    * (the indexed and grouped jobs are result-identical to the
     * generic path by design, so only a structural probe can prove they
     * engaged). */
   private[graft] var lastBatchJobs: Map[QueryRunner.JobKind.Value, Int] = Map.empty
@@ -428,31 +433,51 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
   // Micro-batch processing
   // -------------------------------------------------------------------------
 
-  /** Equality-partitioner keys (reference SimpleEqualityPartitioner takes a
-    * FIELD LIST, SURVEY §4): a query whose whole filter is a conjunction of
-    * `field == literal` terms over distinct fields is a candidate for
-    * value-partitioned evaluation. Fields are sorted so `a==1 AND b==2`
-    * and `b==2 AND a==1` share a partitioning signature. */
-  private def computeEqPartitionKeys(spec: QuerySpec): Option[Seq[(String, Any)]] = {
-    def flat(e: Expr): Option[Seq[(String, Any)]] = e match {
-      case Binary(Field(f, None), Lit(v), BinOp.EQUALS) if v != null => Some(Seq(f -> v))
-      case Binary(l, r, BinOp.AND) =>
-        for { a <- flat(l); b <- flat(r) } yield a ++ b
-      case NAry(NAryOp.AND, xs) =>
-        xs.foldLeft(Option(Seq.empty[(String, Any)])) { (acc, x) =>
-          for { a <- acc; b <- flat(x) } yield a ++ b
+  /** The active queries that can ride an indexed job, with their keys
+    * ([[QueryRunner.indexTerms]] gives the population). A comparison's
+    * type T is Spark's own: the type its analyzer coerces the query's
+    * `field = lit` to, read once per (column type, literal type) pair per
+    * batch. The key is `cast(field as T)` and the literal `Cast(lit, T)`,
+    * compared with Catalyst's ordering of T — what `EqualTo` and
+    * `LessThan` evaluate — so an indexed answer is Spark's by
+    * construction. A field the batch lacks, a T that is not an atomic
+    * orderable type, or a literal that casts to null (or raises) keeps the
+    * query on the shared pass. */
+  private def indexMembers(active: Seq[RQ], batch: DataFrame): Seq[(RQ, QueryRunner.Member)] = {
+    import QueryRunner.Member
+    import org.apache.spark.sql.catalyst.expressions.{BinaryComparison, EvalMode, GenericInternalRow, Literal, RowOrdering, Cast => CastExpr}
+    import org.apache.spark.sql.types.{ArrayType, MapType}
+    import scala.util.Try
+    val schema = batch.schema
+    val conf = batch.sparkSession.conf
+    val mode = if (conf.get("spark.sql.ansi.enabled").toBoolean) EvalMode.ANSI else EvalMode.LEGACY
+    val tz = Some(conf.get("spark.sql.session.timeZone"))
+    val typeOf = mutable.HashMap.empty[(DataType, DataType), Option[DataType]]
+    def comparisonType(f: String, v: Any, litType: DataType): Option[DataType] =
+      typeOf.getOrElseUpdate((schema(f).dataType, litType), Try {
+        val cmp = ExprCompiler.compile(Binary(Field(f), Lit(v), BinOp.EQUALS), Some(schema))
+        batch.select(cmp).queryExecution.analyzed.expressions.head
+          .collectFirst { case c: BinaryComparison => c.left.dataType }
+      }.toOption.flatten.filter {
+        case _: StructType | _: ArrayType | _: MapType => false
+        case t => RowOrdering.isOrderable(t)
+      })
+    def term(f: String, v: Any): Option[(DataType, Any)] =
+      if (!schema.exists(_.name == f)) None else {
+        val l = Literal(v) // as `lit(v)` converts
+        comparisonType(f, v, l.dataType).flatMap { t =>
+          Try(if (l.dataType == t) l.value else CastExpr(l, t, tz, mode).eval()).toOption
+            .filter(_ != null).map(t -> _)
         }
-      case _ => None
-    }
-    spec.filter.flatMap(flat).flatMap { kvs =>
-      val sorted = kvs.sortBy(_._1)
-      // a repeated field (`a==1 AND a==2`) has no single partition value;
-      // an empty conjunction (degenerate AND with no operands) has no
-      // partition fields at all
-      if (sorted.nonEmpty && sorted.map(_._1).distinct.size == sorted.size)
-        Some(sorted)
-      else None
-    }
+      }
+    active.flatMap(rq => rq.indexTerms.flatMap { terms =>
+      val cast = terms.map { case (f, _, v) => term(f, v) }
+      Option.when(cast.forall(_.isDefined)) {
+        val (types, values) = cast.flatten.unzip
+        val key = if (values.size == 1) values.head else new GenericInternalRow(values.toArray)
+        rq -> Member(terms.map(_._1), types, key, terms.head._2)
+      }
+    })
   }
 
   /** One Spark job of a micro-batch: its member queries and its kind's
@@ -477,58 +502,20 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     val active = queries.values.filter(!_.done).toSeq
     active.foreach(rq => rq.includeOpen = includeOpenNow(rq))
     val grouped = active.filter(_.isGrouped)
-    // Candidate-set pruning — the full query-partitioner analog: ≥2
-    // non-grouped, non-RAW queries whose filters are conjunctions of
-    // `field == value` over the SAME field list share ONE
-    // groupBy(fields) job; per-record cost is a single hash probe
-    // regardless of the number of such queries (the reference routes
-    // records to only the queries whose partition tuple matches —
-    // SimpleEqualityPartitioner over a field list). RAW stays on the
-    // generic path (per-query collect caps).
-    // The literal's type must align with the column's: the driver-side
-    // group lookup compares natively, and a string literal against a
-    // numeric column (which compiled predicates coerce) would silently
-    // match nothing — such queries stay on the generic compiled path.
-    def eqTypeAligned(rq: RQ): Boolean = rq.eqKeys.exists(_.forall { case (f, v) =>
-      // normValue collapses whole numbers to Long through a Double image,
-      // which is lossy past 2^53 — two distinct Longs could collide on one
-      // group row. Such literals take the generic compiled path instead.
-      val preciseMagnitude = v match {
-        case n: Number => math.abs(n.doubleValue) < 9.007199254740992e15 // 2^53
-        case _         => true
-      }
-      preciseMagnitude && batch.schema.find(_.name == f).exists { sf =>
-        (sf.dataType, v) match {
-          case (org.apache.spark.sql.types.StringType, _: String)  => true
-          case (org.apache.spark.sql.types.BooleanType, _: Boolean) => true
-          case (_: org.apache.spark.sql.types.NumericType,
-                _: Byte | _: Short | _: Int | _: Long | _: Float | _: Double) => true
-          case _ => false
-        }
-      }
-    })
-    val eqByField = active
-      .filter(rq => !rq.isGrouped && !rq.spec.aggregation.isInstanceOf[Raw] &&
-        eqTypeAligned(rq))
-      .groupBy(rq => rq.eqKeys.get.map(_._1))
-      .filter(_._2.size >= 2)
-    val eqSet = eqByField.values.flatten.toSet
-    // RANGE partitioner (the equality partitioner generalized, r14): ≥2
-    // ungrouped GROUP(all) queries whose whole filter is `field op
-    // numeric-literal` (op ∈ >, >=, <, <=) over the SAME numeric field
-    // share ONE bucketed groupBy job — per-record cost is a single
-    // binary search over the group's distinct thresholds, and every
-    // query reads its answer from driver-side prefix/suffix folds of
-    // ≤ 2·thresholds+1 bucket rows (see collectRangePartitioned).
-    val rangeByField = active
-      .filter(rq => !rq.isGrouped && !eqSet.contains(rq) &&
-        rangeKeyOf(rq, batch.schema).isDefined)
-      .groupBy(rq => rangeKeyOf(rq, batch.schema).get._1)
-      .filter(_._2.size >= 2)
-    val rangeSet = rangeByField.values.flatten.toSet
+    // Query partitioning (the reference routes a record only to the
+    // queries whose partition tuple matches — SimpleEqualityPartitioner
+    // over a field list, SURVEY §4): ≥2 queries comparing the SAME key
+    // fields, in the same types, with literals share ONE indexed job —
+    // one binary search per record over the index of their literals,
+    // whatever the number of such queries (see collectIndexed). RAW stays
+    // on the shared pass (per-query collect caps).
+    val indexed = indexMembers(active, batch)
+      .groupBy { case (_, m) => (m.fields, m.types) }
+      .filter(_._2.size >= 2).values.toSeq
+    val indexedSet = indexed.flatten.map(_._1).toSet
     // grouped queries stay in the shared pass for their UNGROUPED matched
     // counts (the shared pass gives a GroupBy class only its matched count)
-    val simple = active.filterNot(rq => eqSet.contains(rq) || rangeSet.contains(rq))
+    val simple = active.filterNot(indexedSet)
     // GROUP BY fusion: queries with the same (key fields, projection)
     // share one grouped job regardless of filter — each query's metric
     // ops are gated by its OWN predicate inside the shared aggregate
@@ -543,8 +530,7 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     import QueryRunner.JobKind._
     val jobs: Seq[Job] =
       (if (simple.isEmpty) Nil else Seq(new Job(Shared, simple, collectShared))) ++
-        eqByField.toSeq.map { case (f, rqs) => new Job(Equality, rqs.toSeq, collectEqPartitioned(f)) } ++
-        rangeByField.toSeq.map { case (f, rqs) => new Job(Range, rqs.toSeq, collectRangePartitioned(f)) } ++
+        indexed.map(ms => new Job(Indexed, ms.map(_._1), collectIndexed(ms.toMap))) ++
         groupedSigs.map(new Job(Grouped, _, collectGrouped))
     lastBatchJobs = jobs.groupBy(_.kind).map { case (k, js) => k -> js.size }
     val needsCache = jobs.size > 1
@@ -689,224 +675,85 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     Some(simple.map(rq => () => mergePartial(rq, parts(classOf(rq.spec.id)))))
   }
 
-  /** Normalize a partition value for driver-side matching between the
-    * query's literal and the batch's native column type (a Long literal
-    * must meet a Double column group: whole numbers collapse to Long). */
-  private def normValue(v: Any): Any = v match {
-    case n: Number =>
-      val d = n.doubleValue
-      if (d.isWhole && math.abs(d) < 9e15) n.longValue else d
-    case other => other
-  }
-
-  /** The distinct (aggregation, projection) signatures of a fused
-    * equality or range job: one ungated [[MultiQueryPartial]] entry each. */
+  /** The distinct (aggregation, projection) signatures of an indexed
+    * job: one ungated [[MultiQueryPartial]] entry each. */
   private def signatures(rqs: Seq[RQ]): (Seq[RQ], Map[String, Int]) =
     classesBy(rqs)(rq => (rq.spec.aggregation, rq.spec.projection))
 
   /**
-   * One job for ALL equality-partitioned queries on `field`: filter to the
-   * watched values (InSet — one hash probe per record), groupBy(field), and
-   * compute each distinct (aggregation, projection) signature's partial
-   * ONCE, as one entry of the job's [[MultiQueryPartial]]. Each query then
-   * reads the value-group row of the value it watches. 1000 COUNT queries
-   * on 1000 user ids cost one hash-shuffled count job, not 1000 predicate
-   * evaluations per record.
+   * One job for ALL indexed queries on one key (the same fields, compared
+   * in the same types): [[IndexSlot]] maps each record to its slot in the
+   * index of the queries' literals — one binary search per record,
+   * whatever the query count — records in no slot a query reads are
+   * dropped, and one groupBy(slot) computes each distinct (aggregation,
+   * projection) signature's partial ONCE, as one entry of the job's
+   * [[MultiQueryPartial]]. An equality query reads its point slot's row; a
+   * range query reads the prefix or suffix fold of the ≤ 2·literals+1
+   * rows. The slot filter is exact, so a query's inputs are computed only
+   * on records it admits, and neither the plan nor its generated code
+   * holds a literal.
    */
-  private def collectEqPartitioned(fields: Seq[String])(rqs: Seq[RQ],
+  private def collectIndexed(members: Map[RQ, QueryRunner.Member])(rqs: Seq[RQ],
       df: DataFrame): Option[Seq[() => Unit]] = {
-    // Per-field isin over each field's distinct literals keeps the scan
-    // filter a conjunction of in-lists the source can push down; for
-    // multi-field groups an exact tuple membership test is conjoined on
-    // top — without it the per-field lists admit the CROSS PRODUCT of the
-    // queried values, and the collect below could return up to Q^F group
-    // rows (data permitting) where only Q tuples are ever looked up.
-    val byQuery = rqs.map(rq => rq.eqKeys.get.toMap)
-    val perField = fields.map { f =>
-      col(f).isin(byQuery.map(_(f)).distinct: _*)
-    }.reduce(_ && _)
-    val filterCond = if (fields.size == 1) perField else {
-      val tupleCond = byQuery.distinct
-        .map(m => fields.map(f => col(f) === lit(m(f))).reduce(_ && _))
-        .reduce(_ || _)
-      perField && tupleCond
+    val m0 = members(rqs.head)
+    val index = new KeyIndex(m0.types, rqs.map(members(_).key))
+    // each query's slots, lo to hi, over the index's entries e_j:
+    //   k =  e_j ⇔ slot = 2j+1     k >  e_j ⇔ slot ≥ 2j+2     k <  e_j ⇔ slot ≤ 2j
+    //                              k >= e_j ⇔ slot ≥ 2j+1     k <= e_j ⇔ slot ≤ 2j+1
+    val spans = rqs.map { rq =>
+      val m = members(rq)
+      val p = index.pointOf(m.key)
+      val (lo, hi) = m.op match {
+        case BinOp.EQUALS            => (p, p)
+        case BinOp.GREATER_THAN      => (p + 1, index.top)
+        case BinOp.GREATER_OR_EQUALS => (p, index.top)
+        case BinOp.LESS_THAN         => (0, p - 1)
+        case _                       => (0, p)
+      }
+      index.read(lo, hi)
+      (lo, hi)
     }
+    val keys = m0.fields.zip(m0.types).map { case (f, t) =>
+      ExprCompiler.compile(Field(f), Some(df.schema)).cast(t) }
+    val slot = ColumnBridge.column(IndexSlot(ColumnBridge.expression(
+      if (keys.size == 1) keys.head else struct(keys: _*)))(index))
     val (sigs, sigOf) = signatures(rqs)
     val out = new JobAggregate(df, sigs, gated = false, groupOps = false)
-      .frame(df.filter(filterCond), fields.map(col): _*)
+      .frame(df.filter(slot.isNotNull), slot)
     val fn = MultiQueryPartial.in(out)
-    val byValue = out.collect().map(r => (fields.indices.map(i => normValue(r.get(i))): Seq[Any]) ->
-      fn.decode(r.getAs[Array[Byte]](fields.size))).toMap
-    Some(rqs.map { rq =>
-      byValue.get(rq.eqKeys.get.map(kv => normValue(kv._2))) match {
-        case Some(parts) => () => mergePartial(rq, parts(sigOf(rq.spec.id)))
-        case None        => () => rq.batchesSeen += 1 // no matching records this batch
-      }
-    })
-  }
-
-  /** RANGE admission detection — the equality partitioner (SURVEY §4,
-    * reference SimpleEqualityPartitioner.java:40-75) generalized to
-    * half-line predicates: a query admits iff it is ungrouped
-    * GROUP(all) with a single `Field op numeric-literal` filter,
-    * op ∈ {>, >=, <, <=}, over a plain numeric column, in a
-    * (field type, literal type) combination where bucket comparisons
-    * reproduce Spark's own coercion EXACTLY:
-    *  - integral column + integral literals → 64-bit compare (exact,
-    *    no 2^53 hazard);
-    *  - double column + any numeric literal → double compare (Spark
-    *    promotes the same way, so any loss is identical on both paths);
-    *  - float column + Float/Double literal, or an integral literal
-    *    inside float's exact range (|v| ≤ 2^24) → double compare
-    *    (float→double is exact and monotone).
-    * Integral column + Float literal is REJECTED: Spark compares those
-    * as floats (long→float is lossy) and a double-side bucket could
-    * disagree near the 2^24 boundary — such queries keep the generic
-    * compiled path. */
-  private def rangeKeyOf(rq: RQ, schema: StructType)
-      : Option[(String, BinOp.Value, Any)] = rq.spec.aggregation match {
-    case _: GroupAll => rq.spec.filter match {
-      case Some(Binary(Field(f, None), Lit(v), op))
-          if op == BinOp.GREATER_THAN || op == BinOp.GREATER_OR_EQUALS ||
-             op == BinOp.LESS_THAN || op == BinOp.LESS_OR_EQUALS =>
-        import org.apache.spark.sql.types._
-        val ft = schema.find(_.name == f).map(_.dataType)
-        val integralF = ft.exists {
-          case ByteType | ShortType | IntegerType | LongType => true
-          case _ => false
-        }
-        val ok = (ft, v) match {
-          case (None, _) => false
-          case (Some(DoubleType),
-                _: Byte | _: Short | _: Int | _: Long | _: Float | _: Double) => true
-          case (Some(FloatType), _: Float | _: Double) => true
-          case (Some(FloatType), x: Number)
-            if (x.isInstanceOf[Byte] || x.isInstanceOf[Short] ||
-                x.isInstanceOf[Int] || x.isInstanceOf[Long]) &&
-              math.abs(x.longValue) <= (1L << 24) => true
-          case (_, _: Byte | _: Short | _: Int | _: Long) if integralF => true
-          case _ => false
-        }
-        if (ok) Some((f, op, v)) else None
-      case _ => None
+    val rows = out.collect().sortBy(_.getInt(0))
+    val slots = rows.map(_.getInt(0))
+    val n = rows.length
+    // each query reads the rows a to b: the first row ≥ lo to the last
+    // ≤ hi (slots are distinct and sorted); None when there is none. A
+    // span is a point, a suffix (hi is the top slot) or a prefix (lo is 0).
+    val reads = spans.map { case (lo, hi) =>
+      val a = { val h = java.util.Arrays.binarySearch(slots, lo); if (h >= 0) h else -(h + 1) }
+      val b = { val h = java.util.Arrays.binarySearch(slots, hi); if (h >= 0) h else -(h + 1) - 1 }
+      Option.when(a <= b)((a, b))
     }
-    case _ => None
-  }
-
-  /** One bucketed job for a fused same-field threshold group: records
-    * bucket by binary search over the group's distinct thresholds
-    * ([[graft.functions.RangeBucketL]]/[[graft.functions.RangeBucketD]]
-    * — ONE probe per record regardless of query count, where the
-    * generic shared pass pays one predicate per query), one
-    * groupBy(bucket) computes every distinct (aggregation, projection)
-    * signature's partial columns once, and ≤ 2·thresholds+1 tiny rows
-    * come back for the driver's prefix/suffix folds, from which each
-    * query reads one row. A single-DIRECTION group (all >/>= or all
-    * </<=) additionally pushes its covered half-line to the scan as a
-    * plain range filter. */
-  private def collectRangePartitioned(field: String)(rqs: Seq[RQ],
-      df: DataFrame): Option[Seq[() => Unit]] = {
-    val schema = df.schema
-    import org.apache.spark.sql.types._
-    val keys = rqs.map(rq => rq.spec.id -> rangeKeyOf(rq, schema).get).toMap
-    val integralField = schema(field).dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    val longMode = integralField && rqs.forall(rq => keys(rq.spec.id)._3 match {
-      case _: Byte | _: Short | _: Int | _: Long => true
-      case _ => false
-    })
-    // predicate → pure bucket-index bound (see RangeBucket's scaladoc):
-    //   v >  b_j ⇔ idx ≥ 2j+2     v <  b_j ⇔ idx ≤ 2j
-    //   v ≥  b_j ⇔ idx ≥ 2j+1     v ≤  b_j ⇔ idx ≤ 2j+1
-    def boundOf(op: BinOp.Value, j: Int): (Boolean, Int) = op match {
-      case BinOp.GREATER_THAN      => (true, 2 * j + 2)
-      case BinOp.GREATER_OR_EQUALS => (true, 2 * j + 1)
-      case BinOp.LESS_THAN         => (false, 2 * j)
-      case _                       => (false, 2 * j + 1)
-    }
-    val (bucketCol, lookups) =
-      if (longMode) {
-        val bs = rqs.map(rq => keys(rq.spec.id)._3.asInstanceOf[Number].longValue)
-          .distinct.sorted
-        val at = bs.zipWithIndex.toMap
-        (graft.functions.RangeBucketL.col(col(field).cast("long"), bs),
-          rqs.map { rq =>
-            val (_, op, v) = keys(rq.spec.id)
-            rq.spec.id -> boundOf(op, at(v.asInstanceOf[Number].longValue))
-          }.toMap)
-      } else {
-        def norm(d: Double) = if (d == 0d) 0d else d // −0.0 == 0.0 in Spark
-        val bs = rqs.map(rq => norm(keys(rq.spec.id)._3.asInstanceOf[Number].doubleValue))
-          .distinct.sorted
-        val at = bs.zipWithIndex.toMap
-        (graft.functions.RangeBucketD.col(col(field).cast("double"), bs),
-          rqs.map { rq =>
-            val (_, op, v) = keys(rq.spec.id)
-            rq.spec.id -> boundOf(op, at(norm(v.asInstanceOf[Number].doubleValue)))
-          }.toMap)
-      }
-    // single-direction groups: push the covered half-line (the loosest
-    // threshold, inclusive — a superset of every member's predicate;
-    // NaN-correct under Spark's NaN-largest ordering: NaN passes a >=
-    // push exactly when the member GT/GE predicates are true for it).
-    // The literal is one of the originals, so scan-side coercion is the
-    // generic path's own.
-    val dirSet = rqs.map(rq => keys(rq.spec.id)._2).toSet
-    val lits = rqs.map(rq => keys(rq.spec.id)._3)
-    val pre0 = col(field).isNotNull
-    val pre =
-      if (dirSet.subsetOf(Set(BinOp.GREATER_THAN, BinOp.GREATER_OR_EQUALS)))
-        pre0 && col(field) >= lit(lits.minBy(_.asInstanceOf[Number].doubleValue))
-      else if (dirSet.subsetOf(Set(BinOp.LESS_THAN, BinOp.LESS_OR_EQUALS)))
-        pre0 && col(field) <= lit(lits.maxBy(_.asInstanceOf[Number].doubleValue))
-      else pre0
-    val (sigs, sigOf) = signatures(rqs)
-    val out = new JobAggregate(df, sigs, gated = false, groupOps = false)
-      .frame(df.filter(pre), bucketCol.as("__rbucket"))
-    val fn = MultiQueryPartial.in(out)
-    val sorted = out.collect().sortBy(_.getInt(0))
-    if (sorted.isEmpty) return Some(rqs.map(rq => () => rq.batchesSeen += 1))
-    val idxs = sorted.map(_.getInt(0))
-    val nR = sorted.length
-    // each query reads one fold: the suffix from the first bucket >= its
-    // bound, or the prefix up to the last bucket <= it (bucket keys are
-    // distinct and sorted: binarySearch gives the exact hit or the
-    // insertion point directly); None when no bucket qualifies
-    val reads = rqs.map { rq =>
-      val (isSuffix, bound) = lookups(rq.spec.id)
-      val hit = java.util.Arrays.binarySearch(idxs, bound)
-      if (isSuffix) {
-        val first = if (hit >= 0) hit else -(hit + 1) // first >= bound
-        Option.when(first < nR)((true, first))
-      } else {
-        val last = if (hit >= 0) hit else -(hit + 1) - 1 // last <= bound
-        Option.when(last >= 0)((false, last))
-      }
-    }
-    // Each bucket's buffer folds into its neighbour's with the aggregate's
-    // own merge, so a fold merges into query state exactly as per-bucket
-    // merges would, without m extra batch counts. Folds run only as far as
-    // some query reads: a fold that throws (a long SUM overflowing under
-    // ANSI) then lies in a reader's own range, and the per-query re-collect
-    // FAILs that query alone.
-    def bucket(k: Int) = fn.deserialize(sorted(k).getAs[Array[Byte]](1))
-    val wanted = reads.flatten.toSet
-    val folds = mutable.HashMap.empty[(Boolean, Int), IndexedSeq[MultiQueryPartial.Partial]]
-    def fold(suffix: Boolean, to: Int): Unit = {
-      val steps = if (suffix) nR - 1 to to by -1 else 0 to to
-      var acc = bucket(steps.head)
+    // A fold merges each row's buffer into its neighbour's with the
+    // aggregate's own merge, so it merges into query state exactly as
+    // per-row merges would, without extra batch counts. Folds run only as
+    // far as some query reads: a fold that throws (a long SUM overflowing
+    // under ANSI) then lies in a reader's own range, and the per-query
+    // re-collect FAILs that query alone.
+    def buf(k: Int) = fn.deserialize(rows(k).getAs[Array[Byte]](1))
+    val (points, folded) = reads.flatten.toSet.partition(r => r._1 == r._2)
+    val read = mutable.HashMap.empty[(Int, Int), IndexedSeq[MultiQueryPartial.Partial]]
+    points.foreach(r => read(r) = fn.partials(buf(r._1)))
+    def fold(steps: Range)(span: Int => (Int, Int)): Unit = {
+      var acc = buf(steps.head)
       steps.foreach { k =>
-        if (k != steps.head) acc = fn.merge(bucket(k), acc)
-        if (wanted((suffix, k))) folds((suffix, k)) = fn.partials(acc)
+        if (k != steps.head) acc = fn.merge(buf(k), acc)
+        if (folded(span(k))) read(span(k)) = fn.partials(acc)
       }
     }
-    wanted.filter(_._1).map(_._2).minOption.foreach(fold(suffix = true, _))
-    wanted.filterNot(_._1).map(_._2).maxOption.foreach(fold(suffix = false, _))
+    folded.filter(_._2 == n - 1).map(_._1).minOption.foreach(a => fold(n - 1 to a by -1)(k => (k, n - 1)))
+    folded.filter(_._2 < n - 1).map(_._2).maxOption.foreach(b => fold(0 to b)(k => (0, k)))
     Some(rqs.zip(reads).map {
-      case (rq, Some(read)) => () => mergePartial(rq, folds(read)(sigOf(rq.spec.id)))
-      case (rq, None)       => () => rq.batchesSeen += 1 // no qualifying buckets this batch
+      case (rq, Some(r)) => () => mergePartial(rq, read(r)(sigOf(rq.spec.id)))
+      case (rq, None)    => () => rq.batchesSeen += 1 // no rows this batch
     })
   }
 
@@ -999,8 +846,8 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     }
 
   /** One job's [[MultiQueryPartial]]: one entry per class, in order, over
-    * the classes' distinct gates (their filters when `gated`; the equality
-    * and range jobs select rows by grouping instead) and distinct inputs,
+    * the classes' distinct gates (their filters when `gated`; the indexed
+    * job selects rows by slot instead) and distinct inputs,
     * its children as they compile, unprojected: the job's generated code
     * does not depend on the query set. With `groupOps` a GROUP BY class
     * carries its ops (the grouped job); without, only its matched count
@@ -1112,7 +959,7 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
   }
 
   /** Merge one class partial (its own class's, its fused signature's, or a
-    * range fold's) into `rq`'s state. */
+    * indexed job's row or fold) into `rq`'s state. */
   private def mergePartial(rq: RQ, p: MultiQueryPartial.Partial): Unit = {
     rq.recordsSinceEmit += p.matched
     rq.recordsSeen += p.matched
@@ -1328,9 +1175,43 @@ object QueryRunner {
     * RQ.transientStrikes). */
   private[streaming] val MaxTransientStrikes = 3
 
+  /** One indexed-job member: its key fields, the types Spark compares
+    * them in, its literal(s) cast to those types (a row for a tuple key),
+    * and its comparison. */
+  private[streaming] final case class Member(fields: Seq[String], types: Seq[DataType], key: Any,
+                                             op: BinOp.Value)
+
+  /** The comparisons an indexed job can serve `spec` by, sorted by field
+    * (so `a = 1 AND b = 2` and `b = 2 AND a = 1` share a key), or None:
+    *  - an ungrouped, non-RAW query whose whole filter is a conjunction of
+    *    `field = lit` over distinct fields (a repeated field has no single
+    *    key value);
+    *  - a GROUP(all) query whose whole filter is one `field op lit`, op one
+    *    of >, >=, <, <=.
+    * RAW stays on the shared pass: its collect depends on per-query state. */
+  private[streaming] def indexTerms(spec: QuerySpec): Option[Seq[(String, BinOp.Value, Any)]] = {
+    def eqs(e: Expr): Option[Seq[(String, BinOp.Value, Any)]] = e match {
+      case Binary(Field(f, None), Lit(v), BinOp.EQUALS) if v != null => Some(Seq((f, BinOp.EQUALS, v)))
+      case Binary(l, r, BinOp.AND) => for { a <- eqs(l); b <- eqs(r) } yield a ++ b
+      case NAry(NAryOp.AND, xs) =>
+        xs.foldLeft(Option(Seq.empty[(String, BinOp.Value, Any)])) { (acc, x) =>
+          for { a <- acc; b <- eqs(x) } yield a ++ b
+        }
+      case _ => None
+    }
+    val ranges = Set(BinOp.GREATER_THAN, BinOp.GREATER_OR_EQUALS, BinOp.LESS_THAN, BinOp.LESS_OR_EQUALS)
+    (spec.aggregation, spec.filter) match {
+      case (_: Raw | _: GroupBy, _) => None
+      case (_: GroupAll, Some(Binary(Field(f, None), Lit(v), op))) if v != null && ranges(op) =>
+        Some(Seq((f, op, v)))
+      case (_, filter) => filter.flatMap(eqs).map(_.sortBy(_._1))
+        .filter(ts => ts.nonEmpty && ts.map(_._1).distinct.size == ts.size)
+    }
+  }
+
   /** The kinds of per-batch Spark job, in the order their merges apply. */
   object JobKind extends Enumeration {
-    val Shared, Equality, Range, Grouped = Value
+    val Shared, Indexed, Grouped = Value
   }
 
   /** Shared daemon pool for concurrent per-batch job submission (Spark's

@@ -10,13 +10,13 @@ import scala.jdk.CollectionConverters._
 /**
  * Randomized differential conformance: N randomly generated query specs
  * (filter grammar × every aggregation family) registered into ONE runner
- * and evaluated in a single shared micro-batch pass — so the eq
- * partitioner, GROUP BY fusion, and the generic compiled path all engage
+ * and evaluated in a single shared micro-batch pass — so the indexed
+ * jobs, GROUP BY fusion, and the generic compiled path all engage
  * under random mixtures — then every query's emitted records are compared
  * against `QueryCompiler.run` on the same frame as canonical multisets.
  * A few fixed specs ride along with every random mix so that each of the
- * runner's four job kinds (shared, equality, range, grouped) is sure to
- * run, and each test asserts that all four did.
+ * runner's three job kinds (shared, indexed, grouped) is sure to run, and
+ * each test asserts that all three did.
  *
  * The fixture's numeric column is integral-valued so double sums are
  * order-insensitive (exact in any addition order below 2^53): any

@@ -131,7 +131,7 @@ class QueryRunnerSpec extends SparkTestBase {
     assert(udafs.isEmpty, s"processBatch ran udaf(Aggregator) columns: $udafs")
   }
 
-  test("with all four job kinds, every Aggregate processBatch runs holds one MultiQueryPartial") {
+  test("with all three job kinds, each Aggregate holds one MultiQueryPartial") {
     import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
     import org.apache.spark.sql.execution.QueryExecution
@@ -199,8 +199,8 @@ class QueryRunnerSpec extends SparkTestBase {
     def and(a: Expr, b: Expr): Expr = Binary(a, b, BinOp.AND)
     val ops = Seq(GroupOp(GroupOpType.COUNT, None, "cnt"), GroupOp(GroupOpType.SUM, Some("value"), "sv"),
       GroupOp(GroupOpType.MAX, Some("value"), "mx"), GroupOp(GroupOpType.AVG, Some("value"), "av"))
-    // shared, grouped and RAW shapes, none of them equality- or
-    // range-partitioned (whose scan filters hold their literals by design)
+    // shared, grouped, RAW and indexed shapes (two equality queries on
+    // one field, two range queries on another)
     def specs(k: Int): Seq[QuerySpec] = {
       val (et, t) = if (k == 0) ("click", 10.0) else ("view", 35.0)
       Seq(
@@ -218,15 +218,21 @@ class QueryRunnerSpec extends SparkTestBase {
           aggregation = GroupBy(Seq("user" -> "u"), ops)),
         QuerySpec(s"r1_$k", filter = Some(cmp("event_id", 90L + k, BinOp.GREATER_THAN)), aggregation = Raw(1000)),
         QuerySpec(s"r2_$k", filter = Some(and(cmp("user", s"u${k + 2}", BinOp.EQUALS),
-          cmp("value", t + 20, BinOp.LESS_THAN))), aggregation = Raw(1000)))
+          cmp("value", t + 20, BinOp.LESS_THAN))), aggregation = Raw(1000)),
+        QuerySpec(s"e1_$k", filter = Some(cmp("user", s"u${k + 3}", BinOp.EQUALS)), aggregation = GroupAll(ops)),
+        QuerySpec(s"e2_$k", filter = Some(cmp("user", s"u${k + 5}", BinOp.EQUALS)),
+          aggregation = GroupAll(ops.take(2))),
+        QuerySpec(s"t1_$k", filter = Some(cmp("event_id", 20L + k, BinOp.GREATER_THAN)), aggregation = GroupAll(ops)),
+        QuerySpec(s"t2_$k", filter = Some(cmp("event_id", 60L + 7 * k, BinOp.GREATER_THAN)),
+          aggregation = GroupAll(ops.take(2))))
         .map(_.copy(durationMs = 600000L))
     }
     val runner = new QueryRunner(spark, new ManualClock(0))
     specs(0).foreach(s => assert(runner.register(s).isEmpty))
     runner.processBatch(events)
     runner.processBatch(events)
-    assert(runner.lastBatchJobs ===
-      Map(QueryRunner.JobKind.Shared -> 1, QueryRunner.JobKind.Grouped -> 1))
+    assert(runner.lastBatchJobs === Map(QueryRunner.JobKind.Shared -> 1,
+      QueryRunner.JobKind.Indexed -> 2, QueryRunner.JobKind.Grouped -> 1))
     val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     specs(0).foreach(s => assert(runner.kill(s.id).isDefined))
     specs(1).foreach(s => assert(runner.register(s).isEmpty))
@@ -236,6 +242,77 @@ class QueryRunnerSpec extends SparkTestBase {
     assert(runner.activeQueryIds.toSet === specs(1).map(_.id).toSet)
     assert(runner.queryStats("s1_1").get("records_seen") ===
       (1L to 100L).count(i => i % 3 != 0 && i > 35))
+    assert(runner.queryStats("e1_1").get("records_seen") === (1L to 100L).count(_ % 7 == 4))
+    assert(runner.queryStats("t2_1").get("records_seen") === (1L to 100L).count(_ > 67))
+  }
+
+  test("an indexed job computes a query's inputs only on rows that query admits") {
+    val batch = spark.range(0, 40, 1, 4).select((col("id") % 5).as("user_id"), col("id").as("v"))
+    val q = Some(Seq("q" -> (Binary(Lit(100L), Field("user_id"), BinOp.DIV): Expr)))
+    val sumQ = GroupAll(Seq(GroupOp(GroupOpType.SUM, Some("q"), "s"), GroupOp(GroupOpType.COUNT, None, "n")))
+    import BinOp._
+    // one direction, then mixed directions with the unread gap at 0: no
+    // query reads user_id = 0, where 100 / user_id divides by zero
+    Seq(Seq(("gt0", GREATER_THAN, 0L, col("user_id") > 0), ("gt2", GREATER_THAN, 2L, col("user_id") > 2)),
+        Seq(("lt0", LESS_THAN, 0L, col("user_id") < 0), ("gt0", GREATER_THAN, 0L, col("user_id") > 0))
+    ).foreach { qs =>
+      val runner = new QueryRunner(spark, new ManualClock(0))
+      qs.foreach { case (id, op, t, _) => assert(runner.register(QuerySpec(id,
+        filter = Some(Binary(Field("user_id"), Lit(t), op)), projection = q, aggregation = sumQ)).isEmpty) }
+      runner.processBatch(batch)
+      assert(runner.lastBatchJobs === Map(QueryRunner.JobKind.Indexed -> 1))
+      assert(runner.results.isEmpty, runner.results.map(_.asJson))
+      val clips = runner.finishAll().map(c => c.queryId -> parse(c.records.head)).toMap
+      qs.foreach { case (id, _, _, cond) =>
+        val want = batch.filter(cond).agg(sum(lit(100L) / col("user_id")), count(lit(1))).head()
+        val got = clips(id)
+        assert(got("n").asInstanceOf[Number].longValue === want.getLong(1), id)
+        if (want.isNullAt(0)) assert(got.get("s").forall(_ == null), s"$id: $got")
+        else {
+          val s = got("s").asInstanceOf[Double]
+          assert(math.abs(s - want.getDouble(0)) <= 1e-9 * want.getDouble(0), s"$id: $s, want ${want.get(0)}")
+        }
+      }
+    }
+  }
+
+  test("an indexed job's plan description does not grow with its literal count") {
+    import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // formatted, the form Spark renders as each SQL execution's description
+    // (the plain plan string truncates long argument lists); over a range,
+    // as a local relation's filter would be evaluated while optimizing
+    val batch = spark.range(0, 200, 1, 4).select(col("id").as("event_id"))
+    def planChars(members: Int): Int = {
+      val explained = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+      val listener = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          explained.add(qe.explainString(FormattedMode))
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      val runner = new QueryRunner(spark, new ManualClock(0))
+      (0 until members).foreach(i => runner.register(QuerySpec(s"eq$i",
+        filter = Some(Binary(Field("event_id"), Lit(i.toLong), BinOp.EQUALS)),
+        aggregation = GroupAll(Seq(GroupOp(GroupOpType.COUNT, None, "cnt"))))))
+      spark.listenerManager.register(listener)
+      try {
+        runner.processBatch(batch)
+        var prev = -1
+        var waited = 0
+        while (explained.size() != prev && waited < 10000) {
+          prev = explained.size(); Thread.sleep(200); waited += 200
+        }
+      } finally spark.listenerManager.unregister(listener)
+      assert(runner.lastBatchJobs === Map(QueryRunner.JobKind.Indexed -> 1))
+      assert(runner.finishAll().map(c => parse(c.records.head)("cnt")).count(_ == 1) ===
+        math.min(members, 200))
+      val plans = explained.asScala.filter(_.contains("multi_query_partial"))
+      assert(plans.size === 1, s"${explained.size()} executions")
+      plans.head.length
+    }
+    val small = planChars(10)
+    val large = planChars(10000)
+    assert(large <= small + 100, s"10 members: $small chars, 10,000 members: $large")
   }
 
   test("a projected input that fails on rows its filter rejects is never computed there") {
@@ -1036,12 +1113,11 @@ class QueryRunnerSpec extends SparkTestBase {
     assert(runner.sinkErrors === 1L)
   }
 
-  test("eq partitioner skips type-mismatched literals (string literal, numeric column)") {
+  test("eq partitioner compares a string literal with a long column in Spark's type") {
     val clock = new ManualClock(0)
     val runner = new QueryRunner(spark, clock)
-    // string literals against the LONG event_id column: compiled predicates
-    // coerce ("42" matches 42L); the partitioner's native lookup would not —
-    // these must take the generic path and still count correctly
+    // string literals against the LONG event_id column: Spark coerces the
+    // comparison to bigint ("42" matches 42L), and so does the index
     runner.register(QuerySpec("str_a",
       filter = Some(Binary(Field("event_id"), Lit("42"), BinOp.EQUALS)),
       aggregation = GroupAll(Seq(GroupOp(GroupOpType.COUNT, None, "cnt")))))
@@ -1049,6 +1125,7 @@ class QueryRunnerSpec extends SparkTestBase {
       filter = Some(Binary(Field("event_id"), Lit("43"), BinOp.EQUALS)),
       aggregation = GroupAll(Seq(GroupOp(GroupOpType.COUNT, None, "cnt")))))
     runner.processBatch(events)
+    assert(runner.lastBatchJobs === Map(QueryRunner.JobKind.Indexed -> 1))
     clock.advance(20000)
     val byId = runner.onTick().map(c => c.queryId -> c).toMap
     assert(parse(byId("str_a").records.head)("cnt") === 1)
@@ -1416,8 +1493,8 @@ class QueryRunnerSpec extends SparkTestBase {
     // (kind, queries, each query's matched records)
     val cases = Seq(
       (Shared, Seq(clickCountSpec("retryok", durationMs = 20000L)), Seq(33L)),
-      (Equality, Seq(eqQ("eq_c", "click"), eqQ("eq_v", "view")), Seq(33L, 67L)),
-      (Range, Seq(rangeQ("rg_gt", BinOp.GREATER_THAN), rangeQ("rg_le", BinOp.LESS_OR_EQUALS)),
+      (Indexed, Seq(eqQ("eq_c", "click"), eqQ("eq_v", "view")), Seq(33L, 67L)),
+      (Indexed, Seq(rangeQ("rg_gt", BinOp.GREATER_THAN), rangeQ("rg_le", BinOp.LESS_OR_EQUALS)),
         Seq(50L, 50L)),
       (Grouped, Seq(groupQ("gb_all", None),
         groupQ("gb_hi", Some(Binary(Field("value"), Lit(50.0), BinOp.GREATER_THAN)))),
@@ -1523,7 +1600,7 @@ class QueryRunnerSpec extends SparkTestBase {
       when(col("value") === 20.0 || col("value") === 70.0, lit(Long.MaxValue / 2 + 1))
         .otherwise(lit(1L))))
     assert(runner.lastBatchJobs ===
-      Map(QueryRunner.JobKind.Shared -> 1, QueryRunner.JobKind.Range -> 1))
+      Map(QueryRunner.JobKind.Shared -> 1, QueryRunner.JobKind.Indexed -> 1))
     val failed = runner.results.filter(_.queryId == "rbad")
     assert(failed.size === 1 && failed.head.signal.contains("FAIL"))
     assert(failed.head.meta("errors").asInstanceOf[Seq[String]]
@@ -1706,7 +1783,7 @@ class QueryRunnerSpec extends SparkTestBase {
     // the structural probe is what proves it ENGAGED (and stays
     // engaged — a silently-narrowed admission rule fails here): one
     // range job and no shared pass means all 20 rode the fold
-    assert(runner.lastBatchJobs === Map(QueryRunner.JobKind.Range -> 1),
+    assert(runner.lastBatchJobs === Map(QueryRunner.JobKind.Indexed -> 1),
       s"all 20 threshold queries must ride the bucketed fold, " +
         s"jobs ${runner.lastBatchJobs}")
     // and the answers are right: query i counts values > 4i among 1..100
@@ -1719,42 +1796,68 @@ class QueryRunnerSpec extends SparkTestBase {
   }
 
   test("range partitioner differential: random ops/thresholds/nulls/NaN vs the generic path") {
-    val s2 = spark
-    import s2.implicits._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
     val rnd = new scala.util.Random(424242L)
-    // data with nulls, NaN, -0.0, +0.0, exact-threshold hits
-    val data = ((1 to 120).map { i =>
-      (i.toLong, if (i % 11 == 0) null.asInstanceOf[java.lang.Double]
-        else if (i % 17 == 0) java.lang.Double.valueOf(Double.NaN)
-        else if (i % 23 == 0) java.lang.Double.valueOf(-0.0)
-        else java.lang.Double.valueOf((i % 40).toDouble / 2))
-    }).toDF("event_id", "value")
-    val allOps = Seq(BinOp.GREATER_THAN, BinOp.GREATER_OR_EQUALS,
-      BinOp.LESS_THAN, BinOp.LESS_OR_EQUALS)
-    val specs = (0 until 24).map { i =>
-      val t: Any = rnd.nextInt(4) match {
-        case 0 => (rnd.nextInt(40).toDouble / 2)  // exact data value
-        case 1 => 0.0
-        case 2 => rnd.nextDouble() * 20
-        case _ => rnd.nextInt(20).toLong          // integral literal, double col
-      }
-      QuerySpec(s"rd_$i",
-        filter = Some(Binary(Field("value"), Lit(t), allOps(rnd.nextInt(4)))),
-        aggregation = GroupAll(Seq(
-          GroupOp(GroupOpType.COUNT, None, "cnt"),
-          GroupOp(GroupOpType.SUM, Some("event_id"), "se"))),
-        durationMs = 600000L)
+    def nullAt(i: Int, m: Int)(v: Any): Any = if (i % m == 0) null else v
+    val decs = Seq("1", "1.000000000000000001", "0.999999999999999999", "2", "-3.5")
+      .map(new java.math.BigDecimal(_))
+    // nulls, NaN, -0.0, +0.0 and exact literal hits in every key type; a
+    // decimal(38,18) whose values differ beyond a double's precision
+    val rows = (1 to 120).map { i =>
+      val dbl = if (i % 17 == 0) Double.NaN else if (i % 23 == 0) -0.0 else (i % 40).toDouble / 2
+      Row(i.toLong, nullAt(i, 11)(dbl), nullAt(i, 19)(i % 13 - 6),
+        nullAt(i, 13)(if (i % 7 == 0) Float.NaN else if (i % 5 == 0) -0.0f else (i % 9).toFloat / 2),
+        nullAt(i, 29)(decs(i % decs.size)), nullAt(i, 31)(s"k${i % 6}"), nullAt(i, 37)(i % 3 == 0))
     }
+    val schema = StructType(Seq(StructField("event_id", LongType), StructField("value", DoubleType),
+      StructField("i", IntegerType), StructField("f", FloatType), StructField("d", DecimalType(38, 18)),
+      StructField("s", StringType), StructField("b", BooleanType)))
+    val data = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    // per key field, the literals its queries draw from, of several types
+    val pools: Seq[(String, IndexedSeq[Any])] = Seq(
+      "value" -> IndexedSeq(0.0, -0.0, Double.NaN, 7.5, 3.25, 19.5, 4L, 12L),
+      "i" -> IndexedSeq(-6, 0, 3, 6, 2, -1L, 4L),
+      "event_id" -> IndexedSeq(1L, 60L, 119L, 33L, "42", "100", "7"),
+      "f" -> IndexedSeq(0.0f, -0.0f, Float.NaN, 1.5f, 3.0f, 2.25, 4.0),
+      "d" -> (decs.map(d => d: Any) ++ Seq(1L, 2)).toIndexedSeq,
+      "s" -> IndexedSeq("k0", "k3", "k5", "zz", ""),
+      "b" -> IndexedSeq(true, false))
+    val allOps = Seq(BinOp.GREATER_THAN, BinOp.GREATER_OR_EQUALS,
+      BinOp.LESS_THAN, BinOp.LESS_OR_EQUALS, BinOp.EQUALS, BinOp.EQUALS)
+    val metrics = GroupAll(Seq(
+      GroupOp(GroupOpType.COUNT, None, "cnt"),
+      GroupOp(GroupOpType.SUM, Some("event_id"), "se"),
+      GroupOp(GroupOpType.MIN, Some("value"), "mv")))
+    val single = pools.flatMap { case (f, pool) => (0 until 10).map { j =>
+      val op = allOps(rnd.nextInt(allOps.size))
+      // an equality query need not be a GROUP(all)
+      val agg = if (op == BinOp.EQUALS && j % 3 == 0) CountDistinct(Seq("s")) else metrics
+      QuerySpec(s"rd_${f}_$j", filter = Some(Binary(Field(f), Lit(pool(rnd.nextInt(pool.size))), op)),
+        aggregation = agg, durationMs = 600000L)
+    } }
+    // two-field tuple keys, in both operand orders
+    val tuples = (0 until 6).map { j =>
+      val a = Binary(Field("s"), Lit(s"k${rnd.nextInt(6)}"), BinOp.EQUALS)
+      val b = Binary(Field("i"), Lit(rnd.nextInt(13) - 6), BinOp.EQUALS)
+      QuerySpec(s"rd_tuple_$j", filter = Some(if (j % 2 == 0) NAry(NAryOp.AND, Seq(a, b)) else Binary(b, a, BinOp.AND)),
+        aggregation = metrics, durationMs = 600000L)
+    }
+    val specs = single ++ tuples
     val clock = new ManualClock(0)
     val folded = new QueryRunner(spark, clock)
     specs.foreach(s0 => assert(folded.register(s0).isEmpty))
     folded.processBatch(data)
+    // every query rides an indexed job: no shared pass ran
+    assert(folded.lastBatchJobs.keySet === Set(QueryRunner.JobKind.Indexed), folded.lastBatchJobs)
+    assert(folded.results.isEmpty, folded.results.map(_.asJson))
     clock.advance(700000)
     val foldedById = folded.onTick().map(c => c.queryId -> c).toMap
     specs.foreach { s0 =>
       val solo = new QueryRunner(spark, new ManualClock(0))
       assert(solo.register(s0).isEmpty)
       solo.processBatch(data)
+      assert(solo.lastBatchJobs === Map(QueryRunner.JobKind.Shared -> 1))
       val want = solo.finishAll().head
       assert(foldedById(s0.id).records.map(parse) === want.records.map(parse),
         s"${s0.id} (${s0.filter}): folded=${foldedById(s0.id).records} " +
