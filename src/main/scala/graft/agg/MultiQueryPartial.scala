@@ -1,11 +1,9 @@
 package graft.agg
 
-import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.{TypeCheckResult, TypeCoercion}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{TypeCheckFailure, TypeCheckSuccess}
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, GenericInternalRow, ImplicitCastInputTypes, InterpretedUnsafeProjection, Literal, UnaryExpression, UnsafeRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, GenericInternalRow, ImplicitCastInputTypes, InterpretedUnsafeProjection, Literal, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Sum, TypedImperativeAggregate}
 import org.apache.spark.sql.catalyst.util.{MathUtils, TypeUtils}
 import org.apache.spark.sql.graft.SumBridge
@@ -27,11 +25,12 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
  * queries' own expressions, unprojected. An update reads each gate once
  * per row and an input only when a class that needs it passed its gate,
  * so an input that can fail (an ANSI division by zero) is computed only
- * on rows a reading class admits. The aggregate is never code-generated
- * (`ObjectHashAggregateExec` interprets it), so no query's literal
- * reaches generated code and a changed query set compiles nothing; its
- * children must be deterministic, as none is initialized per partition.
- * Planning and the result row grow with distinct gates plus inputs.
+ * on rows a reading class admits. The runner's batch pass
+ * ([[graft.streaming.BatchPass]]) takes the instance Spark's analyzer
+ * resolved and coerced, and calls [[update]], [[merge]] and [[eval]]
+ * itself: nothing is code-generated, so no query's literal reaches
+ * generated code and a changed query set compiles nothing. Its children
+ * must be deterministic, as none is initialized per partition.
  *
  * The metric values are exactly those of Spark's `sum(when(g, f))`,
  * `min`, `max`, `count` and `sum(when(g, 1L))`, in value and Java class:
@@ -134,14 +133,31 @@ case class MultiQueryPartial(
 
   override def createAggregationBuffer(): Array[State] = Array.tabulate(entries.length)(newState)
 
+  @transient private lazy val ungated: Boolean = gateOf.contains(-1)
+
   override def update(buf: Array[State], row: InternalRow): Array[State] = {
+    admit(row)
+    updateAdmitted(buf, row)
+  }
+
+  /** Evaluates every gate on `row`, for the [[updateAdmitted]] that
+    * follows: true when some entry admits the row. */
+  def admit(row: InternalRow): Boolean = {
     rowNo += 1
+    var any = ungated
     var g = 0
     while (g < numGates) {
       val v = gateExprs(g).eval(row)
-      gatePassed(g) = v != null && v.asInstanceOf[Boolean]
+      val passed = v != null && v.asInstanceOf[Boolean]
+      gatePassed(g) = passed
+      any ||= passed
       g += 1
     }
+    any
+  }
+
+  /** [[update]] with the gates [[admit]] evaluated on this `row`. */
+  def updateAdmitted(buf: Array[State], row: InternalRow): Array[State] = {
     var e = 0
     while (e < buf.length) {
       val gi = gateOf(e)
@@ -276,25 +292,6 @@ object MultiQueryPartial {
   /** One entry's running state: metric accumulators, or a sketch buffer. */
   final class State(val accs: Array[Acc], var sketch: AnyRef) {
     var matched: Long = 0L
-  }
-
-  /** `fn` as an aggregate Column. */
-  def column(fn: MultiQueryPartial): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(fn.toAggregateExpression())
-
-  /** The analyzed (resolved and type-coerced) aggregate in `df`'s plan —
-    * the instance that decodes `df`'s values. */
-  def in(df: DataFrame): MultiQueryPartial =
-    df.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
-      case m: MultiQueryPartial => m
-    })).head
-
-  /** `child`, evaluated by interpretation: generated code around it holds
-    * a reference to this node, not the text of `child` (its literals). */
-  final case class Interpreted(child: Expression) extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = child.dataType
-    override def eval(input: InternalRow): Any = child.eval(input)
-    override protected def withNewChildInternal(c: Expression): Interpreted = copy(child = c)
   }
 
   /** `Sum`'s own result type. */

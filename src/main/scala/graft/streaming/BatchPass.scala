@@ -1,0 +1,175 @@
+package graft.streaming
+
+import graft.agg.MultiQueryPartial
+import graft.agg.MultiQueryPartial.State
+import graft.functions.KeyIndex
+import org.apache.spark.sql.{classic, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeSet, BindReferences, Expression, RuntimeReplaceable}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.unsafe.types.UTF8String
+
+import scala.jdk.CollectionConverters._
+
+/**
+ * The runner's one Spark job per micro-batch, in the reference's shape: a
+ * filter pass per partition that tests each record against every query and
+ * emits serialized partials (FilterBolt.java:148-151, :187-199), then a
+ * combine of the partials (JoinBolt.java:154-155). [[run]] is one map-only
+ * stage over the batch — no shuffle, no cached batch, no SQL execution —
+ * whose tasks feed every row to every [[Job]]'s buffers and return each
+ * job's serialized buffers; [[Job.merge]] merges them on the driver with
+ * the aggregate's own `merge` and `eval`. What reaches the driver is
+ * O(partitions × sketch) per job, whatever the batch size.
+ */
+object BatchPass {
+
+  /** One job's share of the pass: its aggregate `fn` and `keys`, as Spark's
+    * analyzer resolved them over the batch; [[run]] binds them to its input
+    * before the tasks ship. `R` is the job's merged result. */
+  sealed abstract class Job[R] extends Serializable {
+    def fn: MultiQueryPartial
+    def keys: Seq[Expression]
+    protected def withExpressions(fn: MultiQueryPartial, keys: Seq[Expression]): Job[R]
+    /** A fresh buffer for one task's rows. */
+    def open(): Buffer
+    /** The tasks' results, merged. */
+    def merge(parts: Seq[AnyRef]): R
+
+    private[BatchPass] def bind(f: Expression => Expression): Job[R] =
+      withExpressions(f(fn).asInstanceOf[MultiQueryPartial], keys.map(f))
+    /** Serialized buffers merged into one. */
+    protected def merged(parts: Iterable[Array[Byte]]): Array[State] =
+      parts.foldLeft(fn.createAggregationBuffer())((b, p) => fn.merge(b, fn.deserialize(p)))
+    protected def value(buf: Array[State]): Array[Byte] = fn.eval(buf).asInstanceOf[Array[Byte]]
+  }
+
+  abstract class Buffer {
+    def update(row: InternalRow): Unit
+    def result: AnyRef
+  }
+
+  /** Every row into one buffer. Merged: the aggregate's value. */
+  final case class Shared(fn: MultiQueryPartial) extends Job[Array[Byte]] {
+    def keys: Seq[Expression] = Nil
+    protected def withExpressions(f: MultiQueryPartial, k: Seq[Expression]): Shared = Shared(f)
+    def open(): Buffer = new Buffer {
+      private val buf = fn.createAggregationBuffer()
+      def update(row: InternalRow): Unit = fn.update(buf, row)
+      def result: AnyRef = fn.serialize(buf)
+    }
+    def merge(parts: Seq[AnyRef]): Array[Byte] = value(merged(parts.map(_.asInstanceOf[Array[Byte]])))
+  }
+
+  /** Each row into the buffer of its `key`'s slot in `index`, one binary
+    * search per row; a row in no slot a query reads is dropped. Merged:
+    * the slots that have rows, ascending, each with the aggregate's value. */
+  final case class Indexed(fn: MultiQueryPartial, key: Expression, index: KeyIndex)
+      extends Job[IndexedSeq[(Int, Array[Byte])]] {
+    def keys: Seq[Expression] = Seq(key)
+    protected def withExpressions(f: MultiQueryPartial, k: Seq[Expression]): Indexed = Indexed(f, k.head, index)
+    def open(): Buffer = new Buffer {
+      private val bufs = new Array[Array[State]](index.top + 1)
+      def update(row: InternalRow): Unit = {
+        val k = key.eval(row)
+        val s = if (k == null) -1 else index.slot(k)
+        if (s >= 0) {
+          if (bufs(s) == null) bufs(s) = fn.createAggregationBuffer()
+          fn.update(bufs(s), row)
+        }
+      }
+      def result: AnyRef = bufs.indices.collect { case s if bufs(s) != null => s -> fn.serialize(bufs(s)) }.toArray
+    }
+    def merge(parts: Seq[AnyRef]): IndexedSeq[(Int, Array[Byte])] =
+      parts.flatMap(_.asInstanceOf[Array[(Int, Array[Byte])]]).groupMap(_._1)(_._2).toIndexedSeq
+        .sortBy(_._1).map { case (s, ps) => s -> value(merged(ps)) }
+  }
+
+  /** Each row some entry admits into the buffer of its `keys`' strings
+    * (never null), each task keeping only its `cap` smallest keys: a new key
+    * evicts the largest kept one, or is dropped when it is larger than all
+    * of them. A key that has `cap` smaller keys in one partition has at
+    * least as many in the batch, so every key among the batch's `cap`
+    * smallest is kept whole by every task, and the merge's first `cap`
+    * groups are exactly `orderBy(keys).limit(cap)` over all the groups.
+    * Merged: those groups, ascending, each with the aggregate's value. */
+  final case class Grouped(fn: MultiQueryPartial, keys: Seq[Expression], cap: Int)
+      extends Job[Seq[(Seq[String], Array[Byte])]] {
+    protected def withExpressions(f: MultiQueryPartial, k: Seq[Expression]): Grouped = Grouped(f, k, cap)
+    def open(): Buffer = new Buffer {
+      private val ks = keys.toArray
+      private val groups = new java.util.TreeMap[Array[UTF8String], Array[State]](KeyOrder)
+      private val probe = new Array[UTF8String](ks.length)
+      def update(row: InternalRow): Unit = if (fn.admit(row)) {
+        var i = 0
+        while (i < ks.length) { probe(i) = ks(i).eval(row).asInstanceOf[UTF8String]; i += 1 }
+        var buf = groups.get(probe)
+        if (buf == null && (groups.size < cap || KeyOrder.compare(probe, groups.lastKey) < 0)) {
+          if (groups.size >= cap) groups.pollLastEntry()
+          buf = fn.createAggregationBuffer()
+          groups.put(probe.map(_.clone()), buf) // the row's strings are reused
+        }
+        if (buf != null) fn.updateAdmitted(buf, row)
+      }
+      def result: AnyRef = groups.entrySet.asScala.map(e => e.getKey -> fn.serialize(e.getValue)).toArray
+    }
+    def merge(parts: Seq[AnyRef]): Seq[(Seq[String], Array[Byte])] = {
+      val all = new java.util.TreeMap[Array[UTF8String], Array[State]](KeyOrder)
+      parts.foreach(_.asInstanceOf[Array[(Array[UTF8String], Array[Byte])]].foreach { case (k, p) =>
+        all.merge(k, fn.deserialize(p), (a, b) => fn.merge(a, b))
+      })
+      all.entrySet.asScala.iterator.take(cap).map(e => (e.getKey.toSeq.map(_.toString), value(e.getValue))).toSeq
+    }
+  }
+
+  /** Key strings in Spark's string order, field by field. */
+  private object KeyOrder extends java.util.Comparator[Array[UTF8String]] with Serializable {
+    def compare(a: Array[UTF8String], b: Array[UTF8String]): Int = {
+      var i = 0
+      var c = 0
+      while (c == 0 && i < a.length) { c = a(i).compareTo(b(i)); i += 1 }
+      c
+    }
+  }
+
+  /** Runs `jobs` as ONE Spark job of one stage over the columns of `batch`
+    * they read (a column no job reads is never computed); per job, its
+    * tasks' results. */
+  def run(batch: DataFrame, jobs: Seq[Job[_]]): Seq[Seq[AnyRef]] = if (jobs.isEmpty) Nil else {
+    val reads = AttributeSet(jobs.flatMap(j => j.fn +: j.keys).flatMap(_.references))
+    val input = batch.select(batch.queryExecution.analyzed.output.filter(reads.contains)
+      .map(ColumnBridge.column): _*)
+    val output = input.queryExecution.analyzed.output
+    val bound = jobs.map(_.bind(e => BindReferences.bindReference(evaluable(e), output))).toArray
+    // the session's SQL settings reach the tasks, as in a Dataset action
+    val parts = SQLExecution.withSQLConfPropagated(input.sparkSession.asInstanceOf[classic.SparkSession]) {
+      input.queryExecution.toRdd.mapPartitions(new Task(bound)).collect()
+    }
+    jobs.indices.map(j => parts.toSeq.map(_(j)))
+  }
+
+  /** One task: every row into every job's buffer, then each job's result.
+    * A named class, not a lambda, so Spark's closure cleaner does not
+    * re-read and re-serialize it on every pass. */
+  private final class Task(jobs: Array[Job[_]]) extends (Iterator[InternalRow] => Iterator[Array[AnyRef]])
+      with Serializable {
+    def apply(rows: Iterator[InternalRow]): Iterator[Array[AnyRef]] = {
+      val bufs = jobs.map(_.open())
+      rows.foreach { row =>
+        var j = 0
+        while (j < bufs.length) { bufs(j).update(row); j += 1 }
+      }
+      Iterator.single(bufs.map(_.result))
+    }
+  }
+
+  /** `e` as a row-by-row evaluation runs it: no aliases, and runtime-
+    * replaceable nodes replaced, as the optimizer does for a planned query
+    * (the analyzed plan is the source: over a local batch, the optimizer
+    * would evaluate a projection on the driver and rename grouping keys). */
+  private def evaluable(e: Expression): Expression = {
+    val r = e.transformDown { case Alias(c, _) => c; case x: RuntimeReplaceable => x.replacement }
+    if (r.fastEquals(e)) r else evaluable(r)
+  }
+}

@@ -2,12 +2,11 @@ package graft.streaming
 
 import graft.agg._
 import graft.compile.{ExprCompiler, QueryCompiler}
-import graft.functions.{IndexSlot, KeyIndex}
+import graft.functions.KeyIndex
 import graft.model._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, StringType, StructType}
 
 import scala.collection.mutable
 
@@ -26,30 +25,36 @@ final class ManualClock(start: Long = 0L) extends Clock {
  * N forward-looking queries evaluated over ONE shared pass per micro-batch.
  *
  * Execution shape, re-expressed Spark-first from the reference's
- * FilterBolt/JoinBolt split:
+ * FilterBolt/JoinBolt split: every micro-batch is ONE Spark job of one
+ * map-only stage ([[BatchPass]]) whose tasks test each record against
+ * every job below and return serialized partials, combined on the driver
+ * — no shuffle, no cached batch, no SQL execution. A job's expressions
+ * are the ones Spark's analyzer resolves and coerces; the pass evaluates
+ * them itself.
  *
  *  - **Shared pass** (= FilterBolt partials): all active non-grouped queries
- *    become entries of ONE native aggregate over one `df.agg(...)`
- *    ([[graft.agg.MultiQueryPartial]]) — each query's filter is its
- *    entry's gate, so a 100-query workload costs ONE scan of the batch,
- *    not 100 jobs, and one aggregate column, not one per query and op.
- *    Its value is one serialized partial (sketch buffers, capped RAW
- *    records and metric accumulators), exactly the reference's `byte[]`
- *    DATA_STREAM tuples (FilterBolt.java:187-199). Spark's partial/final
- *    agg split runs inside the batch; the indexed and GROUP BY jobs over
- *    the same (cached) batch each aggregate with one too. The
- *    gates and inputs are the aggregate's own children, evaluated inside
- *    it, not projected columns: no filter literal reaches generated code,
- *    so a batch after a REGISTER or KILL compiles nothing new.
+ *    become entries of ONE [[graft.agg.MultiQueryPartial]] — each query's
+ *    filter is its entry's gate, so a 100-query workload updates one
+ *    buffer per record, not 100. Its value is one serialized partial
+ *    (sketch buffers, capped RAW records and metric accumulators), exactly
+ *    the reference's `byte[]` DATA_STREAM tuples (FilterBolt.java:187-199).
+ *    The gates and inputs are the aggregate's own children, interpreted,
+ *    so no filter literal reaches generated code and a batch after a
+ *    REGISTER or KILL compiles nothing new.
  *  - **Indexed jobs** (= the query partitioner, SimpleEqualityPartitioner):
  *    queries comparing the same key fields with literals — `field = lit`
  *    conjunctions and `field >/>=/</<= lit` GROUP(all) queries — share one
  *    job that maps each record to its slot in the index of their literals,
- *    in the type Spark compares them in ([[IndexSlot]]).
- *  - **Driver combine** (= JoinBolt): [[AggState]] merges per-batch partials
- *    across batches (`Querier.combine`, JoinBolt.java:154-155) with the
- *    aggregate's own merge, so values keep Spark's types; owns window
- *    emission + reset (JoinBolt.java:252-259), duration expiry
+ *    in the type Spark compares them in ([[KeyIndex]]), and updates that
+ *    slot's buffer.
+ *  - **Grouped jobs** (= GROUP BY fusion): queries with the same key fields
+ *    and projection share one aggregate per key; each task keeps its
+ *    `entries`-smallest keys, which keeps the batch's smallest keys exact.
+ *  - **Driver combine** (= JoinBolt): the tasks' partials merge per job
+ *    with the aggregate's own merge (`Querier.combine`,
+ *    JoinBolt.java:154-155); [[AggState]] merges per-batch partials
+ *    across batches the same way, so values keep Spark's types; owns
+ *    window emission + reset (JoinBolt.java:252-259), duration expiry
  *    (JoinBolt.java:214-233), rate-limit kills (JoinBolt.java:199-208),
  *    duplicate suppression (FilterBolt.java:117-124), and error Clips
  *    (JoinBolt.java:297-308). Driver state is O(queries × sketch), never
@@ -57,21 +62,24 @@ final class ManualClock(start: Long = 0L) extends Clock {
  *
  * Failure contract. Each micro-batch builds ONE ordered job list — the
  * shared pass, then the indexed jobs and the fused GROUP BY jobs — and
- * runs it in two phases. COLLECT: every job, and every driver-side fold
- * over its rows (an indexed job's point reads and prefix/suffix folds,
- * the grouped cap check), finishes before any query state changes.
- * A job that throws, or whose fused grouped rows hit the union cap, is
- * re-collected one query at a time: a deterministic error FAILs that one
- * query; a transient one (executor loss, fetch failure) is retried once,
- * then rethrows so the stream replays the batch — up to
- * [[QueryRunner.MaxTransientStrikes]] replays, after which the query
- * FAILs. APPLY: the merges run in list order, and one that throws FAILs
- * its query alone. So a replayed batch never merges twice.
+ * runs it in two phases. COLLECT: the pass, and every driver-side fold
+ * over its partials (an indexed job's point reads and prefix/suffix
+ * folds, the grouped cap check), finishes before any query state
+ * changes. When the pass fails each job runs alone (over a cached batch
+ * when there are several); a job that fails, cannot be planned, or whose
+ * fused grouped groups hit the union cap is re-collected one query at a
+ * time: a deterministic error FAILs that one query; a transient one
+ * (executor loss, fetch failure) is retried once, then rethrows so the
+ * stream replays the batch — up to [[QueryRunner.MaxTransientStrikes]]
+ * replays, after which the query FAILs. APPLY: the merges run in list
+ * order, and one that throws FAILs its query alone. So a replayed batch
+ * never merges twice.
  *
- * At 100 TB/1000 executors: the batch scan distributes; only O(bytes-per-
- * sketch × queries) crosses to the driver per batch. Queries prune from the
- * plan the batch after they complete (early termination, FilterBolt.java:
- * 160-163).
+ * At 100 TB/1000 executors: the batch scan distributes, one task per
+ * partition, and what reaches the driver per job is O(partitions ×
+ * sketch), as each FilterBolt sends its partial to the JoinBolt. Queries
+ * prune from the pass the batch after they complete (early termination,
+ * FilterBolt.java:160-163).
  *
  * Window semantics: processing-time, micro-batch granularity. RECORD
  * windows emit when ≥ `emitEvery` matched records have accumulated (the
@@ -133,6 +141,10 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     * generic path by design, so only a structural probe can prove they
     * engaged). */
   private[graft] var lastBatchJobs: Map[QueryRunner.JobKind.Value, Int] = Map.empty
+
+  /** The jobs the LAST batch's pass ran, unbound — a test observable for
+    * what the tasks evaluate (the pass renders no SQL plan to inspect). */
+  private[graft] var lastBatchPass: Seq[BatchPass.Job[_]] = Nil
 
   /** Set at [[processBatch]] entry; read by [[mergePartial]] for the
     * per-batch filter-latency gauge. Guarded by the runner lock. */
@@ -480,15 +492,20 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     })
   }
 
-  /** One Spark job of a micro-batch: its member queries and its kind's
-    * `collect`, which runs the job AND every driver-side fold over the
-    * collected rows, then returns one merge per member, in member order —
-    * or None when the rows cannot be trusted (a fused grouped job hit its
-    * union cap). `collect` serves any member subset: the per-query
-    * fallback is `collect(Seq(rq), df)`. A merge only mutates its query's
-    * state; it never touches the cluster. */
+  /** One job of a micro-batch: its member queries and its kind's `plan`,
+    * which gives the job's share of a batch pass over any member subset
+    * (the per-query fallback plans `Seq(rq)`). */
   private final class Job(val kind: QueryRunner.JobKind.Value, val rqs: Seq[RQ],
-                          val collect: (Seq[RQ], DataFrame) => Option[Seq[() => Unit]])
+                          val plan: (Seq[RQ], DataFrame) => Planned[_])
+
+  /** A planned job: its tasks' work, and `finish`, every driver-side fold
+    * over its merged partials, which returns one merge per member, in
+    * member order — or None when the partials cannot be trusted (a fused
+    * grouped job hit its union cap). A merge only mutates its query's
+    * state; it never touches the cluster. */
+  private final class Planned[R](val task: BatchPass.Job[R], finish: R => Option[Seq[() => Unit]]) {
+    def apply(parts: Seq[AnyRef]): Option[Seq[() => Unit]] = finish(task.merge(parts))
+  }
 
   /** Process one micro-batch: shared partial pass + driver combine + window
     * and lifecycle evaluation. Returns the Clips emitted for this batch. */
@@ -507,7 +524,7 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     // over a field list, SURVEY §4): ≥2 queries comparing the SAME key
     // fields, in the same types, with literals share ONE indexed job —
     // one binary search per record over the index of their literals,
-    // whatever the number of such queries (see collectIndexed). RAW stays
+    // whatever the number of such queries (see planIndexed). RAW stays
     // on the shared pass (per-query collect caps).
     val indexed = indexMembers(active, batch)
       .groupBy { case (_, m) => (m.fields, m.types) }
@@ -521,55 +538,55 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     // ops are gated by its OWN predicate inside the shared aggregate
     // (same conditional-aggregation trick as the ungrouped shared pass),
     // and a per-query matched count tells the driver which groups exist
-    // for which query. N same-key queries = ONE scan + ONE shuffle, where
-    // filter-partitioned jobs paid N scans. Distinct key sets still need
-    // their own job (different keys can't share a grouping).
+    // for which query. Distinct key sets still need their own job
+    // (different keys can't share a grouping).
     val groupedSigs = grouped.groupBy(rq =>
       (rq.spec.aggregation.asInstanceOf[GroupBy].fields, rq.spec.projection))
       .values.map(_.toSeq).toSeq
     import QueryRunner.JobKind._
     val jobs: Seq[Job] =
-      (if (simple.isEmpty) Nil else Seq(new Job(Shared, simple, collectShared))) ++
-        indexed.map(ms => new Job(Indexed, ms.map(_._1), collectIndexed(ms.toMap))) ++
-        groupedSigs.map(new Job(Grouped, _, collectGrouped))
+      (if (simple.isEmpty) Nil else Seq(new Job(Shared, simple, planShared))) ++
+        indexed.map(ms => new Job(Indexed, ms.map(_._1), planIndexed(ms.toMap))) ++
+        groupedSigs.map(new Job(Grouped, _, planGrouped))
     lastBatchJobs = jobs.groupBy(_.kind).map { case (k, js) => k -> js.size }
-    val needsCache = jobs.size > 1
-    val df = if (needsCache) batch.persist() else batch
+    import scala.util.control.NonFatal
+    def attempt[A](a: => A): Either[Throwable, A] = try Right(a) catch { case NonFatal(e) => Left(e) }
+    // Re-runs after a failed pass read the batch once per job or query, so
+    // with several jobs they read it cached; with one job each query's
+    // re-run reads only its own columns, so a column only a failing query
+    // reads is never computed for the others. The pass caches nothing.
+    var cached: Option[DataFrame] = None
+    def rerunInput: DataFrame =
+      if (jobs.size < 2) batch else cached.getOrElse { cached = Some(batch.persist()); cached.get }
     try {
-      // All per-batch Spark jobs launch CONCURRENTLY (the one batch scan is
-      // cached; Spark's block manager computes each partition once and the
-      // scheduler interleaves the jobs across the cluster), then the merges
-      // apply sequentially. Serial job submission would leave the cluster
-      // idle between driver combines — at 1000 executors the jobs must
-      // overlap.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.util.control.NonFatal
-      implicit val ec: scala.concurrent.ExecutionContext = QueryRunner.jobEc
-
-      // ---- Phase 1: COLLECT. Every Spark job and every driver-side fold
-      // lands before ANY query state mutates, so a transient cluster fault
-      // (executor loss, fetch failure) can rethrow here and the replayed
-      // batch can never double-merge a query whose job had already
-      // succeeded.
+      // ---- Phase 1: COLLECT. Every job runs in ONE Spark job over the
+      // batch (BatchPass), and every driver-side fold lands before ANY
+      // query state mutates, so a transient cluster fault (executor loss,
+      // fetch failure) can rethrow here and the replayed batch can never
+      // double-merge a query whose job had already succeeded.
       //
-      // Failure isolation: a multi-query job that throws (one bad spec
-      // reaching plan/analysis time, e.g. a field the batch lacks in a
-      // context validate can't see, or a fold over values its op cannot
-      // combine) is re-collected per query so the ONE broken query FAILs
-      // while every co-registered query keeps its partials — the
-      // reference FAILs the single Querier (JoinBolt.java:297-308); it
-      // never aborts the topology. Transient faults get one retry (the
-      // cluster may have recovered), then propagate so the stream's own
-      // machinery replays the batch — deregistering a long-lived query
-      // over a cluster hiccup would be wrong, and crash-looping on a
-      // deterministic error would be worse, so only recognizably-transient
-      // failures propagate.
+      // Failure isolation: a job that cannot be planned (one bad spec
+      // reaching analysis, e.g. a field the batch lacks in a context
+      // validate can't see), whose fold throws (values its op cannot
+      // combine) or whose partials cannot be trusted is re-collected per
+      // query; when the pass itself fails, each job runs alone first. So
+      // the ONE broken query FAILs while every co-registered query keeps
+      // its partials — the reference FAILs the single Querier
+      // (JoinBolt.java:297-308); it never aborts the topology. Transient
+      // faults get one retry (the cluster may have recovered), then
+      // propagate so the stream's own machinery replays the batch —
+      // deregistering a long-lived query over a cluster hiccup would be
+      // wrong, and crash-looping on a deterministic error would be worse,
+      // so only recognizably-transient failures propagate.
+      def collect(job: Job, rqs: Seq[RQ]): Option[Seq[() => Unit]] = {
+        val p = job.plan(rqs, rerunInput)
+        p(BatchPass.run(rerunInput, Seq(p.task)).head)
+      }
       def perQuery(job: Job): Seq[(RQ, Either[Throwable, () => Unit])] =
         job.rqs.map { rq =>
           // a one-query job is always trusted: only a union of several
           // queries' groups can crowd one query's groups out
-          def collectOne(): () => Unit = job.collect(Seq(rq), df).get.head
+          def collectOne(): () => Unit = collect(job, Seq(rq)).get.head
           val out: Either[Throwable, () => Unit] =
             try Right(collectOne()) catch {
               case NonFatal(e) if QueryRunner.isTransientFailure(e) =>
@@ -593,17 +610,25 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
             }
           rq -> out
         }
-      val launched = jobs.map(job => job -> Future(job.collect(job.rqs, df)))
-      val outcomes = launched.flatMap { case (job, f) =>
-        // Await inside the try; fall back AFTER it. Inside, perQuery's
-        // bounded-replay rethrow would be re-caught here and perQuery would
-        // run AGAIN in the same batch — double strikes and every member
-        // collected twice.
-        val direct = try Await.result(f, Duration.Inf) catch { case NonFatal(_) => None }
-        direct match {
-          case Some(merges) => job.rqs.zip(merges.map(Right(_)))
-          case None         => perQuery(job)
+      def trusted(job: Job, merges: Either[Throwable, Option[Seq[() => Unit]]]) = merges match {
+        case Right(Some(ms)) => job.rqs.zip(ms.map(Right(_)))
+        case _               => perQuery(job)
+      }
+      // Fall back AFTER each attempt, never inside it: inside, perQuery's
+      // bounded-replay rethrow would be re-caught and perQuery would run
+      // AGAIN in the same batch — double strikes and every member
+      // collected twice.
+      val planned = jobs.map(job => attempt(job.plan(job.rqs, batch)))
+      val tasks = planned.collect { case Right(p) => p.task }
+      lastBatchPass = tasks
+      val ran = attempt(BatchPass.run(batch, tasks)).map(_.iterator)
+      val outcomes = jobs.zip(planned).flatMap {
+        case (job, Right(p)) => ran match {
+          case Right(parts)            => trusted(job, attempt(p(parts.next())))
+          case Left(_) if tasks.size > 1 => trusted(job, attempt(collect(job, job.rqs)))
+          case Left(_)                 => perQuery(job)
         }
+        case (job, Left(_)) => perQuery(job)
       }
 
       // ---- Phase 2: APPLY. Pure driver-side merges — no cluster
@@ -625,7 +650,7 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
         case (rq, Left(e))      => failQuery(rq, e)
       }
     } finally {
-      if (needsCache) df.unpersist()
+      cached.foreach(_.unpersist())
     }
     lifecycle()
   }
@@ -633,9 +658,9 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
   /** Spec-class key for per-batch computation sharing: queries with equal
     * (filter, projection, aggregation) — duplicate registrations, the
     * common many-dashboards shape — produce IDENTICAL per-batch partials,
-    * so one set of aggregate columns serves every member (each still
+    * so one aggregate entry serves every member (each still
     * merges into its OWN cumulative state; only the batch computation is
-    * shared). RAW is excluded: its collect column depends on the query's
+    * shared). RAW is excluded: its capped collect depends on the query's
     * remaining buffer capacity, which is per-query state. */
   private def sharedClassKey(rq: RQ): Option[(Option[Expr], Option[Seq[(String, Expr)]], Aggregation)] =
     rq.spec.aggregation match {
@@ -660,19 +685,21 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     * IDENTICAL spec class share ONE entry of the job's one
     * [[MultiQueryPartial]] ([[sharedClasses]] fan-out at merge time). A
     * 1000-query workload with 7 distinct filters and ~40 distinct spec
-    * classes evaluates 7 predicates and ~40 entries per record, not 1000,
-    * and plans one aggregate column whatever the class count; the
-    * aggregate evaluates the filters itself, so none reaches generated code.
+    * classes evaluates 7 predicates and ~40 entries per record, not 1000;
+    * the aggregate evaluates the filters itself, so none reaches generated
+    * code.
     * GROUP BY queries contribute only their matched-record count here
     * (their grouped state rides the grouped jobs): the count must be
     * computed UNGROUPED — summing over the kept top-`entries` groups
     * would undercount once the key space exceeds the cap, starving
     * RECORD windows and the records_seen metric. */
-  private def collectShared(simple: Seq[RQ], df: DataFrame): Option[Seq[() => Unit]] = {
+  private def planShared(simple: Seq[RQ], df: DataFrame): Planned[_] = {
     val (classes, classOf) = sharedClasses(simple)
-    val out = new JobAggregate(df, classes, gated = true, groupOps = false).frame(df)
-    val parts = MultiQueryPartial.in(out).decode(out.collect()(0).getAs[Array[Byte]](0))
-    Some(simple.map(rq => () => mergePartial(rq, parts(classOf(rq.spec.id)))))
+    val (fn, _) = new JobAggregate(df, classes, gated = true, groupOps = false).analyzed()
+    new Planned[Array[Byte]](BatchPass.Shared(fn), value => {
+      val parts = fn.decode(value)
+      Some(simple.map(rq => () => mergePartial(rq, parts(classOf(rq.spec.id)))))
+    })
   }
 
   /** The distinct (aggregation, projection) signatures of an indexed
@@ -682,19 +709,17 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
 
   /**
    * One job for ALL indexed queries on one key (the same fields, compared
-   * in the same types): [[IndexSlot]] maps each record to its slot in the
-   * index of the queries' literals — one binary search per record,
-   * whatever the query count — records in no slot a query reads are
-   * dropped, and one groupBy(slot) computes each distinct (aggregation,
-   * projection) signature's partial ONCE, as one entry of the job's
-   * [[MultiQueryPartial]]. An equality query reads its point slot's row; a
+   * in the same types): each record's slot in the [[KeyIndex]] of the
+   * queries' literals — one binary search per record, whatever the query
+   * count — selects the one buffer it updates; records in no slot a query
+   * reads are dropped, and each distinct (aggregation, projection)
+   * signature's partial is computed ONCE per slot, as one entry of the
+   * job's [[MultiQueryPartial]]. An equality query reads its point slot; a
    * range query reads the prefix or suffix fold of the ≤ 2·literals+1
-   * rows. The slot filter is exact, so a query's inputs are computed only
-   * on records it admits, and neither the plan nor its generated code
-   * holds a literal.
+   * slots. The slot is exact, so a query's inputs are computed only on
+   * records it admits.
    */
-  private def collectIndexed(members: Map[RQ, QueryRunner.Member])(rqs: Seq[RQ],
-      df: DataFrame): Option[Seq[() => Unit]] = {
+  private def planIndexed(members: Map[RQ, QueryRunner.Member])(rqs: Seq[RQ], df: DataFrame): Planned[_] = {
     val m0 = members(rqs.head)
     val index = new KeyIndex(m0.types, rqs.map(members(_).key))
     // each query's slots, lo to hi, over the index's entries e_j:
@@ -715,14 +740,17 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     }
     val keys = m0.fields.zip(m0.types).map { case (f, t) =>
       ExprCompiler.compile(Field(f), Some(df.schema)).cast(t) }
-    val slot = ColumnBridge.column(IndexSlot(ColumnBridge.expression(
-      if (keys.size == 1) keys.head else struct(keys: _*)))(index))
     val (sigs, sigOf) = signatures(rqs)
-    val out = new JobAggregate(df, sigs, gated = false, groupOps = false)
-      .frame(df.filter(slot.isNotNull), slot)
-    val fn = MultiQueryPartial.in(out)
-    val rows = out.collect().sortBy(_.getInt(0))
-    val slots = rows.map(_.getInt(0))
+    val (fn, Seq(key)) = new JobAggregate(df, sigs, gated = false, groupOps = false)
+      .analyzed(if (keys.size == 1) keys.head else struct(keys: _*))
+    new Planned(BatchPass.Indexed(fn, key, index), readSlots(rqs, spans, fn, sigOf))
+  }
+
+  /** An indexed job's reads of its slots' `rows` (ascending): per query,
+    * its point slot or the fold of its span. */
+  private def readSlots(rqs: Seq[RQ], spans: Seq[(Int, Int)], fn: MultiQueryPartial,
+                        sigOf: Map[String, Int])(rows: IndexedSeq[(Int, Array[Byte])]): Option[Seq[() => Unit]] = {
+    val slots = rows.map(_._1).toArray
     val n = rows.length
     // each query reads the rows a to b: the first row ≥ lo to the last
     // ≤ hi (slots are distinct and sorted); None when there is none. A
@@ -738,7 +766,7 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     // far as some query reads: a fold that throws (a long SUM overflowing
     // under ANSI) then lies in a reader's own range, and the per-query
     // re-collect FAILs that query alone.
-    def buf(k: Int) = fn.deserialize(rows(k).getAs[Array[Byte]](1))
+    def buf(k: Int) = fn.deserialize(rows(k)._2)
     val (points, folded) = reads.flatten.toSet.partition(r => r._1 == r._2)
     val read = mutable.HashMap.empty[(Int, Int), IndexedSeq[MultiQueryPartial.Partial]]
     points.foreach(r => read(r) = fn.partials(buf(r._1)))
@@ -847,15 +875,15 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
 
   /** One job's [[MultiQueryPartial]]: one entry per class, in order, over
     * the classes' distinct gates (their filters when `gated`; the indexed
-    * job selects rows by slot instead) and distinct inputs,
-    * its children as they compile, unprojected: the job's generated code
-    * does not depend on the query set. With `groupOps` a GROUP BY class
+    * job selects rows by slot instead) and distinct inputs, its children
+    * as they compile, unprojected. With `groupOps` a GROUP BY class
     * carries its ops (the grouped job); without, only its matched count
     * (the shared pass). */
   private final class JobAggregate(df: DataFrame, classes: Seq[RQ], gated: Boolean,
                                    groupOps: Boolean) {
     import MultiQueryPartial._
-    import org.apache.spark.sql.catalyst.expressions.{Expression, Or}
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
     import org.apache.spark.sql.graft.ColumnBridge.{column => asColumn, expression}
     private val schema = df.schema
     private val gates = if (gated) classes.flatMap(_.spec.filter).distinct else Nil
@@ -902,25 +930,25 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
             })))
         case CountDistinct(fields, _, lgK) => Sketch(SketchPartial.Theta(lgK), compositeKey(fields))
         case d: Distribution => Sketch(SketchPartial.Kll(d.k),
-          slot(("double", src(d.field)), numeric = false)(fld(d.field).cast("double")))
+          slot(("double", src(d.field)), numeric = false)(fld(d.field).cast(DoubleType)))
         case TopK(fields, _, _, _, maxMapSize) =>
           Sketch(SketchPartial.FreqItems(maxMapSize), compositeKey(fields.map(_._1)))
       })
     }
     private val entries = classes.map(entry)
 
-    private val column: Column = MultiQueryPartial.column(MultiQueryPartial(
-      gateExprs ++ inputs, gates.size, entries,
-      df.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean))
+    private val fn = MultiQueryPartial(gateExprs ++ inputs, gates.size, entries,
+      df.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean)
 
-    /** The job over `src` (rows of the batch), grouped by `keys`. */
-    def frame(src: DataFrame, keys: Column*): DataFrame = src.groupBy(keys: _*).agg(column)
-
-    /** `src`'s rows that some class admits (all of them when a class has
-      * no filter), through an interpreted filter. */
-    def admitted(src: DataFrame): DataFrame =
-      if (classes.exists(_.spec.filter.isEmpty)) src
-      else src.filter(asColumn(Interpreted(gateExprs.reduce(Or(_, _)))))
+    /** The aggregate and `keys` as Spark's analyzer resolves and coerces
+      * them in `df.groupBy(keys).agg(<the aggregate>)`, a plan that is
+      * analyzed only, never run: the batch pass evaluates them itself. */
+    def analyzed(keys: Column*): (MultiQueryPartial, Seq[Expression]) =
+      df.groupBy(keys: _*).agg(asColumn(fn.toAggregateExpression())).queryExecution.analyzed match {
+        case a: Aggregate => (a.aggregateExpressions.flatMap(_.collectFirst {
+          case m: MultiQueryPartial => m
+        }).head, a.groupingExpressions)
+      }
   }
 
   // -------------------------------------------------------------------------
@@ -982,39 +1010,33 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
 
   /** One grouped job per GROUP BY signature (same key fields and
     * projection — callers group by that); every fused class is one entry
-    * of one [[MultiQueryPartial]] under a single groupBy over the shared
-    * cached batch, gated by the class's OWN filter, whose matched count
+    * of one [[MultiQueryPartial]] per key of the batch pass, gated by the
+    * class's OWN filter, whose matched count
     * decides which groups exist for which query. Duplicate (filter,
     * projection, aggregation) queries share one class ([[sharedClasses]]).
     * Batch-local groups cap at the sum of the classes' entries budgets in
     * key order. */
-  private def collectGrouped(rqs: Seq[RQ], df: DataFrame): Option[Seq[() => Unit]] = {
+  private def planGrouped(rqs: Seq[RQ], df: DataFrame): Planned[_] = {
     val head = rqs.head
-    val spec0 = head.spec.aggregation.asInstanceOf[GroupBy]
-    val aliases = spec0.fields.map(_._2)
-    val keyCols = spec0.fields.map { case (f, alias) =>
-      coalesce(fieldCol(head, f, df.schema).cast("string"),
-        lit(SketchAggregators.NullString)).as(alias)
+    val keyCols = head.spec.aggregation.asInstanceOf[GroupBy].fields.map { case (f, _) =>
+      coalesce(fieldCol(head, f, df.schema).cast(StringType), lit(SketchAggregators.NullString))
     }
     val (classes, classOf) = sharedClasses(rqs)
-    val job = new JobAggregate(df, classes, gated = true, groupOps = true)
     val entriesCap = QueryRunner.fusedEntriesCap(
       classes.map(_.spec.aggregation.asInstanceOf[GroupBy].entries))
-    // rows matching NO fused class never enter the groups, the cap or the
-    // shuffle (one query: the old pre-filter); the aggregate re-reads gates
-    val out = job.frame(job.admitted(df), keyCols: _*)
-    val fn = MultiQueryPartial.in(out)
-    val rows = out.orderBy(aliases.map(col): _*).limit(entriesCap).collect()
-    // Union cap hit with multiple classes: the kept smallest-keys union
-    // can CROWD OUT one query's groups with another's (a query under its
-    // own entries cap could lose groups it would have kept from its own
-    // job). Rare — the over-cap regime — so the rows are untrusted and
-    // each query re-collects alone, with its own filter and entries budget.
-    if (classes.size > 1 && rows.length >= entriesCap) None
-    else {
-      val groups = rows.map(r => (aliases.indices.map(r.getString), fn.decode(r.getAs[Array[Byte]](aliases.size))))
-      Some(rqs.map(rq => () => applyGrouped(rq, groups, classOf(rq.spec.id))))
-    }
+    val (fn, keys) = new JobAggregate(df, classes, gated = true, groupOps = true).analyzed(keyCols: _*)
+    // rows matching NO fused class never enter the groups or the cap
+    new Planned[Seq[(Seq[String], Array[Byte])]](BatchPass.Grouped(fn, keys, entriesCap), rows =>
+      // Union cap hit with multiple classes: the kept smallest-keys union
+      // can CROWD OUT one query's groups with another's (a query under its
+      // own entries cap could lose groups it would have kept from its own
+      // job). Rare — the over-cap regime — so the rows are untrusted and
+      // each query re-collects alone, with its own filter and entries budget.
+      if (classes.size > 1 && rows.length >= entriesCap) None
+      else {
+        val groups = rows.map { case (key, value) => (key, fn.decode(value)) }
+        Some(rqs.map(rq => () => applyGrouped(rq, groups, classOf(rq.spec.id))))
+      })
   }
 
   /** Merge a grouped job's decoded groups into `rq`'s groups, reading
@@ -1213,16 +1235,6 @@ object QueryRunner {
   object JobKind extends Enumeration {
     val Shared, Indexed, Grouped = Value
   }
-
-  /** Shared daemon pool for concurrent per-batch job submission (Spark's
-    * scheduler interleaves the jobs; this pool only drives collect()s). */
-  private[streaming] lazy val jobEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(8, r => {
-        val t = new Thread(r, "graft-batch-jobs")
-        t.setDaemon(true)
-        t
-      }))
 
   /** Is this failure plausibly a TRANSIENT cluster fault (shuffle fetch
     * failure, executor loss, network/disk IO, timeout) rather than a

@@ -118,10 +118,10 @@ class MultiQueryPartialSpec extends SparkTestBase {
   }
 
   private def decodeOne(out: DataFrame): IndexedSeq[Partial] =
-    MultiQueryPartial.in(out).decode(out.head().getAs[Array[Byte]](0))
+    MultiQueryPartialSpec.in(out).decode(out.head().getAs[Array[Byte]](0))
 
   test("every op equals Spark's own column, in value and Java class") {
-    val out = frame.agg(MultiQueryPartial.column(aggregate(frame)))
+    val out = frame.agg(MultiQueryPartialSpec.column(aggregate(frame)))
     val want = frame.agg(columns.head, columns.tail: _*).head().toSeq
     assertParity(flat(decodeOne(out)), want, "df.agg")
     // the cases are not vacuous: NaN, −0.0 and an all-null group occur
@@ -133,8 +133,8 @@ class MultiQueryPartialSpec extends SparkTestBase {
 
   test("grouped: every op equals Spark's own column per group") {
     val keyed = frame.withColumn("k", coalesce(col("i") % 3, lit(-1)))
-    val out = keyed.groupBy("k").agg(MultiQueryPartial.column(aggregate(keyed)))
-    val fn = MultiQueryPartial.in(out)
+    val out = keyed.groupBy("k").agg(MultiQueryPartialSpec.column(aggregate(keyed)))
+    val fn = MultiQueryPartialSpec.in(out)
     val got = out.collect().map(r => r.getInt(0) -> flat(fn.decode(r.getAs[Array[Byte]](1)))).toMap
     val want = keyed.groupBy("k").agg(columns.head, columns.tail: _*).collect()
       .map(r => r.getInt(0) -> r.toSeq.tail).toMap
@@ -144,7 +144,7 @@ class MultiQueryPartialSpec extends SparkTestBase {
 
   test("an empty batch gives Spark's empty-input values") {
     val empty = frame.filter(lit(false))
-    val out = empty.agg(MultiQueryPartial.column(aggregate(empty)))
+    val out = empty.agg(MultiQueryPartialSpec.column(aggregate(empty)))
     val want = empty.agg(columns.head, columns.tail: _*).head().toSeq
     assertParity(flat(decodeOne(out)), want, "empty")
   }
@@ -158,7 +158,7 @@ class MultiQueryPartialSpec extends SparkTestBase {
         .collect { case t: SparkThrowable if t.getCondition != null => t.getCondition }.toSet
     val fn = MultiQueryPartial(Seq(expression(col("l"))), 0,
       Seq(Entry(-1, Metrics(Seq(Metric(Op.Sum, 0))))), ansi = true)
-    val mine = intercept[Exception](df.agg(MultiQueryPartial.column(fn)).collect())
+    val mine = intercept[Exception](df.agg(MultiQueryPartialSpec.column(fn)).collect())
     val spark0 = intercept[Exception](df.agg(sum(col("l"))).collect())
     assert(conditions(spark0).contains("ARITHMETIC_OVERFLOW"), spark0)
     assert(conditions(mine).contains("ARITHMETIC_OVERFLOW"), mine)
@@ -168,10 +168,10 @@ class MultiQueryPartialSpec extends SparkTestBase {
     val df = spark.range(4).select(array(col("id")).as("a"), col("id"))
     val sumArray = MultiQueryPartial(Seq(expression(col("a"))), 0,
       Seq(Entry(-1, Metrics(Seq(Metric(Op.Sum, 0))))), ansi = true)
-    intercept[AnalysisException](df.agg(MultiQueryPartial.column(sumArray)).collect())
+    intercept[AnalysisException](df.agg(MultiQueryPartialSpec.column(sumArray)).collect())
     val thetaLong = MultiQueryPartial(Seq(expression(col("id"))), 0,
       Seq(Entry(-1, Sketch(graft.agg.SketchPartial.Theta(12), 0))), ansi = true)
-    val e = intercept[AnalysisException](df.agg(MultiQueryPartial.column(thetaLong)).collect())
+    val e = intercept[AnalysisException](df.agg(MultiQueryPartialSpec.column(thetaLong)).collect())
     assert(e.getMessage.contains("needs a string input, got bigint"), e.getMessage)
   }
 
@@ -193,4 +193,17 @@ class MultiQueryPartialSpec extends SparkTestBase {
       combine(Some(one(StringType, Op.Min, UTF8String.fromString("a"))), one(IntegerType, Op.Min, 1)))
     assert(e.getMessage.contains("cannot combine a string partial with a int one"), e.getMessage)
   }
+}
+
+object MultiQueryPartialSpec {
+  /** `fn` as an aggregate Column, for Spark to plan and run. */
+  def column(fn: MultiQueryPartial): Column =
+    org.apache.spark.sql.graft.ColumnBridge.column(fn.toAggregateExpression())
+
+  /** The analyzed (resolved and type-coerced) aggregate in `df`'s plan —
+    * the instance that decodes `df`'s values. */
+  def in(df: DataFrame): MultiQueryPartial =
+    df.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
+      case m: MultiQueryPartial => m
+    })).head
 }

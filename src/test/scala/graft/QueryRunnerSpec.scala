@@ -85,10 +85,60 @@ class QueryRunnerSpec extends SparkTestBase {
     assert(recordsOf("raw").forall(_("event_id").asInstanceOf[Number].longValue > 95))
   }
 
+  test("one Spark job of one stage per batch: no SQL execution, no cached batch") {
+    import graft.plans.Profile
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val executions = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = executions.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = executions.incrementAndGet()
+    }
+    def cmp(f: String, v: Any, op: BinOp.Value) = Some(Binary(Field(f), Lit(v), op))
+    val ops = Seq(GroupOp(GroupOpType.COUNT, None, "cnt"), GroupOp(GroupOpType.SUM, Some("value"), "sv"),
+      GroupOp(GroupOpType.MIN, Some("value"), "mn"), GroupOp(GroupOpType.AVG, Some("value"), "av"))
+    val runner = new QueryRunner(spark, new ManualClock(0))
+    Seq(
+      clickCountSpec("shared"),
+      QuerySpec("cd", aggregation = CountDistinct(Seq("user"))),
+      QuerySpec("tk", aggregation = TopK(Seq("user" -> "u"), k = 2, countName = "cnt")),
+      QuerySpec("raw", filter = cmp("event_id", 95L, BinOp.GREATER_THAN), aggregation = Raw(10)),
+      QuerySpec("eq1", filter = cmp("user", "u1", BinOp.EQUALS), aggregation = GroupAll(ops)),
+      QuerySpec("eq2", filter = cmp("user", "u2", BinOp.EQUALS), aggregation = GroupAll(ops)),
+      QuerySpec("r1", filter = cmp("value", 40.0, BinOp.LESS_THAN), aggregation = GroupAll(ops)),
+      QuerySpec("r2", filter = cmp("value", 70.0, BinOp.GREATER_THAN), aggregation = GroupAll(ops)),
+      QuerySpec("g1", filter = cmp("etype", "click", BinOp.EQUALS),
+        aggregation = GroupBy(Seq("user" -> "u"), ops)),
+      QuerySpec("g2", aggregation = GroupBy(Seq("user" -> "u"), ops)),
+      QuerySpec("g3", aggregation = GroupBy(Seq("etype" -> "e"), ops))
+    ).foreach(s => assert(runner.register(s).isEmpty))
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    spark.listenerManager.register(listener)
+    val counts = try Profile.measure(spark)(runner.processBatch(events))
+      finally spark.listenerManager.unregister(listener)
+    assert(runner.lastBatchJobs === Map(QueryRunner.JobKind.Shared -> 1,
+      QueryRunner.JobKind.Indexed -> 2, QueryRunner.JobKind.Grouped -> 2))
+    assert(counts.jobs === 1 && counts.stages === 1, counts)
+    // the pass plans no Catalyst aggregate and renders no plan description
+    assert(executions.get === 0, "processBatch ran a Dataset action")
+    assert(spark.sparkContext.getPersistentRDDs.keySet === cachedBefore)
+    assert(runner.results.isEmpty, runner.results.map(_.asJson))
+    def count(p: Int => Boolean) = (1 to 100).count(p)
+    val seen = Map("shared" -> count(_ % 3 == 0), "eq1" -> count(_ % 7 == 1), "eq2" -> count(_ % 7 == 2),
+      "r1" -> count(_ < 40), "r2" -> count(_ > 70), "g1" -> count(_ % 3 == 0), "g2" -> 100, "raw" -> 5)
+    seen.foreach { case (id, n) => assert(runner.queryStats(id).get("records_seen") === n, id) }
+    val clips = runner.finishAll().map(c => c.queryId -> c.records.map(parse)).toMap
+    assert(clips("g3").map(r => r("e") -> r("cnt")).toMap === Map("click" -> 33, "view" -> 67))
+    assert(clips("g1").map(_("cnt").asInstanceOf[Number].longValue).sum === 33)
+    assert(clips("cd").head("count") === 7)
+  }
+
   test("no plan processBatch runs holds a ScalaAggregator: partials are native aggregates") {
+    import org.apache.spark.sql.catalyst.expressions.Expression
     import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.aggregate.ScalaAggregator
+    import org.apache.spark.sql.graft.ListenerDrain
     import org.apache.spark.sql.util.QueryExecutionListener
     val plans = java.util.Collections.synchronizedList(
       new java.util.ArrayList[LogicalPlan]())
@@ -112,38 +162,25 @@ class QueryRunnerSpec extends SparkTestBase {
     spark.listenerManager.register(listener)
     try {
       runner.processBatch(events)
-      // listener events dispatch asynchronously; wait until the capture
-      // count stabilizes (two consecutive equal reads 200 ms apart)
-      var prev = -1
-      var waited = 0
-      while (plans.size() != prev && waited < 10000) {
-        prev = plans.size(); Thread.sleep(200); waited += 200
-      }
+      ListenerDrain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     assert(runner.lastBatchJobs.keySet === Set(QueryRunner.JobKind.Shared,
       QueryRunner.JobKind.Grouped))
-    val exprs = scala.collection.mutable.ArrayBuffer.empty[
-      org.apache.spark.sql.catalyst.expressions.Expression]
-    plans.asScala.foreach(_.foreach(_.expressions.foreach(_.foreach(exprs += _))))
+    // every tree the batch evaluated: any plan's, and each pass job's
+    // aggregate and keys, which its tasks run with no plan around them
+    val trees: Seq[Expression] = plans.asScala.toSeq.flatMap(_.flatMap(_.expressions)) ++
+      runner.lastBatchPass.flatMap(j => j.fn +: j.keys)
+    val exprs = trees.flatMap(_.collect { case e: Expression => e })
     assert(exprs.exists(_.isInstanceOf[graft.agg.MultiQueryPartial]),
-      "the listener captured no shared-pass plan")
+      "the batch evaluated no shared-pass aggregate")
     val udafs = exprs.collect { case a: ScalaAggregator[_, _, _] => a.nodeName }
     assert(udafs.isEmpty, s"processBatch ran udaf(Aggregator) columns: $udafs")
   }
 
   test("with all three job kinds, each Aggregate holds one MultiQueryPartial") {
-    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.util.QueryExecutionListener
-    val plans = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[LogicalPlan]())
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.analyzed)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
-        plans.add(qe.analyzed)
-    }
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
+    import org.apache.spark.unsafe.types.UTF8String
     def cmp(f: String, v: Any, op: BinOp.Value) = Some(Binary(Field(f), Lit(v), op))
     val ops = Seq(GroupOp(GroupOpType.COUNT, None, "cnt"), GroupOp(GroupOpType.SUM, Some("value"), "sv"),
       GroupOp(GroupOpType.MIN, Some("value"), "mn"), GroupOp(GroupOpType.AVG, Some("value"), "av"))
@@ -159,38 +196,75 @@ class QueryRunnerSpec extends SparkTestBase {
         aggregation = GroupBy(Seq("user" -> "u"), ops)),
       QuerySpec("g2", aggregation = GroupBy(Seq("user" -> "u"), ops))
     ).foreach(s => assert(runner.register(s).isEmpty))
-    spark.listenerManager.register(listener)
-    try {
-      runner.processBatch(events)
-      var prev = -1
-      var waited = 0
-      while (plans.size() != prev && waited < 10000) {
-        prev = plans.size(); Thread.sleep(200); waited += 200
-      }
-    } finally spark.listenerManager.unregister(listener)
+    runner.processBatch(events)
     assert(runner.lastBatchJobs.keySet === QueryRunner.JobKind.values.toSet,
       s"jobs ${runner.lastBatchJobs}")
-    val aggregates = plans.asScala.toSeq.flatMap(_.collect { case a: Aggregate => a })
-    assert(aggregates.size >= 4, s"captured ${aggregates.size} aggregates")
-    aggregates.foreach { a =>
-      val fns = a.aggregateExpressions.flatMap(_.collect { case ae: AggregateExpression => ae.aggregateFunction })
-      assert(fns.size === 1 && fns.head.isInstanceOf[graft.agg.MultiQueryPartial],
-        s"an Aggregate ran ${fns.map(_.nodeName)}")
+    // each job of the pass aggregates with its one MultiQueryPartial
+    val pass = runner.lastBatchPass
+    assert(pass.size >= 4, s"the pass ran ${pass.size} jobs")
+    val filterLiterals = Set[Any](UTF8String.fromString("click"), UTF8String.fromString("u1"),
+      UTF8String.fromString("u2"), 40.0, 70.0)
+    pass.foreach { job =>
+      val fns = (job.fn +: job.keys).flatMap(_.collect { case f: AggregateFunction => f })
+      assert(fns === Seq(job.fn), s"a job ran ${fns.map(_.nodeName)}")
       // each distinct input is one child, however many classes read it:
       // `value` as a SUM/AVG input and as a MIN input, and `user`'s key
-      val fn = fns.head.asInstanceOf[graft.agg.MultiQueryPartial]
-      assert(fn.children.size - fn.numGates <= 3, s"inputs ${fn.children.drop(fn.numGates)}")
+      assert(job.fn.children.size - job.fn.numGates <= 3, s"inputs ${job.fn.children.drop(job.fn.numGates)}")
+      // the gates reach the aggregate as its children: no key carries a
+      // query's filter literal into what the tasks evaluate per row
+      val keyLiterals = job.keys.flatMap(_.collect { case l: Literal => l.value })
+      assert(keyLiterals.filter(filterLiterals).isEmpty, s"key filter literals: $keyLiterals")
     }
-    // the gates and inputs reach the aggregate unprojected: no projection
-    // carries a query's filter literal into generated code
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.plans.logical.Project
-    val filterLiterals = Set[Any](org.apache.spark.unsafe.types.UTF8String.fromString("click"),
-      org.apache.spark.unsafe.types.UTF8String.fromString("u1"),
-      org.apache.spark.unsafe.types.UTF8String.fromString("u2"), 40.0, 70.0)
-    val projected = plans.asScala.toSeq.flatMap(_.collect { case p: Project => p })
-      .flatMap(_.projectList.flatMap(_.collect { case l: Literal => l.value }))
-    assert(projected.filter(filterLiterals).isEmpty, s"projected filter literals: $projected")
+  }
+
+  test("an indexed job's plan description does not grow with its literal count") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+    import org.apache.spark.sql.graft.ListenerDrain
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // what Spark renders for the batch: each SQL execution's formatted
+    // plan (its description), and each job's description, call sites,
+    // stage names and details and RDDs; over a range, as a local
+    // relation's filter would be evaluated while optimizing
+    val batch = spark.range(0, 200, 1, 4).select(col("id").as("event_id"))
+    def describedChars(members: Int): Int = {
+      val explained = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+      val jobs = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+      val sqlListener = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          explained.add(qe.explainString(FormattedMode))
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      val jobListener = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit = jobs.add((
+          Seq("spark.job.description", "callSite.short", "callSite.long")
+            .flatMap(k => Option(j.properties).flatMap(p => Option(p.getProperty(k)))) ++
+          j.stageInfos.flatMap(s => Seq(s.name, s.details) ++ s.rddInfos.flatMap(r => Seq(r.toString, r.callSite)))
+        ).mkString("\n"))
+      }
+      val runner = new QueryRunner(spark, new ManualClock(0))
+      (0 until members).foreach(i => runner.register(QuerySpec(s"eq$i",
+        filter = Some(Binary(Field("event_id"), Lit(i.toLong), BinOp.EQUALS)),
+        aggregation = GroupAll(Seq(GroupOp(GroupOpType.COUNT, None, "cnt"))))))
+      ListenerDrain(spark.sparkContext)
+      spark.listenerManager.register(sqlListener)
+      spark.sparkContext.addSparkListener(jobListener)
+      try {
+        runner.processBatch(batch)
+        ListenerDrain(spark.sparkContext)
+      } finally {
+        spark.sparkContext.removeSparkListener(jobListener)
+        spark.listenerManager.unregister(sqlListener)
+      }
+      assert(runner.lastBatchJobs === Map(QueryRunner.JobKind.Indexed -> 1))
+      assert(runner.finishAll().map(c => parse(c.records.head)("cnt")).count(_ == 1) ===
+        math.min(members, 200))
+      assert(jobs.size() === 1, s"${jobs.size()} jobs")
+      (explained.asScala ++ jobs.asScala).map(_.length).sum
+    }
+    val small = describedChars(10)
+    val large = describedChars(10000)
+    assert(large <= small + 100, s"10 members: $small chars, 10,000 members: $large")
   }
 
   test("a changed query set compiles no new code: KILL and re-REGISTER with new literals") {
@@ -276,45 +350,6 @@ class QueryRunnerSpec extends SparkTestBase {
     }
   }
 
-  test("an indexed job's plan description does not grow with its literal count") {
-    import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
-    import org.apache.spark.sql.util.QueryExecutionListener
-    // formatted, the form Spark renders as each SQL execution's description
-    // (the plain plan string truncates long argument lists); over a range,
-    // as a local relation's filter would be evaluated while optimizing
-    val batch = spark.range(0, 200, 1, 4).select(col("id").as("event_id"))
-    def planChars(members: Int): Int = {
-      val explained = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
-      val listener = new QueryExecutionListener {
-        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-          explained.add(qe.explainString(FormattedMode))
-        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-      }
-      val runner = new QueryRunner(spark, new ManualClock(0))
-      (0 until members).foreach(i => runner.register(QuerySpec(s"eq$i",
-        filter = Some(Binary(Field("event_id"), Lit(i.toLong), BinOp.EQUALS)),
-        aggregation = GroupAll(Seq(GroupOp(GroupOpType.COUNT, None, "cnt"))))))
-      spark.listenerManager.register(listener)
-      try {
-        runner.processBatch(batch)
-        var prev = -1
-        var waited = 0
-        while (explained.size() != prev && waited < 10000) {
-          prev = explained.size(); Thread.sleep(200); waited += 200
-        }
-      } finally spark.listenerManager.unregister(listener)
-      assert(runner.lastBatchJobs === Map(QueryRunner.JobKind.Indexed -> 1))
-      assert(runner.finishAll().map(c => parse(c.records.head)("cnt")).count(_ == 1) ===
-        math.min(members, 200))
-      val plans = explained.asScala.filter(_.contains("multi_query_partial"))
-      assert(plans.size === 1, s"${explained.size()} executions")
-      plans.head.length
-    }
-    val small = planChars(10)
-    val large = planChars(10000)
-    assert(large <= small + 100, s"10 members: $small chars, 10,000 members: $large")
-  }
-
   test("a projected input that fails on rows its filter rejects is never computed there") {
     val batch = spark.range(0, 40, 1, 4).select((col("id") % 5).as("user_id"), col("id").as("v"))
     val q = Some(Seq("q" -> (Binary(Lit(100L), Field("user_id"), BinOp.DIV): Expr)))
@@ -374,8 +409,8 @@ class QueryRunnerSpec extends SparkTestBase {
         Metric(Op.Max, 3), Metric(Op.Min, 3), Metric(Op.Sum, 4))))),
       spark.conf.get("spark.sql.ansi.enabled").toBoolean)
     val state = new GroupAllState(ops)
-    Seq(b1, b2).map(_.agg(MultiQueryPartial.column(fn))).foreach(out => state.acc.update(
-      MultiQueryPartial.in(out).decode(out.head().getAs[Array[Byte]](0)).head))
+    Seq(b1, b2).map(_.agg(MultiQueryPartialSpec.column(fn))).foreach(out => state.acc.update(
+      MultiQueryPartialSpec.in(out).decode(out.head().getAs[Array[Byte]](0)).head))
     val got = state.acc.results.map(_._2)
     def same(a: Any, b: Any): Boolean = (a, b) match {
       case (x: java.lang.Double, y: java.lang.Double) => x.isNaN && y.isNaN || x == y
@@ -1681,6 +1716,88 @@ class QueryRunnerSpec extends SparkTestBase {
     def keys(id: String) = byId(id).records.map(parse).map(_("g")).toSet
     assert(keys("hiQ") === Set("f", "g"), "high query lost its groups to the union cap")
     assert(keys("loQ") === Set("a", "b"))
+  }
+
+  test("each task keeps its smallest groups: the batch's first groups stay exact") {
+    import graft.plans.Profile
+    import QueryRunner.JobKind._
+    // four partitions whose keys interleave, 97 distinct keys against
+    // entries caps of 10 and 5 + 5
+    val batch = spark.range(0, 240, 1, 4).select(
+      format_string("k%03d", col("id") * 37 % 97).as("key"), col("id").as("v"))
+    val smallest = batch.rdd.mapPartitions(rows =>
+      Iterator.single(rows.map(_.getString(0)).toSeq.distinct.sorted.take(10))).collect()
+    assert(smallest.length === 4 && smallest.distinct.length === 4, smallest.toSeq)
+    val ops = Seq(GroupOp(GroupOpType.COUNT, None, "cnt"), GroupOp(GroupOpType.SUM, Some("v"), "sv"),
+      GroupOp(GroupOpType.MIN, Some("v"), "mn"))
+    def gb(id: String, f: Option[Expr], entries: Int) = QuerySpec(id, filter = f,
+      aggregation = GroupBy(Seq("key" -> "k"), ops, entries = entries))
+    def groups(c: Clip) = c.records.map(parse).map(r => (r("k").toString,
+      Seq("cnt", "sv", "mn").map(r(_).asInstanceOf[Number].longValue))).sortBy(_._1)
+    def spark0(df: DataFrame, n: Int) = df.groupBy("key").agg(count(lit(1)), sum("v"), min("v"))
+      .orderBy("key").limit(n).collect().map(r => (r.getString(0), Seq(r.getLong(1), r.getLong(2), r.getLong(3)))).toSeq
+    val one = new QueryRunner(spark, new ManualClock(0))
+    one.register(gb("top", None, 10))
+    one.processBatch(batch)
+    assert(groups(one.finishAll().head) === spark0(batch, 10))
+    // two classes over disjoint rows reach the union cap (10): the job
+    // re-collects per query, and each query gets what it gets alone
+    val lo = gb("lo", Some(Binary(Field("v"), Lit(120L), BinOp.LESS_THAN)), 5)
+    val hi = gb("hi", Some(Binary(Field("v"), Lit(120L), BinOp.GREATER_OR_EQUALS)), 5)
+    val fused = new QueryRunner(spark, new ManualClock(0))
+    Seq(lo, hi).foreach(q => assert(fused.register(q).isEmpty))
+    val counts = Profile.measure(spark)(fused.processBatch(batch))
+    assert(fused.lastBatchJobs === Map(Shared -> 1, Grouped -> 1))
+    assert(counts.jobs > 1, s"the union cap sent nothing back per query: $counts")
+    val got = fused.finishAll().map(c => c.queryId -> groups(c)).toMap
+    Seq(lo -> (col("v") < 120), hi -> (col("v") >= 120)).foreach { case (q, cond) =>
+      val solo = new QueryRunner(spark, new ManualClock(0))
+      solo.register(q)
+      solo.processBatch(batch)
+      assert(got(q.id) === groups(solo.finishAll().head), q.id)
+      assert(got(q.id) === spark0(batch.filter(cond), 5), q.id)
+    }
+  }
+
+  test("a deterministic fault in one grouped query FAILs it alone; every other query merges once") {
+    assume(spark.conf.get("spark.sql.ansi.enabled").toBoolean)
+    import QueryRunner.JobKind._
+    val batch = spark.range(0, 40, 1, 4).select((col("id") % 5).as("user_id"), col("id").as("v"),
+      when(col("id") % 3 === 0, "click").otherwise("view").as("etype"))
+    intercept[Exception](batch.select(lit(100L) / col("user_id")).collect()) // DIVIDE_BY_ZERO
+    val cnt = GroupOp(GroupOpType.COUNT, None, "cnt")
+    // one fused grouped job: `bad` sums 100 / user_id over every row
+    val proj = Some(Seq("e" -> Field("etype"), "v" -> Field("v"),
+      "q" -> (Binary(Lit(100L), Field("user_id"), BinOp.DIV): Expr)))
+    def eqQ(id: String, k: Long) = QuerySpec(id, filter = Some(Binary(Field("user_id"), Lit(k), BinOp.EQUALS)),
+      aggregation = GroupAll(Seq(cnt)))
+    val specs = Seq(
+      QuerySpec("all", aggregation = GroupAll(Seq(cnt))),
+      QuerySpec("clicks", filter = Some(Binary(Field("etype"), Lit("click"), BinOp.EQUALS)),
+        aggregation = GroupAll(Seq(cnt))),
+      eqQ("u1", 1L), eqQ("u2", 2L),
+      QuerySpec("good", projection = proj,
+        aggregation = GroupBy(Seq("e" -> "e"), Seq(cnt, GroupOp(GroupOpType.SUM, Some("v"), "sv")))),
+      QuerySpec("bad", projection = proj,
+        aggregation = GroupBy(Seq("e" -> "e"), Seq(cnt, GroupOp(GroupOpType.SUM, Some("q"), "sq")))))
+    val runner = new QueryRunner(spark, new ManualClock(0))
+    specs.foreach(q => assert(runner.register(q).isEmpty))
+    runner.processBatch(batch)
+    assert(runner.lastBatchJobs === Map(Shared -> 1, Indexed -> 1, Grouped -> 1))
+    val failed = runner.results
+    assert(failed.map(c => c.queryId -> c.signal) === Seq("bad" -> Some("FAIL")))
+    assert(failed.head.meta("errors").asInstanceOf[Seq[String]].exists(_.contains("batch evaluation")))
+    assert(runner.activeQueryIds === specs.map(_.id).filter(_ != "bad"))
+    val ids = 0L until 40L
+    Map("all" -> 40, "clicks" -> ids.count(_ % 3 == 0), "u1" -> ids.count(_ % 5 == 1),
+      "u2" -> ids.count(_ % 5 == 2), "good" -> 40).foreach { case (id, n) =>
+      val st = runner.queryStats(id).get
+      assert(st("batches_seen") === 1 && st("records_seen") === n, s"$id: $st")
+    }
+    val good = runner.finishAll().find(_.queryId == "good").get.records.map(parse)
+      .map(r => r("e") -> (r("cnt"), r("sv").asInstanceOf[Number].longValue)).toMap
+    val (clicks, views) = ids.partition(_ % 3 == 0)
+    assert(good === Map("click" -> (clicks.size, clicks.sum), "view" -> (views.size, views.sum)))
   }
 
   test("missing fields: filter matches nothing, group key becomes the string null") {

@@ -71,8 +71,7 @@ class ScanCountAuditSpec extends SparkTestBase {
     def read(): Unit = { spark.read.parquet(dir).count(); () }
     val sc = spark.sparkContext
     // a pool thread inherits the job group set when it is created and
-    // keeps it — as the threads SparkEntry.par2/par3 and
-    // QueryRunner.jobEc reuse do
+    // keeps it — as the threads SparkEntry.par2/par3 reuse do
     sc.setJobGroup("stale", "set before the pool thread started", interruptOnCancel = false)
     val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
     try {
