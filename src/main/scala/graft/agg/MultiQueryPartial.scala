@@ -17,9 +17,11 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
  * active query and emits one serialized partial for the combiner
  * (FilterBolt.java:148-151, :187-199). Each [[MultiQueryPartial.Entry]]
  * is one query class: a gate (a boolean child, or always), its matched
- * count, and either metric ops or one [[SketchPartial.Kind]] buffer. The
- * value is the serialized buffer (BINARY); the driver reads it back with
- * [[decode]] into one [[MultiQueryPartial.Partial]] per entry.
+ * count, and either metric ops or one [[SketchPartial.Kind]] buffer, as
+ * one [[MultiQueryPartial.State]]. The value is the serialized buffer
+ * (BINARY). One entry merge, [[MultiQueryPartial.mergeEntry]], combines
+ * the tasks' states and folds each batch's state into a query's own
+ * (the reference's `querier.combine`, JoinBolt.java:154-155).
  *
  * Children are the job's distinct gates, then its distinct inputs, as the
  * queries' own expressions, unprojected. An update reads each gate once
@@ -27,9 +29,9 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
  * so an input that can fail (an ANSI division by zero) is computed only
  * on rows a reading class admits. The runner's batch pass
  * ([[graft.streaming.BatchPass]]) takes the instance Spark's analyzer
- * resolved and coerced, and calls [[update]], [[merge]] and [[eval]]
- * itself: nothing is code-generated, so no query's literal reaches
- * generated code and a changed query set compiles nothing. Its children
+ * resolved and coerced, and calls [[update]] and [[merge]] itself:
+ * nothing is code-generated, so no query's literal reaches generated code
+ * and a changed query set compiles nothing. Its children
  * must be deterministic, as none is initialized per partition.
  *
  * The metric values are exactly those of Spark's `sum(when(g, f))`,
@@ -188,27 +190,14 @@ case class MultiQueryPartial(
   /** Folds `other` into `buf` (and returns `buf`); `other` is only read. */
   override def merge(buf: Array[State], other: Array[State]): Array[State] = {
     var e = 0
-    while (e < buf.length) {
-      val a = buf(e)
-      val b = other(e)
-      a.matched += b.matched
-      if (a.accs == null) a.sketch = kindOf(e).merge(a.sketch, b.sketch)
-      else {
-        var i = 0
-        while (i < a.accs.length) {
-          if (a.accs(i) != null) a.accs(i).merge(b.accs(i))
-          i += 1
-        }
-      }
-      e += 1
-    }
+    while (e < buf.length) { mergeEntry(buf(e), other(e), kindOf(e)); e += 1 }
     buf
   }
 
   /** The serialized buffer. A decimal SUM that overflowed raises here
     * under ANSI, as `Sum`'s final evaluation does. */
   override def eval(buf: Array[State]): Any = {
-    buf.foreach(st => if (st.accs != null) st.accs.foreach(a => if (a != null) a.check()))
+    buf.foreach(check)
     serialize(buf)
   }
 
@@ -249,13 +238,6 @@ case class MultiQueryPartial(
     }
   }
 
-  /** This aggregate's value as one [[Partial]] per entry. */
-  def decode(bytes: Array[Byte]): IndexedSeq[Partial] = partials(deserialize(bytes))
-
-  /** A buffer as one [[Partial]] per entry. */
-  def partials(buf: Array[State]): IndexedSeq[Partial] = buf.toIndexedSeq.map(st =>
-    Partial(st.matched, Option(st.accs).fold(IndexedSeq.empty[Acc])(_.toIndexedSeq), st.sketch))
-
   override def withNewMutableAggBufferOffset(n: Int): MultiQueryPartial =
     copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): MultiQueryPartial =
@@ -282,14 +264,11 @@ object MultiQueryPartial {
   /** One query class: gate child `gate` (−1: every row) and its part. */
   final case class Entry(gate: Int, part: Part)
 
-  /** One entry's per-batch partial: its matched count (COUNT's value is
+  /** One entry's running state: its matched count (COUNT's value is
     * `sum(when(g, 1L))`: null when 0), and per metric op its accumulator
-    * (null for COUNT), or instead the sketch buffer ([[ThetaBuf]],
-    * [[KllBuf]], [[FreqItemsBuf]] or [[SketchPartial.CappedBuf]]). Read
-    * only: [[combine]] folds accumulators into fresh ones. */
-  final case class Partial(matched: Long, accs: IndexedSeq[Acc], sketch: AnyRef)
-
-  /** One entry's running state: metric accumulators, or a sketch buffer. */
+    * (null for COUNT, and in a query's state until a partial has inputs), or
+    * instead the sketch buffer ([[ThetaBuf]], [[KllBuf]], [[FreqItemsBuf]]
+    * or [[SketchPartial.CappedBuf]]). */
   final class State(val accs: Array[Acc], var sketch: AnyRef) {
     var matched: Long = 0L
   }
@@ -312,21 +291,46 @@ object MultiQueryPartial {
     () => new Extreme(dt, ord, min, io)
   }
 
-  /** The state `a` (none yet: empty) and `b` folded into a fresh
-    * accumulator (neither changes), as one aggregate over both partials'
-    * rows: the runner's cross-batch combine. Partials of differing input
-    * types (a batch schema that changed) fold in their wider numeric type,
-    * cast as Spark casts; any other pair raises. A decimal SUM that
-    * overflowed raises here under ANSI. */
-  def combine(a: Option[Acc], b: Acc): Acc = {
-    val dt = a.fold(b.dataType)(x => (x.dataType, b.dataType) match {
-      case (x, y) if x == y => x
-      case (x: NumericType, y: NumericType) => TypeCoercion.findWiderTypeForTwo(x, y).get
-      case (x, y) => throw new IllegalArgumentException(
-        s"cannot combine a ${x.simpleString} partial with a ${y.simpleString} one")
-    })
-    val c = b.at(dt)
-    (a.toSeq :+ b).foreach(p => c.merge(if (p.dataType == dt) p else {
+  /** Folds entry state `b` into `a`, reading `b` only: the one entry merge,
+    * of the tasks' states in [[MultiQueryPartial.merge]] and of a batch's
+    * state into a query's own. `kind` is the entry's sketch kind (unused
+    * for metrics); a `b` with no sketch and no ops (a full RAW query's
+    * matched count) adds its count alone, and an accumulator of `b` with
+    * no inputs adds nothing. An accumulator `a` lacks (a query's first
+    * partial) starts as a copy of `b`'s; one whose input type differs from
+    * `b`'s (a batch schema that changed) becomes a fresh one folding both
+    * in their wider numeric type, cast as Spark casts; any other pair
+    * raises. */
+  def mergeEntry(a: State, b: State, kind: SketchPartial.Kind[AnyRef]): Unit = {
+    a.matched += b.matched
+    if (b.accs == null) a.sketch = kind.merge(a.sketch, b.sketch)
+    else {
+      var i = 0
+      while (i < b.accs.length) {
+        val y = b.accs(i)
+        if (y != null && y.n > 0) {
+          val x = a.accs(i)
+          if (x != null && x.dataType == y.dataType) x.merge(y)
+          else a.accs(i) = widened(x, y)
+        }
+        i += 1
+      }
+    }
+  }
+
+  /** Raises where a value would: a decimal SUM that overflowed, under ANSI. */
+  def check(st: State): Unit = if (st.accs != null) st.accs.foreach(a => if (a != null) a.check())
+
+  /** `x` (null: none) and `y` folded into a fresh accumulator of their
+    * wider type; neither changes. */
+  private def widened(x: Acc, y: Acc): Acc = {
+    val dt = if (x == null) y.dataType else (x.dataType, y.dataType) match {
+      case (p: NumericType, q: NumericType) => TypeCoercion.findWiderTypeForTwo(p, q).get
+      case (p, q) => throw new IllegalArgumentException(
+        s"cannot combine a ${p.simpleString} partial with a ${q.simpleString} one")
+    }
+    val c = y.at(dt)
+    (Option(x).toSeq :+ y).foreach(p => c.merge(if (p.dataType == dt) p else {
       val q = p.at(dt)
       if (p.n > 0) {
         val v = Cast(Literal(p.result, p.dataType), q.dataType).eval()
@@ -336,7 +340,6 @@ object MultiQueryPartial {
       }
       q
     }))
-    c.check()
     c
   }
 

@@ -190,7 +190,7 @@ final class ThetaBuf(lgK0: Int) extends Serializable {
 }
 
 // (Estimation detail — estimate/bounds/isEstimation — surfaces through the
-// runner's Clip metadata: CountDistinctState.metaEntries in AggState.scala.)
+// runner's Clip metadata: AggState.metaEntries in AggState.scala.)
 
 // ---------------------------------------------------------------------------
 // DISTRIBUTION — KLL doubles sketch; QUANTILE / PMF / CDF result shapes

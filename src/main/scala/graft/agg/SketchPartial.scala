@@ -20,8 +20,9 @@ import java.nio.charset.StandardCharsets.UTF_8
  * is. The partial kinds emit that buffer's serialized bytes — the
  * reference's `byte[]` partial that the combiner keeps merging
  * (FilterBolt.java:187-199 → JoinBolt.java:154-155). The bytes are exactly
- * [[BufSerde]]`.ser` of the buffer, so the driver's `mergePartial`, the
- * finishing kinds and every stored sketch read them unchanged. The
+ * [[BufSerde]]`.ser` of the buffer, so the finishing kinds and every
+ * stored sketch read them unchanged; the runner's pass merges the buffers
+ * themselves, with each kind's `merge`, into a query's state. The
  * finishing kinds emit the finished result (an estimate, distribution rows
  * or top-k rows) through the finish functions in [[SketchAggregators]],
  * and take either raw input or those bytes: a BINARY input row is a
@@ -180,11 +181,12 @@ object SketchPartial {
     def zero(): CappedBuf = new CappedBuf
     def update(b: CappedBuf, v: Any): Unit =
       if (b.n < cap) { b.n += 1; b.items = v.toString :: b.items }
-    /** `a` keeps all its records; `b` fills the room left under the cap. */
+    /** `a` keeps all its records, then `b`'s earliest fill the room left
+      * under the cap: the records stay in arrival order, `a`'s first. */
     def merge(a: CappedBuf, b: CappedBuf): CappedBuf = {
-      val keep = math.max(0, cap - a.n)
-      a.n += math.min(b.n, keep)
-      a.items = a.items ++ b.items.take(keep)
+      val take = math.min(b.n, math.max(0, cap - a.n))
+      a.items = b.items.drop(b.n - take) ::: a.items
+      a.n += take
       a
     }
     def serialize(b: CappedBuf): Array[Byte] = {

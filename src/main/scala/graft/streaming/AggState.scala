@@ -1,159 +1,136 @@
 package graft.streaming
 
 import graft.agg._
+import graft.agg.MultiQueryPartial.{Acc, State}
 import graft.model._
 
 import scala.collection.mutable
 
 /**
- * Driver-held, mergeable per-query aggregation state — the combiner half of
- * the two-phase contract (reference Querier Mode.ALL, JoinBolt.java:147-164).
- * Each micro-batch contributes one partial (serialized sketch bytes, capped
- * record lists, or additive metric rows); state merges them and can finish
- * to result records (JSON object strings) at window emits or query end.
+ * One query's driver-held state — the combiner half of the two-phase
+ * contract (reference Querier Mode.ALL, JoinBolt.java:147-164): its
+ * aggregation's entry state, one [[MultiQueryPartial.State]], or for GROUP
+ * BY a sorted map of them by group key. Each batch's state for the query's
+ * class folds in through [[MultiQueryPartial.mergeEntry]], the entry merge
+ * that combines the tasks' states, so a value keeps the type, ordering and
+ * overflow rule of one Spark aggregate over every batch. The state is
+ * built from the spec alone and only reads a batch's state, which the
+ * members of a class share. It finishes to result records (JSON object
+ * strings) at window emits or query end.
  *
- * Memory: every variant is bounded — O(sketch) or O(cap/entries) — never
- * O(stream).
+ * Memory: O(sketch) or O(cap/entries), never O(stream).
  */
-sealed trait AggState {
-  /** Result records as JSON object strings. */
-  def finishRecords(): Seq[String]
-  /** Drop accumulated state (tumbling-window emit; additive windows skip). */
-  def reset(): Unit
-  /** Extra result metadata (e.g. sketch estimation info). */
-  def metaEntries: Map[String, Any] = Map.empty
-}
+final class AggState(spec: QuerySpec) {
+  import AggState._
 
-/** RAW: capped list of pre-rendered JSON records. */
-final class RawState(cap: Int) extends AggState {
-  private val buf = mutable.ArrayBuffer.empty[String]
-  def remaining: Int = cap - buf.size
-  def add(records: Seq[String]): Unit =
-    buf ++= records.take(math.max(0, cap - buf.size))
-  def size: Int = buf.size
-  def isFull: Boolean = buf.size >= cap
-  def finishRecords(): Seq[String] = buf.toSeq
-  def reset(): Unit = buf.clear()
-}
+  /** The entry's sketch kind (RAW's over the whole cap); null for metrics. */
+  private val kind: SketchPartial.Kind[AnyRef] = (spec.aggregation match {
+    case _: Raw                => SketchPartial.Capped(rawCap(spec))
+    case cd: CountDistinct     => SketchPartial.Theta(cd.lgK)
+    case d: Distribution       => SketchPartial.Kll(d.k)
+    case tk: TopK              => SketchPartial.FreqItems(tk.maxMapSize)
+    case _: GroupAll | _: GroupBy => null
+  }).asInstanceOf[SketchPartial.Kind[AnyRef]]
 
-/** GROUP metric accumulator: per GroupOp, the batches' partial
-  * accumulators folded by [[MultiQueryPartial.combine]], so a value keeps
-  * the type, ordering and overflow rule of one Spark aggregate over every
-  * batch. COUNT is the matched count; AVG divides its sum at finish. */
-final class MetricsAcc(ops: Seq[GroupOp]) {
-  private var matched = 0L
-  private val acc = new Array[MultiQueryPartial.Acc](ops.size)
-
-  /** Folds one batch's partial in; raises when a value cannot combine
-    * with the state's, which FAILs the query alone. */
-  def update(p: MultiQueryPartial.Partial): Unit = {
-    matched += p.matched
-    p.accs.indices.foreach { i =>
-      val a = p.accs(i)
-      if (a != null && a.n > 0)
-        acc(i) = MultiQueryPartial.combine(Option(acc(i)), a)
-    }
+  private def fresh(): State = spec.aggregation match {
+    case GroupAll(ops)      => new State(new Array[Acc](ops.size), null)
+    case GroupBy(_, ops, _) => new State(new Array[Acc](ops.size), null)
+    case _                  => new State(null, kind.zero())
   }
 
-  def results: Seq[(String, Any)] = ops.indices.map { i =>
+  /** The ungrouped state (unused for GROUP BY). */
+  private[graft] var entry: State = fresh()
+  private val groups = mutable.SortedMap.empty[Seq[String], State](
+    Ordering.Implicits.seqOrdering[Seq, String])
+
+  /** Folds one batch's state for the query's class in; raises when a
+    * value cannot combine with the state's, which FAILs the query alone. */
+  def merge(p: State): Unit = into(entry, p)
+
+  /** [[merge]] for the group `key`. */
+  def mergeGroup(key: Seq[String], p: State): Unit = into(groups.getOrElseUpdate(key, fresh()), p)
+
+  private def into(st: State, p: State): Unit = {
+    MultiQueryPartial.mergeEntry(st, p, kind)
+    MultiQueryPartial.check(st)
+  }
+
+  private def records: SketchPartial.CappedBuf = entry.sketch.asInstanceOf[SketchPartial.CappedBuf]
+  /** RAW: the records still to collect. */
+  def remaining: Int = rawCap(spec) - records.n
+  /** A RAW query whose buffer holds its cap. */
+  def isFull: Boolean = spec.aggregation.isInstanceOf[Raw] && remaining <= 0
+
+  /** Result records as JSON object strings. */
+  def finishRecords(): Seq[String] = spec.aggregation match {
+    case _: Raw => records.records
+    case GroupAll(ops) => Seq(Json.obj(metrics(ops, entry): _*))
+    case GroupBy(fields, ops, entries) =>
+      // key-tuple → metrics, capped at `entries` (smallest keys kept —
+      // deterministic deviation from the reference's Tuple-sketch sampling)
+      while (groups.size > entries) groups.remove(groups.lastKey)
+      groups.map { case (key, st) => Json.obj(fields.map(_._2).zip(key) ++ metrics(ops, st): _*) }.toSeq
+    case cd: CountDistinct =>
+      Seq(Json.obj(cd.name -> SketchAggregators.thetaEstimate(entry.sketch.asInstanceOf[ThetaBuf])))
+    case d: Distribution =>
+      SketchAggregators.distRows(entry.sketch.asInstanceOf[KllBuf], d.dtype.toString, d.points,
+        d.numPoints.getOrElse(0)).map { r =>
+        d.dtype match {
+          case DistributionType.QUANTILE =>
+            Json.obj("Quantile" -> r.quantile, "Value" -> r.value)
+          case _ =>
+            Json.obj("Range" -> r.range, "Count" -> r.count, "Probability" -> r.probability)
+        }
+      }
+    case tk: TopK =>
+      SketchAggregators.topKRows(entry.sketch.asInstanceOf[FreqItemsBuf], tk.k,
+        tk.threshold.getOrElse(0L)).map { row =>
+        val keys = graft.compile.CompositeKeys.parse(row.key)
+        Json.obj(tk.fields.map(_._2).zip(keys) :+ (tk.countName -> row.count): _*)
+      }
+  }
+
+  /** Drops the accumulated state (tumbling-window emit; additive windows skip). */
+  def reset(): Unit = { entry = fresh(); groups.clear() }
+
+  /** Extra result metadata: COUNT_DISTINCT's estimation info. */
+  def metaEntries: Map[String, Any] = spec.aggregation match {
+    case _: CountDistinct =>
+      val s = entry.sketch.asInstanceOf[ThetaBuf].result
+      Map("estimation" -> Map(
+        "estimate" -> s.getEstimate,
+        "lower_bound_2sd" -> s.getLowerBound(2),
+        "upper_bound_2sd" -> s.getUpperBound(2),
+        "was_estimated" -> s.isEstimationMode))
+    case _ => Map.empty
+  }
+}
+
+object AggState {
+  /** GROUP metrics of one entry state, named: COUNT is the matched count;
+    * AVG divides its sum at finish. */
+  private[graft] def metrics(ops: Seq[GroupOp], st: State): Seq[(String, Any)] = ops.indices.map { i =>
     import GroupOpType._
-    val a = acc(i)
+    val a = st.accs(i)
     ops(i).name -> (ops(i).op match {
-      case COUNT          => matched
+      case COUNT          => st.matched
       case COUNT_FIELD    => if (a == null) 0L else a.n
       case _ if a == null => null
       case AVG => a.value match { case s: Number => s.doubleValue / a.n; case _ => null }
       case _   => a.value
     })
   }
-}
 
-/** GROUP(all): one record of named metrics. */
-final class GroupAllState(ops: Seq[GroupOp]) extends AggState {
-  var acc = new MetricsAcc(ops)
-  def finishRecords(): Seq[String] = Seq(Json.obj(acc.results: _*))
-  def reset(): Unit = acc = new MetricsAcc(ops)
-}
-
-/** GROUP BY: key-tuple → metrics, capped at `entries` (smallest keys kept —
-  * deterministic deviation from the reference's Tuple-sketch sampling). */
-final class GroupByState(fields: Seq[(String, String)], ops: Seq[GroupOp],
-                         entries: Int) extends AggState {
-  val groups = mutable.SortedMap.empty[Seq[String], MetricsAcc](
-    Ordering.Implicits.seqOrdering[Seq, String])
-  def accFor(key: Seq[String]): MetricsAcc =
-    groups.getOrElseUpdate(key, new MetricsAcc(ops))
-  private def cap(): Unit =
-    while (groups.size > entries) groups.remove(groups.lastKey)
-  def finishRecords(): Seq[String] = {
-    cap()
-    groups.map { case (key, m) =>
-      val keyFields = fields.map(_._2).zip(key)
-      Json.obj(keyFields ++ m.results: _*)
-    }.toSeq
-  }
-  def reset(): Unit = groups.clear()
-}
-
-/** COUNT_DISTINCT: Theta sketch buffer + estimation metadata. */
-final class CountDistinctState(spec: CountDistinct) extends AggState {
-  var buf = new ThetaBuf(spec.lgK)
-  def finishRecords(): Seq[String] =
-    Seq(Json.obj(spec.name -> SketchAggregators.thetaEstimate(buf)))
-  override def metaEntries: Map[String, Any] = {
-    val s = buf.result
-    Map("estimation" -> Map(
-      "estimate" -> s.getEstimate,
-      "lower_bound_2sd" -> s.getLowerBound(2),
-      "upper_bound_2sd" -> s.getUpperBound(2),
-      "was_estimated" -> s.isEstimationMode))
-  }
-  def reset(): Unit = buf = new ThetaBuf(spec.lgK)
-}
-
-/** DISTRIBUTION: KLL buffer; finishes through the same function as the
-  * batch aggregate ([[SketchAggregators.distRows]]). */
-final class DistributionState(spec: Distribution) extends AggState {
-  var buf = new KllBuf(spec.k)
-  def finishRecords(): Seq[String] =
-    SketchAggregators.distRows(buf, spec.dtype.toString, spec.points,
-      spec.numPoints.getOrElse(0)).map { r =>
-      spec.dtype match {
-        case DistributionType.QUANTILE =>
-          Json.obj("Quantile" -> r.quantile, "Value" -> r.value)
-        case _ =>
-          Json.obj("Range" -> r.range, "Count" -> r.count, "Probability" -> r.probability)
-      }
-    }
-  def reset(): Unit = buf = new KllBuf(spec.k)
-}
-
-/** TOP_K: FrequentItems buffer; finishes through the same function as the
-  * batch aggregate ([[SketchAggregators.topKRows]]). */
-final class TopKState(spec: TopK) extends AggState {
-  var buf = new FreqItemsBuf(spec.maxMapSize)
-  def finishRecords(): Seq[String] =
-    SketchAggregators.topKRows(buf, spec.k, spec.threshold.getOrElse(0L)).map { row =>
-      val keys = graft.compile.CompositeKeys.parse(row.key)
-      val keyFields = spec.fields.map(_._2).zip(keys)
-      Json.obj(keyFields :+ (spec.countName -> row.count): _*)
-    }
-  def reset(): Unit = buf = new FreqItemsBuf(spec.maxMapSize)
-}
-
-object AggState {
-  def forSpec(agg: Aggregation): AggState = forQuery(QuerySpec("_", aggregation = agg))
-
-  /** Window-aware state: a RAW RECORD window `every N include first M` with
-    * M < N caps each window's collected records at M exactly — the finest
-    * granularity the reference's include-first surface offers. Other
-    * aggregations and TIME include are gated per batch by the runner
-    * (QueryRunner.includeOpenNow — batch-granularity, the coalescing
-    * deviation of SURVEY §7.3). M == N is the plain sliding window: no
-    * cap, so the per-batch coalesced emit keeps every matched record. */
   /** The effective RAW take-n cap for a spec — shared by the driver-held
-    * [[RawState]] and the transformWithState twin ([[RawTws]]) so the
-    * two backends agree on the window-include interaction. */
+    * state and the transformWithState twin ([[RawTws]]) so the two
+    * backends agree on the window-include interaction. A RAW RECORD window
+    * `every N include first M` with M < N caps each window's collected
+    * records at M exactly — the finest granularity the reference's
+    * include-first surface offers. Other aggregations and TIME include are
+    * gated per batch by the runner (QueryRunner.includeOpenNow —
+    * batch-granularity, the coalescing deviation of SURVEY §7.3). M == N
+    * is the plain sliding window: no cap, so the per-batch coalesced emit
+    * keeps every matched record. */
   def rawCap(spec: QuerySpec): Int = spec.aggregation match {
     case Raw(size) => spec.window match {
       case Some(w) if w.emitUnit == WindowUnit.RECORD &&
@@ -163,14 +140,5 @@ object AggState {
       case _ => size
     }
     case _ => throw new IllegalArgumentException(s"not a RAW spec: ${spec.id}")
-  }
-
-  def forQuery(spec: QuerySpec): AggState = spec.aggregation match {
-    case _: Raw => new RawState(rawCap(spec))
-    case GroupAll(ops)        => new GroupAllState(ops)
-    case GroupBy(f, ops, e)   => new GroupByState(f, ops, e)
-    case cd: CountDistinct    => new CountDistinctState(cd)
-    case d: Distribution      => new DistributionState(d)
-    case tk: TopK             => new TopKState(tk)
   }
 }

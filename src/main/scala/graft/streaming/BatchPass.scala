@@ -3,6 +3,7 @@ package graft.streaming
 import graft.agg.MultiQueryPartial
 import graft.agg.MultiQueryPartial.State
 import graft.functions.KeyIndex
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{classic, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeSet, BindReferences, Expression, RuntimeReplaceable}
@@ -20,8 +21,9 @@ import scala.jdk.CollectionConverters._
  * stage over the batch — no shuffle, no cached batch, no SQL execution —
  * whose tasks feed every row to every [[Job]]'s buffers and return each
  * job's serialized buffers; [[Job.merge]] merges them on the driver with
- * the aggregate's own `merge` and `eval`. What reaches the driver is
- * O(partitions × sketch) per job, whatever the batch size.
+ * the aggregate's own `merge`, into the buffers the runner folds into its
+ * queries' states. What reaches the driver is O(partitions × sketch) per
+ * job, whatever the batch size.
  */
 object BatchPass {
 
@@ -34,15 +36,16 @@ object BatchPass {
     protected def withExpressions(fn: MultiQueryPartial, keys: Seq[Expression]): Job[R]
     /** A fresh buffer for one task's rows. */
     def open(): Buffer
-    /** The tasks' results, merged. */
+    /** The tasks' results, merged. A decimal SUM that overflowed raises
+      * here under ANSI, as the aggregate's `eval` does. */
     def merge(parts: Seq[AnyRef]): R
 
     private[BatchPass] def bind(f: Expression => Expression): Job[R] =
       withExpressions(f(fn).asInstanceOf[MultiQueryPartial], keys.map(f))
-    /** Serialized buffers merged into one. */
+    /** Serialized buffers merged into one, checked. */
     protected def merged(parts: Iterable[Array[Byte]]): Array[State] =
-      parts.foldLeft(fn.createAggregationBuffer())((b, p) => fn.merge(b, fn.deserialize(p)))
-    protected def value(buf: Array[State]): Array[Byte] = fn.eval(buf).asInstanceOf[Array[Byte]]
+      checked(parts.foldLeft(fn.createAggregationBuffer())((b, p) => fn.merge(b, fn.deserialize(p))))
+    protected def checked(buf: Array[State]): Array[State] = { buf.foreach(MultiQueryPartial.check); buf }
   }
 
   abstract class Buffer {
@@ -50,8 +53,8 @@ object BatchPass {
     def result: AnyRef
   }
 
-  /** Every row into one buffer. Merged: the aggregate's value. */
-  final case class Shared(fn: MultiQueryPartial) extends Job[Array[Byte]] {
+  /** Every row into one buffer. Merged: that buffer. */
+  final case class Shared(fn: MultiQueryPartial) extends Job[Array[State]] {
     def keys: Seq[Expression] = Nil
     protected def withExpressions(f: MultiQueryPartial, k: Seq[Expression]): Shared = Shared(f)
     def open(): Buffer = new Buffer {
@@ -59,14 +62,14 @@ object BatchPass {
       def update(row: InternalRow): Unit = fn.update(buf, row)
       def result: AnyRef = fn.serialize(buf)
     }
-    def merge(parts: Seq[AnyRef]): Array[Byte] = value(merged(parts.map(_.asInstanceOf[Array[Byte]])))
+    def merge(parts: Seq[AnyRef]): Array[State] = merged(parts.map(_.asInstanceOf[Array[Byte]]))
   }
 
   /** Each row into the buffer of its `key`'s slot in `index`, one binary
     * search per row; a row in no slot a query reads is dropped. Merged:
-    * the slots that have rows, ascending, each with the aggregate's value. */
+    * the slots that have rows, ascending, each with its buffer. */
   final case class Indexed(fn: MultiQueryPartial, key: Expression, index: KeyIndex)
-      extends Job[IndexedSeq[(Int, Array[Byte])]] {
+      extends Job[IndexedSeq[(Int, Array[State])]] {
     def keys: Seq[Expression] = Seq(key)
     protected def withExpressions(f: MultiQueryPartial, k: Seq[Expression]): Indexed = Indexed(f, k.head, index)
     def open(): Buffer = new Buffer {
@@ -81,9 +84,9 @@ object BatchPass {
       }
       def result: AnyRef = bufs.indices.collect { case s if bufs(s) != null => s -> fn.serialize(bufs(s)) }.toArray
     }
-    def merge(parts: Seq[AnyRef]): IndexedSeq[(Int, Array[Byte])] =
+    def merge(parts: Seq[AnyRef]): IndexedSeq[(Int, Array[State])] =
       parts.flatMap(_.asInstanceOf[Array[(Int, Array[Byte])]]).groupMap(_._1)(_._2).toIndexedSeq
-        .sortBy(_._1).map { case (s, ps) => s -> value(merged(ps)) }
+        .sortBy(_._1).map { case (s, ps) => s -> merged(ps) }
   }
 
   /** Each row some entry admits into the buffer of its `keys`' strings
@@ -93,9 +96,9 @@ object BatchPass {
     * least as many in the batch, so every key among the batch's `cap`
     * smallest is kept whole by every task, and the merge's first `cap`
     * groups are exactly `orderBy(keys).limit(cap)` over all the groups.
-    * Merged: those groups, ascending, each with the aggregate's value. */
+    * Merged: those groups, ascending, each with its buffer. */
   final case class Grouped(fn: MultiQueryPartial, keys: Seq[Expression], cap: Int)
-      extends Job[Seq[(Seq[String], Array[Byte])]] {
+      extends Job[Seq[(Seq[String], Array[State])]] {
     protected def withExpressions(f: MultiQueryPartial, k: Seq[Expression]): Grouped = Grouped(f, k, cap)
     def open(): Buffer = new Buffer {
       private val ks = keys.toArray
@@ -114,12 +117,12 @@ object BatchPass {
       }
       def result: AnyRef = groups.entrySet.asScala.map(e => e.getKey -> fn.serialize(e.getValue)).toArray
     }
-    def merge(parts: Seq[AnyRef]): Seq[(Seq[String], Array[Byte])] = {
+    def merge(parts: Seq[AnyRef]): Seq[(Seq[String], Array[State])] = {
       val all = new java.util.TreeMap[Array[UTF8String], Array[State]](KeyOrder)
       parts.foreach(_.asInstanceOf[Array[(Array[UTF8String], Array[Byte])]].foreach { case (k, p) =>
         all.merge(k, fn.deserialize(p), (a, b) => fn.merge(a, b))
       })
-      all.entrySet.asScala.iterator.take(cap).map(e => (e.getKey.toSeq.map(_.toString), value(e.getValue))).toSeq
+      all.entrySet.asScala.iterator.take(cap).map(e => (e.getKey.toSeq.map(_.toString), checked(e.getValue))).toSeq
     }
   }
 
@@ -142,25 +145,27 @@ object BatchPass {
       .map(ColumnBridge.column): _*)
     val output = input.queryExecution.analyzed.output
     val bound = jobs.map(_.bind(e => BindReferences.bindReference(evaluable(e), output))).toArray
+    val rdd = input.queryExecution.toRdd
+    val parts = new Array[Array[AnyRef]](rdd.partitions.length)
     // the session's SQL settings reach the tasks, as in a Dataset action
-    val parts = SQLExecution.withSQLConfPropagated(input.sparkSession.asInstanceOf[classic.SparkSession]) {
-      input.queryExecution.toRdd.mapPartitions(new Task(bound)).collect()
+    SQLExecution.withSQLConfPropagated(input.sparkSession.asInstanceOf[classic.SparkSession]) {
+      rdd.sparkContext.runJob(rdd, new Task(bound), parts.indices, (p: Int, r: Array[AnyRef]) => parts(p) = r)
     }
     jobs.indices.map(j => parts.toSeq.map(_(j)))
   }
 
   /** One task: every row into every job's buffer, then each job's result.
-    * A named class, not a lambda, so Spark's closure cleaner does not
-    * re-read and re-serialize it on every pass. */
-  private final class Task(jobs: Array[Job[_]]) extends (Iterator[InternalRow] => Iterator[Array[AnyRef]])
-      with Serializable {
-    def apply(rows: Iterator[InternalRow]): Iterator[Array[AnyRef]] = {
+    * A named class passed straight to `runJob`, not a lambda, so Spark's
+    * closure cleaner has no closure to re-read on every pass. */
+  private final class Task(jobs: Array[Job[_]])
+      extends ((TaskContext, Iterator[InternalRow]) => Array[AnyRef]) with Serializable {
+    def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Array[AnyRef] = {
       val bufs = jobs.map(_.open())
       rows.foreach { row =>
         var j = 0
         while (j < bufs.length) { bufs(j).update(row); j += 1 }
       }
-      Iterator.single(bufs.map(_.result))
+      bufs.map(_.result)
     }
   }
 

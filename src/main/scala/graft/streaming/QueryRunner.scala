@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.agg._
+import graft.agg.MultiQueryPartial.State
 import graft.compile.{ExprCompiler, QueryCompiler}
 import graft.functions.KeyIndex
 import graft.model._
@@ -52,8 +53,9 @@ final class ManualClock(start: Long = 0L) extends Clock {
  *    `entries`-smallest keys, which keeps the batch's smallest keys exact.
  *  - **Driver combine** (= JoinBolt): the tasks' partials merge per job
  *    with the aggregate's own merge (`Querier.combine`,
- *    JoinBolt.java:154-155); [[AggState]] merges per-batch partials
- *    across batches the same way, so values keep Spark's types; owns
+ *    JoinBolt.java:154-155), and each batch's merged entry folds into each
+ *    member query's [[AggState]] with the same entry merge, so values keep
+ *    Spark's types; owns
  *    window emission + reset (JoinBolt.java:252-259), duration expiry
  *    (JoinBolt.java:214-233), rate-limit kills (JoinBolt.java:199-208),
  *    duplicate suppression (FilterBolt.java:117-124), and error Clips
@@ -94,7 +96,7 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
 
   private final class RQ(val spec: QuerySpec, val registeredAt: Long,
                          val queryString: Option[String] = None) {
-    val state: AggState = AggState.forQuery(spec)
+    val state = new AggState(spec)
     var emitted: Long = 0L          // total records emitted (metrics)
     var emittedSinceRateCheck: Long = 0L // rate-limit window accumulator
     var lastRateCheckAt: Long = registeredAt
@@ -696,10 +698,8 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
   private def planShared(simple: Seq[RQ], df: DataFrame): Planned[_] = {
     val (classes, classOf) = sharedClasses(simple)
     val (fn, _) = new JobAggregate(df, classes, gated = true, groupOps = false).analyzed()
-    new Planned[Array[Byte]](BatchPass.Shared(fn), value => {
-      val parts = fn.decode(value)
-      Some(simple.map(rq => () => mergePartial(rq, parts(classOf(rq.spec.id)))))
-    })
+    new Planned(BatchPass.Shared(fn), (parts: Array[State]) =>
+      Some(simple.map(rq => () => mergePartial(rq, parts(classOf(rq.spec.id))))))
   }
 
   /** The distinct (aggregation, projection) signatures of an indexed
@@ -749,7 +749,7 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
   /** An indexed job's reads of its slots' `rows` (ascending): per query,
     * its point slot or the fold of its span. */
   private def readSlots(rqs: Seq[RQ], spans: Seq[(Int, Int)], fn: MultiQueryPartial,
-                        sigOf: Map[String, Int])(rows: IndexedSeq[(Int, Array[Byte])]): Option[Seq[() => Unit]] = {
+                        sigOf: Map[String, Int])(rows: IndexedSeq[(Int, Array[State])]): Option[Seq[() => Unit]] = {
     val slots = rows.map(_._1).toArray
     val n = rows.length
     // each query reads the rows a to b: the first row ≥ lo to the last
@@ -760,21 +760,22 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
       val b = { val h = java.util.Arrays.binarySearch(slots, hi); if (h >= 0) h else -(h + 1) - 1 }
       Option.when(a <= b)((a, b))
     }
-    // A fold merges each row's buffer into its neighbour's with the
+    // A fold merges each row's buffer with its neighbour's fold with the
     // aggregate's own merge, so it merges into query state exactly as
-    // per-row merges would, without extra batch counts. Folds run only as
-    // far as some query reads: a fold that throws (a long SUM overflowing
-    // under ANSI) then lies in a reader's own range, and the per-query
-    // re-collect FAILs that query alone.
-    def buf(k: Int) = fn.deserialize(rows(k)._2)
+    // per-row merges would, without extra batch counts. Each step folds
+    // into a fresh buffer, the row's first (MIN/MAX keep the first of
+    // equal values), so no row's buffer, which other readers share,
+    // changes. Folds run only as far as some query reads: a fold that
+    // throws (a long SUM overflowing under ANSI) then lies in a reader's
+    // own range, and the per-query re-collect FAILs that query alone.
     val (points, folded) = reads.flatten.toSet.partition(r => r._1 == r._2)
-    val read = mutable.HashMap.empty[(Int, Int), IndexedSeq[MultiQueryPartial.Partial]]
-    points.foreach(r => read(r) = fn.partials(buf(r._1)))
+    val read = mutable.HashMap.empty[(Int, Int), Array[State]]
+    points.foreach(r => read(r) = rows(r._1)._2)
     def fold(steps: Range)(span: Int => (Int, Int)): Unit = {
-      var acc = buf(steps.head)
+      var acc = rows(steps.head)._2
       steps.foreach { k =>
-        if (k != steps.head) acc = fn.merge(buf(k), acc)
-        if (folded(span(k))) read(span(k)) = fn.partials(acc)
+        if (k != steps.head) acc = fn.merge(fn.merge(fn.createAggregationBuffer(), rows(k)._2), acc)
+        if (folded(span(k))) read(span(k)) = acc
       }
     }
     folded.filter(_._2 == n - 1).map(_._1).minOption.foreach(a => fold(n - 1 to a by -1)(k => (k, n - 1)))
@@ -844,7 +845,7 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     * queries ([[RawTws]]): per-query take-n state lives in RocksDB-backed
     * `transformWithState` ValueState on the executors and taken records
     * flow straight to `outPath/batch=<id>` — never through driver
-    * memory. Choose it over [[runStream]]'s driver-held [[RawState]]
+    * memory. Choose it over [[runStream]]'s driver-held [[AggState]]
     * when queries × cap outgrows the driver (pipeline-sized takes);
     * the default path remains right for the reference's interactive
     * sizes. Record rendering and caps are shared with the driver path
@@ -920,7 +921,7 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
         case GroupAll(ops)      => Metrics(ops.map(metric))
         case GroupBy(_, ops, _) => Metrics(if (groupOps) ops.map(metric) else Nil)
         case Raw(_) =>
-          val cap = rq.state.asInstanceOf[RawState].remaining
+          val cap = rq.state.remaining
           if (cap <= 0) Metrics(Nil) // full buffer: stop to_json-ing matches
           else Sketch(SketchPartial.Capped(cap), slot(("raw", rq.spec.projection), numeric = false)(
             to_json(rq.spec.projection match {
@@ -986,26 +987,17 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     case _ => true
   }
 
-  /** Merge one class partial (its own class's, its fused signature's, or a
-    * indexed job's row or fold) into `rq`'s state. */
-  private def mergePartial(rq: RQ, p: MultiQueryPartial.Partial): Unit = {
+  /** Merge one class partial (its own class's, its fused signature's, or an
+    * indexed job's row or fold) into `rq`'s state; a GROUP BY query's
+    * groups ride the grouped job, so it takes only the counters here. */
+  private def mergePartial(rq: RQ, p: State): Unit = {
     rq.recordsSinceEmit += p.matched
     rq.recordsSeen += p.matched
     rq.batchesSeen += 1
     rq.filterLatencyMsLast = (System.nanoTime() - batchStartNanos) / 1000000L
     rq.filterLatencyMsTotal += rq.filterLatencyMsLast
-    if (!rq.includeOpen) return // include-first window already has its M
-    rq.state match {
-      case s: RawState => p.sketch match {
-        case b: SketchPartial.CappedBuf => s.add(b.records)
-        case _ => // full buffer: no records were collected
-      }
-      case s: GroupAllState      => s.acc.update(p)
-      case s: CountDistinctState => s.buf.merge(p.sketch.asInstanceOf[ThetaBuf])
-      case s: DistributionState  => s.buf.merge(p.sketch.asInstanceOf[KllBuf])
-      case s: TopKState          => s.buf.merge(p.sketch.asInstanceOf[FreqItemsBuf])
-      case _: GroupByState       => // grouped state rides the grouped job
-    }
+    // an include-first window that already has its M takes no more
+    if (rq.includeOpen && !rq.isGrouped) rq.state.merge(p)
   }
 
   /** One grouped job per GROUP BY signature (same key fields and
@@ -1026,38 +1018,27 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
       classes.map(_.spec.aggregation.asInstanceOf[GroupBy].entries))
     val (fn, keys) = new JobAggregate(df, classes, gated = true, groupOps = true).analyzed(keyCols: _*)
     // rows matching NO fused class never enter the groups or the cap
-    new Planned[Seq[(Seq[String], Array[Byte])]](BatchPass.Grouped(fn, keys, entriesCap), rows =>
+    new Planned(BatchPass.Grouped(fn, keys, entriesCap), (groups: Seq[(Seq[String], Array[State])]) =>
       // Union cap hit with multiple classes: the kept smallest-keys union
       // can CROWD OUT one query's groups with another's (a query under its
       // own entries cap could lose groups it would have kept from its own
       // job). Rare — the over-cap regime — so the rows are untrusted and
       // each query re-collects alone, with its own filter and entries budget.
-      if (classes.size > 1 && rows.length >= entriesCap) None
-      else {
-        val groups = rows.map { case (key, value) => (key, fn.decode(value)) }
-        Some(rqs.map(rq => () => applyGrouped(rq, groups, classOf(rq.spec.id))))
-      })
+      if (classes.size > 1 && groups.length >= entriesCap) None
+      else Some(rqs.map(rq => () => applyGrouped(rq, groups, classOf(rq.spec.id)))))
   }
 
-  /** Merge a grouped job's decoded groups into `rq`'s groups, reading
-    * entry `cls` (its class's). */
-  private def applyGrouped(rq: RQ, groups: Seq[(Seq[String], IndexedSeq[MultiQueryPartial.Partial])],
-                           cls: Int): Unit = {
-    // matched-record counters (recordsSinceEmit/recordsSeen/batchesSeen) are
-    // NOT derived from these capped rows — they ride the ungrouped shared
-    // pass (mergePartial), so they stay exact when distinct groups exceed
-    // the entries cap.
-    val st = rq.state.asInstanceOf[GroupByState]
-    // same per-batch include gate as mergePartial — evaluated once at
-    // batch start, so counter updates in the shared pass can't close
-    // the gate mid-batch for the grouped job
+  /** Merge a grouped job's groups into `rq`'s groups, reading entry `cls`
+    * (its class's). The matched-record counters ride the ungrouped shared
+    * pass ([[mergePartial]]), so they stay exact when distinct groups
+    * exceed the entries cap; the include gate is the one evaluated at
+    * batch start, which the shared pass's counters cannot close mid-batch. */
+  private def applyGrouped(rq: RQ, groups: Seq[(Seq[String], Array[State])], cls: Int): Unit =
     if (rq.includeOpen) groups.foreach { case (key, parts) =>
       // a group whose rows all failed THIS query's gate does not exist
       // for it — creating it would emit a spurious zero-count group
-      val p = parts(cls)
-      if (p.matched > 0L) st.accFor(key).update(p)
+      if (parts(cls).matched > 0L) rq.state.mergeGroup(key, parts(cls))
     }
-  }
 
   // -------------------------------------------------------------------------
   // Lifecycle: windows, duration, rate limiting (JoinBolt tick path)
@@ -1153,13 +1134,9 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
       // a windowless RAW query whose buffer hit its cap finishes NOW — no
       // reason to wait out the duration, and the partial pass already
       // stopped collecting for it (cap-0 → no collect column).
-      if (!rq.done && rq.spec.window.isEmpty) {
-        rq.state match {
-          case rs: RawState if rs.isFull =>
-            out += finish(rq)
-            finished += rq.spec.id
-          case _ =>
-        }
+      if (!rq.done && rq.spec.window.isEmpty && rq.state.isFull) {
+        out += finish(rq)
+        finished += rq.spec.id
       }
       // duration expiry, with the post-finish straggler grace: the query
       // stops being a new-data consumer conceptually but its state stays

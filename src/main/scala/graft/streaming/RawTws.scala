@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, StreamingQ
 
 /**
  * Scale-out RAW take-n on Spark 4's `transformWithState` — the flagged
- * alternative backend to the runner's driver-held [[RawState]]
+ * alternative backend to the runner's driver-held [[AggState]]
  * (reference RAW semantics: JoinBoltTest.java:644-660 keeps an
  * arbitrary first-`size` subset of matching records).
  *

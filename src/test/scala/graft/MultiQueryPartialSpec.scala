@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
 
 /**
  * Metric parity of [[MultiQueryPartial]] with the per-op columns it
- * replaces in the runner: for every op, each entry's decoded value must
+ * replaces in the runner: for every op, each entry's state's value must
  * equal Spark's own `sum(when(g, 1L))`, `count(when(g, f))`,
  * `sum(when(g, f))`, `min(when(g, f))` and `max(when(g, f))` over the
  * same four-partition frame, in value AND Java class — the first batch's
@@ -89,8 +89,8 @@ class MultiQueryPartialSpec extends SparkTestBase {
     }
   }
 
-  /** Each case's decoded values in [[columns]]' order. */
-  private def flat(parts: IndexedSeq[Partial]): Seq[Any] = cases.zip(parts).flatMap { case (cs, p) =>
+  /** Each case's values in [[columns]]' order. */
+  private def flat(parts: Array[State]): Seq[Any] = cases.zip(parts).flatMap { case (cs, p) =>
     val matched = if (p.matched == 0L) null else p.matched
     matched +: cs.ops.indices.flatMap(i => cs.ops(i) match {
       case Op.Count => Seq(matched)
@@ -117,8 +117,8 @@ class MultiQueryPartialSpec extends SparkTestBase {
     }
   }
 
-  private def decodeOne(out: DataFrame): IndexedSeq[Partial] =
-    MultiQueryPartialSpec.in(out).decode(out.head().getAs[Array[Byte]](0))
+  private def decodeOne(out: DataFrame): Array[State] =
+    MultiQueryPartialSpec.in(out).deserialize(out.head().getAs[Array[Byte]](0))
 
   test("every op equals Spark's own column, in value and Java class") {
     val out = frame.agg(MultiQueryPartialSpec.column(aggregate(frame)))
@@ -135,7 +135,7 @@ class MultiQueryPartialSpec extends SparkTestBase {
     val keyed = frame.withColumn("k", coalesce(col("i") % 3, lit(-1)))
     val out = keyed.groupBy("k").agg(MultiQueryPartialSpec.column(aggregate(keyed)))
     val fn = MultiQueryPartialSpec.in(out)
-    val got = out.collect().map(r => r.getInt(0) -> flat(fn.decode(r.getAs[Array[Byte]](1)))).toMap
+    val got = out.collect().map(r => r.getInt(0) -> flat(fn.deserialize(r.getAs[Array[Byte]](1)))).toMap
     val want = keyed.groupBy("k").agg(columns.head, columns.tail: _*).collect()
       .map(r => r.getInt(0) -> r.toSeq.tail).toMap
     assert(got.keySet === want.keySet)
@@ -179,18 +179,24 @@ class MultiQueryPartialSpec extends SparkTestBase {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.BoundReference
     import org.apache.spark.unsafe.types.UTF8String
-    def one(dt: DataType, op: Op.Value, v: Any): Acc = {
+    def one(dt: DataType, op: Op.Value, v: Any): State = {
       val fn = MultiQueryPartial(Seq(BoundReference(0, dt, nullable = true)), 0,
         Seq(Entry(-1, Metrics(Seq(Metric(op, 0))))), ansi = true)
-      fn.partials(fn.update(fn.createAggregationBuffer(), InternalRow(v))).head.accs.head
+      fn.update(fn.createAggregationBuffer(), InternalRow(v)).head
+    }
+    /** The states folded into a fresh one, as a query's state takes them. */
+    def fold(parts: State*): Acc = {
+      val st = new State(new Array[Acc](1), null)
+      parts.foreach(mergeEntry(st, _, null))
+      st.accs.head
     }
     val (i, d) = (one(IntegerType, Op.Sum, 3), one(DoubleType, Op.Sum, 0.5))
-    assert(combine(Some(i), d).value === 3.5 && combine(Some(i), d).n === 2)
-    assert(i.value === 3L && d.value === 0.5, "combine changed its inputs")
-    val least = combine(Some(one(IntegerType, Op.Min, 3)), one(LongType, Op.Min, 2L)).value
+    assert(fold(i, d).value === 3.5 && fold(i, d).n === 2)
+    assert(i.accs.head.value === 3L && d.accs.head.value === 0.5, "the merge changed its inputs")
+    val least = fold(one(IntegerType, Op.Min, 3), one(LongType, Op.Min, 2L)).value
     assert(least === 2L && least.isInstanceOf[java.lang.Long])
     val e = intercept[IllegalArgumentException](
-      combine(Some(one(StringType, Op.Min, UTF8String.fromString("a"))), one(IntegerType, Op.Min, 1)))
+      fold(one(StringType, Op.Min, UTF8String.fromString("a")), one(IntegerType, Op.Min, 1)))
     assert(e.getMessage.contains("cannot combine a string partial with a int one"), e.getMessage)
   }
 }
@@ -201,7 +207,7 @@ object MultiQueryPartialSpec {
     org.apache.spark.sql.graft.ColumnBridge.column(fn.toAggregateExpression())
 
   /** The analyzed (resolved and type-coerced) aggregate in `df`'s plan —
-    * the instance that decodes `df`'s values. */
+    * the instance that deserializes `df`'s values. */
   def in(df: DataFrame): MultiQueryPartial =
     df.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
       case m: MultiQueryPartial => m

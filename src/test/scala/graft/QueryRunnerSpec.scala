@@ -408,10 +408,10 @@ class QueryRunnerSpec extends SparkTestBase {
       Seq(Entry(-1, Metrics(Seq(Metric(Op.Min, 0), Metric(Op.Min, 1), Metric(Op.Max, 2),
         Metric(Op.Max, 3), Metric(Op.Min, 3), Metric(Op.Sum, 4))))),
       spark.conf.get("spark.sql.ansi.enabled").toBoolean)
-    val state = new GroupAllState(ops)
-    Seq(b1, b2).map(_.agg(MultiQueryPartialSpec.column(fn))).foreach(out => state.acc.update(
-      MultiQueryPartialSpec.in(out).decode(out.head().getAs[Array[Byte]](0)).head))
-    val got = state.acc.results.map(_._2)
+    val state = new AggState(QuerySpec("m", aggregation = GroupAll(ops)))
+    Seq(b1, b2).map(_.agg(MultiQueryPartialSpec.column(fn))).foreach(out => state.merge(
+      MultiQueryPartialSpec.in(out).deserialize(out.head().getAs[Array[Byte]](0)).head))
+    val got = AggState.metrics(ops, state.entry).map(_._2)
     def same(a: Any, b: Any): Boolean = (a, b) match {
       case (x: java.lang.Double, y: java.lang.Double) => x.isNaN && y.isNaN || x == y
       case (x: AnyRef, y: AnyRef) => x.getClass == y.getClass && x == y
@@ -1087,6 +1087,81 @@ class QueryRunnerSpec extends SparkTestBase {
     assert(g1 === g2)
     assert(g1.values.map(_.toString.toInt).sum === 130) // 100 + 30 rows
     assert(parse(byId("loner").records.head)("cnt") === 87) // 67 + 20 views
+  }
+
+  test("a twin registered after batch 1 folds only later batches; its early twin folds all") {
+    import GroupOpType._
+    // identical-class pairs (and a second late twin) of each aggregation
+    // kind: the twins read one merged entry per batch (an indexed slot for
+    // `etype = click`, the shared pass for `etype != click`, the grouped
+    // job for GROUP BY), so a query state that adopted or aliased a
+    // batch's state would count the later batch twice or leak it into its
+    // twin
+    val aggs: Seq[(String, Aggregation)] = Seq(
+      "all" -> GroupAll(Seq(GroupOp(COUNT, None, "cnt"), GroupOp(SUM, Some("value"), "sv"),
+        GroupOp(MIN, Some("value"), "mn"), GroupOp(MAX, Some("user"), "mx"),
+        GroupOp(AVG, Some("value"), "av"))),
+      "cd" -> CountDistinct(Seq("user")),
+      "dist" -> Distribution("value", DistributionType.QUANTILE, Seq(0.0, 0.25, 0.5, 1.0)),
+      "topk" -> TopK(Seq("user" -> "u"), 3),
+      "gby" -> GroupBy(Seq("user" -> "u"), Seq(GroupOp(COUNT, None, "cnt"),
+        GroupOp(SUM, Some("value"), "sv"), GroupOp(MIN, Some("event_id"), "first"))))
+    val filters = Seq("eq" -> BinOp.EQUALS, "ne" -> BinOp.NOT_EQUALS)
+    def specs(suffix: String): Seq[QuerySpec] = for ((f, op) <- filters; (a, agg) <- aggs)
+      yield QuerySpec(s"${f}_$a$suffix", filter = Some(Binary(Field("etype"), Lit("click"), op)),
+        aggregation = agg, durationMs = 600000L)
+    val batches = Seq(events.filter(col("event_id") <= 40),
+      events.filter(col("event_id") > 40 && col("event_id") <= 70), events.filter(col("event_id") > 70))
+    def clips(r: QueryRunner) = r.finishAll().map(c => c.queryId -> c.records.map(parse)).toMap
+    /** Each class's clip from one query alone fed `bs`. */
+    def solo(bs: Seq[DataFrame]): Map[String, Seq[Map[String, Any]]] = {
+      val r = new QueryRunner(spark, new ManualClock(0))
+      specs("").foreach(s0 => assert(r.register(s0).isEmpty))
+      bs.foreach(r.processBatch)
+      clips(r)
+    }
+    Seq(2, 3).foreach { n =>
+      val bs = batches.take(n)
+      val r = new QueryRunner(spark, new ManualClock(0))
+      specs("_early").foreach(s0 => assert(r.register(s0).isEmpty))
+      r.processBatch(bs.head)
+      (specs("_late") ++ specs("_late2")).foreach(s0 => assert(r.register(s0).isEmpty))
+      bs.tail.foreach(r.processBatch)
+      assert(r.lastBatchJobs.keySet === QueryRunner.JobKind.values.toSet, r.lastBatchJobs)
+      val got = clips(r)
+      val (all, later) = (solo(bs), solo(bs.tail))
+      specs("").map(_.id).foreach { id =>
+        assert(all(id).nonEmpty && later(id).nonEmpty, id)
+        assert(got(s"${id}_early") === all(id), s"$id early, $n batches")
+        assert(got(s"${id}_late") === later(id), s"$id late, $n batches")
+        assert(got(s"${id}_late2") === later(id), s"$id second late twin, $n batches")
+      }
+      assert(all("eq_all") !== later("eq_all"), "the batches differ")
+    }
+  }
+
+  test("RAW keeps its records in batch order across batches, up to its cap") {
+    val click = Some(Binary(Field("etype"), Lit("click"), BinOp.EQUALS))
+    // 10, 10 and 13 clicks
+    val batches = Seq(events.filter(col("event_id") <= 30),
+      events.filter(col("event_id") > 30 && col("event_id") <= 60),
+      events.filter(col("event_id") > 60)).map(_.repartition(3))
+    def batchOf(r: String): Long = (parse(r)("event_id").toString.toLong - 1) / 30 min 2
+    val clicks = (1L to 100L).filter(_ % 3 == 0).groupBy(i => (i - 1) / 30 min 2)
+    val runner = new QueryRunner(spark, new ManualClock(0))
+    runner.register(QuerySpec("all", filter = click, aggregation = Raw(50), durationMs = 600000L))
+    runner.register(QuerySpec("capped", filter = click, aggregation = Raw(15), durationMs = 600000L))
+    val done = batches.map(b => runner.processBatch(b).map(_.queryId))
+    // the cap is reached in batch 2: the query finishes there, with all of
+    // batch 1 and the room left taken from batch 2
+    assert(done === Seq(Nil, Seq("capped"), Nil))
+    val capped = runner.results.find(_.queryId == "capped").get.records
+    assert(capped.size === 15)
+    assert(capped.take(10).map(r => parse(r)("event_id").toString.toLong).toSet === clicks(0L).toSet)
+    assert(capped.drop(10).forall(batchOf(_) == 1L), capped)
+    val all = runner.finishAll().head.records
+    assert(all.map(batchOf) === Seq.fill(10)(0L) ++ Seq.fill(10)(1L) ++ Seq.fill(13)(2L), all)
+    assert(all.map(r => parse(r)("event_id").toString.toLong).sorted === clicks.values.flatten.toSeq.sorted)
   }
 
   test("window include validation: mixed units and include > every are rejected") {
@@ -1961,19 +2036,23 @@ class QueryRunnerSpec extends SparkTestBase {
         aggregation = metrics, durationMs = 600000L)
     }
     val specs = single ++ tuples
+    // two batches, so the folds merge into query state across batches
+    val batches = Seq(data.filter(col("event_id") <= 60), data.filter(col("event_id") > 60))
     val clock = new ManualClock(0)
     val folded = new QueryRunner(spark, clock)
     specs.foreach(s0 => assert(folded.register(s0).isEmpty))
-    folded.processBatch(data)
-    // every query rides an indexed job: no shared pass ran
-    assert(folded.lastBatchJobs.keySet === Set(QueryRunner.JobKind.Indexed), folded.lastBatchJobs)
+    batches.foreach { b =>
+      folded.processBatch(b)
+      // every query rides an indexed job: no shared pass ran
+      assert(folded.lastBatchJobs.keySet === Set(QueryRunner.JobKind.Indexed), folded.lastBatchJobs)
+    }
     assert(folded.results.isEmpty, folded.results.map(_.asJson))
     clock.advance(700000)
     val foldedById = folded.onTick().map(c => c.queryId -> c).toMap
     specs.foreach { s0 =>
       val solo = new QueryRunner(spark, new ManualClock(0))
       assert(solo.register(s0).isEmpty)
-      solo.processBatch(data)
+      batches.foreach(solo.processBatch)
       assert(solo.lastBatchJobs === Map(QueryRunner.JobKind.Shared -> 1))
       val want = solo.finishAll().head
       assert(foldedById(s0.id).records.map(parse) === want.records.map(parse),

@@ -238,6 +238,8 @@ class SketchMergeSpec extends SparkTestBase {
     val merged = kind.merge(kind.deserialize(kind.serialize(buf("a", "b"))),
       kind.deserialize(kind.serialize(buf("c", "d", "e"))))
     assert(merged.n === 3)
+    // the first buffer's records, then the second's earliest, in arrival order
+    assert(merged.records === List("a", "b", "c"))
     assert(kind.result(merged).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
       .numElements() === 3)
     // through Spark: 4 partial buffers, each capped, merged under the cap
