@@ -168,8 +168,12 @@ case class MultiQueryPartial(
         st.matched += 1
         val ins = inputsOf(e)
         if (st.accs == null) {
-          val v = inputAt(ins(0), row)
-          if (v != null) kindOf(e).update(st.sketch, v)
+          // a full RAW buffer would drop the record: skip its to_json
+          val k = kindOf(e)
+          if (!k.isFull(st.sketch)) {
+            val v = inputAt(ins(0), row)
+            if (v != null) k.update(st.sketch, v)
+          }
         } else {
           var i = 0
           while (i < ins.length) {

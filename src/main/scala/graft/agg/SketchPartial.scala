@@ -84,6 +84,8 @@ object SketchPartial {
     def zero(): B
     /** `v` is the non-null Catalyst value of the input. */
     def update(b: B, v: Any): Unit
+    /** Whether `b` drops every further input, so none need be computed. */
+    def isFull(b: B): Boolean = false
     def merge(a: B, b: B): B
     def serialize(b: B): Array[Byte]
     def deserialize(bytes: Array[Byte]): B
@@ -181,6 +183,7 @@ object SketchPartial {
     def zero(): CappedBuf = new CappedBuf
     def update(b: CappedBuf, v: Any): Unit =
       if (b.n < cap) { b.n += 1; b.items = v.toString :: b.items }
+    override def isFull(b: CappedBuf): Boolean = b.n >= cap
     /** `a` keeps all its records, then `b`'s earliest fill the room left
       * under the cap: the records stay in arrival order, `a`'s first. */
     def merge(a: CappedBuf, b: CappedBuf): CappedBuf = {

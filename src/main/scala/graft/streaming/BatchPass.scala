@@ -6,7 +6,7 @@ import graft.functions.KeyIndex
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{classic, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeSet, BindReferences, Expression, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, BindReferences, BoundReference, Expression, RuntimeReplaceable}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.unsafe.types.UTF8String
@@ -24,16 +24,24 @@ import scala.jdk.CollectionConverters._
  * the aggregate's own `merge`, into the buffers the runner folds into its
  * queries' states. What reaches the driver is O(partitions × sketch) per
  * job, whatever the batch size.
+ *
+ * A [[Job]] reads columns by their position in the batch schema, so the
+ * runner keeps one across the batches of that schema; [[run]] only maps
+ * those positions to the columns it selects.
  */
 object BatchPass {
 
   /** One job's share of the pass: its aggregate `fn` and `keys`, as Spark's
-    * analyzer resolved them over the batch; [[run]] binds them to its input
-    * before the tasks ship. `R` is the job's merged result. */
+    * analyzer resolved them over the batch, in [[schemaBound]]'s form: they
+    * read the batch's columns by their position in its schema, so one job
+    * serves every batch of that schema. `R` is the job's merged result. */
   sealed abstract class Job[R] extends Serializable {
     def fn: MultiQueryPartial
     def keys: Seq[Expression]
     protected def withExpressions(fn: MultiQueryPartial, keys: Seq[Expression]): Job[R]
+    /** The schema positions of the columns the job reads. */
+    @transient lazy val reads: Seq[Int] =
+      (fn +: keys).flatMap(_.collect { case b: BoundReference => b.ordinal }).distinct
     /** A fresh buffer for one task's rows. */
     def open(): Buffer
     /** The tasks' results, merged. A decimal SUM that overflowed raises
@@ -138,13 +146,19 @@ object BatchPass {
 
   /** Runs `jobs` as ONE Spark job of one stage over the columns of `batch`
     * they read (a column no job reads is never computed); per job, its
-    * tasks' results. */
+    * tasks' results. The jobs ship inside the task, so each task
+    * deserializes its own copy: a job's aggregate keeps per-row scratch,
+    * which tasks sharing one instance would race on. */
   def run(batch: DataFrame, jobs: Seq[Job[_]]): Seq[Seq[AnyRef]] = if (jobs.isEmpty) Nil else {
-    val reads = AttributeSet(jobs.flatMap(j => j.fn +: j.keys).flatMap(_.references))
-    val input = batch.select(batch.queryExecution.analyzed.output.filter(reads.contains)
-      .map(ColumnBridge.column): _*)
-    val output = input.queryExecution.analyzed.output
-    val bound = jobs.map(_.bind(e => BindReferences.bindReference(evaluable(e), output))).toArray
+    val columns = batch.queryExecution.analyzed.output
+    val reads = jobs.flatMap(_.reads).distinct.sorted
+    val input = batch.select(reads.map(i => ColumnBridge.column(columns(i))): _*)
+    // each read column's position in `input`
+    val at = new Array[Int](columns.size)
+    reads.indices.foreach(p => at(reads(p)) = p)
+    val bound = (if (reads.size == columns.size) jobs else jobs.map(_.bind(_.transform {
+      case b: BoundReference => b.copy(ordinal = at(b.ordinal))
+    }))).toArray
     val rdd = input.queryExecution.toRdd
     val parts = new Array[Array[AnyRef]](rdd.partitions.length)
     // the session's SQL settings reach the tasks, as in a Dataset action
@@ -168,6 +182,11 @@ object BatchPass {
       bufs.map(_.result)
     }
   }
+
+  /** Analyzed `e` over `columns`, a batch's output, in the form a job
+    * holds: evaluable, reading each column by its position. */
+  def schemaBound(e: Expression, columns: Seq[Attribute]): Expression =
+    BindReferences.bindReference(evaluable(e), columns)
 
   /** `e` as a row-by-row evaluation runs it: no aliases, and runtime-
     * replaceable nodes replaced, as the optimizer does for a planned query

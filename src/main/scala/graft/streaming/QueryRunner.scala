@@ -6,6 +6,7 @@ import graft.compile.{ExprCompiler, QueryCompiler}
 import graft.functions.KeyIndex
 import graft.model._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType, StructType}
 
@@ -61,6 +62,23 @@ final class ManualClock(start: Long = 0L) extends Clock {
  *    duplicate suppression (FilterBolt.java:117-124), and error Clips
  *    (JoinBolt.java:297-308). Driver state is O(queries × sketch), never
  *    O(data).
+ *
+ * Planning follows the query set, not the batch ([[PlanMemo]]). Each
+ * class's gates and inputs are analyzed once, in the one analysis of the
+ * job that first needs them, and kept as the tasks evaluate them, reading
+ * columns by their position in the batch schema; each job is kept under
+ * its layout (its classes' entries, RAW caps included, and the keys of the
+ * expressions they read). A batch whose query set did not change reuses
+ * every job as it is and analyzes nothing; a changed job is assembled from
+ * the memo after one analysis over only its new classes. The memo is keyed
+ * by the batch schema and the session's SQL conf (ANSI mode, the time zone
+ * and case sensitivity change what analysis gives), is rebuilt lazily at
+ * the next batch after a REGISTER or KILL, never at the control message,
+ * and keeps only what the last batch planned with, so it stays O(live
+ * queries). The jobs are not broadcast: each task deserializes its own
+ * copy from the task closure, because a job's aggregate keeps per-row
+ * scratch (and RAW's `to_json` its writer) that tasks sharing one
+ * instance in `local[N]` would race on.
  *
  * Failure contract. Each micro-batch builds ONE ordered job list — the
  * shared pass, then the indexed jobs and the fused GROUP BY jobs — and
@@ -147,6 +165,19 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
   /** The jobs the LAST batch's pass ran, unbound — a test observable for
     * what the tasks evaluate (the pass renders no SQL plan to inspect). */
   private[graft] var lastBatchPass: Seq[BatchPass.Job[_]] = Nil
+
+  /** The analyses the runner ran — of a job's new classes, or of an
+    * indexed comparison's type — a test observable, like [[lastBatchJobs]]. */
+  private[graft] var analyses: Long = 0L
+  /** The classes those analyses covered, over every job. */
+  private[graft] var analyzedClasses: Long = 0L
+
+  /** What planning keeps across batches ([[PlanMemo]]), for the last
+    * batch's schema and SQL conf. */
+  private var memo = new PlanMemo(new StructType(), Map.empty)
+
+  /** The memo's keys — a test observable for what planning keeps. */
+  private[graft] def memoKeys: Set[Any] = synchronized(memo.keys)
 
   /** Set at [[processBatch]] entry; read by [[mergePartial]] for the
     * per-batch filter-latency gauge. Guarded by the runner lock. */
@@ -450,8 +481,8 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
   /** The active queries that can ride an indexed job, with their keys
     * ([[QueryRunner.indexTerms]] gives the population). A comparison's
     * type T is Spark's own: the type its analyzer coerces the query's
-    * `field = lit` to, read once per (column type, literal type) pair per
-    * batch. The key is `cast(field as T)` and the literal `Cast(lit, T)`,
+    * `field = lit` to, read once per (column type, literal type) pair and
+    * memoized. The key is `cast(field as T)` and the literal `Cast(lit, T)`,
     * compared with Catalyst's ordering of T — what `EqualTo` and
     * `LessThan` evaluate — so an indexed answer is Spark's by
     * construction. A field the batch lacks, a T that is not an atomic
@@ -466,16 +497,18 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     val conf = batch.sparkSession.conf
     val mode = if (conf.get("spark.sql.ansi.enabled").toBoolean) EvalMode.ANSI else EvalMode.LEGACY
     val tz = Some(conf.get("spark.sql.session.timeZone"))
-    val typeOf = mutable.HashMap.empty[(DataType, DataType), Option[DataType]]
     def comparisonType(f: String, v: Any, litType: DataType): Option[DataType] =
-      typeOf.getOrElseUpdate((schema(f).dataType, litType), Try {
-        val cmp = ExprCompiler.compile(Binary(Field(f), Lit(v), BinOp.EQUALS), Some(schema))
-        batch.select(cmp).queryExecution.analyzed.expressions.head
-          .collectFirst { case c: BinaryComparison => c.left.dataType }
-      }.toOption.flatten.filter {
-        case _: StructType | _: ArrayType | _: MapType => false
-        case t => RowOrdering.isOrderable(t)
-      })
+      memo.getOrElseUpdate(("comparison", schema(f).dataType, litType)) {
+        analyses += 1
+        Try {
+          val cmp = ExprCompiler.compile(Binary(Field(f), Lit(v), BinOp.EQUALS), Some(schema))
+          batch.select(cmp).queryExecution.analyzed.expressions.head
+            .collectFirst { case c: BinaryComparison => c.left.dataType }
+        }.toOption.flatten.filter {
+          case _: StructType | _: ArrayType | _: MapType => false
+          case t => RowOrdering.isOrderable(t)
+        }
+      }
     def term(f: String, v: Any): Option[(DataType, Any)] =
       if (!schema.exists(_.name == f)) None else {
         val l = Literal(v) // as `lit(v)` converts
@@ -492,6 +525,25 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
         rq -> Member(terms.map(_._1), types, key, terms.head._2)
       }
     })
+  }
+
+  /** What planning keeps from one batch to the next, for one batch schema
+    * and SQL conf, which are what analysis depends on: each gate and input
+    * as analyzed, under its [[JobAggregate]] key; each job's keys; each
+    * indexed comparison's type; and each job under its layout. A batch
+    * keeps only what its planning read: [[next]] starts a batch, and
+    * [[sweep]] drops what it did not read, so the memo holds the live
+    * query set's entries and no more. */
+  private final class PlanMemo(val schema: StructType, val conf: Map[String, String]) {
+    private var kept = mutable.HashMap.empty[Any, Any]
+    private var last = mutable.HashMap.empty[Any, Any]
+    def next(): Unit = { last = kept; kept = mutable.HashMap.empty }
+    def sweep(): Unit = last = mutable.HashMap.empty
+    def get(k: Any): Option[Any] = kept.get(k).orElse(last.remove(k).map { v => kept(k) = v; v })
+    def apply[V](k: Any): V = get(k).get.asInstanceOf[V]
+    def getOrElseUpdate[V](k: Any)(v: => V): V =
+      get(k).getOrElse { val x = v; kept(k) = x; x }.asInstanceOf[V]
+    def keys: Set[Any] = kept.keySet.toSet ++ last.keySet
   }
 
   /** One job of a micro-batch: its member queries and its kind's `plan`,
@@ -518,6 +570,9 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     // batch's filter latency. Wall clock, not the injected tick clock —
     // latency is a real-time observable even under ManualClock tests.
     batchStartNanos = System.nanoTime()
+    val conf = batch.sparkSession.conf.getAll
+    if (memo.schema != batch.schema || memo.conf != conf) memo = new PlanMemo(batch.schema, conf)
+    memo.next()
     val active = queries.values.filter(!_.done).toSeq
     active.foreach(rq => rq.includeOpen = includeOpenNow(rq))
     val grouped = active.filter(_.isGrouped)
@@ -621,6 +676,7 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
       // AGAIN in the same batch — double strikes and every member
       // collected twice.
       val planned = jobs.map(job => attempt(job.plan(job.rqs, batch)))
+      memo.sweep()
       val tasks = planned.collect { case Right(p) => p.task }
       lastBatchPass = tasks
       val ran = attempt(BatchPass.run(batch, tasks)).map(_.iterator)
@@ -697,8 +753,8 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     * RECORD windows and the records_seen metric. */
   private def planShared(simple: Seq[RQ], df: DataFrame): Planned[_] = {
     val (classes, classOf) = sharedClasses(simple)
-    val (fn, _) = new JobAggregate(df, classes, gated = true, groupOps = false).analyzed()
-    new Planned(BatchPass.Shared(fn), (parts: Array[State]) =>
+    val job = memoJob(df, classes, gated = true, groupOps = false, "shared", Nil)((fn, _) => BatchPass.Shared(fn))
+    new Planned(job, (parts: Array[State]) =>
       Some(simple.map(rq => () => mergePartial(rq, parts(classOf(rq.spec.id))))))
   }
 
@@ -721,29 +777,32 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
    */
   private def planIndexed(members: Map[RQ, QueryRunner.Member])(rqs: Seq[RQ], df: DataFrame): Planned[_] = {
     val m0 = members(rqs.head)
-    val index = new KeyIndex(m0.types, rqs.map(members(_).key))
-    // each query's slots, lo to hi, over the index's entries e_j:
-    //   k =  e_j ⇔ slot = 2j+1     k >  e_j ⇔ slot ≥ 2j+2     k <  e_j ⇔ slot ≤ 2j
-    //                              k >= e_j ⇔ slot ≥ 2j+1     k <= e_j ⇔ slot ≤ 2j+1
-    val spans = rqs.map { rq =>
-      val m = members(rq)
-      val p = index.pointOf(m.key)
-      val (lo, hi) = m.op match {
-        case BinOp.EQUALS            => (p, p)
-        case BinOp.GREATER_THAN      => (p + 1, index.top)
-        case BinOp.GREATER_OR_EQUALS => (p, index.top)
-        case BinOp.LESS_THAN         => (0, p - 1)
-        case _                       => (0, p)
-      }
-      index.read(lo, hi)
-      (lo, hi)
-    }
-    val keys = m0.fields.zip(m0.types).map { case (f, t) =>
-      ExprCompiler.compile(Field(f), Some(df.schema)).cast(t) }
+    val terms = rqs.map(rq => (members(rq).key, members(rq).op))
     val (sigs, sigOf) = signatures(rqs)
-    val (fn, Seq(key)) = new JobAggregate(df, sigs, gated = false, groupOps = false)
-      .analyzed(if (keys.size == 1) keys.head else struct(keys: _*))
-    new Planned(BatchPass.Indexed(fn, key, index), readSlots(rqs, spans, fn, sigOf))
+    val job = memoJob(df, sigs, gated = false, groupOps = false, ("index", m0.fields, m0.types), {
+      val keys = m0.fields.zip(m0.types).map { case (f, t) =>
+        ExprCompiler.compile(Field(f), Some(df.schema)).cast(t) }
+      Seq(if (keys.size == 1) keys.head else struct(keys: _*))
+    }, terms) { (fn, keys) =>
+      val index = new KeyIndex(m0.types, terms.map(_._1))
+      terms.foreach { case (k, op) => val (lo, hi) = span(index, k, op); index.read(lo, hi) }
+      BatchPass.Indexed(fn, keys.head, index)
+    }
+    new Planned(job, readSlots(rqs, terms.map { case (k, op) => span(job.index, k, op) }, job.fn, sigOf))
+  }
+
+  /** The slots, lo to hi, that `k op key` reads over the index's entries e_j:
+    *   k =  e_j ⇔ slot = 2j+1     k >  e_j ⇔ slot ≥ 2j+2     k <  e_j ⇔ slot ≤ 2j
+    *                              k >= e_j ⇔ slot ≥ 2j+1     k <= e_j ⇔ slot ≤ 2j+1 */
+  private def span(index: KeyIndex, key: Any, op: BinOp.Value): (Int, Int) = {
+    val p = index.pointOf(key)
+    op match {
+      case BinOp.EQUALS            => (p, p)
+      case BinOp.GREATER_THAN      => (p + 1, index.top)
+      case BinOp.GREATER_OR_EQUALS => (p, index.top)
+      case BinOp.LESS_THAN         => (0, p - 1)
+      case _                       => (0, p)
+    }
   }
 
   /** An indexed job's reads of its slots' `rows` (ascending): per query,
@@ -874,28 +933,23 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
       case None => ExprCompiler.compile(Field(name), Some(schema))
     }
 
-  /** One job's [[MultiQueryPartial]]: one entry per class, in order, over
-    * the classes' distinct gates (their filters when `gated`; the indexed
-    * job selects rows by slot instead) and distinct inputs, its children
-    * as they compile, unprojected. With `groupOps` a GROUP BY class
-    * carries its ops (the grouped job); without, only its matched count
-    * (the shared pass). */
-  private final class JobAggregate(df: DataFrame, classes: Seq[RQ], gated: Boolean,
+  /** One job's [[MultiQueryPartial]] layout: one entry per class, in order,
+    * over the classes' distinct gates (their filters when `gated`; the
+    * indexed job selects rows by slot instead) and distinct inputs, each
+    * keyed by the model expressions it compiles from (compiled Columns
+    * never compare equal). With `groupOps` a GROUP BY class carries its ops
+    * (the grouped job); without, only its matched count (the shared pass). */
+  private final class JobAggregate(schema: StructType, classes: Seq[RQ], gated: Boolean,
                                    groupOps: Boolean) {
     import MultiQueryPartial._
-    import org.apache.spark.sql.catalyst.expressions.Expression
-    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-    import org.apache.spark.sql.graft.ColumnBridge.{column => asColumn, expression}
-    private val schema = df.schema
+    import org.apache.spark.sql.graft.ColumnBridge.expression
     private val gates = if (gated) classes.flatMap(_.spec.filter).distinct else Nil
     private val gateIdx = gates.zipWithIndex.toMap
-    private val gateExprs = gates.map(f => expression(ExprCompiler.compile(f, Some(schema))))
-    // input slots, one per (input, SUM/AVG coercion), keyed by the model
-    // expressions they compile from: compiled Columns never compare equal
-    private val slotOf = mutable.HashMap.empty[(Any, Boolean), Int]
-    private val inputs = mutable.ArrayBuffer.empty[Expression]
+    // input slots, one per (input, SUM/AVG coercion), each with its Column
+    private val slotOf = mutable.LinkedHashMap.empty[(Any, Boolean), Int]
+    private val inputs = mutable.ArrayBuffer.empty[() => Column]
     private def slot(key: Any, numeric: Boolean)(c: => Column): Int =
-      slotOf.getOrElseUpdate((key, numeric), { inputs += expression(c); inputs.size - 1 })
+      slotOf.getOrElseUpdate((key, numeric), { inputs += (() => c); inputs.size - 1 })
 
     private def entry(rq: RQ): Entry = {
       val g = rq.spec.filter.flatMap(gateIdx.get).getOrElse(-1)
@@ -936,21 +990,79 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
           Sketch(SketchPartial.FreqItems(maxMapSize), compositeKey(fields.map(_._1)))
       })
     }
-    private val entries = classes.map(entry)
+    val entries: Seq[Entry] = classes.map(entry)
 
-    private val fn = MultiQueryPartial(gateExprs ++ inputs, gates.size, entries,
-      df.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean)
+    /** The children's memo keys: the gates, then the inputs. */
+    val keys: IndexedSeq[Any] = gates.map(("gate", _)).toIndexedSeq ++ slotOf.keys.map(("input", _))
+    def numGates: Int = gates.size
 
-    /** The aggregate and `keys` as Spark's analyzer resolves and coerces
-      * them in `df.groupBy(keys).agg(<the aggregate>)`, a plan that is
-      * analyzed only, never run: the batch pass evaluates them itself. */
-    def analyzed(keys: Column*): (MultiQueryPartial, Seq[Expression]) =
-      df.groupBy(keys: _*).agg(asColumn(fn.toAggregateExpression())).queryExecution.analyzed match {
-        case a: Aggregate => (a.aggregateExpressions.flatMap(_.collectFirst {
-          case m: MultiQueryPartial => m
-        }).head, a.groupingExpressions)
-      }
+    /** The memo keys of the children entry `e` reads. */
+    def keysOf(e: Entry): Seq[Any] = (if (e.gate >= 0) Seq(keys(e.gate)) else Nil) ++ (e.part match {
+      case Metrics(ms)  => ms.map(_.input).filter(_ >= 0)
+      case Sketch(_, j) => Seq(j)
+    }).map(j => keys(numGates + j))
+
+    /** What the job's aggregate is a function of, given the memo. */
+    def layout: Any = (keys, entries)
+
+    /** The aggregate over its children as they compile, for analysis. */
+    def compiled(ansi: Boolean): MultiQueryPartial = MultiQueryPartial(
+      (gates.map(f => ExprCompiler.compile(f, Some(schema))) ++ inputs.map(_())).map(expression),
+      numGates, entries, ansi)
   }
+
+  /** A batch pass job over `classes`' [[JobAggregate]] and the keys `keyCols`
+    * compile to (memoized under `keysKey`): the memo's job for the same
+    * layout and `extra` (an indexed job's literals, a grouped job's cap),
+    * or a new one `make` builds from the memo's expressions, after ONE
+    * analysis over the classes some of whose gates or inputs the memo
+    * lacks, and the keys when new. */
+  private def memoJob[J <: BatchPass.Job[_]](df: DataFrame, classes: Seq[RQ], gated: Boolean, groupOps: Boolean,
+                                             keysKey: Any, keyCols: => Seq[Column], extra: Any = ())(
+                                             make: (MultiQueryPartial, Seq[Expression]) => J): J = {
+    val agg = new JobAggregate(df.schema, classes, gated, groupOps)
+    val keysAt = ("keys", keysKey)
+    val job = memo.getOrElseUpdate((agg.layout, keysKey, extra)) {
+      val missing = classes.zip(agg.entries).collect {
+        case (rq, e) if agg.keysOf(e).exists(memo.get(_).isEmpty) => rq
+      }
+      val newKeys = memo.get(keysAt).isEmpty
+      if (missing.nonEmpty || newKeys)
+        analyze(df, new JobAggregate(df.schema, missing, gated, groupOps), keysAt, Option.when(newKeys)(keyCols))
+      val fn = MultiQueryPartial(agg.keys.map(memo[Expression]), agg.numGates, agg.entries, ansi(df))
+      // each class was type-checked in its own analysis, but an entry may
+      // read a child another class's analysis made
+      val check = fn.checkInputDataTypes()
+      if (check.isFailure) throw new IllegalArgumentException(s"${fn.prettyName}: $check")
+      make(fn, memo[Seq[Expression]](keysAt))
+    }
+    // the job's expressions stay while it does
+    (keysAt +: agg.keys).foreach(memo.get)
+    job
+  }
+
+  /** ONE analysis of `agg` in `df.groupBy(keyCols).agg(<the aggregate>)`, a
+    * plan that is analyzed only, never run: each child, and the keys when
+    * given, go into the memo as Spark's analyzer resolved and coerced them,
+    * in [[BatchPass.schemaBound]]'s form. A failed analysis keeps nothing. */
+  private def analyze(df: DataFrame, agg: JobAggregate, keysAt: Any, keyCols: Option[Seq[Column]]): Unit = {
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import org.apache.spark.sql.graft.ColumnBridge.column
+    analyses += 1
+    analyzedClasses += agg.entries.size
+    val columns = df.queryExecution.analyzed.output
+    // named columns: an unnamed one is named after its whole SQL text
+    val keys = keyCols.getOrElse(Nil).zipWithIndex.map { case (c, i) => c.as(s"k$i") }
+    df.groupBy(keys: _*).agg(column(agg.compiled(ansi(df)).toAggregateExpression()).as("p"))
+      .queryExecution.analyzed match {
+      case a: Aggregate =>
+        val fn = a.aggregateExpressions.flatMap(_.collectFirst { case m: MultiQueryPartial => m }).head
+        agg.keys.zip(fn.children).foreach { case (k, e) => memo.getOrElseUpdate(k)(BatchPass.schemaBound(e, columns)) }
+        keyCols.foreach(_ => memo.getOrElseUpdate(keysAt)(a.groupingExpressions.map(BatchPass.schemaBound(_, columns))))
+    }
+  }
+
+  private def ansi(df: DataFrame): Boolean = df.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean
 
   // -------------------------------------------------------------------------
   // Driver combine (JoinBolt)
@@ -1010,15 +1122,15 @@ final class QueryRunner(spark: SparkSession, clock: Clock = SystemClock,
     * key order. */
   private def planGrouped(rqs: Seq[RQ], df: DataFrame): Planned[_] = {
     val head = rqs.head
-    val keyCols = head.spec.aggregation.asInstanceOf[GroupBy].fields.map { case (f, _) =>
-      coalesce(fieldCol(head, f, df.schema).cast(StringType), lit(SketchAggregators.NullString))
-    }
+    val fields = head.spec.aggregation.asInstanceOf[GroupBy].fields.map(_._1)
     val (classes, classOf) = sharedClasses(rqs)
     val entriesCap = QueryRunner.fusedEntriesCap(
       classes.map(_.spec.aggregation.asInstanceOf[GroupBy].entries))
-    val (fn, keys) = new JobAggregate(df, classes, gated = true, groupOps = true).analyzed(keyCols: _*)
+    val job = memoJob(df, classes, gated = true, groupOps = true, ("group", fields, head.spec.projection),
+      fields.map(f => coalesce(fieldCol(head, f, df.schema).cast(StringType), lit(SketchAggregators.NullString))),
+      entriesCap)((fn, keys) => BatchPass.Grouped(fn, keys, entriesCap))
     // rows matching NO fused class never enter the groups or the cap
-    new Planned(BatchPass.Grouped(fn, keys, entriesCap), (groups: Seq[(Seq[String], Array[State])]) =>
+    new Planned(job, (groups: Seq[(Seq[String], Array[State])]) =>
       // Union cap hit with multiple classes: the kept smallest-keys union
       // can CROWD OUT one query's groups with another's (a query under its
       // own entries cap could lose groups it would have kept from its own

@@ -199,6 +199,18 @@ class MultiQueryPartialSpec extends SparkTestBase {
       fold(one(StringType, Op.Min, UTF8String.fromString("a")), one(IntegerType, Op.Min, 1)))
     assert(e.getMessage.contains("cannot combine a string partial with a int one"), e.getMessage)
   }
+
+  test("a full capped buffer evaluates no more input, and still counts every admitted row") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    val input = MultiQueryPartialSpec.Counting()
+    val fn = MultiQueryPartial(Seq(input), 0,
+      Seq(Entry(-1, Sketch(graft.agg.SketchPartial.Capped(2), 0))), ansi = true)
+    val buf = fn.createAggregationBuffer()
+    (0 until 100).foreach(_ => fn.update(buf, InternalRow.empty))
+    assert(input.evals <= 2, s"the input was evaluated ${input.evals} times")
+    assert(buf.head.matched === 100L)
+    assert(buf.head.sketch.asInstanceOf[graft.agg.SketchPartial.CappedBuf].records === List("r1", "r2"))
+  }
 }
 
 object MultiQueryPartialSpec {
@@ -212,4 +224,16 @@ object MultiQueryPartialSpec {
     df.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
       case m: MultiQueryPartial => m
     })).head
+
+  /** A string input that counts its evaluations: "r1", "r2", and so on. */
+  final case class Counting() extends org.apache.spark.sql.catalyst.expressions.LeafExpression
+      with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+    var evals = 0
+    override def dataType: DataType = StringType
+    override def nullable: Boolean = false
+    override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+      evals += 1
+      org.apache.spark.unsafe.types.UTF8String.fromString(s"r$evals")
+    }
+  }
 }

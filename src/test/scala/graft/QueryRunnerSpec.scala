@@ -320,6 +320,256 @@ class QueryRunnerSpec extends SparkTestBase {
     assert(runner.queryStats("t2_1").get("records_seen") === (1L to 100L).count(_ > 67))
   }
 
+  // ---- the plan memo: what planning keeps across batches -----------------
+
+  private def cmpSpec(id: String, f: String, v: Any, op: BinOp.Value, agg: Aggregation) =
+    QuerySpec(id, filter = Some(Binary(Field(f), Lit(v), op)), aggregation = agg, durationMs = 600000L)
+
+  private val memoOps = Seq(GroupOp(GroupOpType.COUNT, None, "cnt"), GroupOp(GroupOpType.SUM, Some("value"), "sv"),
+    GroupOp(GroupOpType.MIN, Some("value"), "mn"))
+
+  /** A shared pass, two indexed jobs and two grouped jobs; the RAW query
+    * matches nothing, so its cap stays the same. */
+  private def memoSpecs: Seq[QuerySpec] = Seq(
+    clickCountSpec("shared", durationMs = 600000L),
+    QuerySpec("cd", aggregation = CountDistinct(Seq("user")), durationMs = 600000L),
+    QuerySpec("tk", aggregation = TopK(Seq("user" -> "u"), k = 2, countName = "cnt"), durationMs = 600000L),
+    cmpSpec("raw", "event_id", 1000L, BinOp.GREATER_THAN, Raw(10)),
+    cmpSpec("eq1", "user", "u1", BinOp.EQUALS, GroupAll(memoOps)),
+    cmpSpec("eq2", "user", "u2", BinOp.EQUALS, GroupAll(memoOps)),
+    cmpSpec("r1", "value", 40.0, BinOp.LESS_THAN, GroupAll(memoOps)),
+    cmpSpec("r2", "value", 70.0, BinOp.GREATER_THAN, GroupAll(memoOps)),
+    cmpSpec("g1", "etype", "click", BinOp.EQUALS, GroupBy(Seq("user" -> "u"), memoOps)),
+    QuerySpec("g2", aggregation = GroupBy(Seq("user" -> "u"), memoOps), durationMs = 600000L),
+    QuerySpec("g3", aggregation = GroupBy(Seq("etype" -> "e"), memoOps), durationMs = 600000L))
+
+  test("a steady query set builds nothing on its second batch") {
+    val runner = new QueryRunner(spark, new ManualClock(0))
+    memoSpecs.foreach(s => assert(runner.register(s).isEmpty))
+    assert(runner.analyses === 0, "REGISTER planned")
+    runner.processBatch(events)
+    import QueryRunner.JobKind._
+    assert(runner.lastBatchJobs === Map(Shared -> 1, Indexed -> 2, Grouped -> 2))
+    val first = runner.lastBatchPass
+    // the cold batch: one analysis per job, plus one per comparison type
+    // (string = string, double = double)
+    assert(runner.analyses === 5 + 2, runner.analyses)
+    // the same batch, then another frame of the same schema
+    Seq(events, events.filter(col("event_id") > 50)).foreach { b =>
+      runner.processBatch(b)
+      assert(runner.analyses === 7, "a steady query set was analyzed again")
+      assert(runner.lastBatchPass.size === first.size)
+      runner.lastBatchPass.zip(first).foreach { case (j, j0) => assert(j eq j0, j.getClass.getSimpleName) }
+    }
+    assert(runner.queryStats("shared").get("records_seen") === 33 + 33 + 17)
+    assert(runner.queryStats("eq1").get("records_seen") ===
+      2 * (1 to 100).count(_ % 7 == 1) + (51 to 100).count(_ % 7 == 1))
+  }
+
+  test("after one KILL + REGISTER only the changed jobs rebuild, each analyzing only its new classes") {
+    import QueryRunner.JobKind._
+    val runner = new QueryRunner(spark, new ManualClock(0))
+    memoSpecs.foreach(s => assert(runner.register(s).isEmpty))
+    runner.processBatch(events)
+    def jobs = runner.lastBatchJobs.toSeq.flatMap { case (k, n) => Seq.fill(n)(k) }
+    def byKind = Seq(Shared, Indexed, Grouped).map(k => k -> runner.lastBatchPass.filter {
+      case _: BatchPass.Shared => k == Shared
+      case _: BatchPass.Indexed => k == Indexed
+      case _: BatchPass.Grouped => k == Grouped
+    }).toMap
+    // a shared-pass query with a new filter
+    val before = byKind
+    val (a0, c0) = (runner.analyses, runner.analyzedClasses)
+    assert(runner.kill("shared").isDefined)
+    assert(runner.register(clickCountSpec("shared2", durationMs = 600000L)
+      .copy(filter = Some(Binary(Field("etype"), Lit("view"), BinOp.EQUALS)))).isEmpty)
+    assert(runner.analyses === a0, "REGISTER planned")
+    runner.processBatch(events)
+    assert(jobs.size === 5, runner.lastBatchJobs)
+    assert(runner.analyses - a0 === 1 && runner.analyzedClasses - c0 === 1,
+      s"${runner.analyses - a0} analyses over ${runner.analyzedClasses - c0} classes")
+    val after = byKind
+    assert(!(after(Shared).head eq before(Shared).head))
+    Seq(Indexed, Grouped).foreach(k => after(k).zip(before(k)).foreach { case (j, j0) => assert(j eq j0, k) })
+    // a grouped query with a new filter and a new input: the shared pass
+    // counts it, its grouped job folds it
+    val (a1, c1) = (runner.analyses, runner.analyzedClasses)
+    assert(runner.kill("g1").isDefined)
+    assert(runner.register(cmpSpec("g1b", "value", 55.0, BinOp.GREATER_THAN,
+      GroupBy(Seq("user" -> "u"), memoOps :+ GroupOp(GroupOpType.MAX, Some("event_id"), "me")))).isEmpty)
+    runner.processBatch(events)
+    assert(runner.analyses - a1 === 2 && runner.analyzedClasses - c1 === 2,
+      s"${runner.analyses - a1} analyses over ${runner.analyzedClasses - c1} classes")
+    val last = byKind
+    last(Indexed).zip(after(Indexed)).foreach { case (j, j0) => assert(j eq j0) }
+    // the g3 job (etype keys) is unchanged; the user-keyed job is new
+    assert(last(Grouped).count(j => after(Grouped).exists(_ eq j)) === 1)
+    assert(runner.queryStats("shared2").get("records_seen") === 2 * 67)
+    assert(runner.queryStats("g1b").get("records_seen") === 45)
+    val g1b = runner.finishAll().find(_.queryId == "g1b").get.records.map(parse)
+    assert(g1b.map(_("cnt").asInstanceOf[Number].longValue).sum === 45L)
+    assert(g1b.map(_("me").asInstanceOf[Number].longValue).max === 100L)
+  }
+
+  /** `body` under the session conf `key` = `value`, restored after. */
+  private def withConf[A](key: String, value: String)(body: => A): A = {
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally old match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
+  test("toggling ANSI mode between two batches re-plans, as Spark's own answer changes") {
+    val runner = new QueryRunner(spark, new ManualClock(0))
+    val ratio = QuerySpec("ratio", projection = Some(Seq("q" -> Binary(Field("value"), Lit(0L), BinOp.DIV))),
+      aggregation = GroupAll(Seq(GroupOp(GroupOpType.COUNT_FIELD, Some("q"), "n"))), durationMs = 600000L)
+    assert(runner.register(ratio).isEmpty)
+    assert(runner.register(clickCountSpec("clicks", durationMs = 600000L)).isEmpty)
+    // built under each conf: the analyzer fixes a division's mode
+    def spark0 = events.select(count(col("value") / lit(0L)))
+    withConf("spark.sql.ansi.enabled", "false") {
+      assert(spark0.head().getLong(0) === 0L) // x / 0 is null
+      runner.processBatch(events)
+    }
+    assert(runner.results.isEmpty, runner.results.map(_.asJson))
+    val a0 = runner.analyses
+    withConf("spark.sql.ansi.enabled", "true") {
+      intercept[Exception](spark0.collect()) // x / 0 raises
+      runner.processBatch(events)
+    }
+    val failed = runner.results.filter(_.queryId == "ratio")
+    assert(failed.size === 1 && failed.head.signal.contains("FAIL"), failed.map(_.asJson))
+    assert(runner.analyses > a0, "the conf change did not re-plan")
+    assert(runner.activeQueryIds === Seq("clicks"))
+    assert(runner.queryStats("clicks").get("records_seen") === 66)
+  }
+
+  test("changing the session time zone between two batches re-plans, as Spark's own answer changes") {
+    val runner = new QueryRunner(spark, new ManualClock(0))
+    assert(runner.register(QuerySpec("ts", projection = Some(Seq("s" -> Cast(Field("ts"), FieldType.STRING))),
+      aggregation = Raw(10), durationMs = 600000L)).isEmpty)
+    val batch = spark.range(2).select(timestamp_seconds(col("id") * 3600 + 1700000000L).as("ts"))
+    def spark0 = batch.select(col("ts").cast("string")).collect().map(_.getString(0)).toSeq
+    val utc = withConf("spark.sql.session.timeZone", "UTC") { runner.processBatch(batch); spark0 }
+    val tokyo = withConf("spark.sql.session.timeZone", "Asia/Tokyo") { runner.processBatch(batch); spark0 }
+    assert(utc !== tokyo)
+    val got = runner.finishAll().head.records.map(parse(_)("s"))
+    assert(got === utc ++ tokyo)
+  }
+
+  test("a new column or a changed column type re-plans and matches a solo runner") {
+    val every = Some(WindowSpec(WindowUnit.TIME, 1000, WindowUnit.TIME, 1000))
+    val specs = Seq(
+      QuerySpec("sum_extra", filter = Some(Binary(Field("etype"), Lit("click"), BinOp.EQUALS)),
+        aggregation = GroupAll(Seq(GroupOp(GroupOpType.COUNT, None, "cnt"),
+          GroupOp(GroupOpType.SUM, Some("extra"), "se"), GroupOp(GroupOpType.MAX, Some("value"), "mx"))),
+        window = every, durationMs = 600000L),
+      QuerySpec("by_extra", aggregation = GroupBy(Seq("extra" -> "x"), Seq(GroupOp(GroupOpType.COUNT, None, "cnt"))),
+        window = every, durationMs = 600000L),
+      cmpSpec("eq_value", "value", 3.0, BinOp.EQUALS, GroupAll(Seq(GroupOp(GroupOpType.COUNT, None, "cnt"))))
+        .copy(window = every),
+      cmpSpec("eq_value2", "value", 6.0, BinOp.EQUALS, GroupAll(Seq(GroupOp(GroupOpType.COUNT, None, "cnt"))))
+        .copy(window = every))
+    val batches = Seq(
+      events,
+      events.withColumn("extra", col("event_id") % 4),
+      events.withColumn("extra", (col("event_id") % 4).cast("string"))
+        .withColumn("value", col("value").cast("string")))
+    def windows(r: QueryRunner, clock: ManualClock, b: DataFrame): Map[String, Seq[String]] = {
+      r.processBatch(b)
+      clock.advance(1000)
+      r.onTick().map(c => c.queryId -> c.records).toMap
+    }
+    val clock = new ManualClock(0)
+    val runner = new QueryRunner(spark, clock)
+    specs.foreach(s => assert(runner.register(s).isEmpty))
+    batches.zipWithIndex.foreach { case (b, i) =>
+      val a0 = runner.analyses
+      val got = windows(runner, clock, b)
+      val soloClock = new ManualClock(clock.now() - 1000)
+      val solo = new QueryRunner(spark, soloClock)
+      specs.foreach(s => assert(solo.register(s).isEmpty))
+      val want = windows(solo, soloClock, b)
+      assert(got === want, s"batch $i")
+      assert(runner.analyses > a0, s"batch $i was not re-planned")
+      assert(got.keySet === specs.map(_.id).toSet, s"batch $i: ${runner.results.map(_.asJson)}")
+    }
+  }
+
+  test("a spec whose analysis fails is never memoized and FAILs alone on every batch") {
+    val runner = new QueryRunner(spark, new ManualClock(0))
+    val badFilter = Binary(Field("etype", Some("k")), Lit("x"), BinOp.EQUALS)
+    def bad(id: String) = QuerySpec(id, filter = Some(badFilter),
+      aggregation = GroupAll(Seq(GroupOp(GroupOpType.COUNT, None, "cnt"))), durationMs = 600000L)
+    assert(runner.register(clickCountSpec("good", durationMs = 600000L)).isEmpty)
+    Seq("bad1", "bad2").zipWithIndex.foreach { case (id, i) =>
+      assert(runner.register(bad(id)).isEmpty)
+      runner.processBatch(events)
+      val failed = runner.results.filter(_.queryId == id)
+      assert(failed.size === 1 && failed.head.signal.contains("FAIL"), s"$id: ${failed.map(_.asJson)}")
+      assert(runner.activeQueryIds === Seq("good"))
+      assert(runner.queryStats("good").get("records_seen") === 33 * (i + 1))
+      assert(!runner.memoKeys.exists(_.toString.contains("etype,Some(k)")), runner.memoKeys)
+    }
+  }
+
+  test("an entry reading another class's memoized input is still type-checked") {
+    // COUNT_FIELD and MIN share the input slot of `m`, a map, which MIN
+    // cannot order: the MIN query FAILs alone, as its own analysis would
+    val batch = events.withColumn("m", map(col("etype"), col("value")))
+    def q(id: String, op: GroupOpType.Value) = QuerySpec(id,
+      aggregation = GroupAll(Seq(GroupOp(op, Some("m"), "x"))), durationMs = 600000L)
+    val runner = new QueryRunner(spark, new ManualClock(0))
+    assert(runner.register(q("n", GroupOpType.COUNT_FIELD)).isEmpty)
+    runner.processBatch(batch)
+    assert(runner.register(q("least", GroupOpType.MIN)).isEmpty)
+    val a0 = runner.analyses
+    runner.processBatch(batch)
+    assert(runner.analyses === a0, "the MIN class's input was not taken from the memo")
+    val failed = runner.results.filter(_.queryId == "least")
+    assert(failed.size === 1 && failed.head.signal.contains("FAIL"), runner.results.map(_.asJson))
+    assert(runner.activeQueryIds === Seq("n"))
+    assert(runner.queryStats("n").get("records_seen") === 200)
+  }
+
+  test("the memo holds only the live query set's entries, and none once every query is killed") {
+    /** Query `n` of five shapes, with literals that vary with `n`. */
+    def spec(n: Int): QuerySpec = {
+      val id = s"c$n"
+      n % 5 match {
+        case 0 => cmpSpec(id, "value", (n % 13).toDouble * 7, BinOp.GREATER_THAN, GroupAll(memoOps))
+        case 1 => QuerySpec(id, filter = Some(Binary(Binary(Field("etype"), Lit("click"), BinOp.EQUALS),
+          Binary(Field("value"), Lit((n % 11).toDouble * 9), BinOp.LESS_THAN), BinOp.AND)),
+          aggregation = TopK(Seq("user" -> "u"), k = 2, countName = "cnt"), durationMs = 600000L)
+        case 2 => cmpSpec(id, "user", s"u${n % 7}", BinOp.EQUALS, GroupAll(memoOps.take(2)))
+        case 3 => cmpSpec(id, "value", (n % 17).toDouble * 5, BinOp.LESS_OR_EQUALS,
+          GroupBy(Seq("etype" -> "e"), memoOps))
+        case _ => cmpSpec(id, "event_id", 1000L + n, BinOp.GREATER_THAN, Raw(5))
+      }
+    }
+    val runner = new QueryRunner(spark, new ManualClock(0))
+    var next = 0
+    val live = scala.collection.mutable.Queue.empty[String]
+    def add(): Unit = { assert(runner.register(spec(next)).isEmpty); live += s"c$next"; next += 1 }
+    (0 until 40).foreach(_ => add())
+    runner.processBatch(events)
+    (1 to 30).foreach { _ =>
+      (0 until 4).foreach { _ => assert(runner.kill(live.dequeue()).isDefined); add() }
+      runner.processBatch(events)
+    }
+    assert(runner.results.forall(_.signal.contains("KILL")), runner.results.filterNot(_.signal.contains("KILL")))
+    val fresh = new QueryRunner(spark, new ManualClock(0))
+    live.foreach(id => assert(fresh.register(spec(id.drop(1).toInt)).isEmpty))
+    fresh.processBatch(events)
+    assert(runner.memoKeys.nonEmpty)
+    assert(runner.memoKeys === fresh.memoKeys)
+    live.foreach(id => assert(runner.kill(id).isDefined))
+    runner.processBatch(events)
+    assert(runner.memoKeys.isEmpty, runner.memoKeys)
+  }
+
   test("an indexed job computes a query's inputs only on rows that query admits") {
     val batch = spark.range(0, 40, 1, 4).select((col("id") % 5).as("user_id"), col("id").as("v"))
     val q = Some(Seq("q" -> (Binary(Lit(100L), Field("user_id"), BinOp.DIV): Expr)))
